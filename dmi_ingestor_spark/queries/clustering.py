@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
+from dmi_ingestor_spark.operators import gram
 from dmi_ingestor_spark.registry import register
 
 _K = 4
@@ -85,9 +86,47 @@ def _assign(points: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
+def _kmeans_oracle() -> str:
+    qcols = ", ".join(
+        f"CAST(FLOOR(CAST(embedding[{i + 1}] AS DOUBLE) * {_SCALE}) AS BIGINT) AS q{i}"
+        for i in range(_DIM)
+    )
+    dist = " + ".join(f"(p.q{i} - c.c{i}) * (p.q{i} - c.c{i})" for i in range(_DIM))
+    upd = ", ".join(
+        f"CAST(FLOOR(CAST(SUM(q{i}) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c{i}"
+        for i in range(_DIM)
+    )
+    sql = [
+        f"WITH pts AS (SELECT vec_id, {qcols} FROM embeddings)",
+        f", cent0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, "
+        + ", ".join(f"q{i} AS c{i}" for i in range(_DIM))
+        + f" FROM pts WHERE vec_id < {_K})",
+    ]
+    prev = "cent0"
+    for r in range(1, _ITERS + 1):
+        sql.append(
+            f", asg{r} AS (SELECT p.vec_id, c.cid, "
+            + ", ".join(f"p.q{i}" for i in range(_DIM))
+            + f", {dist} AS dist,"
+            f" ROW_NUMBER() OVER (PARTITION BY p.vec_id ORDER BY {dist}, c.cid) AS rn"
+            f" FROM pts p CROSS JOIN {prev} c QUALIFY rn = 1)"
+        )
+        sql.append(f", cent{r} AS (SELECT cid, {upd} FROM asg{r} GROUP BY cid)")
+        prev = f"cent{r}"
+    sql.append(
+        f", fin AS (SELECT p.vec_id, c.cid, {dist} AS dist,"
+        f" ROW_NUMBER() OVER (PARTITION BY p.vec_id ORDER BY {dist}, c.cid) AS rn"
+        f" FROM pts p CROSS JOIN {prev} c QUALIFY rn = 1)"
+    )
+    sql.append(
+        "SELECT vec_id, cid AS cluster_id, CAST(dist AS BIGINT) AS dist_sq FROM fin"
+    )
+    return "\n".join(sql)
+
+
 @register(
     "cluster_kmeans_embeddings",
-    oracle=None,  # replaced below by the generated unrolled SQL
+    oracle=_kmeans_oracle(),
     doc=(
         "U6/ML: Lloyd's k-means (k=4, 3 rounds, first 8 dims) as one "
         "unrolled lazy plan — per round: broadcast-crossJoin the k "
@@ -127,58 +166,6 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cid").cast("int").alias("cluster_id"),
         F.col("dist").cast("long").alias("dist_sq"),
     )
-
-
-def _kmeans_oracle() -> str:
-    qcols = ", ".join(
-        f"CAST(FLOOR(CAST(embedding[{i + 1}] AS DOUBLE) * {_SCALE}) AS BIGINT) AS q{i}"
-        for i in range(_DIM)
-    )
-    dist = " + ".join(f"(p.q{i} - c.c{i}) * (p.q{i} - c.c{i})" for i in range(_DIM))
-    upd = ", ".join(
-        f"CAST(FLOOR(CAST(SUM(q{i}) AS DOUBLE) / COUNT(*)) AS BIGINT) AS c{i}"
-        for i in range(_DIM)
-    )
-    sql = [
-        f"WITH pts AS (SELECT vec_id, {qcols} FROM embeddings)",
-        f", cent0 AS (SELECT CAST(vec_id AS INTEGER) AS cid, "
-        + ", ".join(f"q{i} AS c{i}" for i in range(_DIM))
-        + f" FROM pts WHERE vec_id < {_K})",
-    ]
-    prev = "cent0"
-    for r in range(1, _ITERS + 1):
-        sql.append(
-            f", asg{r} AS (SELECT p.vec_id, c.cid, "
-            + ", ".join(f"p.q{i}" for i in range(_DIM))
-            + f", {dist} AS dist,"
-            f" ROW_NUMBER() OVER (PARTITION BY p.vec_id ORDER BY {dist}, c.cid) AS rn"
-            f" FROM pts p CROSS JOIN {prev} c QUALIFY rn = 1)"
-        )
-        sql.append(f", cent{r} AS (SELECT cid, {upd} FROM asg{r} GROUP BY cid)")
-        prev = f"cent{r}"
-    sql.append(
-        f", fin AS (SELECT p.vec_id, c.cid, {dist} AS dist,"
-        f" ROW_NUMBER() OVER (PARTITION BY p.vec_id ORDER BY {dist}, c.cid) AS rn"
-        f" FROM pts p CROSS JOIN {prev} c QUALIFY rn = 1)"
-    )
-    sql.append(
-        "SELECT vec_id, cid AS cluster_id, CAST(dist AS BIGINT) AS dist_sq FROM fin"
-    )
-    return "\n".join(sql)
-
-
-# The oracle is generated (4-level CTE chain mirroring the unrolled
-# plan); dataclass is frozen, so re-register with the SQL attached.
-from dmi_ingestor_spark.registry import REGISTRY, QuerySpec  # noqa: E402
-
-_spec = REGISTRY["cluster_kmeans_embeddings"]
-REGISTRY["cluster_kmeans_embeddings"] = QuerySpec(
-    name=_spec.name,
-    builder=_spec.builder,
-    oracle=_kmeans_oracle(),
-    doc=_spec.doc,
-    tags=_spec.tags,
-)
 
 
 # --------------------------------------------------------------------------
@@ -239,7 +226,7 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pts = asg.join(emb, ["vec_id"])
 
-    # Per-cluster Arrow block: one numpy gram matrix per cluster instead
+    # Per-cluster Arrow block: one row-tiled gram per cluster instead
     # of an in-cluster pair JOIN — the HOF-expression cosine is an
     # interpreted closure, so Σ cluster² pairs × 64 dims was the r7
     # sf0.5 sweep's slowest Spark stage (188 s; this path is ~2 s).
@@ -247,28 +234,23 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     # quantized components are integer-valued (|q| ≤ 1000, 64 dims), so
     # every dot product / norm² is an exact integer ≤ 6.4e7 under ANY
     # summation order, and the final sqrt·sqrt / divide round once each,
-    # identically. Memory per group is (cluster size)² — bounded because
-    # SemDeDup scales k with n (fixture: ≤(n/10)² ≈ 8 MB at sf0.5).
+    # identically. Memory per task is O(gram._BLOCK × cluster size),
+    # whatever the cluster sizes.
     import numpy as np
     import pandas as pd
 
-    tau = _SEM_TAU
-
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        cids = pdf["cluster_id"].to_numpy()[order]
-        v = np.stack(pdf["qv"].to_numpy()[order]).astype(np.float64)
-        dots = v @ v.T
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        den = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, dots / den, 0.0)
-        # dropped iff any smaller-id in-cluster neighbor has sim >= tau;
-        # ids are sorted, so "smaller id" = strictly-lower triangle
-        dup = np.tril(cos >= tau, -1).any(axis=1)
+        ids = pdf["vec_id"].to_numpy()
+        # dropped iff any smaller-id in-cluster neighbor has sim >= tau
+        dup = gram.has_smaller_neighbour(
+            ids, np.stack(pdf["qv"].to_numpy()), _SEM_TAU
+        )
         return pd.DataFrame(
-            {"vec_id": ids, "cluster_id": cids, "is_kept": ~dup}
+            {
+                "vec_id": ids,
+                "cluster_id": pdf["cluster_id"].to_numpy(),
+                "is_kept": ~dup,
+            }
         )
 
     return pts.groupBy("cluster_id").applyInPandas(
@@ -788,18 +770,19 @@ def cluster_dbscan_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row, and the eps-ball count ran one interpreted HOF squared
     # distance per CANDIDATE PAIR after a bucket self-join (plus a
     # cache + left join to restore zero-neighbor rows). Now: one numpy
-    # sign-pack per Arrow batch, then one gram block per bucket that
-    # counts neighbors for EVERY member (zero-neighbor rows included,
-    # so the join disappears). Exactness: q is the Spark-computed
-    # floor(x*1000) long vector; plane dots and the expanded
-    # ‖a‖²+‖b‖²−2a·b distance are exact integers far below 2^53 under
-    # any accumulation order, so the eps2 comparison is bit-identical
-    # to the (a−b)² HOF chain and the oracle.
+    # sign-pack per Arrow batch, then one row-tiled gram per bucket
+    # (gram.eps_neighbour_counts) that counts neighbors for EVERY member
+    # (zero-neighbor rows included, so the join disappears); memory per
+    # task is O(gram._BLOCK × bucket size). Exactness: q is the
+    # Spark-computed floor(x*1000) long vector; plane dots and the
+    # expanded ‖a‖²+‖b‖²−2a·b distance are exact integers far below 2^53
+    # under any accumulation order (gram._check_exact raises otherwise),
+    # so the eps2 comparison is bit-identical to the (a−b)² HOF chain
+    # and the oracle.
     import numpy as np
     import pandas as pd
 
-    h_t = np.asarray(_dbl_planes(), dtype=np.float64).T  # dim × planes
-    weights = 2 ** np.arange(len(_dbl_planes()), dtype=np.int64)
+    planes = np.asarray(_dbl_planes())
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
@@ -813,7 +796,7 @@ def cluster_dbscan_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0:
                 continue
             v = np.stack(pdf["q"].to_numpy()).astype(np.float64)
-            bucket = ((v @ h_t >= 0) * weights).sum(axis=1)
+            bucket = gram.sign_buckets(v, planes)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(), "q": pdf["q"], "bucket": bucket}
             )
@@ -821,17 +804,12 @@ def cluster_dbscan_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed = e.mapInPandas(_sig, "vec_id long, q array<bigint>, bucket long")
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["vec_id"].to_numpy()
         v = np.stack(pdf["q"].to_numpy()).astype(np.float64)
-        nsq = np.einsum("ij,ij->i", v, v)
-        d2 = nsq[:, None] + nsq[None, :] - 2.0 * (v @ v.T)
-        close = d2 <= _DBL_EPS2
-        np.fill_diagonal(close, False)
         return pd.DataFrame(
             {
-                "vec_id": ids,
+                "vec_id": pdf["vec_id"].to_numpy(),
                 "bucket": pdf["bucket"].iloc[0],
-                "n_neighbors": close.sum(axis=1).astype(np.int64),
+                "n_neighbors": gram.eps_neighbour_counts(v, _DBL_EPS2),
             }
         )
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
 from dmi_ingestor_spark.functions.vector import quantize, sql_cosine
+from dmi_ingestor_spark.operators import gram
 from dmi_ingestor_spark.registry import register
 
 # --------------------------------------------------------------------------
@@ -675,7 +676,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "U5/U6 embedding near-dup: quantized cosine over pairs *within a "
         "label block* — the blocking key bounds the pair count (the same "
         "role LSH buckets play when no label exists). Join shuffles on "
-        "label; cosine is one numpy gram block per label (Arrow)."
+        "label; cosine is one row-tiled numpy gram per label (Arrow, "
+        "operators/gram.py)."
     ),
     tags=("dedup", "similarity", "embeddings"),
 )
@@ -683,12 +685,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-label Arrow gram block (r7), same rationale and same
     # bit-exactness argument as dedup_semantic_cluster: the pair-join
     # form evaluated the cosine as an interpreted HOF closure over
-    # Sigma block^2 pairs (~5e6 at sf0.5 -> 150s+); one numpy gram
-    # matrix per label block ships each vector once. Quantized integer
-    # components keep every dot/norm an exact integer under any
-    # summation order, so sim is IEEE-identical to the expression form
-    # and the oracle. Block size is bounded by the blocking premise
-    # (labels here, LSH buckets when no label exists).
+    # Sigma block^2 pairs (~5e6 at sf0.5 -> 150s+); one row-tiled
+    # gram.pairs_at_least per label block ships each vector once.
+    # Quantized integer components keep every dot/norm an exact integer
+    # under any summation order, so sim is IEEE-identical to the
+    # expression form and the oracle. Memory per task is
+    # O(gram._BLOCK × block size) plus the emitted pairs, however large
+    # a label block grows.
     import numpy as np
     import pandas as pd
 
@@ -703,23 +706,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        v = np.stack(pdf["qv"].to_numpy()[order]).astype(np.float64)
-        dots = v @ v.T
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        den = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, dots / den, 0.0)
-        iu, ju = np.triu_indices(len(ids), k=1)  # a_id < b_id (sorted)
-        keep = cos[iu, ju] >= 0.40
+        a, b, sim = gram.pairs_at_least(
+            pdf["vec_id"].to_numpy(), np.stack(pdf["qv"].to_numpy()), 0.40
+        )
         return pd.DataFrame(
-            {
-                "label": pdf["label"].iloc[0],
-                "a_id": ids[iu[keep]],
-                "b_id": ids[ju[keep]],
-                "sim": cos[iu[keep], ju[keep]],
-            }
+            {"label": pdf["label"].iloc[0], "a_id": a, "b_id": b, "sim": sim}
         )
 
     return emb.groupBy("label").applyInPandas(

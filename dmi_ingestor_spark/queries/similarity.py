@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
 from dmi_ingestor_spark.functions.vector import cosine, quantize, sql_cosine
+from dmi_ingestor_spark.operators import gram
 from dmi_ingestor_spark.registry import register
 
 N_QUERY = 8  # vec_id < 8 are the query vectors
@@ -61,7 +62,6 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     qids, Q, _ = _query_side(sf_dir, N_QUERY)
-    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize(F.col("embedding")).alias("qv")
     )
@@ -71,28 +71,11 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0 or len(qids) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["qv"].to_numpy())
-            dots = Q @ v.T
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            den = qn[:, None] * vn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            out = []
-            for qi in range(len(qids)):
-                mask = ids != qids[qi]
-                nb, c = ids[mask], cos[qi][mask]
-                sel = _topk_within(nb, c, TOP_K)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": nb[sel],
-                            "sim": c[sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cos = gram.cosine(Q, np.stack(pdf["qv"].to_numpy()))
+            r, c = gram.topk(ids, cos, TOP_K, qids=qids)
+            yield pd.DataFrame(
+                {"query_id": qids[r], "neighbor_id": ids[c], "sim": cos[r, c]}
+            )
 
     part = emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
@@ -141,8 +124,8 @@ def _plane_literals(dim: int) -> list[list[float]]:
     — deterministic, no stored model, reproducible across runs and
     engines. Values depend only on (j, i), so evaluating md5 inside the
     Catalyst expression per row (the round-1 form) repaid 8×dim hash
-    calls per vector for constants; now they are plain literals in the
-    plan.
+    calls per vector for constants; now they ride into the numpy
+    sign-pack kernel and are unrolled into the oracle SQL.
     """
     import hashlib
 
@@ -266,66 +249,33 @@ def _popcount64(x):
     global _POP8
     if _POP8 is None:
         _POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
-    b = np.ascontiguousarray(x).view(np.uint8).reshape(len(x), 8)
-    return _POP8[b].sum(axis=1)
-
-
-def _topk_within(ids, sims, k):
-    """Indices of the top-``k`` rows by (sim DESC, id ASC) — the partial
-    top-k selection every kernel below applies per Arrow batch. Any
-    globally-ranked row is necessarily in its batch's top-k, so the
-    final (tiny) window sees a superset of the true top-k."""
-    import numpy as np
-
-    order = np.lexsort((ids, -sims))
-    return order[: min(k, len(ids))]
-
-
-def _hyperplane_sign_bits(vec_col: F.Column, dim: int) -> F.Column:
-    """8-bit random-hyperplane signature as a BIGINT bucket key.
-
-    sign bit j = (Σᵢ hᵢⱼ·vᵢ) >= 0, with the hyperplane rows embedded as
-    literal arrays — per row the work is one zip_with multiply + one
-    aggregate sum per plane, all JVM-side, zero hashing.
-    """
-    planes = _plane_literals(dim)
-    out: F.Column | None = None
-    for j, plane in enumerate(planes):
-        lits = F.array(*[F.lit(h) for h in plane])
-        s = F.aggregate(
-            F.zip_with(vec_col, lits, lambda x, h: x * h),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(s >= 0, F.lit(2**j)).otherwise(F.lit(0)).cast("long")
-        out = bit if out is None else out + bit
-    return out
+    b = np.ascontiguousarray(x).view(np.uint8).reshape(*x.shape, 8)
+    return _POP8[b].sum(axis=-1)
 
 
 def _signed_buckets(emb: DataFrame) -> DataFrame:
     """(vec_id, qv) → (vec_id, qv, bucket): the LSH signature computed
     as ONE numpy matmul per Arrow batch (round 10, guide §4.2).
 
-    Value-identical to :func:`_hyperplane_sign_bits`: the quantized
-    components and the ±1 plane entries make every plane dot an exact
-    < 2^53 integer under any accumulation order (FMA included), so the
-    sign test matches the interpreted zip_with/aggregate chain — which
-    evaluated ~8×dim×2 interpreted lambda steps PER ROW — bit for bit.
+    Value-identical to the oracle's :func:`_lsh_bucket_sql`: the
+    quantized components and the ±1 plane entries make every plane dot
+    an exact < 2^53 integer under any accumulation order (FMA included),
+    so the sign test matches ``list_dot_product`` bit for bit — and the
+    interpreted zip_with/aggregate chain it replaced, which evaluated
+    ~8×dim×2 interpreted lambda steps PER ROW.
     Map-shaped: no shuffle, the bucket key feeds the downstream
     groupBy/join exchange unchanged.
     """
     import numpy as np
     import pandas as pd
 
-    h_t = np.asarray(_plane_literals(LSH_DIM), dtype=np.float64).T  # dim×planes
-    weights = 2 ** np.arange(N_PLANES, dtype=np.int64)
+    planes = np.asarray(_plane_literals(LSH_DIM))
 
     def _sig(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.stack(pdf["qv"].to_numpy())
-            bucket = ((v @ h_t >= 0) * weights).sum(axis=1)
+            bucket = gram.sign_buckets(np.stack(pdf["qv"].to_numpy()), planes)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
@@ -341,7 +291,7 @@ LSH_DIM = 64  # embeddings table dimensionality (same contract as PQ_DIM)
 
 
 def _lsh_bucket_sql(qv: str) -> str:
-    """DuckDB twin of :func:`_hyperplane_sign_bits` over quantized vectors.
+    """DuckDB twin of :func:`_signed_buckets` over quantized vectors.
 
     The same ±1 literal hyperplane rows are unrolled into
     ``list_dot_product`` calls, so both engines compute identical exact
@@ -390,13 +340,14 @@ def _lsh_bucket_sql(qv: str) -> str:
 def sim_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round 10 (guide §4.2, VERDICT r9 item 1): the signature is one
     # numpy matmul per Arrow batch (_signed_buckets) and the per-bucket
-    # candidate scoring is one numpy gram block per bucket — the proven
+    # candidate scoring is the row-tiled gram.pairs_at_least — the
     # dedup_embedding_cosine pattern. Replaces the bucket self-join
     # (TWO corpus scans + 2×corpus interpreted HOF signatures) and the
-    # per-pair interpreted HOF cosine. Bucket sizes stay bounded by the
-    # LSH premise, exactly as the old join's skew bound. Exactness:
-    # integer-quantized vectors make every dot/norm an exact < 2^53
-    # integer, so sim is IEEE-identical to the expression form.
+    # per-pair interpreted HOF cosine. Memory per task is
+    # O(gram._BLOCK × bucket size) plus the emitted pairs, whatever the
+    # bucket skew. Exactness: integer-quantized vectors make every
+    # dot/norm an exact < 2^53 integer, so sim is IEEE-identical to the
+    # expression form.
     import numpy as np
     import pandas as pd
 
@@ -406,23 +357,11 @@ def sim_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = _signed_buckets(emb)
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        v = np.stack(pdf["qv"].to_numpy()[order])
-        dots = v @ v.T
-        nrm = np.sqrt(np.einsum("ij,ij->i", v, v))
-        den = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(den > 0, dots / den, 0.0)
-        iu, ju = np.triu_indices(len(ids), k=1)  # a_id < b_id (sorted)
-        keep = cos[iu, ju] >= 0.25
+        a, b, sim = gram.pairs_at_least(
+            pdf["vec_id"].to_numpy(), np.stack(pdf["qv"].to_numpy()), 0.25
+        )
         return pd.DataFrame(
-            {
-                "bucket": pdf["bucket"].iloc[0],
-                "a_id": ids[iu[keep]],
-                "b_id": ids[ju[keep]],
-                "sim": cos[iu[keep], ju[keep]],
-            }
+            {"bucket": pdf["bucket"].iloc[0], "a_id": a, "b_id": b, "sim": sim}
         )
 
     return sig.groupBy("bucket").applyInPandas(
@@ -671,22 +610,14 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dist = np.einsum("nks,nks->nk", d, d)
                 code = np.argmin(dist, axis=1)  # first min = lowest k
                 adc += lut[:, m, :][:, code]  # (nq, nb) gather
-            out = []
-            for qi in range(len(qids)):
-                mask = ids != qids[qi]
-                nb, dd = ids[mask], adc[qi][mask]
-                sel = np.lexsort((nb, dd))[: min(TOP_K, len(nb))]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": nb[sel],
-                            "adc_dist": dd[sel].astype(np.int64),
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            r, c = gram.topk(ids, -adc, TOP_K, qids=qids)
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "neighbor_id": ids[c],
+                    "adc_dist": adc[r, c].astype(np.int64),
+                }
+            )
 
     part = emb.mapInPandas(
         _score, "query_id long, neighbor_id long, adc_dist long"
@@ -780,21 +711,11 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_order = np.argsort(sids)
     sids, S = sids[s_order], S[s_order]
 
-    def _cos(a, b):  # (na,d) x (nb,d) exact-integer gram cosine
-        dots = a @ b.T
-        an = np.sqrt(np.einsum("ij,ij->i", a, a))
-        bn = np.sqrt(np.einsum("ij,ij->i", b, b))
-        den = an[:, None] * bn[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return np.where(den > 0, dots / den, 0.0)
-
     # probes[qi] = the N_PROBE cells of query qi by (sim DESC, cell_id)
-    probe_cells: dict[int, np.ndarray] = {}
+    probes = None
     if len(qids) and len(sids):
-        qs = _cos(Q, S)
-        for qi in range(len(qids)):
-            order = np.lexsort((sids, -qs[qi]))[:N_PROBE]
-            probe_cells[qi] = sids[order]
+        _, c = gram.topk(sids, gram.cosine(Q, S), N_PROBE)
+        probes = sids[c].reshape(len(qids), -1)
 
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize(F.col("embedding")).alias("v")
@@ -802,27 +723,18 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _score(batches):
         for pdf in batches:
-            if len(pdf) == 0 or not probe_cells:
+            if len(pdf) == 0 or probes is None:
                 continue
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["v"].to_numpy())
-            cell = sids[np.argmax(_cos(v, S), axis=1)]  # first max = min id
-            qcos = _cos(Q, v)
-            out = []
-            for qi, cells in probe_cells.items():
-                mask = np.isin(cell, cells)  # self-match included, as before
-                sel = _topk_within(ids[mask], qcos[qi][mask], TOP_K)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": ids[mask][sel],
-                            "sim": qcos[qi][mask][sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cell = sids[np.argmax(gram.cosine(v, S), axis=1)]  # first max = min id
+            qcos = gram.cosine(Q, v)
+            # no qids: the self-match is included, as in the oracle
+            listed = (cell[None, :, None] == probes[:, None, :]).any(axis=2)
+            r, c = gram.topk(ids, qcos, TOP_K, keep=listed)
+            yield pd.DataFrame(
+                {"query_id": qids[r], "neighbor_id": ids[c], "sim": qcos[r, c]}
+            )
 
     part = emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
@@ -984,48 +896,38 @@ def ml_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     qids, Q, qlabels = _query_side(sf_dir, N_QUERY, with_label=True)
-    anchors = [
-        (int(qids[i]), Q[i], qlabels[i])
-        for i in range(len(qids))
-        if qlabels[i] is not None
-    ]
+    qlab = np.array(qlabels, dtype=np.float64)  # NULL -> NaN
+    has_label = ~np.isnan(qlab)
+    aids, A, alabs = qids[has_label], Q[has_label], qlab[has_label]
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize(F.col("embedding")).alias("qv")
     )
 
     def _cand(batches):
         for pdf in batches:
-            if len(pdf) == 0 or not anchors:
+            if len(pdf) == 0 or len(aids) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy()
             labels = pdf["label"].to_numpy()
             lab_ok = pdf["label"].notna().to_numpy()
-            v = np.stack(pdf["qv"].to_numpy())
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            out = []
-            for aid, aq, alab in anchors:
-                an = np.sqrt(aq @ aq)
-                # positives: same label, not self — batch top-1
-                pmask = lab_ok & (labels == alab) & (ids != aid)
-                if pmask.any():
-                    den = an * vn[pmask]
-                    dots = v[pmask] @ aq
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = np.where(den > 0, dots / den, 0.0)
-                    sel = _topk_within(ids[pmask], cos, 1)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "kind": 0,
-                                "anchor_id": aid,
-                                "cand_id": ids[pmask][sel],
-                                "sim": cos[sel],
-                                "h": "",
-                            }
-                        )
-                    )
+            same = labels[None, :] == alabs[:, None]  # NaN never equal
+            # positives: same label, not self — batch top-1
+            cos = gram.cosine(A, np.stack(pdf["qv"].to_numpy()))
+            r, c = gram.topk(ids, cos, 1, qids=aids, keep=same)
+            out = [
+                pd.DataFrame(
+                    {
+                        "kind": 0,
+                        "anchor_id": aids[r],
+                        "cand_id": ids[c],
+                        "sim": cos[r, c],
+                        "h": "",
+                    }
+                )
+            ]
+            for ai, aid in enumerate(aids):
                 # negatives: different label — batch 4 smallest (h, id)
-                nmask = lab_ok & (labels != alab)
+                nmask = lab_ok & ~same[ai]
                 if nmask.any():
                     nids = ids[nmask]
                     hs = np.array(
@@ -1046,8 +948,7 @@ def ml_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
                             }
                         )
                     )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            yield pd.concat(out, ignore_index=True)
 
     # cached: both branches below read it — without the (tiny,
     # ≤ 5 rows/anchor/batch) cache the corpus pass would run twice
@@ -1215,7 +1116,7 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     qids, Q, qlabels = _query_side(sf_dir, _KNN_EVAL, with_label=True)
-    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
+    qlab = pd.array(qlabels, dtype="Int32")  # nullable: NULL stays NULL
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize(F.col("embedding")).alias("qv")
     )
@@ -1225,29 +1126,17 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0 or len(qids) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["qv"].to_numpy())
-            dots = Q @ v.T
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            den = qn[:, None] * vn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            out = []
-            for qi in range(len(qids)):
-                mask = ids != qids[qi]
-                sel = _topk_within(ids[mask], cos[qi][mask], _KNN_K)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "true_label": qlabels[qi],
-                            "nb_id": ids[mask][sel],
-                            "nb_label": pdf["label"].to_numpy()[mask][sel],
-                            "sim": cos[qi][mask][sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cos = gram.cosine(Q, np.stack(pdf["qv"].to_numpy()))
+            r, c = gram.topk(ids, cos, _KNN_K, qids=qids)
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "true_label": qlab[r],
+                    "nb_id": ids[c],
+                    "nb_label": pdf["label"].astype("Int32").array[c],
+                    "sim": cos[r, c],
+                }
+            )
 
     part = emb.mapInPandas(
         _score,
@@ -1263,8 +1152,9 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes = topk.groupBy("query_id", "true_label", "nb_label").agg(
         F.count(F.lit(1)).alias("c")
     )
+    # NULL labels sort last, as DuckDB orders them
     vw = Window.partitionBy("query_id").orderBy(
-        F.col("c").desc(), F.col("nb_label")
+        F.col("c").desc(), F.col("nb_label").asc_nulls_last()
     )
     pred = (
         votes.withColumn("vr", F.row_number().over(vw))
@@ -1275,7 +1165,10 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         pred.groupBy(F.col("true_label").alias("label"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_eval"),
-            F.sum((F.col("pred_label") == F.col("true_label")).cast("long"))
+            # a NULL label never counts as correct (the oracle's CASE)
+            F.sum(
+                F.when(F.col("pred_label") == F.col("true_label"), 1).otherwise(0)
+            )
             .cast("long")
             .alias("n_correct"),
         )
@@ -1341,7 +1234,6 @@ def sim_range_search_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     qids, Q, _ = _query_side(sf_dir, N_QUERY)
-    qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
     tau = _RANGE_TAU_NUM / 100.0
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", quantize(F.col("embedding")).alias("qv")
@@ -1352,26 +1244,11 @@ def sim_range_search_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
             if len(pdf) == 0 or len(qids) == 0:
                 continue
             ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["qv"].to_numpy())
-            dots = Q @ v.T
-            vn = np.sqrt(np.einsum("ij,ij->i", v, v))
-            den = qn[:, None] * vn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            out = []
-            for qi in range(len(qids)):
-                keep = (cos[qi] >= tau) & (ids != qids[qi])
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "neighbor_id": ids[keep],
-                            "sim": cos[qi][keep],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            cos = gram.cosine(Q, np.stack(pdf["qv"].to_numpy()))
+            r, c = np.nonzero((cos >= tau) & (ids[None, :] != qids[:, None]))
+            yield pd.DataFrame(
+                {"query_id": qids[r], "neighbor_id": ids[c], "sim": cos[r, c]}
+            )
 
     return (
         emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
@@ -1576,28 +1453,19 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             v = np.stack(pdf["qv"].to_numpy())
             out = []
             for d in _MRL_DIMS:
-                qp, vp = Q[:, :d], v[:, :d]
-                dots = qp @ vp.T
-                qn = np.sqrt(np.einsum("ij,ij->i", qp, qp))
-                vn = np.sqrt(np.einsum("ij,ij->i", vp, vp))
-                den = qn[:, None] * vn[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den > 0, dots / den, 0.0)
-                for qi in range(len(qids)):
-                    mask = ids != qids[qi]
-                    sel = _topk_within(ids[mask], cos[qi][mask], _MRL_K)
-                    out.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": qids[qi],
-                                "pd": d,
-                                "neighbor_id": ids[mask][sel],
-                                "sim": cos[qi][mask][sel],
-                            }
-                        )
+                cos = gram.cosine(Q[:, :d], v[:, :d])
+                r, c = gram.topk(ids, cos, _MRL_K, qids=qids)
+                out.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": qids[r],
+                            "pd": d,
+                            "neighbor_id": ids[c],
+                            "sim": cos[r, c],
+                        }
                     )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+                )
+            yield pd.concat(out, ignore_index=True)
 
     part = emb.mapInPandas(
         _score, "query_id long, pd int, neighbor_id long, sim double"
@@ -1701,7 +1569,8 @@ def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the blocking key already bounds candidates, so the token explode
     # (×4 rows), the broadcast token join, and BOTH keyed aggregates
     # collapse into a single applyInPandas over (label) groups that
-    # computes every query-token × candidate-token cosine as one einsum.
+    # computes each block query's 4 tokens × every block token as one
+    # gram.cosine — O(block) memory per query, never block².
     # Equivalence: quantized chunks make each token dot an exact < 2^53
     # integer (numpy order-independent); the per-(query,cand,qt) max and
     # the FIXED qt-order 4-term sum are reproduced exactly (left-assoc
@@ -1719,20 +1588,14 @@ def sim_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _block(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["vec_id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        v = np.stack(pdf["qv"].to_numpy()[order])
-        t = v.reshape(len(ids), 4, _MAXSIM_CHUNK)
-        tn = np.sqrt(np.einsum("nak,nak->na", t, t))
+        tok = np.stack(pdf["qv"].to_numpy()).reshape(-1, _MAXSIM_CHUNK)
         empty = np.array([], dtype=np.int64)
         out_q, out_c, out_s = [empty], [empty], [np.array([], dtype=np.float64)]
         for qi in np.where(ids < _MAXSIM_NQ)[0]:
-            dots = np.einsum("ak,nbk->nab", t[qi], t)
-            den = tn[qi][None, :, None] * tn[:, None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den > 0, dots / den, 0.0)
-            ms = cos.max(axis=2)  # per query-token max over cand tokens
-            tot = ((ms[:, 0] + ms[:, 1]) + ms[:, 2]) + ms[:, 3]
+            cos = gram.cosine(tok[4 * qi : 4 * qi + 4], tok)
+            # per query-token max over each candidate's 4 tokens: (4, n)
+            ms = cos.reshape(4, len(ids), 4).max(axis=2)
+            tot = ((ms[0] + ms[1]) + ms[2]) + ms[3]
             mask = ids != ids[qi]
             out_q.append(np.full(mask.sum(), ids[qi], dtype=np.int64))
             out_c.append(ids[mask])
@@ -1969,23 +1832,11 @@ def vector_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             w0, w1 = _sign_words(v)
-            out = []
-            for qi in range(len(qids)):
-                ham = _popcount64(w0 ^ q0[qi]) + _popcount64(w1 ^ q1[qi])
-                mask = ids != qids[qi]
-                nb, hh = ids[mask], ham[mask]
-                sel = np.lexsort((nb, hh))[: min(_HAM_K, len(nb))]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "cand_id": nb[sel],
-                            "hamming": hh[sel],
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            ham = _popcount64(w0 ^ q0[:, None]) + _popcount64(w1 ^ q1[:, None])
+            r, c = gram.topk(ids, -ham, _HAM_K, qids=qids)
+            yield pd.DataFrame(
+                {"query_id": qids[r], "cand_id": ids[c], "hamming": ham[r, c]}
+            )
 
     part = emb.mapInPandas(
         _score, "query_id long, cand_id long, hamming long"
@@ -2085,7 +1936,6 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         q0, q1 = _sign_words(R)
         t = R * 1000.0
         Q = np.sign(t) * np.floor(np.abs(t) + 0.5)
-        qn = np.sqrt(np.einsum("ij,ij->i", Q, Q))
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def _score(batches):
@@ -2095,31 +1945,19 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ids = pdf["vec_id"].to_numpy()
             v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
             w0, w1 = _sign_words(v)
-            tt = v * 1000.0
-            qv = np.sign(tt) * np.floor(np.abs(tt) + 0.5)
-            vn = np.sqrt(np.einsum("ij,ij->i", qv, qv))
-            out = []
-            for qi in range(len(qids)):
-                ham = _popcount64(w0 ^ q0[qi]) + _popcount64(w1 ^ q1[qi])
-                mask = ids != qids[qi]
-                nb, hh = ids[mask], ham[mask]
-                sel = np.lexsort((nb, hh))[: min(_RET_SHORTLIST, len(nb))]
-                dots = qv[mask][sel] @ Q[qi]
-                den = qn[qi] * vn[mask][sel]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = np.where(den > 0, dots / den, 0.0)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[qi],
-                            "cand_id": nb[sel],
-                            "hamming": hh[sel],
-                            "sim_raw": cos,
-                        }
-                    )
-                )
-            if out:
-                yield pd.concat(out, ignore_index=True)
+            ham = _popcount64(w0 ^ q0[:, None]) + _popcount64(w1 ^ q1[:, None])
+            r, c = gram.topk(ids, -ham, _RET_SHORTLIST, qids=qids)
+            short, at = np.unique(c, return_inverse=True)
+            tt = v[short] * 1000.0
+            cos = gram.cosine(Q, np.sign(tt) * np.floor(np.abs(tt) + 0.5))
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[r],
+                    "cand_id": ids[c],
+                    "hamming": ham[r, c],
+                    "sim_raw": cos[r, at],
+                }
+            )
 
     part = emb.mapInPandas(
         _score, "query_id long, cand_id long, hamming long, sim_raw double"

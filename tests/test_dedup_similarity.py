@@ -356,3 +356,60 @@ def test_df_cap_candidacy_bbit_contract(spark, hot_only_corpus):
     for pair, j in uncapped.items():
         if j >= 0.5:
             assert pair in got
+
+
+@pytest.fixture(scope="module")
+def null_label_dir(sf_dir, tmp_path_factory):
+    """``every`` -> the sf fixture with ``label`` NULL where
+    vec_id % every == every // 2; the other nine tables are symlinked."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dmi_ingestor_spark.catalog import TABLES
+
+    def make(every: int) -> str:
+        d = tmp_path_factory.mktemp(f"null_labels_{every}")
+        for t in TABLES:
+            if t != "embeddings":
+                os.symlink(os.path.join(sf_dir, f"{t}.parquet"), d / f"{t}.parquet")
+        emb = pq.read_table(os.path.join(sf_dir, "embeddings.parquet"))
+        labels = [
+            None if i % every == every // 2 else lab
+            for i, lab in zip(
+                emb.column("vec_id").to_pylist(), emb.column("label").to_pylist()
+            )
+        ]
+        field = emb.schema.field("label")
+        emb = emb.set_column(
+            emb.schema.get_field_index("label"), field, pa.array(labels, field.type)
+        )
+        pq.write_table(emb, d / "embeddings.parquet")
+        return str(d)
+
+    return make
+
+
+@pytest.mark.parametrize(
+    "name, every",
+    [
+        ("dedup_embedding_cosine", 7),
+        ("sim_maxsim_late_interaction", 7),
+        ("ml_negative_sampling", 7),
+        ("ml_knn_classifier_eval", 7),
+        # every other label NULL: some 3-NN votes tie 1-1-1 with a NULL
+        # label, so the vote tiebreak's NULL placement shows
+        ("ml_knn_classifier_eval", 2),
+    ],
+)
+def test_label_queries_match_oracle_on_null_labels(
+    spark, null_label_dir, name, every
+):
+    from tools.oracle_check import compare, duck_connection, normalize
+
+    d = null_label_dir(every)
+    spec = REGISTRY[name]
+    got = spec.builder(spark, d).toArrow().to_pandas()
+    want = duck_connection(d).execute(spec.oracle).fetch_arrow_table().to_pandas()
+    assert compare(name, normalize(got), normalize(want)) == []
