@@ -5,10 +5,10 @@ Conformal Conic CRS to EPSG:4326 via pyproj/rioxarray
 (``dmi_ingestor/ingestor.py:83-87``, WKT at ``:28-64``). pyproj is not
 available in this container, so the transform is implemented directly
 from the published spherical LCC equations (Snyder, *Map Projections — A
-Working Manual*, USGS PP 1395, eqs. 14-1..15-5) in vectorized numpy,
-wrapped as an Arrow-batched pandas UDF. When pyproj IS present it is
-used instead (same signature), keeping parity with the reference's
-dependency choice.
+Working Manual*, USGS PP 1395, eqs. 14-1..15-5) in vectorized numpy
+(``lcc_to_wgs84_np``, also wrapped as an Arrow-batched pandas UDF). When
+pyproj IS present it is used instead (same signature), keeping parity
+with the reference's dependency choice.
 
 Projection constants from the reference WKT (``ingestor.py:28-64``):
 sphere radius 6371229 m, standard parallels 55.5°/55.5° (tangent case),
@@ -69,24 +69,28 @@ LONLAT_SCHEMA = StructType(
 )
 
 
-@F.pandas_udf(LONLAT_SCHEMA)
-def lcc_to_wgs84(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-    """Arrow-vectorized U1: DMI-LCC metres → WGS84 degrees.
-
-    One JVM↔Python Arrow round-trip per batch; inside the batch the
-    transform is pure numpy (or pyproj when installed). This is the
-    only Python code in the ingestion row path — everything else stays
-    in Catalyst (SURVEY.md §4.2).
-    """
+def lcc_to_wgs84_np(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """DMI-LCC metres → WGS84 (lon, lat) degrees: pyproj when installed,
+    else ``lcc_inverse_np``. The one reprojection path — the ingest
+    decode and the ``lcc_to_wgs84`` UDF both call it."""
     if _HAVE_PYPROJ:  # pragma: no cover
         import pyproj
 
         tf = pyproj.Transformer.from_crs(
             _reference_wkt(), "epsg:4326", always_xy=True
         )
-        lon, lat = tf.transform(x.to_numpy(), y.to_numpy())
-    else:
-        lon, lat = lcc_inverse_np(x.to_numpy(), y.to_numpy())
+        return tf.transform(x, y)
+    return lcc_inverse_np(x, y)
+
+
+@F.pandas_udf(LONLAT_SCHEMA)
+def lcc_to_wgs84(x: pd.Series, y: pd.Series) -> pd.DataFrame:
+    """Arrow-vectorized U1: DMI-LCC metres → WGS84 degrees, for grids
+    that are already rows (the ingest pipeline reprojects inside its
+    decode instead). One JVM↔Python Arrow round-trip per batch; inside
+    the batch the transform is ``lcc_to_wgs84_np``.
+    """
+    lon, lat = lcc_to_wgs84_np(x.to_numpy(), y.to_numpy())
     return pd.DataFrame({"lon": lon, "lat": lat})
 
 

@@ -1,4 +1,4 @@
-"""End-to-end ingestion: fetch → decode → reproject → partitioned write →
+"""End-to-end ingestion: fetch → decode+reproject → partitioned write →
 manifest (SURVEY.md §7 M2 — the reference's full capability, Spark-native).
 
 Reference pipeline being re-expressed (``dmi_ingestor/ingestor.py``):
@@ -13,11 +13,16 @@ Spark mapping (SURVEY.md §3):
   time_str)`` parquet layout — the same object-store layout, atomic;
 * delete-then-write        → dynamic partition overwrite: only
   partitions present in the NEW data are replaced, so a failed fetch
-  leaves the old forecast intact (keep-last-good, :192-199) *and* the
-  replace is per-partition atomic where the reference races (:199);
-* manifest                 → A1 aggregation + single JSON per
-  (collection, parameter) — tiny by construction, coalesce(1) is safe
-  here and only here (SURVEY.md §7.4).
+  or decode leaves the old forecast intact (keep-last-good, :192-199)
+  *and* the replace is per-partition atomic where the reference races
+  (:199);
+* manifest                 → the (parameter, time_str) leaves the write
+  itself observed, one JSON per (collection, parameter).
+
+A forecast is one lazy plan and one write: every cube is fetched,
+decoded and reprojected exactly once, and the counts, failed
+parameters, stale-leaf deletes and manifests all come from that write's
+``Observation`` — nothing is cached, validated ahead or read back.
 """
 
 from __future__ import annotations
@@ -28,7 +33,7 @@ from collections.abc import Iterator
 from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -38,7 +43,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dmi_ingestor_spark.functions.projection import lcc_to_wgs84
+from dmi_ingestor_spark.functions.projection import lcc_to_wgs84_np
+from dmi_ingestor_spark.ingest.fs import fs_delete, fs_list_subdirs
 from dmi_ingestor_spark.sources.cube_format import decode_cube
 from dmi_ingestor_spark.sources.http_edr import (
     IngestConfig,
@@ -54,22 +60,28 @@ GRID_SCHEMA = StructType(
         StructField("y", DoubleType()),
         StructField("x", DoubleType()),
         StructField("value", DoubleType()),
+        StructField("lon", DoubleType()),
+        StructField("lat", DoubleType()),
     ]
 )
 
 
-def decode_to_grid(fetched: DataFrame) -> DataFrame:
-    """S2/U2: payload blobs → long-form grid rows via mapInPandas.
+def decode_to_grid(fetched: DataFrame, lambert: bool) -> DataFrame:
+    """S2/U2 + P3/U1: payload blobs → long-form WGS84 grid rows via
+    mapInPandas.
 
     One input row (a whole cube) explodes into time×y×x rows — the
     iterator-of-batches shape lets a single task stream multiple cubes
-    without materializing more than one at a time. Failed fetches
-    (payload NULL) are dropped here, and so are payloads that FAIL TO
-    DECODE (corrupt/truncated bytes) — a bad cube must quarantine its
-    parameter, never crash the job (the reference's per-parameter
-    try/except, ingestor.py:221-227). ``run_ingest`` detects the
-    decode-failed parameters (zero surviving rows) BEFORE any
-    destructive write, so their previous forecasts stay intact
+    without materializing more than one at a time. ``lambert`` grids
+    (harmonie_*) are reprojected LCC→WGS84 in the same Python worker;
+    crs84 grids pass their coordinates through (ingestor.py:170-173,
+    201-202). Failed fetches (payload NULL) are dropped here, and so are
+    payloads that FAIL TO DECODE (corrupt/truncated bytes) — a bad cube
+    must quarantine its parameter, never crash the job (the reference's
+    per-parameter try/except, ingestor.py:221-227). Such a parameter
+    has no rows, so the write replaces none of its leaves and
+    ``run_ingest``'s stale-leaf delete, which only touches parameters
+    the write observed, leaves its previous forecast intact
     (keep-last-good).
     """
 
@@ -88,6 +100,7 @@ def decode_to_grid(fetched: DataFrame) -> DataFrame:
                 times = np.repeat(np.asarray(cube.times, dtype="int64"), ny * nx)
                 ys = np.tile(np.repeat(np.asarray(cube.ys), nx), nt)
                 xs = np.tile(np.asarray(cube.xs), nt * ny)
+                lon, lat = lcc_to_wgs84_np(xs, ys) if lambert else (xs, ys)
                 yield pd.DataFrame(
                     {
                         "collection": row["collection"],
@@ -96,19 +109,12 @@ def decode_to_grid(fetched: DataFrame) -> DataFrame:
                         "y": ys,
                         "x": xs,
                         "value": cube.values.reshape(-1),
+                        "lon": lon,
+                        "lat": lat,
                     }
                 )
 
     return fetched.mapInPandas(_explode, GRID_SCHEMA)
-
-
-def with_wgs84(grid: DataFrame, collection_is_lambert: bool) -> DataFrame:
-    """P3 branch + U1: harmonie_* grids run the LCC→WGS84 pandas UDF;
-    crs84 grids pass coordinates through (ingestor.py:170-173,201-202)."""
-    if collection_is_lambert:
-        ll = lcc_to_wgs84(F.col("x"), F.col("y"))
-        return grid.withColumn("lon", ll["lon"]).withColumn("lat", ll["lat"])
-    return grid.withColumn("lon", F.col("x")).withColumn("lat", F.col("y"))
 
 
 def with_time_str(grid: DataFrame) -> DataFrame:
@@ -137,151 +143,73 @@ def run_ingest(
     public_base_url: str = "https://bucket.example",
     export_tifs: bool = False,
 ) -> IngestResult:
-    """The full reference pipeline, one Spark job graph.
+    """The full reference pipeline, one Spark write.
 
     Writes ``{out_dir}/grid/collection=…/parameter=…/time_str=…/*.parquet``
     with dynamic partition overwrite and one
     ``{out_dir}/manifests/{collection}/{parameter}/forecasts.json`` per
-    parameter (same key→URL shape as ingestor.py:219-227).
+    parameter (same key→URL shape as ingestor.py:219-227). Counts are
+    scoped to THIS run; a parameter that fetched or decoded to nothing
+    is listed in ``failed_parameters`` (config order) and keeps its
+    previous forecast.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    fetched = fetch_cubes(spark, config, transport).cache()
-    failed = [
-        r["parameter"]
-        for r in fetched.filter(F.col("error").isNotNull())
-        .select("parameter")
-        .collect()
-    ]
-
-    grid = with_time_str(
-        with_wgs84(decode_to_grid(fetched), config.crs == "native")
-    )
     grid_path = os.path.join(out_dir, "grid")
-    ok_parameters = [p for p in config.parameters if p not in failed]
-    if ok_parameters:
-        # Decode validation BEFORE anything destructive: a parameter whose
-        # payload fetched but produced no decodable rows (corrupt bytes)
-        # joins the failed list, so the stale-leaf delete below never
-        # touches its previous forecast. One cheap distinct over the
-        # cached fetch results; decode re-runs at write time anyway.
-        decoded = {
-            r["parameter"]
-            for r in grid.select("parameter").distinct().collect()
-        }
-        decode_failed = sorted(p for p in ok_parameters if p not in decoded)
-        failed += decode_failed
-        ok_parameters = [p for p in ok_parameters if p in decoded]
-    if not ok_parameters:
-        # every fetch failed: write nothing, delete nothing — the whole
-        # previous forecast stays intact (ingestor.py:192-199)
-        fetched.unpersist()
-        n_existing = 0
-        if os.path.isdir(grid_path):
-            existing = spark.read.parquet(grid_path)
-            n_existing = existing.count()
-        return IngestResult(
-            out_dir=out_dir,
-            n_rows=n_existing,
-            n_partitions_written=0,
-            failed_parameters=failed,
-            manifest_paths=[],
-        )
-
-    # S7 retention semantics (delete_outdated_forecasts, ingestor.py:67-73,
-    # :199): a *successful* fetch replaces the parameter's entire previous
-    # forecast — including timesteps the new run no longer covers — while
-    # a failed fetch leaves its prefix untouched (keep-last-good, :192-199).
-    # Order matters: the reference deletes BEFORE uploading (ingestor.py:199),
-    # so a decode/upload failure destroys the previous forecast. Here the
-    # write runs FIRST (dynamic partition overwrite replaces only the
-    # time_str leaves present in the new data, each leaf atomically); only
-    # after it succeeds are the stale leaves — old time_strs the new run no
-    # longer covers — deleted, by diffing the pre-write partition listing
-    # against the new data's partitions. A failure anywhere before the
-    # diff leaves every previous forecast readable. Deletes go through the
-    # Hadoop FileSystem API (ingest/fs.py), so the same path works on
-    # file://, hdfs:// and s3a://; on a table format (Iceberg/Delta) this
-    # whole block becomes a single REPLACE WHERE.
-    from dmi_ingestor_spark.ingest.fs import fs_delete, fs_list_subdirs
-
-    ok_prefixes = {
-        parameter: os.path.join(
-            grid_path, f"collection={config.collection}", f"parameter={parameter}"
-        )
-        for parameter in ok_parameters
-    }
-    old_leaves = {
-        parameter: set(fs_list_subdirs(spark, prefix))
-        for parameter, prefix in ok_prefixes.items()
-    }
+    grid = with_time_str(
+        decode_to_grid(fetch_cubes(spark, config, transport), config.crs == "native")
+    )
+    written = Observation("ingest")
     (
         grid.repartition("collection", "parameter", "time_str")
+        # observed after the shuffle: observed before it, a run with zero
+        # rows (every parameter failed) makes Observation.get raise
+        .observe(
+            written,
+            F.count(F.lit(1)).alias("n_rows"),
+            F.collect_set(F.struct("parameter", "time_str")).alias("leaves"),
+        )
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("collection", "parameter", "time_str")
         .parquet(grid_path)
     )
-    # Partitions actually produced by THIS run: decode is re-run on the
-    # cached fetch results (cheap vs a full-table re-read, deterministic),
-    # aggregated down to the distinct partition keys.
-    new_part_rows = (
-        grid.select("parameter", "time_str").distinct().collect()
-    )
-    new_leaves: dict[str, set[str]] = {p: set() for p in ok_parameters}
-    for r in new_part_rows:
-        new_leaves.setdefault(r["parameter"], set()).add(f"time_str={r['time_str']}")
-    for parameter, prefix in ok_prefixes.items():
-        for stale in sorted(old_leaves[parameter] - new_leaves[parameter]):
+    stats = written.get
+    new_leaves: dict[str, set[str]] = {}
+    for parameter, time_str in stats["leaves"]:
+        new_leaves.setdefault(parameter, set()).add(time_str)
+    ok_parameters = [p for p in config.parameters if p in new_leaves]
+
+    # S7 retention semantics (delete_outdated_forecasts, ingestor.py:67-73,
+    # :199): a *successful* parameter's new forecast replaces its entire
+    # previous one — including timesteps the new run no longer covers —
+    # while a failed one leaves its prefix untouched (keep-last-good,
+    # :192-199). The reference deletes BEFORE uploading (ingestor.py:199),
+    # so a decode/upload failure destroys the previous forecast. Here the
+    # write runs FIRST (dynamic overwrite replaces only the time_str leaves
+    # present in the new data, each atomically); only after it succeeds
+    # are the stale leaves of the parameters it observed — old time_strs
+    # the new run no longer covers — deleted. Deletes go through the
+    # Hadoop FileSystem API (ingest/fs.py), so the same path works on
+    # file://, hdfs:// and s3a://; on a table format (Iceberg/Delta) this
+    # whole block becomes a single REPLACE WHERE.
+    manifest_paths = []
+    for parameter in ok_parameters:
+        prefix = os.path.join(
+            grid_path, f"collection={config.collection}", f"parameter={parameter}"
+        )
+        keep = {f"time_str={t}" for t in new_leaves[parameter]}
+        for stale in sorted(set(fs_list_subdirs(spark, prefix)) - keep):
             fs_delete(spark, os.path.join(prefix, stale))
 
-    written = spark.read.parquet(grid_path)
-    new_parts = (
-        written.filter(
-            (F.col("collection") == config.collection)
-            & F.col("parameter").isin(ok_parameters)
-        )
-        .select("collection", "parameter", "time_str")
-        .distinct()
-    )
-    manifest_rows = (
-        new_parts.withColumn(
-            "url",
-            F.concat_ws(
-                "/",
-                F.lit(public_base_url),
-                "collection",
-                "parameter",
-                F.concat(F.col("time_str"), F.lit(".tif")),
-            ),
-        )
-        .groupBy("collection", "parameter")
-        .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("time_str", "url")))
-            ).alias("manifest")
-        )
-        .collect()
-    )
-    manifest_paths = []
-    for r in manifest_rows:
-        mdir = os.path.join(out_dir, "manifests", r["collection"], r["parameter"])
+        mdir = os.path.join(out_dir, "manifests", config.collection, parameter)
         os.makedirs(mdir, exist_ok=True)
         mpath = os.path.join(mdir, "forecasts.json")
+        manifest = {
+            t: f"{public_base_url}/{config.collection}/{parameter}/{t}.tif"
+            for t in new_leaves[parameter]
+        }
         with open(mpath, "w") as fh:
-            json.dump(dict(r["manifest"]), fh, indent=4, sort_keys=True)
+            json.dump(manifest, fh, indent=4, sort_keys=True)
         manifest_paths.append(mpath)
-
-    # Counts are scoped to THIS run (current collection + successful
-    # parameters) — a pre-existing table must not inflate "written" stats.
-    this_run = written.filter(
-        (F.col("collection") == config.collection)
-        & F.col("parameter").isin(ok_parameters)
-    )
-    stats = this_run.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct("collection", "parameter", "time_str").alias("n_parts"),
-    ).collect()[0]
-    n_rows, n_parts = stats["n_rows"], stats["n_parts"]
 
     # S4 optional export: the reference's actual output artifact — one
     # COG-structured GeoTIFF per timestep (ingestor.py:76-80,207-218) —
@@ -289,21 +217,24 @@ def run_ingest(
     # just ingested. Pure opt-in: the parquet table remains the engine's
     # native format (SURVEY.md §2.1 S4).
     tif_paths: list[str] | None = None
-    if export_tifs:
+    if export_tifs and ok_parameters:
         from dmi_ingestor_spark.operators.raster import rasterize_timesteps
 
+        this_run = spark.read.parquet(grid_path).filter(
+            (F.col("collection") == config.collection)
+            & F.col("parameter").isin(ok_parameters)
+        )
         tif_manifest = rasterize_timesteps(
             this_run.select("parameter", "time_str", "y", "x", "value"),
             os.path.join(out_dir, "tif", config.collection),
         ).collect()
         tif_paths = sorted(r["path"] for r in tif_manifest)
 
-    fetched.unpersist()
     return IngestResult(
         out_dir=out_dir,
-        n_rows=n_rows,
-        n_partitions_written=n_parts,
-        failed_parameters=failed,
+        n_rows=stats["n_rows"],
+        n_partitions_written=len(stats["leaves"]),
+        failed_parameters=[p for p in config.parameters if p not in new_leaves],
         manifest_paths=manifest_paths,
         tif_paths=tif_paths,
     )

@@ -159,8 +159,8 @@ def ingest_regrid_coarsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ingest_e2e_local",
     oracle=None,  # full binary pipeline; asserted in tests/test_ingest.py
     doc=(
-        "M2 end-to-end: offline transport → FCUBE decode → LCC→WGS84 "
-        "pandas UDF → dynamic-partition-overwrite parquet → manifest "
+        "M2 end-to-end: offline transport → FCUBE decode + LCC→WGS84 "
+        "in one mapInPandas → dynamic-partition-overwrite parquet → manifest "
         "JSON; returns the written grid (rows-only smoke for the "
         "driver)."
     ),

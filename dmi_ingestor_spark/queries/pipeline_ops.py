@@ -2465,40 +2465,40 @@ def pipeline_backfill_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
     ev.write.mode("overwrite").partitionBy("event_date").parquet(root)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        backfill = ev.filter(
-            (F.dayofmonth("event_date") <= 2) & (F.col("event_type") != "error")
-        )
-        backfill.write.mode("overwrite").partitionBy("event_date").parquet(root)
-        # Dynamic overwrite only rewrites partitions PRESENT in the
-        # incoming frame — a target date whose rows are ALL scrubbed
-        # produces no incoming partition and would leave its stale
-        # files behind (ADVICE r3). The target list must come from the
-        # date PREDICATE, not from surviving rows: diff the predicate's
-        # dates against the backfill's and delete the stale remainder.
-        # O(#partitions) driver-side; the delete goes through the same
-        # Hadoop FileSystem API as retention (s3a-safe).
-        from dmi_ingestor_spark.ingest.fs import fs_delete
+    backfill = ev.filter(
+        (F.dayofmonth("event_date") <= 2) & (F.col("event_type") != "error")
+    )
+    (
+        backfill.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_date")
+        .parquet(root)
+    )
+    # Dynamic overwrite only rewrites partitions PRESENT in the
+    # incoming frame — a target date whose rows are ALL scrubbed
+    # produces no incoming partition and would leave its stale
+    # files behind (ADVICE r3). The target list must come from the
+    # date PREDICATE, not from surviving rows: diff the predicate's
+    # dates against the backfill's and delete the stale remainder.
+    # O(#partitions) driver-side; the delete goes through the same
+    # Hadoop FileSystem API as retention (s3a-safe).
+    from dmi_ingestor_spark.ingest.fs import fs_delete
 
-        target_dates = {
-            r[0]
-            for r in ev.filter(F.dayofmonth("event_date") <= 2)
-            .select(F.col("event_date").cast("string"))
-            .distinct()
-            .collect()
-        }
-        written_dates = {
-            r[0]
-            for r in backfill.select(F.col("event_date").cast("string"))
-            .distinct()
-            .collect()
-        }
-        for d in sorted(target_dates - written_dates):
-            fs_delete(spark, f"{root}/event_date={d}")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    target_dates = {
+        r[0]
+        for r in ev.filter(F.dayofmonth("event_date") <= 2)
+        .select(F.col("event_date").cast("string"))
+        .distinct()
+        .collect()
+    }
+    written_dates = {
+        r[0]
+        for r in backfill.select(F.col("event_date").cast("string"))
+        .distinct()
+        .collect()
+    }
+    for d in sorted(target_dates - written_dates):
+        fs_delete(spark, f"{root}/event_date={d}")
     return (
         spark.read.parquet(root)
         .groupBy(F.col("event_date").cast("string").alias("event_date"))

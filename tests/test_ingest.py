@@ -221,3 +221,113 @@ def test_e2e_decode_failure_keeps_previous_forecast(spark, out_dir):
     grid = spark.read.parquet(os.path.join(out_dir, "grid"))
     n_after = grid.filter(F.col("parameter") == "p-ok").count()
     assert n_after == res1.n_rows  # old forecast intact, byte for byte
+
+
+def _make_transport_next(fail: dict[str, str] | None = None):
+    """The next forecast run (+1 day, values +1) with per-parameter
+    failures: ``"down"`` raises in the fetch, ``"corrupt"`` returns bytes
+    that do not decode."""
+    fail = fail or {}
+
+    def transport(url: str) -> bytes:
+        parameter = url.split("parameter-name=")[1].split("&")[0]
+        if fail.get(parameter) == "down":
+            raise RuntimeError("HTTP 500 from upstream")
+        if fail.get(parameter) == "corrupt":
+            return b"not-a-cube-payload"
+        cube = synthetic_cube(parameter, t0=1_767_312_000)
+        cube.values = cube.values + 1.0
+        return encode_cube(cube)
+
+    return transport
+
+
+def _tree(root: str) -> dict[str, bytes]:
+    """Every file under ``root`` (relative path → bytes)."""
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            path = os.path.join(d, f)
+            with open(path, "rb") as fh:
+                out[os.path.relpath(path, root)] = fh.read()
+    return out
+
+
+def test_run_ingest_leaves_session_overwrite_mode(spark, out_dir):
+    """Dynamic overwrite is a writer option, not a session config the
+    caller's later queries inherit."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    cfg = IngestConfig(collection="dkss_if", parameters=("p-a",))
+    run_ingest(spark, cfg, out_dir, _make_transport_ok())
+    assert spark.conf.get(key) == "static"
+
+
+def test_all_failed_run_counts_only_this_run(spark, out_dir):
+    cfg = IngestConfig(collection="dkss_if", parameters=("p-a", "p-b"))
+    assert run_ingest(spark, cfg, out_dir, _make_transport_ok()).n_rows == 512
+    res = run_ingest(
+        spark, cfg, out_dir, _make_transport_next({"p-a": "down", "p-b": "down"})
+    )
+    assert res.n_rows == 0 and res.n_partitions_written == 0
+    assert res.failed_parameters == ["p-a", "p-b"]
+    assert res.manifest_paths == []
+
+
+def test_mixed_fetch_and_decode_failures_keep_last_good(spark, out_dir):
+    """One run with a decode failure, a good parameter and a fetch
+    failure: the failures are listed in config order, their previous
+    forecasts (leaves and manifests) survive byte for byte, and only the
+    good parameter is replaced and gets a new manifest."""
+    cfg = IngestConfig(
+        collection="dkss_if", parameters=("p-corrupt", "p-ok", "p-down")
+    )
+    run_ingest(spark, cfg, out_dir, _make_transport_ok())
+    grid = os.path.join(out_dir, "grid", "collection=dkss_if")
+    manifests = os.path.join(out_dir, "manifests", "dkss_if")
+    before = {
+        p: (_tree(f"{grid}/parameter={p}"), _tree(f"{manifests}/{p}"))
+        for p in ("p-corrupt", "p-down")
+    }
+
+    res = run_ingest(
+        spark,
+        cfg,
+        out_dir,
+        _make_transport_next({"p-corrupt": "corrupt", "p-down": "down"}),
+    )
+    assert res.failed_parameters == ["p-corrupt", "p-down"]
+    for p, (leaves, manifest) in before.items():
+        assert _tree(f"{grid}/parameter={p}") == leaves
+        assert _tree(f"{manifests}/{p}") == manifest
+    ok_leaves = sorted(os.listdir(f"{grid}/parameter=p-ok"))
+    assert len(ok_leaves) == 4
+    assert all(t.startswith("time_str=20260102") for t in ok_leaves)
+    assert res.n_rows == 4 * 8 * 8 and res.n_partitions_written == 4
+    assert res.manifest_paths == [f"{manifests}/p-ok/forecasts.json"]
+    with open(res.manifest_paths[0]) as fh:
+        assert sorted(f"time_str={t}" for t in json.load(fh)) == ok_leaves
+
+
+@pytest.mark.parametrize(
+    "case, fail, jobs",
+    [
+        ("success", {}, 3),
+        ("all_fetch_failed", {"t2m": "down", "wind-speed": "down"}, 3),
+        ("corrupt_payload", {"t2m": "corrupt", "wind-speed": "corrupt"}, 3),
+    ],
+)
+def test_run_ingest_job_budget(spark, out_dir, case, fail, jobs):
+    """One forecast is one write: pin the Spark jobs ``run_ingest`` runs
+    on top of a previous forecast (a deterministic counter, unlike wall
+    time)."""
+    cfg = IngestConfig(collection="harmonie_dini_sf", parameters=("t2m", "wind-speed"))
+    run_ingest(spark, cfg, out_dir, _make_transport_ok())
+    sc = spark.sparkContext
+    group = f"ingest-job-budget-{case}"
+    sc.setJobGroup(group, "run_ingest job budget")
+    try:
+        run_ingest(spark, cfg, out_dir, _make_transport_next(fail))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs

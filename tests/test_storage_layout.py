@@ -77,7 +77,6 @@ def test_dynamic_partition_overwrite_keeps_others(spark, sf_dir, tmp_path):
     rest intact (the reference's delete-then-write races instead,
     dmi_ingestor/ingestor.py:199)."""
     out = str(tmp_path / "events_dpo")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     e = table(spark, sf_dir, "events").select("event_id", "value", "event_type")
     e.write.partitionBy("event_type").mode("overwrite").parquet(out)
     total_before = spark.read.parquet(out).count()
@@ -87,7 +86,9 @@ def test_dynamic_partition_overwrite_keeps_others(spark, sf_dir, tmp_path):
     one = spark.createDataFrame(
         [(999_999_999, 0.0, "click")], "event_id long, value double, event_type string"
     )
-    one.write.partitionBy("event_type").mode("overwrite").parquet(out)
+    one.write.partitionBy("event_type").mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(out)
 
     after = spark.read.parquet(out)
     assert after.filter(F.col("event_type") == "click").count() == 1
