@@ -18,6 +18,8 @@ never the n × n matrix.
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
 
 _BLOCK = 256
@@ -148,6 +150,21 @@ def eps_neighbour_counts(v, eps2):
         close[np.arange(e - s), np.arange(s, e)] = False
         counts[s:e] = close.sum(axis=1)
     return counts
+
+
+def md5_planes(n_planes: int, dim: int) -> np.ndarray:
+    """±1 hyperplane matrix (n_planes × dim) for :func:`sign_buckets`.
+
+    ``H[j, i] = +1`` if the first hex digit of md5("p{j}-{i}") is even,
+    else -1 — deterministic, no stored model, reproducible across runs
+    and engines. The entries depend only on (j, i), so callers compute
+    them once at plan time and unroll the same literals into the
+    oracle SQL."""
+    digit = [
+        [int(hashlib.md5(f"p{j}-{i}".encode()).hexdigest()[0], 16) for i in range(dim)]
+        for j in range(n_planes)
+    ]
+    return np.where(np.array(digit) % 2 == 0, 1.0, -1.0)
 
 
 def sign_buckets(v, planes):

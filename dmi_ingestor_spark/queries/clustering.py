@@ -644,11 +644,8 @@ def cluster_dbscan_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     core_a = core.select(F.col("core_id").alias("a_id"))
     core_b = core.select(F.col("core_id").alias("b_id"))
-    # localCheckpoint cuts the grid-join lineage out of every
-    # propagation round's plan (the eps=200 graph has real diameter, so
-    # rounds are many and an uncut plan string alone OOMs the driver).
-    ce = pairs.join(core_a, "a_id").join(core_b, "b_id").localCheckpoint(eager=True)
-    comp = connected_components(ce, "a_id", "b_id", checkpoint_every=3).select(
+    ce = pairs.join(core_a, "a_id").join(core_b, "b_id")
+    comp = connected_components(ce, "a_id", "b_id").select(
         F.col("node").alias("id"), F.col("component").alias("comp")
     )
     border = (
@@ -687,24 +684,8 @@ _DBL_MINPTS = 3
 _DBL_PLANES = 8
 
 
-def _dbl_planes() -> list[list[int]]:
-    """±1 hyperplanes, md5-derived at plan time (similarity.py recipe)."""
-    import hashlib
-
-    return [
-        [
-            1
-            if int(hashlib.md5(f"p{j}-{i}".encode()).hexdigest()[0], 16) % 2
-            == 0
-            else -1
-            for i in range(64)
-        ]
-        for j in range(_DBL_PLANES)
-    ]
-
-
 def _dbl_oracle() -> str:
-    planes = _dbl_planes()
+    planes = gram.md5_planes(_DBL_PLANES, 64)
     dot_terms = []
     for j, row in enumerate(planes):
         terms = " + ".join(
@@ -782,7 +763,7 @@ def cluster_dbscan_lsh_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    planes = np.asarray(_dbl_planes())
+    planes = gram.md5_planes(_DBL_PLANES, 64)
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(

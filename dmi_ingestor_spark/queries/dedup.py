@@ -747,10 +747,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc=(
         "Near-dup CLUSTERS (what a dedup pipeline actually drops on): "
         "connected components over the MinHash-LSH pair graph via "
-        "iterative min-label propagation (operators/components.py), "
-        "singletons labeled with their own id. Converges in O(cluster "
-        "diameter) rounds, each one edge-set shuffle — the corpus never "
-        "iterates."
+        "min-label propagation with hooking and pointer doubling "
+        "(operators/components.py), singletons labeled with their own "
+        "id. Converges in about log2(nodes) rounds, each one observed "
+        "checkpoint over the edge set — the corpus never iterates."
     ),
     tags=("dedup", "components", "iterative"),
 )
@@ -758,10 +758,7 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dmi_ingestor_spark.operators.components import connected_components
 
     pairs = dedup_minhash_lsh(spark, sf_dir).select("a_id", "b_id")
-    # checkpoint_every=2: without per-round lineage cuts the unrolled
-    # label-propagation plan reaches ~9 MB formatted (plan_audit cap
-    # finding r4) — same stringification-OOM class as the k-core loop
-    comp = connected_components(pairs, "a_id", "b_id", checkpoint_every=2)
+    comp = connected_components(pairs, "a_id", "b_id")
     d = table(spark, sf_dir, "documents").select("doc_id")
     return d.join(F.broadcast(comp), d.doc_id == comp.node, "left").select(
         "doc_id",
@@ -1021,10 +1018,7 @@ def dedup_cluster_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dmi_ingestor_spark.operators.components import connected_components
 
     pairs = dedup_minhash_lsh(spark, sf_dir).select("a_id", "b_id")
-    # checkpoint_every=2: without per-round lineage cuts the unrolled
-    # label-propagation plan reaches ~9 MB formatted (plan_audit cap
-    # finding r4) — same stringification-OOM class as the k-core loop
-    comp = connected_components(pairs, "a_id", "b_id", checkpoint_every=2)
+    comp = connected_components(pairs, "a_id", "b_id")
     d = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     labeled = d.join(F.broadcast(comp), d.doc_id == comp.node, "left").select(
         "doc_id",

@@ -117,29 +117,6 @@ def sim_topk_float(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_PLANES = 8  # one 8-bit bucket key (256 buckets)
 
 
-def _plane_literals(dim: int) -> list[list[float]]:
-    """±1 hyperplane matrix, md5-derived, computed ONCE at plan time.
-
-    h_ij = +1 if the first hex digit of md5("p{j}-{i}") is even else -1
-    — deterministic, no stored model, reproducible across runs and
-    engines. Values depend only on (j, i), so evaluating md5 inside the
-    Catalyst expression per row (the round-1 form) repaid 8×dim hash
-    calls per vector for constants; now they ride into the numpy
-    sign-pack kernel and are unrolled into the oracle SQL.
-    """
-    import hashlib
-
-    return [
-        [
-            1.0
-            if int(hashlib.md5(f"p{j}-{i}".encode()).hexdigest()[0], 16) % 2 == 0
-            else -1.0
-            for i in range(dim)
-        ]
-        for j in range(N_PLANES)
-    ]
-
-
 def _embedding_dim(sf_dir: str) -> int:
     """Vector dimensionality, read from one parquet row at plan time.
 
@@ -269,7 +246,7 @@ def _signed_buckets(emb: DataFrame) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    planes = np.asarray(_plane_literals(LSH_DIM))
+    planes = gram.md5_planes(N_PLANES, LSH_DIM)
 
     def _sig(batches):
         for pdf in batches:
@@ -297,7 +274,7 @@ def _lsh_bucket_sql(qv: str) -> str:
     ``list_dot_product`` calls, so both engines compute identical exact
     integer sums and identical sign bits.
     """
-    planes = _plane_literals(LSH_DIM)
+    planes = gram.md5_planes(N_PLANES, LSH_DIM)
     terms = [
         f"CASE WHEN list_dot_product({qv}, "
         f"[{', '.join(str(int(h)) for h in plane)}]::DOUBLE[]) >= 0 "

@@ -3704,7 +3704,7 @@ def analytics_identity_stitching(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    comp = connected_components(edges, "a", "b", checkpoint_every=2)
+    comp = connected_components(edges, "a", "b")
     user_comp = comp.filter(F.col("node") % 3 == 0).select(
         (F.col("node") / 3).cast("long").alias("user_id"), "component"
     )

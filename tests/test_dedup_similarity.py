@@ -160,10 +160,10 @@ def test_connected_components_known_graph(spark):
 
 
 def test_connected_components_long_chain(spark):
-    """A 60-node path graph has diameter 59 > max_iter 25: plain min-label
-    propagation would exit the loop with WRONG labels; pointer doubling
-    (label-of-label shortcutting) converges in ~log2(59) rounds, so every
-    node must reach component 0 well within the default iteration cap."""
+    """A 60-node path graph has diameter 59: plain min-label propagation
+    would need 59 rounds; pointer doubling (label-of-label shortcutting)
+    converges in ~log2(59) rounds, so every node must reach component 0
+    well within the round cap."""
     from dmi_ingestor_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
@@ -171,9 +171,78 @@ def test_connected_components_long_chain(spark):
     ).repartition(4)
     got = {
         r.node: r.component
-        for r in connected_components(edges, "a", "b", checkpoint_every=3).collect()
+        for r in connected_components(edges, "a", "b").collect()
     }
     assert got == {i: 0 for i in range(60)}
+
+
+@pytest.mark.parametrize("order", ["path", "permuted"])
+def test_connected_components_path_converges_in_log_rounds(spark, monkeypatch, order):
+    """A 10⁴-node path labels every node with the minimum id within
+    2·log2(n) rounds, whether ids run in path order or are randomly
+    permuted along the path (where a local-minimum label must not
+    spread only one hop per round)."""
+    import math
+    import random
+
+    from dmi_ingestor_spark.operators import components
+
+    n = 10_000
+    ids = list(range(n))
+    if order == "permuted":
+        random.Random(7).shuffle(ids)
+    monkeypatch.setattr(components, "MAX_ROUNDS", math.ceil(2 * math.log2(n)))
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "a long, b long").repartition(4)
+    got = components.connected_components(edges, "a", "b")
+    assert got.where(F.col("component") != 0).count() == 0
+    assert got.count() == n
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """Reaching the round cap raises instead of returning unconverged
+    labels: a 3-node chain needs more than one round."""
+    from dmi_ingestor_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ROUNDS", 1)
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components.connected_components(edges, "a", "b")
+
+
+def test_connected_components_one_action_per_round(spark, monkeypatch):
+    """Each round materializes once: its eager localCheckpoint carries
+    the convergence Observation, and no other action runs (one more
+    checkpoint holds the symmetric edge set)."""
+    from pyspark.sql import Observation
+
+    from dmi_ingestor_spark.operators import components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "a long, b long"
+    ).repartition(3)
+    frame = type(edges)
+    calls = {"checkpoint": 0, "observation": 0}
+    checkpoint = frame.localCheckpoint
+
+    def counted_checkpoint(self, *args, **kwargs):
+        calls["checkpoint"] += 1
+        return checkpoint(self, *args, **kwargs)
+
+    class CountedObservation(Observation):
+        def __init__(self, *args):
+            calls["observation"] += 1
+            super().__init__(*args)
+
+    def no_action(self, *args, **kwargs):
+        raise AssertionError("connected_components ran an extra action")
+
+    monkeypatch.setattr(frame, "localCheckpoint", counted_checkpoint)
+    monkeypatch.setattr(components, "Observation", CountedObservation)
+    for action in ("count", "collect", "first", "head", "take", "toPandas", "cache", "persist"):
+        monkeypatch.setattr(frame, action, no_action)
+    components.connected_components(edges, "a", "b")
+    assert calls["observation"] >= 2
+    assert calls["checkpoint"] == calls["observation"] + 1
 
 
 def test_ml_minhash_invariant_summary(spark, sf_dir):

@@ -5,7 +5,15 @@ tree (one line per node), scan pushdown lines, and shuffle/broadcast
 counts. `tests/test_plan_quality.py` asserts the load-bearing properties;
 this artifact makes all of them inspectable at once.
 
-Usage: python tools/dump_plans.py [--sf-dir ...] [--out PLANS.md]
+With ``--tag``, it instead writes each query's full formatted plan to
+``plans/<tag>/<name>.txt`` and prints the output schema — run it with
+``--tag before`` and ``--tag after`` around a change, then
+``diff -r plans/before plans/after``.
+
+Usage::
+
+    python tools/dump_plans.py [--sf-dir ...] [--out PLANS.md] [--names NAME ...]
+    python tools/dump_plans.py --tag before --names q1_pricing_summary ...
 """
 
 from __future__ import annotations
@@ -34,15 +42,35 @@ def summarize(plan: str) -> tuple[list[str], list[str]]:
     return nodes, pushed
 
 
+def formatted_plan(spark, df) -> str:
+    return spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def dump_tagged(spark, registry, names, sf_dir: str, tag: str) -> None:
+    out_dir = os.path.join(REPO, "plans", tag)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        df = registry[name].builder(spark, sf_dir)
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(formatted_plan(spark, df))
+        print(f"{name}\t{df.schema.simpleString()}")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
     ap.add_argument("--out", default=os.path.join(REPO, "PLANS.md"))
+    ap.add_argument("--names", nargs="+", help="only these queries (default: all)")
+    ap.add_argument("--tag", help="write full plans to plans/<tag>/ instead of the summary")
     args = ap.parse_args()
 
     registry = load_all()
+    names = args.names or sorted(registry)
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
+    if args.tag:
+        dump_tagged(spark, registry, names, args.sf_dir, args.tag)
+        return 0
 
     lines = [
         "# Physical plans (generated by tools/dump_plans.py)",
@@ -52,13 +80,9 @@ def main() -> int:
         "parquet pushdown entries. Regenerate after plan-affecting changes.",
         "",
     ]
-    for name in sorted(registry):
-        spec = registry[name]
+    for name in names:
         try:
-            df = spec.builder(spark, args.sf_dir)
-            plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = formatted_plan(spark, registry[name].builder(spark, args.sf_dir))
         except Exception as e:  # noqa: BLE001
             lines += [f"## {name}", "", f"(plan unavailable: {type(e).__name__}: {e})", ""]
             continue
@@ -80,7 +104,7 @@ def main() -> int:
 
     with open(args.out, "w") as f:
         f.write("\n".join(lines))
-    print(f"wrote {args.out} ({len(registry)} queries)")
+    print(f"wrote {args.out} ({len(names)} queries)")
     return 0
 
 
