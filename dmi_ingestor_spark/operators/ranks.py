@@ -27,10 +27,10 @@ the guard free: if any partition is at or over the cap the operator
 re-shards with more range partitions (sized so each holds ~2^31 rows)
 and retries, rather than emitting wrong ranks. At 100 TB (~600 B
 lineitem rows) the default 16 partitions would hold ~2^35 rows each;
-the retry loop raises parts to ~280 automatically, and the
-``SPARK_GRAFT_RANK_PARTS`` env knob lets a cluster deployment start at
-a sane parallelism without paying the extra shuffle (local default
-stays 16 so the bench remains comparable across rounds).
+the retry loop raises parts to ~280 automatically. Range partitioning
+never splits one key, so 2^33 rows tied on the whole sort key cannot be
+ranked this way: a re-shard that does not shrink the largest partition
+raises ``RuntimeError`` instead of looping forever.
 
 ``transform_global_row_number`` (queries/pipeline_ops.py) pioneered the
 pattern and now calls this module; it is the reusable form for every
@@ -40,8 +40,6 @@ is then a closed-form map-side expression over (rank, n).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -55,14 +53,27 @@ _LOCAL_BITS = 33
 _LOCAL_CAP = 1 << _LOCAL_BITS
 
 
-def reshard_parts(counts: dict[int, int], parts: int) -> int | None:
+def reshard_parts(
+    counts: dict[int, int], parts: int, prev_largest: int | None = None
+) -> int | None:
     """Return the raised partition count needed to keep every range
     partition under the 2^33 local-index cap, or None if ``counts``
     already fits. Pure so the at-scale branch is unit-testable without
     8 B rows: sizes partitions to ~2^31 rows (1/4 of the cap — range
-    partitioning is approximately even but not exact)."""
+    partitioning is approximately even but not exact).
+
+    ``prev_largest`` is the largest partition before the re-shard that
+    produced ``counts``; if that re-shard did not shrink it (≥ 2^33 rows
+    tied on the sort key), raises ``RuntimeError``."""
     if not counts or max(counts.values()) < _LOCAL_CAP:
         return None
+    largest = max(counts.values())
+    if prev_largest is not None and largest >= prev_largest:
+        raise RuntimeError(
+            f"re-sharding to {parts} range partitions left the largest at "
+            f"{largest} rows (was {prev_largest}): at least 2^33 rows tie "
+            "on the sort key, so no range partitioning fits the local index"
+        )
     n_total = sum(counts.values())
     return max(parts * 2, -(-n_total // (1 << 31)))
 
@@ -71,7 +82,7 @@ def sharded_row_number(
     df: DataFrame,
     order_cols: list[Column | str],
     out: str = "rn",
-    parts: int | None = None,
+    parts: int = 16,
 ) -> tuple[DataFrame, int]:
     """Return (df + exact 1-based global rank column ``out``, total rows).
 
@@ -79,10 +90,9 @@ def sharded_row_number(
     "x").desc()`` for descending dimensions; include a unique tiebreaker
     for determinism). The plan contains range + hash exchanges only —
     never an Exchange SinglePartition. Ranks are invariant to ``parts``;
-    it only sets shuffle parallelism (env: SPARK_GRAFT_RANK_PARTS).
+    it only sets the initial shuffle parallelism.
     """
-    if parts is None:
-        parts = int(os.environ.get("SPARK_GRAFT_RANK_PARTS", "16"))
+    largest = None
     while True:
         ranged = (
             df.repartitionByRange(parts, *order_cols)
@@ -94,12 +104,13 @@ def sharded_row_number(
             r["_pid"]: r["n"]
             for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
         }
-        raised = reshard_parts(counts, parts)
+        raised = reshard_parts(counts, parts, largest)
         if raised is None:
             break
         # a partition reached the 2^33 local-index cap: the bitmask
         # below would wrap and silently corrupt ranks — re-shard wider
         ranged.unpersist()
+        largest = max(counts.values())
         parts = raised
     offsets: dict[int, int] = {}
     acc = 0

@@ -12,6 +12,20 @@ Everything is built-in Catalyst expressions — the shared hash across
 engines is ``md5`` (identical algorithm in Spark and DuckDB), which is
 what makes even the MinHash/SimHash pipelines oracle-checkable: the
 minimum of md5 hex strings is a lexicographic MIN both sides.
+
+The MinHash and shared-shingle builders are compositions of the helpers
+in the "Shared shingle machinery" section, one copy each:
+
+* ``_minhash_docs`` (cached shingle and base-hash arrays), ``_perm_min``
+  (one permutation's minimum), ``_signature``, ``_lsh_bands`` and
+  ``_band_key`` (banding, MMDS ch. 3);
+* ``_band_pairs`` (symmetric candidates), ``_band_probe`` (delta-vs-base
+  candidates) and ``_verified_jaccard`` (broadcast exact verify);
+* ``_shared_shingle_counts``: per-pair shared-shingle counts and sizes
+  from the DF-capped rare count-join plus the banded hot completion.
+
+Their oracle twins are ``_sql_band_key``, ``_sql_minhash_cols`` and
+``_sql_band_ctes``.
 """
 
 from __future__ import annotations
@@ -133,15 +147,187 @@ _SQL_SHINGLES = """
 """
 
 
-def _band_completions(sh, freq, common_rare):
-    """Banded hot-shingle completion for candidate pairs (r9).
+N_HASHES = 16
+N_BANDS = 4  # 4 bands × 4 rows
+ROWS_PER_BAND = N_HASHES // N_BANDS
 
-    Returns ``(common_warm, common_blaze)`` — per-pair shared-shingle
-    counts for the WARM (count-join) and BLAZING (probe) df bands; see
-    the PROBE_MIN_DF note for the cost model and the sf1 measurement
-    that motivated the split. ``sh`` must be exactly (doc_id, shingle);
-    ``common_rare`` supplies the candidate pairs (a_id, b_id, ...).
+# Universal-hash MinHash (Carter-Wegman): one md5 per shingle yields a
+# 60-bit base hash h; the i-th permutation is (a_i*h + b_i) mod P with
+# P = 2^31-1 (Mersenne prime). h mod P < 2^31 and a_i < 2^31 keep every
+# product under 2^62 — exact in int64 on BOTH engines, so the signature
+# is oracle-reproducible while costing 1 string hash + 16 multiply-adds
+# per shingle instead of 16 seeded md5 string hashes. (At sf0.1 the
+# wall time is codegen-bound either way; the 16× hash reduction is the
+# 100 TB design win.)
+MINHASH_P = (1 << 31) - 1
+# Fixed odd multipliers/offsets (Knuth multiplicative constant, reduced
+# mod P); deterministic at plan time — no runtime randomness.
+MINHASH_A = [((2 * i + 1) * 2654435761) % MINHASH_P for i in range(N_HASHES)]
+MINHASH_B = [((i + 1) * 40503 * 65537) % MINHASH_P for i in range(N_HASHES)]
+
+
+def _minhash_docs(spark: SparkSession, d: DataFrame) -> DataFrame:
+    """(doc_id, sh_arr, h_arr), cached: each non-empty doc's shingle set
+    and its base hashes (md5 → 60 bits → mod P), spread over the cluster.
+
+    Array-form MinHash: the shingle set stays an array column, so every
+    signature component is array_min(transform(...)) — a pure map stage
+    with NO shuffle of shingles at all (the grouped-aggregate form would
+    shuffle every shingle string to compute the same MINs). The base-hash
+    array is materialized in its own projection so md5 runs ONCE per
+    shingle; the permutations (``_perm_min``) are int64 multiply-add-mods.
     """
+    base_h = F.transform(
+        "sh_arr",
+        lambda g: F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10)
+        .cast("long")
+        % MINHASH_P,
+    )
+    return (
+        _shingle_arrays(_spread(spark, d))
+        .filter(F.size("sh_arr") > 0)
+        .withColumn("h_arr", base_h)
+        .cache()
+    )
+
+
+def _perm_min(a: int, b: int) -> Column:
+    """One MinHash component: min over ``h_arr`` of (a·h + b) mod P."""
+    # NB: the transform lambda must be single-arg — a second arg (even a
+    # defaulted one) makes PySpark pass the array index in.
+    return F.array_min(F.transform("h_arr", lambda h: (h * a + b) % MINHASH_P))
+
+
+def _signature(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh15): the 16-permutation MinHash signature."""
+    return docs.select(
+        "doc_id",
+        *[_perm_min(MINHASH_A[i], MINHASH_B[i]).alias(f"mh{i}") for i in range(N_HASHES)],
+    )
+
+
+def _band_key(band: int, rows: int = ROWS_PER_BAND) -> Column:
+    parts = [F.col(f"mh{band * rows + r}") for r in range(rows)]
+    return F.md5(F.concat_ws("|", *parts).cast("binary"))
+
+
+def _sql_band_key(band: int, rows: int = ROWS_PER_BAND) -> str:
+    parts = " || '|' || ".join(
+        f"CAST(mh{band * rows + r} AS VARCHAR)" for r in range(rows)
+    )
+    return f"md5({parts})"
+
+
+def _sql_minhash_cols() -> str:
+    return ",\n        ".join(
+        f"MIN((h * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}) AS mh{i}"
+        for i in range(N_HASHES)
+    )
+
+
+def _lsh_bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key), cached: LSH banding of the signature
+    (Leskovec/Rajaraman/Ullman, MMDS ch. 3), N_BANDS × ROWS_PER_BAND.
+
+    One exploded array of structs (a union of N_BANDS selects would
+    re-run the signature per band); cached because the candidate join
+    scans it from both sides. Tiny by construction.
+    """
+    band_arr = F.array(
+        *[
+            F.struct(F.lit(b).alias("band_id"), _band_key(b).alias("band_key"))
+            for b in range(N_BANDS)
+        ]
+    )
+    return (
+        _signature(docs)
+        .select("doc_id", F.explode(band_arr).alias("bb"))
+        .select("doc_id", "bb.band_id", "bb.band_key")
+        .cache()
+    )
+
+
+def _band_pairs(bands: DataFrame) -> DataFrame:
+    """(a_id, b_id), a_id < b_id, distinct: pairs sharing any band bucket."""
+    a = bands.select(F.col("doc_id").alias("a_id"), "band_id", "band_key")
+    b = bands.select(F.col("doc_id").alias("b_id"), "band_id", "band_key")
+    return (
+        a.join(b, ["band_id", "band_key"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id")
+        .distinct()
+    )
+
+
+def _band_probe(
+    bands: DataFrame, is_delta: Column, delta: str, base: str
+) -> DataFrame:
+    """(delta, base), distinct: the incremental shape — delta docs' bands
+    probe the base docs' bands, never a base self-join."""
+    return (
+        bands.filter(is_delta)
+        .select(F.col("doc_id").alias(delta), "band_id", "band_key")
+        .join(
+            bands.filter(~is_delta).select(
+                F.col("doc_id").alias(base), "band_id", "band_key"
+            ),
+            ["band_id", "band_key"],
+        )
+        .select(delta, base)
+        .distinct()
+    )
+
+
+def _verified_jaccard(docs: DataFrame, cand: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, jaccard): exact shingle Jaccard of each candidate pair.
+
+    Broadcasts the (tiny) candidate set against the streaming doc arrays
+    — the corpus never shuffles — then array_intersect in place.
+    """
+    da = docs.select(F.col("doc_id").alias(a), F.col("sh_arr").alias("a_sh"))
+    db = docs.select(F.col("doc_id").alias(b), F.col("sh_arr").alias("b_sh"))
+    pairs = db.join(F.broadcast(da.join(F.broadcast(cand), [a])), [b])
+    n_common = F.size(F.array_intersect("a_sh", "b_sh"))
+    jac = n_common.cast("double") / (F.size("a_sh") + F.size("b_sh") - n_common)
+    return pairs.select(a, b, jac.alias("jaccard"))
+
+
+def _shared_shingle_counts(arrs: DataFrame) -> DataFrame:
+    """(a_id, b_id, na, nb, n_common): shared-shingle count and shingle-set
+    sizes of every pair (a_id < b_id) sharing >= 1 RARE shingle.
+
+    ``arrs`` is (doc_id, sh_arr, ...) and is scanned four times: pass it
+    cached. Candidacy is one count-join over rare (df <= MAX_SHINGLE_DF)
+    instances, which yields the rare-common count in the same
+    aggregation (r8: the cand-DISTINCT + second self-join plan spilled at
+    60M candidates in the sf0.75 sweep); per-doc sizes ride the explode
+    into that aggregation, so no size join follows. Shared HOT shingles
+    complete in bands (r9): WARM (df <= PROBE_MIN_DF) by a second
+    count-join, BLAZING boilerplate by a per-candidate probe — see the
+    PROBE_MIN_DF note for the cost model and the sf1 measurement that
+    motivated the split.
+    """
+    she = arrs.select(
+        "doc_id", F.size("sh_arr").alias("n_sh"), F.explode("sh_arr").alias("shingle")
+    )
+    freq = she.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).cache()
+    sh_rare = she.join(
+        freq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle"), ["shingle"]
+    )
+    common_rare = (
+        sh_rare.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"), "shingle")
+        .join(
+            sh_rare.select(
+                F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"), "shingle"
+            ),
+            ["shingle"],
+        )
+        .filter(F.col("a_id") < F.col("b_id"))
+        .groupBy("a_id", "b_id", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("n_rare"))
+        .cache()
+    )
+    sh = she.select("doc_id", "shingle")
     sh_warm = sh.join(
         freq.filter(
             (F.col("df") > MAX_SHINGLE_DF) & (F.col("df") <= PROBE_MIN_DF)
@@ -168,13 +354,22 @@ def _band_completions(sh, freq, common_rare):
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("n_blaze"))
     )
-    return common_warm, common_blaze
+    n_common = (
+        F.col("n_rare")
+        + F.coalesce(F.col("n_warm"), F.lit(0))
+        + F.coalesce(F.col("n_blaze"), F.lit(0))
+    )
+    return (
+        common_rare.join(common_warm, ["a_id", "b_id"], "left")
+        .join(common_blaze, ["a_id", "b_id"], "left")
+        .select("a_id", "b_id", "na", "nb", n_common.alias("n_common"))
+    )
 
 
 def _sql_band_ctes(sh: str, freq: str, cand: str, sfx: str = "") -> str:
-    """Oracle twin of ``_band_completions``: the shw/shb instance CTEs
-    plus common_warm/common_blaze, names suffixed with ``sfx`` so the
-    shingle-size sweep can instantiate one block per rung."""
+    """Oracle twin of ``_shared_shingle_counts``' hot bands: the shw/shb
+    instance CTEs plus common_warm/common_blaze, names suffixed with
+    ``sfx`` so the shingle-size sweep can instantiate one block per rung."""
     return f"""
     shw{sfx} AS (
       SELECT s.doc_id, s.shingle FROM {sh} s
@@ -296,92 +491,19 @@ PROBE_MIN_DF = 1000
     tags=("dedup", "similarity"),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    arrs = _shingle_arrays(table(spark, sf_dir, "documents")).cache()
-    sh = arrs.select("doc_id", F.explode("sh_arr").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).cache()
-    sh_rare = sh.join(
-        freq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle"), ["shingle"]
+    counts = _shared_shingle_counts(
+        _shingle_arrays(table(spark, sf_dir, "documents")).cache()
     )
-    # ONE count-join over rare instances: candidacy (n_rare >= 1) and
-    # the rare-common count in a single map-side-combining aggregation
-    # — no candidate DISTINCT, no second corpus-scale self-join (r8:
-    # the sf0.75 sweep caught the old plan spilling at 60M candidates)
-    common_rare = (
-        sh_rare.select(F.col("doc_id").alias("a_id"), "shingle")
-        .join(sh_rare.select(F.col("doc_id").alias("b_id"), "shingle"), ["shingle"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("n_rare"))
-        .cache()
-    )
-    # banded hot completion (r9): warm count-join + blazing probe
-    common_warm, common_blaze = _band_completions(sh, freq, common_rare)
-    sizes = arrs.select("doc_id", F.size("sh_arr").alias("n_sh"))
-    n_common = (
-        F.col("n_rare")
-        + F.coalesce(F.col("n_warm"), F.lit(0))
-        + F.coalesce(F.col("n_blaze"), F.lit(0))
-    )
+    n_common = F.col("n_common")
     jac = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
-    return (
-        common_rare.join(common_warm, ["a_id", "b_id"], "left")
-        .join(common_blaze, ["a_id", "b_id"], "left")
-        .join(
-            sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na")),
-            ["a_id"],
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb")),
-            ["b_id"],
-        )
-        .withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("a_id", "b_id", "jaccard")
+    return counts.select("a_id", "b_id", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
 
 # --------------------------------------------------------------------------
 # U5 MinHash + LSH
 # --------------------------------------------------------------------------
-
-N_HASHES = 16
-N_BANDS = 4  # 4 bands × 4 rows
-ROWS_PER_BAND = N_HASHES // N_BANDS
-
-# Universal-hash MinHash (Carter-Wegman): one md5 per shingle yields a
-# 60-bit base hash h; the i-th permutation is (a_i*h + b_i) mod P with
-# P = 2^31-1 (Mersenne prime). h mod P < 2^31 and a_i < 2^31 keep every
-# product under 2^62 — exact in int64 on BOTH engines, so the signature
-# is oracle-reproducible while costing 1 string hash + 16 multiply-adds
-# per shingle instead of 16 seeded md5 string hashes. (At sf0.1 the
-# wall time is codegen-bound either way; the 16× hash reduction is the
-# 100 TB design win.)
-MINHASH_P = (1 << 31) - 1
-# Fixed odd multipliers/offsets (Knuth multiplicative constant, reduced
-# mod P); deterministic at plan time — no runtime randomness.
-MINHASH_A = [((2 * i + 1) * 2654435761) % MINHASH_P for i in range(N_HASHES)]
-MINHASH_B = [((i + 1) * 40503 * 65537) % MINHASH_P for i in range(N_HASHES)]
-
-
-def _sql_minhash_cols() -> str:
-    return ",\n        ".join(
-        f"MIN((h * {MINHASH_A[i]} + {MINHASH_B[i]}) % {MINHASH_P}) AS mh{i}"
-        for i in range(N_HASHES)
-    )
-
-
-def _band_key(band: int) -> Column:
-    parts = [F.col(f"mh{band * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)]
-    return F.md5(F.concat_ws("|", *parts).cast("binary"))
-
-
-def _sql_band_key(band: int) -> str:
-    parts = " || '|' || ".join(
-        f"CAST(mh{band * ROWS_PER_BAND + r} AS VARCHAR)"
-        for r in range(ROWS_PER_BAND)
-    )
-    return f"md5({parts})"
-
 
 # CTE chain shared by the pair query and the clustering query's oracle.
 _SQL_MINHASH_CTES = f"""sh AS ({_SQL_SHINGLES}),
@@ -447,73 +569,11 @@ _SQL_MINHASH_PAIRS = """
     tags=("dedup", "similarity", "flagship"),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Array-form MinHash: the shingle set stays an array column, so the
-    # 16 signature components are array_min(transform(...)) — a pure map
-    # stage with NO shuffle of shingles at all (the grouped-aggregate
-    # formulation would shuffle every shingle string to compute the same
-    # 16 MINs). Only doc_id + band keys ever move. The 60-bit base hash
-    # array is materialized in its own projection so md5 runs ONCE per
-    # shingle; the 16 permutations are multiply-add-mod int64 lambdas.
-    base_h = F.transform(
-        "sh_arr",
-        lambda g: F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_P,
-    )
-    docs = (
-        _shingle_arrays(_spread(spark, table(spark, sf_dir, "documents")))
-        .filter(F.size("sh_arr") > 0)
-        .withColumn("h_arr", base_h)
-        .cache()
-    )
-    def _perm(i: int) -> Column:
-        # NB: the transform lambda must be single-arg — a second arg
-        # (even a defaulted one) makes PySpark pass the array index in.
-        a, b, p = MINHASH_A[i], MINHASH_B[i], MINHASH_P
-        return F.array_min(
-            F.transform("h_arr", lambda h: (h * a + b) % p)
-        ).alias(f"mh{i}")
-
-    sig = docs.select("doc_id", *[_perm(i) for i in range(N_HASHES)])
-    # Bands as one exploded array of structs (a union of N_BANDS selects
-    # would re-run the signature per band); cached because the candidate
-    # self-join scans it from both sides. Tiny by construction.
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"), _band_key(b).alias("band_key")
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = (
-        sig.select("doc_id", F.explode(band_arr).alias("bb"))
-        .select("doc_id", "bb.band_id", "bb.band_key")
-        .cache()
-    )
-    a = bands.select(F.col("doc_id").alias("a_id"), "band_id", "band_key")
-    b_ = bands.select(F.col("doc_id").alias("b_id"), "band_id", "band_key")
-    cand = (
-        a.join(b_, ["band_id", "band_key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    # Exact verification: fetch both shingle arrays per candidate pair by
-    # broadcasting the (tiny) candidate set against the streaming doc
-    # table — the corpus never shuffles — then array_intersect in-place.
-    da = docs.select(F.col("doc_id").alias("a_id"), F.col("sh_arr").alias("a_sh"))
-    db = docs.select(F.col("doc_id").alias("b_id"), F.col("sh_arr").alias("b_sh"))
-    cand_a = da.join(F.broadcast(cand), ["a_id"])
-    pairs = db.join(F.broadcast(cand_a), ["b_id"])
-    n_common = F.size(F.array_intersect("a_sh", "b_sh"))
-    jac = n_common.cast("double") / (
-        F.size("a_sh") + F.size("b_sh") - n_common
-    )
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("a_id", "b_id", "jaccard")
+    # Only doc_id + band keys ever move; the verify broadcasts candidates.
+    docs = _minhash_docs(spark, table(spark, sf_dir, "documents"))
+    cand = _band_pairs(_lsh_bands(docs))
+    return _verified_jaccard(docs, cand, "a_id", "b_id").filter(
+        F.col("jaccard") >= 0.5
     )
 
 
@@ -919,60 +979,12 @@ _SQL_INCR_CTES = _SQL_MINHASH_CTES.replace(
     tags=("dedup", "similarity", "incremental"),
 )
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base_h = F.transform(
-        "sh_arr",
-        lambda g: F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_P,
+    docs = _minhash_docs(spark, table(spark, sf_dir, "documents"))
+    cand = _band_probe(
+        _lsh_bands(docs), F.col("doc_id") >= _INCR_SPLIT, "b_id", "a_id"
     )
-    docs = (
-        _shingle_arrays(_spread(spark, table(spark, sf_dir, "documents")))
-        .filter(F.size("sh_arr") > 0)
-        .withColumn("h_arr", base_h)
-        .cache()
-    )
-
-    def _perm(i: int) -> Column:
-        a, b, p = MINHASH_A[i], MINHASH_B[i], MINHASH_P
-        return F.array_min(
-            F.transform("h_arr", lambda h: (h * a + b) % p)
-        ).alias(f"mh{i}")
-
-    sig = docs.select("doc_id", *[_perm(i) for i in range(N_HASHES)])
-    band_arr = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_id"), _band_key(b).alias("band_key"))
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = (
-        sig.select("doc_id", F.explode(band_arr).alias("bb"))
-        .select("doc_id", "bb.band_id", "bb.band_key")
-        .cache()
-    )
-    base = bands.filter(F.col("doc_id") < _INCR_SPLIT).select(
-        F.col("doc_id").alias("a_id"), "band_id", "band_key"
-    )
-    delta = bands.filter(F.col("doc_id") >= _INCR_SPLIT).select(
-        F.col("doc_id").alias("b_id"), "band_id", "band_key"
-    )
-    cand = (
-        delta.join(base, ["band_id", "band_key"])
-        .select("a_id", "b_id")
-        .distinct()
-    )
-    da = docs.select(F.col("doc_id").alias("a_id"), F.col("sh_arr").alias("a_sh"))
-    db = docs.select(F.col("doc_id").alias("b_id"), F.col("sh_arr").alias("b_sh"))
-    cand_a = da.join(F.broadcast(cand), ["a_id"])
-    pairs = db.join(F.broadcast(cand_a), ["b_id"])
-    n_common = F.size(F.array_intersect("a_sh", "b_sh"))
-    jac = n_common.cast("double") / (
-        F.size("a_sh") + F.size("b_sh") - n_common
-    )
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= 0.5)
-        .select("a_id", "b_id", "jaccard")
+    return _verified_jaccard(docs, cand, "a_id", "b_id").filter(
+        F.col("jaccard") >= 0.5
     )
 
 
@@ -1274,48 +1286,8 @@ def dedup_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "evaluation", "similarity", "documents"),
 )
 def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base_h = F.transform(
-        "sh_arr",
-        lambda g: F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_P,
-    )
-    docs = (
-        _shingle_arrays(_spread(spark, table(spark, sf_dir, "documents")))
-        .filter(F.size("sh_arr") > 0)
-        .withColumn("h_arr", base_h)
-        .cache()
-    )
-
-    def _perm(i: int) -> Column:
-        a, b, p = MINHASH_A[i], MINHASH_B[i], MINHASH_P
-        return F.array_min(
-            F.transform("h_arr", lambda h: (h * a + b) % p)
-        ).alias(f"mh{i}")
-
-    sig = docs.select("doc_id", *[_perm(i) for i in range(N_HASHES)])
-    band_arr = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_id"), _band_key(b).alias("band_key"))
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = (
-        sig.select("doc_id", F.explode(band_arr).alias("bb"))
-        .select("doc_id", "bb.band_id", "bb.band_key")
-        .cache()
-    )
-    cand = (
-        bands.select(F.col("doc_id").alias("a_id"), "band_id", "band_key")
-        .join(
-            bands.select(F.col("doc_id").alias("b_id"), "band_id", "band_key"),
-            ["band_id", "band_key"],
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-        .cache()
-    )
+    docs = _minhash_docs(spark, table(spark, sf_dir, "documents"))
+    cand = _band_pairs(_lsh_bands(docs)).cache()
     # per-doc sizes ride the explode (free — no join), so the J >= 0.5
     # test applies INSIDE the count-join's aggregation and the ~60M
     # shared-pairs relation is never materialized (r8 sf0.75 catch:
@@ -1564,81 +1536,26 @@ def _sql_bbit_packed() -> str:
     tags=("dedup", "similarity", "sketch", "scale"),
 )
 def dedup_minhash_b_bit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base_h = F.transform(
-        "sh_arr",
-        lambda g: F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_P,
-    )
-    docs = (
-        _shingle_arrays(_spread(spark, table(spark, sf_dir, "documents")))
-        .filter(F.size("sh_arr") > 0)
-        .withColumn("h_arr", base_h)
-        .cache()
-    )
-
-    def _bit(i: int) -> Column:
-        a, b = BBIT_A[i], BBIT_B[i]
-        return (
-            F.array_min(
-                F.transform("h_arr", lambda h: (h * a + b) % MINHASH_P)
-            )
-            % 2
-        ) * (1 << i)
-
-    packed = sum(_bit(i) for i in range(BBIT_K)).cast("long")
-    # candidacy from the DF-capped rare join + probe-form hot completion
+    docs = _minhash_docs(spark, table(spark, sf_dir, "documents"))
+    packed = sum(
+        (_perm_min(BBIT_A[i], BBIT_B[i]) % 2) * (1 << i) for i in range(BBIT_K)
+    ).cast("long")
+    sig = docs.select("doc_id", packed.alias("packed"))
+    # candidacy from the DF-capped rare join + banded hot completion
     # (r8; same rare/hot split as dedup_ngram_jaccard — the uncapped
     # self-join is Sigma df^2, boilerplate-quadratic on real corpora).
-    # Signatures/sizes join AFTER the >=2 filter, on the much smaller
-    # pair relation — carrying them through the corpus-scale shingle
-    # join doubled its shuffle width (measured 151 s vs 75 s at sf0.75).
-    sig = docs.select("doc_id", packed.alias("packed"))
-    sh = docs.select("doc_id", F.explode("sh_arr").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).cache()
-    sh_rare = sh.join(
-        freq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle"), ["shingle"]
-    )
-    common_rare = (
-        sh_rare.select(F.col("doc_id").alias("a_id"), "shingle")
-        .join(sh_rare.select(F.col("doc_id").alias("b_id"), "shingle"), ["shingle"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("n_rare"))
-        .cache()
-    )
-    # banded hot completion (r9): warm count-join + blazing probe
-    common_warm, common_blaze = _band_completions(sh, freq, common_rare)
-    shared = (
-        common_rare.join(common_warm, ["a_id", "b_id"], "left")
-        .join(common_blaze, ["a_id", "b_id"], "left")
-        .select(
-            "a_id",
-            "b_id",
-            (
-                F.col("n_rare")
-                + F.coalesce(F.col("n_warm"), F.lit(0))
-                + F.coalesce(F.col("n_blaze"), F.lit(0))
-            ).alias("n_common"),
-        )
-        .filter(F.col("n_common") >= 2)
-    )
-    sizes = docs.select("doc_id", F.size("sh_arr").alias("n_sh"))
+    # Signatures join AFTER the >=2 filter, on the much smaller pair
+    # relation — carrying them through the corpus-scale shingle join
+    # doubled its shuffle width (measured 151 s vs 75 s at sf0.75).
     j = (
-        shared.join(
+        _shared_shingle_counts(docs)
+        .filter(F.col("n_common") >= 2)
+        .join(
             sig.select(F.col("doc_id").alias("a_id"), F.col("packed").alias("pa")),
             "a_id",
         )
         .join(
             sig.select(F.col("doc_id").alias("b_id"), F.col("packed").alias("pb")),
-            "b_id",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na")),
-            "a_id",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb")),
             "b_id",
         )
     )
@@ -1877,51 +1794,11 @@ def dq_split_leakage_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "train",
     ).otherwise("val")
     split = d.select("doc_id", fold.alias("fold"))
-    arrs = _shingle_arrays(d).cache()
-    sh = arrs.select("doc_id", F.explode("sh_arr").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).cache()
-    sh_rare = sh.join(
-        freq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle"), ["shingle"]
-    )
-    # same single-count-join + BANDED hot completion as
-    # dedup_ngram_jaccard (r8 sf0.75 catch: the cand-DISTINCT + second
-    # corpus-scale self-join plan spilled at 60M candidate pairs; r9
-    # sf1 catch: probe form blew up in the dense warm band)
-    common_rare = (
-        sh_rare.select(F.col("doc_id").alias("a_id"), "shingle")
-        .join(sh_rare.select(F.col("doc_id").alias("b_id"), "shingle"), ["shingle"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("n_rare"))
-        .cache()
-    )
-    common_warm, common_blaze = _band_completions(sh, freq, common_rare)
-    sizes = arrs.select("doc_id", F.size("sh_arr").alias("n_sh"))
-    n_common = (
-        F.col("n_rare")
-        + F.coalesce(F.col("n_warm"), F.lit(0))
-        + F.coalesce(F.col("n_blaze"), F.lit(0))
-    )
-    scored = (
-        common_rare.join(common_warm, ["a_id", "b_id"], "left")
-        .join(common_blaze, ["a_id", "b_id"], "left")
-        .join(
-            sizes.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na")),
-            ["a_id"],
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb")),
-            ["b_id"],
-        )
-        .select(
-            "a_id",
-            "b_id",
-            (
-                n_common.cast("double")
-                / (F.col("na") + F.col("nb") - n_common)
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    counts = _shared_shingle_counts(_shingle_arrays(d).cache())
+    n_common = F.col("n_common")
+    jac = n_common.cast("double") / (F.col("na") + F.col("nb") - n_common)
+    scored = counts.select("a_id", "b_id", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= JACCARD_THRESHOLD
     )
     fa = split.select(F.col("doc_id").alias("a_id"), F.col("fold").alias("a_fold"))
     fb = split.select(F.col("doc_id").alias("b_id"), F.col("fold").alias("b_fold"))
@@ -2025,79 +1902,21 @@ def dedup_shingle_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     outs = []
     for n in _SWEEP_NS:
-        arrs = _shingle_arrays(d, n=n).cache()
-        # r8/r9: same single-count-join + BANDED hot completion as
-        # dedup_ngram_jaccard (sf0.75 + sf1 catches) — per-doc sizes
-        # ride the explode, candidacy and n_rare from ONE aggregation
-        she = arrs.select(
-            "doc_id",
-            F.size("sh_arr").alias("n_sh"),
-            F.explode("sh_arr").alias("shingle"),
-        )
-        freq = (
-            she.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).cache()
-        )
-        sh_rare = she.join(
-            freq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle"),
-            ["shingle"],
-        )
-        common_rare = (
-            sh_rare.select(
-                F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"), "shingle"
-            )
-            .join(
-                sh_rare.select(
-                    F.col("doc_id").alias("b_id"),
-                    F.col("n_sh").alias("nb"),
-                    "shingle",
-                ),
-                ["shingle"],
-            )
-            .filter(F.col("a_id") < F.col("b_id"))
-            .groupBy("a_id", "b_id", "na", "nb")
-            .agg(F.count(F.lit(1)).alias("n_rare"))
-            .cache()
-        )
-        common_warm, common_blaze = _band_completions(
-            she.select("doc_id", "shingle"), freq, common_rare
-        )
-        scored = (
-            common_rare.join(common_warm, ["a_id", "b_id"], "left")
-            .join(common_blaze, ["a_id", "b_id"], "left")
-            .select(
-                "na",
-                "nb",
-                (
-                    F.col("n_rare")
-                    + F.coalesce(F.col("n_warm"), F.lit(0))
-                    + F.coalesce(F.col("n_blaze"), F.lit(0))
-                ).alias("n_common"),
-            )
-            .select(
-                F.expr(
-                    f"(n_common * {_SWEEP_JS}) div (na + nb - n_common)"
-                ).alias("j_scaled")
-            )
-        )
-        n_cand = common_rare.agg(
-            F.count(F.lit(1)).cast("long").alias("n_candidate_pairs")
-        )
-        summary = scored.agg(
+        j_scaled = F.expr(f"(n_common * {_SWEEP_JS}) div (na + nb - n_common)")
+        summary = _shared_shingle_counts(_shingle_arrays(d, n=n).cache()).agg(
+            F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"),
             # coalesce: the n=2 rung has ZERO candidates once every
             # bigram crosses the DF cap (sf>=~0.2), and SUM over no
             # rows is NULL while the oracle's COUNT FILTER is 0
             F.coalesce(
-                F.sum((F.col("j_scaled") >= _SWEEP_JS // 5).cast("long")),
-                F.lit(0),
+                F.sum((j_scaled >= _SWEEP_JS // 5).cast("long")), F.lit(0)
             )
             .cast("long")
             .alias("n_pairs_over_j02"),
-            F.coalesce(F.sum("j_scaled"), F.lit(0))
-            .cast("long")
-            .alias("j_scaled_sum"),
+            F.coalesce(F.sum(j_scaled), F.lit(0)).cast("long").alias("j_scaled_sum"),
         )
         outs.append(
-            n_cand.crossJoin(summary).select(
+            summary.select(
                 F.lit(n).cast("long").alias("shingle_n"),
                 "n_candidate_pairs",
                 "n_pairs_over_j02",
@@ -2401,60 +2220,12 @@ def dedup_exact_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "llm", "incremental", "flagship"),
 )
 def dedup_incremental_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base_h = F.transform(
-        "sh_arr",
-        lambda g: F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_P,
-    )
-    docs = (
-        _shingle_arrays(_spread(spark, table(spark, sf_dir, "documents")))
-        .filter(F.size("sh_arr") > 0)
-        .withColumn("h_arr", base_h)
-        .cache()
-    )
-
-    def _perm(i: int) -> Column:
-        a, b, p = MINHASH_A[i], MINHASH_B[i], MINHASH_P
-        return F.array_min(
-            F.transform("h_arr", lambda h: (h * a + b) % p)
-        ).alias(f"mh{i}")
-
-    sig = docs.select("doc_id", *[_perm(i) for i in range(N_HASHES)])
-    band_arr = F.array(
-        *[
-            F.struct(F.lit(b).alias("band_id"), _band_key(b).alias("band_key"))
-            for b in range(N_BANDS)
-        ]
-    )
-    bands = (
-        sig.select("doc_id", F.explode(band_arr).alias("bb"))
-        .select("doc_id", "bb.band_id", "bb.band_key")
-        .cache()
-    )
+    docs = _minhash_docs(spark, table(spark, sf_dir, "documents"))
     is_delta = F.col("doc_id") % 10 == 0
-    cand = (
-        bands.filter(is_delta)
-        .select(F.col("doc_id").alias("delta_id"), "band_id", "band_key")
-        .join(
-            bands.filter(~is_delta).select(
-                F.col("doc_id").alias("base_id"), "band_id", "band_key"
-            ),
-            ["band_id", "band_key"],
-        )
-        .select("delta_id", "base_id")
-        .distinct()
-    )
-    # Exact verification: broadcast the (tiny) candidate set against the
-    # streaming doc arrays — the corpus never shuffles.
-    dd = docs.select(F.col("doc_id").alias("delta_id"), F.col("sh_arr").alias("d_sh"))
-    db = docs.select(F.col("doc_id").alias("base_id"), F.col("sh_arr").alias("b_sh"))
-    cand_d = dd.join(F.broadcast(cand), ["delta_id"])
-    pairs = db.join(F.broadcast(cand_d), ["base_id"])
-    n_common = F.size(F.array_intersect("d_sh", "b_sh"))
-    jac = n_common.cast("double") / (F.size("d_sh") + F.size("b_sh") - n_common)
+    cand = _band_probe(_lsh_bands(docs), is_delta, "delta_id", "base_id")
+    pairs = _verified_jaccard(docs, cand, "delta_id", "base_id")
     agg = (
-        pairs.select("delta_id", (jac >= 0.5).cast("long").alias("dup"))
+        pairs.select("delta_id", (F.col("jaccard") >= 0.5).cast("long").alias("dup"))
         .groupBy("delta_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_candidates"),
@@ -2484,20 +2255,13 @@ def dedup_incremental_delta_probe(spark: SparkSession, sf_dir: str) -> DataFrame
 _TUNE_CONFIGS = ((8, 2), (4, 4), (2, 8))  # (bands, rows per band); 16 hashes
 
 
-def _tune_sql_band_key(b: int, r: int, band: int) -> str:
-    parts = " || '|' || ".join(
-        f"CAST(mh{band * r + j} AS VARCHAR)" for j in range(r)
-    )
-    return f"md5({parts})"
-
-
 def _tune_sql() -> str:
     band_selects = []
     for b, r in _TUNE_CONFIGS:
         for band in range(b):
             band_selects.append(
                 f"SELECT '{b}x{r}' AS cfg, doc_id, {band} AS band_id, "
-                f"{_tune_sql_band_key(b, r, band)} AS band_key FROM sig"
+                f"{_sql_band_key(band, rows=r)} AS band_key FROM sig"
             )
     # every chain CTE MATERIALIZED: DuckDB 1.0 inlines plain CTEs, and
     # nc's shc x shc self-join would re-expand the whole
@@ -2589,79 +2353,38 @@ def _tune_sql() -> str:
     tags=("dedup", "similarity", "tuning"),
 )
 def dedup_lsh_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base_h = F.transform(
-        "sh_arr",
-        lambda g: F.conv(F.substring(F.md5(g.cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_P,
-    )
-    docs = (
-        _shingle_arrays(_spread(spark, table(spark, sf_dir, "documents")))
-        .filter(F.size("sh_arr") > 0)
-        .withColumn("h_arr", base_h)
-        .cache()
-    )
-
-    def _perm(i: int) -> Column:
-        a, b, p = MINHASH_A[i], MINHASH_B[i], MINHASH_P
-        return F.array_min(
-            F.transform("h_arr", lambda h: (h * a + b) % p)
-        ).alias(f"mh{i}")
-
-    sig = docs.select("doc_id", *[_perm(i) for i in range(N_HASHES)])
-    entries = []
-    for b, r in _TUNE_CONFIGS:
-        for band in range(b):
-            key = F.md5(
-                F.concat_ws(
-                    "|", *[F.col(f"mh{band * r + j}") for j in range(r)]
-                ).cast("binary")
-            )
-            entries.append(
-                F.struct(
-                    F.lit(f"{b}x{r}").alias("cfg"),
-                    F.lit(band).alias("band_id"),
-                    key.alias("band_key"),
-                )
-            )
+    docs = _minhash_docs(spark, table(spark, sf_dir, "documents"))
+    entries = [
+        F.struct(
+            F.lit(f"{b}x{r}").alias("cfg"),
+            F.lit(band).alias("band_id"),
+            _band_key(band, rows=r).alias("band_key"),
+        )
+        for b, r in _TUNE_CONFIGS
+        for band in range(b)
+    ]
     bands = (
-        sig.select("doc_id", F.explode(F.array(*entries)).alias("bb"))
+        _signature(docs)
+        .select("doc_id", F.explode(F.array(*entries)).alias("bb"))
         .select("doc_id", "bb.cfg", "bb.band_id", "bb.band_key")
         .cache()
     )
-    a = bands.select("cfg", F.col("doc_id").alias("a_id"), "band_id", "band_key")
-    b_ = bands.select(
-        F.col("cfg").alias("cfg_b"),
-        F.col("doc_id").alias("b_id"),
-        F.col("band_id").alias("band_id_b"),
-        F.col("band_key").alias("band_key_b"),
-    )
     cand = (
-        a.join(
-            b_,
-            (F.col("cfg") == F.col("cfg_b"))
-            & (F.col("band_id") == F.col("band_id_b"))
-            & (F.col("band_key") == F.col("band_key_b"))
-            & (F.col("a_id") < F.col("b_id")),
+        bands.select("cfg", F.col("doc_id").alias("a_id"), "band_id", "band_key")
+        .join(
+            bands.select("cfg", F.col("doc_id").alias("b_id"), "band_id", "band_key"),
+            ["cfg", "band_id", "band_key"],
         )
+        .filter(F.col("a_id") < F.col("b_id"))
         .select("cfg", "a_id", "b_id")
         .distinct()
         .cache()
     )
-    da = docs.select(F.col("doc_id").alias("a_id"), F.col("sh_arr").alias("a_sh"))
-    db = docs.select(F.col("doc_id").alias("b_id"), F.col("sh_arr").alias("b_sh"))
-    pair_keys = cand.select("a_id", "b_id").distinct()
-    pairs = (
-        da.join(F.broadcast(pair_keys), ["a_id"])
-        .join(db, ["b_id"])
+    verified_pairs = (
+        _verified_jaccard(docs, cand.select("a_id", "b_id").distinct(), "a_id", "b_id")
+        .select("a_id", "b_id", (F.col("jaccard") >= 0.5).cast("long").alias("is_dup"))
+        .cache()
     )
-    n_common = F.size(F.array_intersect("a_sh", "b_sh"))
-    jac_dup = (
-        n_common.cast("double")
-        / (F.size("a_sh") + F.size("b_sh") - n_common)
-        >= 0.5
-    ).cast("long")
-    verified_pairs = pairs.select("a_id", "b_id", jac_dup.alias("is_dup")).cache()
     truth_n = (
         verified_pairs.filter(F.col("is_dup") == 1)
         .agg(F.count(F.lit(1)).alias("n_truth"))

@@ -33,6 +33,7 @@ from dmi_ingestor_spark.registry import register
 _SCALE = 10**12  # integer rank scale
 _DAMP_NUM, _DAMP_DEN = 85, 100  # damping 0.85 as a ratio
 _K = 4  # iterations
+_SUMMARY_MAX_ROWS = 25 * 25  # |V|² over the fixed 25-nation domain
 
 
 def _summary_kernel(edges: DataFrame, schema: str, fn) -> DataFrame:
@@ -41,7 +42,8 @@ def _summary_kernel(edges: DataFrame, schema: str, fn) -> DataFrame:
 
     ``edges`` must already be summary-sized (the nation-level aggregate
     of the fact join: ≤ |V|² ≤ 625 rows at any corpus scale — the nation
-    domain is fixed, so this bound is corpus-independent). The corpus-
+    domain is fixed, so this bound is corpus-independent); a larger
+    input raises ``ValueError`` in the task. The corpus-
     scale work (scan → broadcast-dim joins → partial+final aggregation)
     stays distributed; only the O(|V|²) state crosses into Python, once.
 
@@ -63,6 +65,11 @@ def _summary_kernel(edges: DataFrame, schema: str, fn) -> DataFrame:
 
         parts = [p for p in batches if len(p)]
         pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+        if len(pdf) > _SUMMARY_MAX_ROWS:
+            raise ValueError(
+                f"summary kernel input has {len(pdf)} rows, over its "
+                f"{_SUMMARY_MAX_ROWS}-row bound"
+            )
         yield fn(pdf)
 
     return edges.coalesce(1).mapInPandas(run, schema)

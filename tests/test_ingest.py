@@ -310,17 +310,17 @@ def test_mixed_fetch_and_decode_failures_keep_last_good(spark, out_dir):
 
 
 @pytest.mark.parametrize(
-    "case, fail, jobs",
+    "case, fail, jobs, stages",
     [
-        ("success", {}, 3),
-        ("all_fetch_failed", {"t2m": "down", "wind-speed": "down"}, 3),
-        ("corrupt_payload", {"t2m": "corrupt", "wind-speed": "corrupt"}, 3),
+        ("success", {}, 3, 6),
+        ("all_fetch_failed", {"t2m": "down", "wind-speed": "down"}, 3, 6),
+        ("corrupt_payload", {"t2m": "corrupt", "wind-speed": "corrupt"}, 3, 6),
     ],
 )
-def test_run_ingest_job_budget(spark, out_dir, case, fail, jobs):
-    """One forecast is one write: pin the Spark jobs ``run_ingest`` runs
-    on top of a previous forecast (a deterministic counter, unlike wall
-    time)."""
+def test_run_ingest_job_budget(spark, out_dir, case, fail, jobs, stages):
+    """One forecast is one write: pin the Spark jobs and stages
+    ``run_ingest`` runs on top of a previous forecast (deterministic
+    counters, unlike wall time)."""
     cfg = IngestConfig(collection="harmonie_dini_sf", parameters=("t2m", "wind-speed"))
     run_ingest(spark, cfg, out_dir, _make_transport_ok())
     sc = spark.sparkContext
@@ -330,4 +330,7 @@ def test_run_ingest_job_budget(spark, out_dir, case, fail, jobs):
         run_ingest(spark, cfg, out_dir, _make_transport_next(fail))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    assert len(job_ids) == jobs
+    assert sum(len(tracker.getJobInfo(j).stageIds) for j in job_ids) == stages

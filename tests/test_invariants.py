@@ -263,3 +263,24 @@ def test_pca_power_iteration_on_gram_matrix(spark, sf_dir):
         x = A @ x
         x /= np.linalg.norm(x)
     assert abs(abs(x @ v) - 1.0) < 1e-6
+
+
+
+def test_graph_summary_kernel_row_bound(spark):
+    """The graph summary kernel runs its whole input in one Python task,
+    so it takes only the nation-level aggregate (<= 25² = 625 rows): 625
+    rows run, 626 raise ValueError instead of pulling a corpus-scale
+    relation into one worker."""
+    import pandas as pd
+    import pytest
+
+    from dmi_ingestor_spark.queries.graph import _summary_kernel
+
+    def n_rows(n):
+        edges = spark.range(n).toDF("src")
+        kernel = _summary_kernel(edges, "n long", lambda pdf: pd.DataFrame({"n": [len(pdf)]}))
+        return kernel.collect()[0].n
+
+    assert n_rows(625) == 625
+    with pytest.raises(Exception, match="ValueError: summary kernel input has 626 rows"):
+        n_rows(626)

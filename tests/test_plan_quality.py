@@ -8,6 +8,10 @@ schema, global top-k planned as TakeOrderedAndProject (no total sort).
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 from dmi_ingestor_spark.registry import load_all
 
 REGISTRY = load_all()
@@ -97,6 +101,33 @@ def test_minhash_corpus_never_shuffles(spark, sf_dir):
     # a broadcast, never a sort-merge over shingles
     plan = plan_of(spark, sf_dir, "dedup_minhash_lsh")
     assert "SortMergeJoin" not in plan, plan
+
+
+# Exchange nodes (shuffle, broadcast and reused) in the formatted plan of
+# each dedup query built on dedup.py's MinHash and shared-shingle helpers,
+# at the test sf_dir. Pins may only go down: when a change removes an
+# exchange, lower the pin to the new count; never raise one.
+_DEDUP_EXCHANGE_PINS = {
+    "dedup_minhash_lsh": 5,
+    "dedup_incremental_minhash": 5,
+    "dedup_lsh_recall_eval": 12,
+    "dedup_incremental_delta_probe": 8,
+    "dedup_lsh_band_tuning": 12,
+    "dedup_minhash_b_bit": 22,
+    "dedup_ngram_jaccard": 19,
+    "dq_split_leakage_near_dup": 22,
+    "dedup_shingle_size_sweep": 60,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_DEDUP_EXCHANGE_PINS))
+def test_dedup_exchange_pins(spark, sf_dir, name):
+    plan = plan_of(spark, sf_dir, name)
+    n = len(re.findall(r"^\(\d+\) \w*Exchange\b", plan, re.M))
+    assert n == _DEDUP_EXCHANGE_PINS[name], (
+        f"{name}: {n} exchanges, pinned {_DEDUP_EXCHANGE_PINS[name]} "
+        "(lower the pin if the count went down; never raise it)"
+    )
 
 
 def test_pivot_has_no_values_discovery_job(spark, sf_dir):

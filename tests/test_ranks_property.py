@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 from dmi_ingestor_spark.operators.ranks import ntile_from_rank, sharded_row_number
 
 
-def _check(spark, rows, k=4, desc=False):
+def _check(spark, rows, k=4, desc=False, **kw):
     df = spark.createDataFrame(rows, "id long, v long")
     order = [F.col("v").desc(), F.col("id")] if desc else [F.col("v"), F.col("id")]
-    got, n = sharded_row_number(df, order, out="rn")
+    got, n = sharded_row_number(df, order, out="rn", **kw)
     assert n == len(rows)
     w = Window.orderBy(*order)
     want = df.select("id", F.row_number().over(w).alias("rn"))
@@ -91,8 +91,22 @@ def test_reshard_parts_guard():
     assert n_total / raised < _LOCAL_CAP / 2
 
 
-def test_rank_parts_env_override(spark, monkeypatch):
-    """SPARK_GRAFT_RANK_PARTS sets the default shuffle parallelism;
-    ranks are invariant to it (the cluster-scale knob, VERDICT r9)."""
-    monkeypatch.setenv("SPARK_GRAFT_RANK_PARTS", "5")
-    _check(spark, [(i, (i * 37) % 11) for i in range(60)])
+def test_reshard_without_progress_raises():
+    """A re-shard that leaves the largest partition as large (>= 2^33
+    rows tied on the sort key: range partitioning never splits a key)
+    raises instead of re-sharding forever; one that shrinks it goes on."""
+    from dmi_ingestor_spark.operators.ranks import _LOCAL_CAP, reshard_parts
+
+    tied = {0: _LOCAL_CAP + 5, 1: 10**9}
+    with pytest.raises(RuntimeError, match="tie on the sort key"):
+        reshard_parts(tied, 32, prev_largest=_LOCAL_CAP + 5)
+    with pytest.raises(RuntimeError):
+        reshard_parts(tied, 32, prev_largest=_LOCAL_CAP)
+    assert reshard_parts(tied, 32, prev_largest=_LOCAL_CAP + 6) == 64
+    # under the cap: done, whatever the previous largest was
+    assert reshard_parts({0: 10}, 32, prev_largest=5) is None
+
+
+def test_ranks_invariant_to_parts(spark):
+    """Ranks do not depend on the number of range partitions."""
+    _check(spark, [(i, (i * 37) % 11) for i in range(60)], parts=5)
