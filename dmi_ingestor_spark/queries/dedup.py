@@ -202,7 +202,10 @@ def _signature(docs: DataFrame) -> DataFrame:
     """(doc_id, mh0..mh15): the 16-permutation MinHash signature."""
     return docs.select(
         "doc_id",
-        *[_perm_min(MINHASH_A[i], MINHASH_B[i]).alias(f"mh{i}") for i in range(N_HASHES)],
+        *[
+            _perm_min(MINHASH_A[i], MINHASH_B[i]).alias(f"mh{i}")
+            for i in range(N_HASHES)
+        ],
     )
 
 
@@ -315,7 +318,9 @@ def _shared_shingle_counts(arrs: DataFrame) -> DataFrame:
         freq.filter(F.col("df") <= MAX_SHINGLE_DF).select("shingle"), ["shingle"]
     )
     common_rare = (
-        sh_rare.select(F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"), "shingle")
+        sh_rare.select(
+            F.col("doc_id").alias("a_id"), F.col("n_sh").alias("na"), "shingle"
+        )
         .join(
             sh_rare.select(
                 F.col("doc_id").alias("b_id"), F.col("n_sh").alias("nb"), "shingle"
