@@ -20,8 +20,9 @@ Spark mapping (SURVEY.md §3):
   itself observed, one JSON per (collection, parameter).
 
 A forecast is one lazy plan and one write: every cube is fetched,
-decoded and reprojected exactly once, and the counts, failed
-parameters, stale-leaf deletes and manifests all come from that write's
+decoded and reprojected exactly once, by the task that writes its
+leaves (no shuffle after the fetch), and the counts, failed parameters,
+stale-leaf deletes and manifests all come from that write's
 ``Observation`` — nothing is cached, validated ahead or read back.
 """
 
@@ -43,9 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dmi_ingestor_spark.functions.projection import lcc_to_wgs84_np
 from dmi_ingestor_spark.ingest.fs import fs_delete, fs_list_subdirs
-from dmi_ingestor_spark.sources.cube_format import decode_cube
+from dmi_ingestor_spark.sources.cube_format import cube_grid, decode_cube
 from dmi_ingestor_spark.sources.http_edr import (
     IngestConfig,
     Transport,
@@ -70,11 +70,12 @@ def decode_to_grid(fetched: DataFrame, lambert: bool) -> DataFrame:
     """S2/U2 + P3/U1: payload blobs → long-form WGS84 grid rows via
     mapInPandas.
 
-    One input row (a whole cube) explodes into time×y×x rows — the
-    iterator-of-batches shape lets a single task stream multiple cubes
-    without materializing more than one at a time. ``lambert`` grids
-    (harmonie_*) are reprojected LCC→WGS84 in the same Python worker;
-    crs84 grids pass their coordinates through (ingestor.py:170-173,
+    One input row (a whole cube) explodes into time×y×x rows through
+    ``cube_format.cube_grid`` — the iterator-of-batches shape lets a
+    single task stream multiple cubes without materializing more than
+    one at a time. ``lambert`` grids (harmonie_*) are reprojected
+    LCC→WGS84 once per grid point and tiled over the timesteps; crs84
+    grids pass their coordinates through (ingestor.py:170-173,
     201-202). Failed fetches (payload NULL) are dropped here, and so are
     payloads that FAIL TO DECODE (corrupt/truncated bytes) — a bad cube
     must quarantine its parameter, never crash the job (the reference's
@@ -86,31 +87,19 @@ def decode_to_grid(fetched: DataFrame, lambert: bool) -> DataFrame:
     """
 
     def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                if row["payload"] is None:
+            for row in pdf.itertuples(index=False):
+                if row.payload is None:
                     continue
                 try:
-                    cube = decode_cube(bytes(row["payload"]))
+                    cube = decode_cube(bytes(row.payload))
                 except Exception:  # noqa: BLE001 — quarantine, don't crash
                     continue
-                nt, ny, nx = cube.values.shape
-                times = np.repeat(np.asarray(cube.times, dtype="int64"), ny * nx)
-                ys = np.tile(np.repeat(np.asarray(cube.ys), nx), nt)
-                xs = np.tile(np.asarray(cube.xs), nt * ny)
-                lon, lat = lcc_to_wgs84_np(xs, ys) if lambert else (xs, ys)
                 yield pd.DataFrame(
                     {
-                        "collection": row["collection"],
-                        "parameter": row["parameter"],
-                        "time_s": times,
-                        "y": ys,
-                        "x": xs,
-                        "value": cube.values.reshape(-1),
-                        "lon": lon,
-                        "lat": lat,
+                        "collection": row.collection,
+                        "parameter": row.parameter,
+                        **cube_grid(cube, lambert),
                     }
                 )
 
@@ -159,10 +148,10 @@ def run_ingest(
     )
     written = Observation("ingest")
     (
-        grid.repartition("collection", "parameter", "time_str")
-        # observed after the shuffle: observed before it, a run with zero
-        # rows (every parameter failed) makes Observation.get raise
-        .observe(
+        # no shuffle: every (parameter, time_str) leaf comes from one cube,
+        # so from one task; with no exchange after it, the observation
+        # also reports a run with zero rows (every parameter failed)
+        grid.observe(
             written,
             F.count(F.lit(1)).alias("n_rows"),
             F.collect_set(F.struct("parameter", "time_str")).alias("leaves"),

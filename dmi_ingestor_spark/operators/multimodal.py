@@ -149,42 +149,6 @@ def sample_frames(media: DataFrame, n_frames: int = N_FRAMES) -> DataFrame:
     return media.mapInPandas(_sample, FRAME_SCHEMA)
 
 
-def decode_features_arrow(media: DataFrame) -> DataFrame:
-    """mapInArrow twin of :func:`decode_features`.
-
-    Same decode, but the batch stays a ``pyarrow.RecordBatch`` end to
-    end — no Arrow→pandas materialization. For binary-heavy multimodal
-    columns this is the cheaper boundary: pandas conversion copies
-    every payload into Python objects, while Arrow buffers are
-    zero-copy slices. The pandas variant remains the ergonomic default;
-    equality of the two is pinned by tests/test_multimodal.py.
-    """
-    import pyarrow as pa
-
-    def _decode(batches):
-        for batch in batches:
-            doc_id = batch.column("doc_id")
-            mime = batch.column("mime")
-            payloads = [row.as_py() for row in batch.column("payload")]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_id,
-                    mime,
-                    pa.array([len(b) for b in payloads], pa.int64()),
-                    pa.array(
-                        [hashlib.sha256(b).hexdigest() for b in payloads]
-                    ),
-                    pa.array(
-                        [_decode_bytes(b) for b in payloads],
-                        pa.list_(pa.float64()),
-                    ),
-                ],
-                names=["doc_id", "mime", "n_bytes", "checksum", "features"],
-            )
-
-    return media.mapInArrow(_decode, DECODED_SCHEMA)
-
-
 RESIZED_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.functions.exact import sql_sum_exact, sum_exact
 from dmi_ingestor_spark.operators.bucketing import ensure_bucketed_pair
+from dmi_ingestor_spark.operators.rowmap import map_rows
 from dmi_ingestor_spark.registry import register
 
 
@@ -306,8 +307,6 @@ _BM_RANGE = 512  # predicate B: offset < 512 (dense range -> RUN container)
     tags=("layout", "index", "bitmap", "orders"),
 )
 def layout_roaring_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from dmi_ingestor_spark.catalog import table
 
     o = table(spark, sf_dir, "orders").select(
@@ -337,7 +336,7 @@ def layout_roaring_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a_offs").isNotNull() & F.col("b_offs").isNotNull())
     )
 
-    def _index(pdf_iter):
+    def _index(r):
         from dmi_ingestor_spark.operators.bitmap import (
             container_and,
             container_or,
@@ -345,49 +344,28 @@ def layout_roaring_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_container,
         )
 
-        for pdf in pdf_iter:
-            rows = []
-            for _, r in pdf.iterrows():
-                ea = encode_container([int(x) for x in r["a_offs"]])
-                eb = encode_container([int(x) for x in r["b_offs"]])
-                both = container_and(ea, eb)
-                rows.append(
-                    (
-                        int(r["container"]),
-                        len(decode_container(ea)),
-                        int(ea[0]),
-                        len(ea),
-                        len(decode_container(eb)),
-                        int(eb[0]),
-                        len(eb),
-                        len(both),
-                        sum(both),
-                        len(container_or(ea, eb)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "container",
-                    "n_a",
-                    "enc_a",
-                    "bytes_a",
-                    "n_b",
-                    "enc_b",
-                    "bytes_b",
-                    "n_and",
-                    "and_checksum",
-                    "n_or",
-                ],
+        ea = encode_container([int(x) for x in r.a_offs])
+        eb = encode_container([int(x) for x in r.b_offs])
+        both = container_and(ea, eb)
+        return [
+            (
+                int(r.container),
+                len(decode_container(ea)),
+                int(ea[0]),
+                len(ea),
+                len(decode_container(eb)),
+                int(eb[0]),
+                len(eb),
+                len(both),
+                sum(both),
+                len(container_or(ea, eb)),
             )
+        ]
 
-    return (
-        offs.repartition(4, "container")
-        .mapInPandas(
-            _index,
-            "container long, n_a long, enc_a long, bytes_a long, "
-            "n_b long, enc_b long, bytes_b long, n_and long, "
-            "and_checksum long, n_or long",
-        )
-        .orderBy("container")
-    )
+    return map_rows(
+        offs.repartition(4, "container"),
+        "container long, n_a long, enc_a long, bytes_a long, "
+        "n_b long, enc_b long, bytes_b long, n_and long, "
+        "and_checksum long, n_or long",
+        _index,
+    ).orderBy("container")

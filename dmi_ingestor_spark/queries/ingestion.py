@@ -19,7 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.functions.exact import sql_avg_exact, avg_exact
+from dmi_ingestor_spark.operators.rowmap import map_rows
 from dmi_ingestor_spark.registry import register
+from dmi_ingestor_spark.sources.cube_format import cube_stats
 
 T0 = 1_767_225_600  # 2026-01-01T00:00:00Z
 NT, NY, NX = 4, 8, 8
@@ -160,9 +162,10 @@ def ingest_regrid_coarsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # full binary pipeline; asserted in tests/test_ingest.py
     doc=(
         "M2 end-to-end: offline transport → FCUBE decode + LCC→WGS84 "
-        "in one mapInPandas → dynamic-partition-overwrite parquet → manifest "
-        "JSON; returns the written grid (rows-only smoke for the "
-        "driver)."
+        "(projected once per grid point, tiled over the timesteps) in one "
+        "mapInPandas → dynamic-partition-overwrite parquet written by the "
+        "decoding task, no shuffle → manifest JSON; returns the written "
+        "grid (rows-only smoke test)."
     ),
     tags=("ingest", "reference", "rows-only"),
 )
@@ -852,6 +855,23 @@ def ingest_fixed_width_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Format-matrix decode: the same cube through every wire format (S2)
 # ---------------------------------------------------------------------------
 
+def _matrix_cube(nt: int, ny: int, nx: int):
+    """(times, ys, xs, values) of the format builders' test cube: hourly
+    steps from T0, a 0.1-degree grid and value = t*100 + iy*10 + ix,
+    integer-exact in every codec and pinned by their oracles."""
+    import numpy as np
+
+    times = [T0 + 3600 * t for t in range(nt)]
+    ys = [55.0 + 0.1 * i for i in range(ny)]
+    xs = [11.0 + 0.1 * i for i in range(nx)]
+    values = (
+        np.arange(nt)[:, None, None] * 100
+        + np.arange(ny)[:, None] * 10
+        + np.arange(nx)
+    ).astype("f8")
+    return times, ys, xs, values
+
+
 _FMT_NT, _FMT_NY, _FMT_NX = 3, 8, 8
 
 
@@ -907,23 +927,12 @@ _FMT_NT, _FMT_NY, _FMT_NX = 3, 8, 8
     tags=("ingest", "reference", "formats"),
 )
 def ingest_cube_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     from dmi_ingestor_spark.sources.coveragejson import encode_coveragejson
     from dmi_ingestor_spark.sources.grib2 import encode_grib2_cube
     from dmi_ingestor_spark.sources.hdf5 import encode_hdf5_cube
     from dmi_ingestor_spark.sources.netcdf3 import encode_netcdf3
 
-    times = [T0 + 3600 * t for t in range(_FMT_NT)]
-    ys = [55.0 + 0.1 * i for i in range(_FMT_NY)]
-    xs = [11.0 + 0.1 * i for i in range(_FMT_NX)]
-    idx = np.arange(_FMT_NT * _FMT_NY * _FMT_NX)
-    values = (
-        (idx // (_FMT_NY * _FMT_NX)) * 100
-        + ((idx % (_FMT_NY * _FMT_NX)) // _FMT_NX) * 10
-        + (idx % _FMT_NX)
-    ).astype("f8").reshape(_FMT_NT, _FMT_NY, _FMT_NX)
+    times, ys, xs, values = _matrix_cube(_FMT_NT, _FMT_NY, _FMT_NX)
     payloads = [
         ("covjson", encode_coveragejson("matrix", times, ys, xs, values)),
         ("grib2", encode_grib2_cube((0, 0), times, ys, xs, values, dec_scale=0)),
@@ -943,42 +952,11 @@ def ingest_cube_format_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     df = spark.createDataFrame(payloads, "format string, payload binary")
 
-    def _decode(batches):
-        from dmi_ingestor_spark.sources.cube_format import decode_cube
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                cube = decode_cube(bytes(r["payload"]))
-                v = cube.values
-                rows.append(
-                    (
-                        r["format"],
-                        int(len(cube.times)),
-                        int(v.size),
-                        int(round(float(v.sum()))),
-                        int(round(float(v.min()))),
-                        int(round(float(v.max()))),
-                        int(sum(cube.times)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "format",
-                    "n_timesteps",
-                    "n_cells",
-                    "value_sum",
-                    "value_min",
-                    "value_max",
-                    "time_checksum",
-                ],
-            )
-
-    return df.repartition(6, "format").mapInPandas(
-        _decode,
+    return map_rows(
+        df.repartition(6, "format"),
         "format string, n_timesteps long, n_cells long, value_sum long, "
         "value_min long, value_max long, time_checksum long",
+        lambda r: [(r.format, *cube_stats(r.payload))],
     ).orderBy("format")
 
 
@@ -1031,20 +1009,9 @@ _DNS_PARAMS = ("d2m", "msl", "sp", "t2m", "tcc", "tp", "u10", "v10")
     tags=("ingest", "reference", "formats", "hdf5"),
 )
 def ingest_hdf5_dense_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     from dmi_ingestor_spark.sources.hdf5 import encode_hdf5_cube
 
-    times = [T0 + 3600 * t for t in range(_DNS_NT)]
-    ys = [55.0 + 0.1 * i for i in range(_DNS_NY)]
-    xs = [11.0 + 0.1 * i for i in range(_DNS_NX)]
-    idx = np.arange(_DNS_NT * _DNS_NY * _DNS_NX)
-    base = (
-        (idx // (_DNS_NY * _DNS_NX)) * 100
-        + ((idx % (_DNS_NY * _DNS_NX)) // _DNS_NX) * 10
-        + (idx % _DNS_NX)
-    ).astype("f8").reshape(_DNS_NT, _DNS_NY, _DNS_NX)
+    times, ys, xs, base = _matrix_cube(_DNS_NT, _DNS_NY, _DNS_NX)
     payloads = []
     for pid, param in enumerate(_DNS_PARAMS):
         payloads.append(
@@ -1066,40 +1033,11 @@ def ingest_hdf5_dense_param_sweep(spark: SparkSession, sf_dir: str) -> DataFrame
         )
     df = spark.createDataFrame(payloads, "parameter string, payload binary")
 
-    def _decode(batches):
-        from dmi_ingestor_spark.sources.cube_format import decode_cube
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                cube = decode_cube(bytes(r["payload"]))
-                v = cube.values
-                rows.append(
-                    (
-                        r["parameter"],
-                        int(len(cube.times)),
-                        int(v.size),
-                        int(round(float(v.sum()))),
-                        int(round(float(v.min()))),
-                        int(round(float(v.max()))),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "parameter",
-                    "n_timesteps",
-                    "n_cells",
-                    "value_sum",
-                    "value_min",
-                    "value_max",
-                ],
-            )
-
-    return df.repartition(8, "parameter").mapInPandas(
-        _decode,
+    return map_rows(
+        df.repartition(8, "parameter"),
         "parameter string, n_timesteps long, n_cells long, value_sum long, "
         "value_min long, value_max long",
+        lambda r: [(r.parameter, *cube_stats(r.payload)[:5])],
     ).orderBy("parameter")
 
 
@@ -1232,20 +1170,9 @@ _PKM_NT, _PKM_NY, _PKM_NX = 3, 6, 8
     tags=("ingest", "reference", "formats", "grib2"),
 )
 def ingest_grib2_packing_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     from dmi_ingestor_spark.sources.grib2 import encode_grib2_cube
 
-    times = [T0 + 3600 * t for t in range(_PKM_NT)]
-    ys = [55.0 + 0.1 * i for i in range(_PKM_NY)]
-    xs = [11.0 + 0.1 * i for i in range(_PKM_NX)]
-    idx = np.arange(_PKM_NT * _PKM_NY * _PKM_NX)
-    values = (
-        (idx // (_PKM_NY * _PKM_NX)) * 100
-        + ((idx % (_PKM_NY * _PKM_NX)) // _PKM_NX) * 10
-        + (idx % _PKM_NX)
-    ).astype("f8").reshape(_PKM_NT, _PKM_NY, _PKM_NX)
+    times, ys, xs, values = _matrix_cube(_PKM_NT, _PKM_NY, _PKM_NX)
     payloads = [
         (
             pk,
@@ -1257,40 +1184,11 @@ def ingest_grib2_packing_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     df = spark.createDataFrame(payloads, "packing string, payload binary")
 
-    def _decode(batches):
-        from dmi_ingestor_spark.sources.cube_format import decode_cube
-
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                cube = decode_cube(bytes(r["payload"]))
-                v = cube.values
-                rows.append(
-                    (
-                        r["packing"],
-                        int(len(cube.times)),
-                        int(v.size),
-                        int(round(float(v.sum()))),
-                        int(round(float(v.min()))),
-                        int(round(float(v.max()))),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "packing",
-                    "n_timesteps",
-                    "n_cells",
-                    "value_sum",
-                    "value_min",
-                    "value_max",
-                ],
-            )
-
-    return df.repartition(4, "packing").mapInPandas(
-        _decode,
+    return map_rows(
+        df.repartition(4, "packing"),
         "packing string, n_timesteps long, n_cells long, value_sum long, "
         "value_min long, value_max long",
+        lambda r: [(r.packing, *cube_stats(r.payload)[:5])],
     ).orderBy("packing")
 
 
@@ -1326,8 +1224,6 @@ def ingest_zip_members_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import zipfile
 
-    import pandas as pd
-
     from dmi_ingestor_spark.catalog import table
 
     n = (
@@ -1352,30 +1248,19 @@ def ingest_zip_members_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("dump-0001.zip", payload)], "archive string, payload binary"
     )
 
-    def _decode(batches):
-        for pdf in batches:
-            rows = []
-            for _, rec in pdf.iterrows():
-                with zipfile.ZipFile(io.BytesIO(bytes(rec["payload"]))) as zf:
-                    for name in zf.namelist():
-                        body = zf.read(name).decode("utf-8")
-                        data_lines = body.strip().split("\n")[1:]
-                        keysum = namebytes = 0
-                        for ln in data_lines:
-                            k, nm, _rk = ln.split(",")
-                            keysum += int(k)
-                            namebytes += len(nm)
-                        rows.append(
-                            (name, len(data_lines), keysum, namebytes)
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["member", "n_rows", "key_checksum", "name_bytes"],
-            )
+    def _members(rec):
+        with zipfile.ZipFile(io.BytesIO(bytes(rec.payload))) as zf:
+            for name in zf.namelist():
+                data_lines = zf.read(name).decode("utf-8").strip().split("\n")[1:]
+                keysum = namebytes = 0
+                for ln in data_lines:
+                    k, nm, _rk = ln.split(",")
+                    keysum += int(k)
+                    namebytes += len(nm)
+                yield (name, len(data_lines), keysum, namebytes)
 
-    return df.mapInPandas(
-        _decode,
-        "member string, n_rows long, key_checksum long, name_bytes long",
+    return map_rows(
+        df, "member string, n_rows long, key_checksum long, name_bytes long", _members
     ).orderBy("member")
 
 
@@ -1419,8 +1304,6 @@ def ingest_zip_members_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "avro"),
 )
 def ingest_avro_container_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.avro import encode_avro_container
 
@@ -1463,37 +1346,25 @@ def ingest_avro_container_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     df = spark.createDataFrame(payloads, "codec string, payload binary")
 
-    def _decode(batches):
+    def _decode(rec):
         from dmi_ingestor_spark.sources.avro import parse_avro_container
 
-        for pdf in batches:
-            out = []
-            for _, rec in pdf.iterrows():
-                _, rs = parse_avro_container(bytes(rec["payload"]))
-                out.append(
-                    (
-                        rec["codec"],
-                        len(rs),
-                        sum(r["s_suppkey"] for r in rs),
-                        sum(r["cents_raw"] for r in rs),
-                        sum(1 for r in rs if r["cents"] is None),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "codec",
-                    "n_rows",
-                    "key_checksum",
-                    "cents_checksum",
-                    "n_null_balance",
-                ],
+        _, rs = parse_avro_container(bytes(rec.payload))
+        return [
+            (
+                rec.codec,
+                len(rs),
+                sum(r["s_suppkey"] for r in rs),
+                sum(r["cents_raw"] for r in rs),
+                sum(1 for r in rs if r["cents"] is None),
             )
+        ]
 
-    return df.repartition(2, "codec").mapInPandas(
-        _decode,
+    return map_rows(
+        df.repartition(2, "codec"),
         "codec string, n_rows long, key_checksum long, "
         "cents_checksum long, n_null_balance long",
+        _decode,
     ).orderBy("codec")
 
 
@@ -1709,8 +1580,6 @@ def ingest_rowgroup_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "msgpack"),
 )
 def ingest_msgpack_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.msgpack import encode_record_stream
 
@@ -1740,44 +1609,27 @@ def ingest_msgpack_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     df = spark.createDataFrame(payloads, "chunk long, payload binary")
 
-    def _decode(batches):
+    def _decode(rec):
         from dmi_ingestor_spark.sources.msgpack import parse_record_stream
 
-        for pdf in batches:
-            out = []
-            for _, rec in pdf.iterrows():
-                rs = parse_record_stream(bytes(rec["payload"]))
-                out.append(
-                    (
-                        rec["chunk"],
-                        len(rs),
-                        sum(r["event_id"] for r in rs),
-                        sum(r["cents"] or 0 for r in rs),
-                        sum(1 for r in rs if r["cents"] is None),
-                        sum(len(r["event_type"]) for r in rs),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "chunk",
-                    "n_rows",
-                    "key_checksum",
-                    "cents_checksum",
-                    "n_nil",
-                    "type_bytes",
-                ],
+        rs = parse_record_stream(bytes(rec.payload))
+        return [
+            (
+                rec.chunk,
+                len(rs),
+                sum(r["event_id"] for r in rs),
+                sum(r["cents"] or 0 for r in rs),
+                sum(1 for r in rs if r["cents"] is None),
+                sum(len(r["event_type"]) for r in rs),
             )
+        ]
 
-    return (
-        df.repartition(4, "chunk")
-        .mapInPandas(
-            _decode,
-            "chunk long, n_rows long, key_checksum long, "
-            "cents_checksum long, n_nil long, type_bytes long",
-        )
-        .orderBy("chunk")
-    )
+    return map_rows(
+        df.repartition(4, "chunk"),
+        "chunk long, n_rows long, key_checksum long, "
+        "cents_checksum long, n_nil long, type_bytes long",
+        _decode,
+    ).orderBy("chunk")
 
 
 @register(
@@ -1908,8 +1760,6 @@ def ingest_reproject_grid_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "timeseries"),
 )
 def ingest_gorilla_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.gorilla import encode_block
 
@@ -1934,52 +1784,33 @@ def ingest_gorilla_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads = [(et, encode_block(s)) for et, s in sorted(series.items())]
     df = spark.createDataFrame(payloads, "event_type string, block binary")
 
-    def _decode(batches):
+    def _decode(rec):
         from dmi_ingestor_spark.sources.gorilla import decode_block
 
-        for pdf in batches:
-            out = []
-            for _, rec in pdf.iterrows():
-                s = decode_block(bytes(rec["block"]))
-                n_dod0 = sum(
-                    1
-                    for i in range(2, len(s))
-                    if s[i][0] - s[i - 1][0] == s[i - 1][0] - s[i - 2][0]
-                )
-                n_rep = sum(
-                    1 for i in range(1, len(s)) if s[i][1] == s[i - 1][1]
-                )
-                out.append(
-                    (
-                        rec["event_type"],
-                        len(s),
-                        sum(t for t, _ in s),
-                        sum(v for _, v in s),
-                        n_dod0,
-                        n_rep,
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "event_type",
-                    "n_samples",
-                    "ts_checksum",
-                    "cents_checksum",
-                    "n_dod_zero",
-                    "n_repeats",
-                ],
-            )
-
-    return (
-        df.repartition(4, "event_type")
-        .mapInPandas(
-            _decode,
-            "event_type string, n_samples long, ts_checksum long, "
-            "cents_checksum long, n_dod_zero long, n_repeats long",
+        s = decode_block(bytes(rec.block))
+        n_dod0 = sum(
+            1
+            for i in range(2, len(s))
+            if s[i][0] - s[i - 1][0] == s[i - 1][0] - s[i - 2][0]
         )
-        .orderBy("event_type")
-    )
+        n_rep = sum(1 for i in range(1, len(s)) if s[i][1] == s[i - 1][1])
+        return [
+            (
+                rec.event_type,
+                len(s),
+                sum(t for t, _ in s),
+                sum(v for _, v in s),
+                n_dod0,
+                n_rep,
+            )
+        ]
+
+    return map_rows(
+        df.repartition(4, "event_type"),
+        "event_type string, n_samples long, ts_checksum long, "
+        "cents_checksum long, n_dod_zero long, n_repeats long",
+        _decode,
+    ).orderBy("event_type")
 
 
 @register(
@@ -2024,8 +1855,6 @@ def ingest_gorilla_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "protobuf"),
 )
 def ingest_protobuf_delimited_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.protowire import encode_delimited_stream
 
@@ -2057,51 +1886,32 @@ def ingest_protobuf_delimited_stream(spark: SparkSession, sf_dir: str) -> DataFr
     ]
     df = spark.createDataFrame(payloads, "chunk long, payload binary")
 
-    def _decode(batches):
+    def _decode(rec):
         from dmi_ingestor_spark.sources.protowire import (
             decode_delimited_stream,
             unzigzag,
         )
 
-        for pdf in batches:
-            out = []
-            for _, rec in pdf.iterrows():
-                msgs = decode_delimited_stream(bytes(rec["payload"]))
-                n_elided = sum(1 for m in msgs if 4 not in m)
-                out.append(
-                    (
-                        rec["chunk"],
-                        len(msgs),
-                        sum(m.get(1, 0) for m in msgs),
-                        sum(m.get(2, 0) for m in msgs),
-                        sum(unzigzag(m[4]) for m in msgs if 4 in m),
-                        n_elided,
-                        sum(len(m.get(3, b"")) for m in msgs),
-                    )
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "chunk",
-                    "n_msgs",
-                    "key_checksum",
-                    "user_checksum",
-                    "cents_checksum",
-                    "n_default_elided",
-                    "type_bytes",
-                ],
+        msgs = decode_delimited_stream(bytes(rec.payload))
+        return [
+            (
+                rec.chunk,
+                len(msgs),
+                sum(m.get(1, 0) for m in msgs),
+                sum(m.get(2, 0) for m in msgs),
+                sum(unzigzag(m[4]) for m in msgs if 4 in m),
+                sum(1 for m in msgs if 4 not in m),
+                sum(len(m.get(3, b"")) for m in msgs),
             )
+        ]
 
-    return (
-        df.repartition(4, "chunk")
-        .mapInPandas(
-            _decode,
-            "chunk long, n_msgs long, key_checksum long, "
-            "user_checksum long, cents_checksum long, "
-            "n_default_elided long, type_bytes long",
-        )
-        .orderBy("chunk")
-    )
+    return map_rows(
+        df.repartition(4, "chunk"),
+        "chunk long, n_msgs long, key_checksum long, "
+        "user_checksum long, cents_checksum long, "
+        "n_default_elided long, type_bytes long",
+        _decode,
+    ).orderBy("chunk")
 
 
 @register(

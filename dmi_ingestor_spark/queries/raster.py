@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.operators.raster import encode_geotiff, rasterize_timesteps
+from dmi_ingestor_spark.operators.rowmap import map_rows
 from dmi_ingestor_spark.queries.ingestion import _spark_grid, _SQL_GRID, NT, NY, NX
 from dmi_ingestor_spark.registry import register
 
@@ -186,8 +187,6 @@ _OV_NT, _OV_NY, _OV_NX = 2, 40, 40  # >= _OVERVIEW_MIN so the writer emits level
     tags=("ingest", "raster", "reference"),
 )
 def raster_overview_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as _pd
-
     from dmi_ingestor_spark.operators.raster import decode_geotiff as _dec
 
     n_cell = _OV_NY * _OV_NX
@@ -209,42 +208,19 @@ def raster_overview_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_dir = tempfile.mkdtemp(prefix="raster-ov-")
     manifest = rasterize_timesteps(grid, out_dir)
 
-    def _stats(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                with open(r["path"], "rb") as fh:
-                    levels = _dec(fh.read())["levels"]
-                for lvl, arr in enumerate(levels):
-                    a8 = arr.astype("f8")
-                    rows.append(
-                        (
-                            r["time_str"],
-                            lvl,
-                            int(a8.size),
-                            float(a8.min()),
-                            float(a8.max()),
-                            float(a8.sum()),
-                        )
-                    )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "time_str",
-                    "level",
-                    "n_cells",
-                    "min_px",
-                    "max_px",
-                    "px_sum",
-                ],
+    def _stats(r):
+        with open(r.path, "rb") as fh:
+            levels = _dec(fh.read())["levels"]
+        for lvl, arr in enumerate(levels):
+            a8 = arr.astype("f8")
+            yield (
+                r.time_str, lvl, int(a8.size),
+                float(a8.min()), float(a8.max()), float(a8.sum()),
             )
 
-    return (
-        manifest.select("time_str", "path")
-        .mapInPandas(
-            _stats,
-            "time_str string, level long, n_cells long, "
-            "min_px double, max_px double, px_sum double",
-        )
-        .orderBy("time_str", "level")
-    )
+    return map_rows(
+        manifest.select("time_str", "path"),
+        "time_str string, level long, n_cells long, "
+        "min_px double, max_px double, px_sum double",
+        _stats,
+    ).orderBy("time_str", "level")

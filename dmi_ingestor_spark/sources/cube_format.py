@@ -58,41 +58,65 @@ def decode_cube(payload: bytes) -> Cube:
         header = json.loads(payload[10 : 10 + hlen])
         nt, ny, nx = len(header["times"]), len(header["ys"]), len(header["xs"])
         values = np.frombuffer(payload[10 + hlen :], dtype="<f8").reshape(nt, ny, nx)
-        return Cube(
-            parameter=header["parameter"],
-            times=header["times"],
-            ys=header["ys"],
-            xs=header["xs"],
-            values=values,
-        )
+        return Cube(header["parameter"], header["times"], header["ys"], header["xs"], values)
     if payload[:3] == b"CDF" or payload[:4] == b"\x89HDF":
         return _decode_netcdf(payload)
     if payload[:4] == b"GRIB":
         from dmi_ingestor_spark.sources.grib2 import parse_grib2_cube
 
-        d = parse_grib2_cube(payload)
-        return Cube(
-            parameter=d["parameter"],
-            times=d["times"],
-            ys=d["ys"],
-            xs=d["xs"],
-            values=d["values"],
-        )
+        return Cube(**parse_grib2_cube(payload))
     from dmi_ingestor_spark.sources.coveragejson import (
         is_coveragejson,
         parse_coveragejson,
     )
 
     if is_coveragejson(payload):
-        d = parse_coveragejson(payload)
-        return Cube(
-            parameter=d["parameter"],
-            times=d["times"],
-            ys=d["ys"],
-            xs=d["xs"],
-            values=d["values"],
-        )
+        return Cube(**parse_coveragejson(payload))
     raise ValueError(f"unknown cube payload magic: {payload[:6]!r}")
+
+
+def cube_grid(cube: Cube, lambert: bool = False) -> dict[str, np.ndarray]:
+    """A cube as flat long-form columns in (time, y, x) C order:
+    ``time_s``, ``y``, ``x``, ``value``, ``lon`` and ``lat``.
+
+    Lambert (harmonie_*) grids are reprojected LCC→WGS84 once per grid
+    point (ny·nx) and tiled over the nt timesteps; the projection is
+    element-wise, so this equals projecting every cell. crs84 grids pass
+    their coordinates through as lon/lat (ingestor.py:170-173, 201-202).
+    """
+    nt, ny, nx = cube.values.shape
+    ys = np.repeat(np.asarray(cube.ys, dtype="f8"), nx)
+    xs = np.tile(np.asarray(cube.xs, dtype="f8"), ny)
+    if lambert:
+        from dmi_ingestor_spark.functions.projection import lcc_to_wgs84_np
+
+        lon, lat = lcc_to_wgs84_np(xs, ys)
+    else:
+        lon, lat = xs, ys
+    return {
+        "time_s": np.repeat(np.asarray(cube.times, dtype="int64"), ny * nx),
+        "y": np.tile(ys, nt),
+        "x": np.tile(xs, nt),
+        "value": np.asarray(cube.values, dtype="f8").reshape(-1),
+        "lon": np.tile(lon, nt),
+        "lat": np.tile(lat, nt),
+    }
+
+
+def cube_stats(payload: bytes) -> tuple[int, int, int, int, int, int]:
+    """Decode one payload into its integer audit: (n_timesteps, n_cells,
+    value_sum, value_min, value_max, time_checksum). Values are rounded,
+    so integer-valued test cubes give exact, codec-independent rows."""
+    cube = decode_cube(bytes(payload))
+    v = cube.values
+    return (
+        len(cube.times),
+        int(v.size),
+        int(round(float(v.sum()))),
+        int(round(float(v.min()))),
+        int(round(float(v.max()))),
+        int(sum(cube.times)),
+    )
 
 
 def _decode_netcdf(payload: bytes) -> Cube:
@@ -112,18 +136,10 @@ def _decode_netcdf(payload: bytes) -> Cube:
         if payload[:3] == b"CDF":
             from dmi_ingestor_spark.sources.netcdf3 import parse_netcdf3
 
-            d = parse_netcdf3(payload)
-        else:
-            from dmi_ingestor_spark.sources.hdf5 import parse_hdf5_cube
+            return Cube(**parse_netcdf3(payload))
+        from dmi_ingestor_spark.sources.hdf5 import parse_hdf5_cube
 
-            d = parse_hdf5_cube(payload)
-        return Cube(
-            parameter=d["parameter"],
-            times=d["times"],
-            ys=d["ys"],
-            xs=d["xs"],
-            values=d["values"],
-        )
+        return Cube(**parse_hdf5_cube(payload))
     ds = xr.open_dataset(io.BytesIO(payload))  # pragma: no cover
     var = next(iter(ds.data_vars))  # pragma: no cover
     da = ds[var]  # pragma: no cover
@@ -157,9 +173,9 @@ def synthetic_cube(
     else:
         ys = [55.0 + 0.1 * i for i in range(n_y)]
         xs = [11.0 + 0.1 * i for i in range(n_x)]
-    vals = np.zeros((n_times, n_y, n_x))
-    for t in range(n_times):
-        for iy in range(n_y):
-            for ix in range(n_x):
-                vals[t, iy, ix] = t * 10_000 + iy * 100 + ix
+    vals = (
+        np.arange(n_times)[:, None, None] * 10_000
+        + np.arange(n_y)[:, None] * 100
+        + np.arange(n_x)
+    ).astype("f8")
     return Cube(parameter=parameter, times=times, ys=ys, xs=xs, values=vals)

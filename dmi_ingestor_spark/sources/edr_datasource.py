@@ -14,14 +14,17 @@ real source adapter cheap, and it buys genuine Catalyst integration:
   bbox slicing, rollups, and writes run as normal Catalyst plans.
 
 Offline by default: ``.option("transport", "synthetic")`` serves the
-deterministic test cube; "http" does the real fetch (network not
-available in CI, mirrored from ``http_edr._default_transport``).
+deterministic test cube; "http" does the real fetch through
+``http_edr._default_transport`` (network not available in CI). Unset
+options take ``IngestConfig``'s defaults, and cubes become rows through
+``cube_format.cube_grid``, the ingest pipeline's decode.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
+from itertools import repeat
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -36,12 +39,34 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from dmi_ingestor_spark.sources.http_edr import IngestConfig, build_request_url
-
-GRID_DDL = (
-    "collection string, parameter string, time_s long, "
-    "y double, x double, value double"
+from dmi_ingestor_spark.ingest.pipeline import GRID_SCHEMA
+from dmi_ingestor_spark.sources.cube_format import (
+    cube_grid,
+    decode_cube,
+    encode_cube,
+    synthetic_cube,
 )
+from dmi_ingestor_spark.sources.http_edr import (
+    IngestConfig,
+    _default_transport,
+    build_request_url,
+)
+
+
+def _config(options: dict) -> IngestConfig:
+    """The run config the reader options name; an unset option keeps
+    ``IngestConfig``'s default."""
+    given = {k: options[k] for k in ("collection", "bbox", "api_key") if k in options}
+    if "parameters" in options:
+        given["parameters"] = tuple(p for p in options["parameters"].split(",") if p)
+    return IngestConfig(**given)
+
+
+def _grid_rows(collection: str, parameter: str, cube) -> Iterator[tuple]:
+    """One cube as (collection, parameter, time_s, y, x, value) rows."""
+    g = cube_grid(cube)
+    cols = (g[c].tolist() for c in ("time_s", "y", "x", "value"))
+    return zip(repeat(collection), repeat(parameter), *cols)
 
 
 @dataclass
@@ -53,12 +78,13 @@ class _ParamPartition(InputPartition):
 
 
 class EdrReader(DataSourceReader):
+    """Batch reader: one partition per parameter; each task fetches its
+    cube (synthetic or over HTTP) and decodes it into grid rows through
+    ``cube_format.cube_grid``, the same columns ``decode_to_grid`` emits
+    minus lon/lat."""
+
     def __init__(self, options: dict) -> None:
-        self.collection = options.get("collection", "dkss_if")
-        params = options.get("parameters", "sea-mean-deviation")
-        self.parameters = [p for p in params.split(",") if p]
-        self.bbox = options.get("bbox", "11.5,55.5,12.2,56.1")
-        self.api_key = options.get("api_key", "")
+        self.config = _config(options)
         self.transport = options.get("transport", "synthetic")
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
@@ -66,34 +92,23 @@ class EdrReader(DataSourceReader):
         else is returned as unsupported (Spark re-applies it)."""
         for f in filters:
             if isinstance(f, EqualTo) and f.attribute == ("parameter",):
-                self.parameters = [p for p in self.parameters if p == f.value]
+                keep = {f.value}
             elif isinstance(f, In) and f.attribute == ("parameter",):
-                allowed = set(f.values)
-                self.parameters = [p for p in self.parameters if p in allowed]
+                keep = set(f.values)
             else:
                 yield f
+                continue
+            params = tuple(p for p in self.config.parameters if p in keep)
+            self.config = replace(self.config, parameters=params)
 
     def partitions(self) -> Sequence[InputPartition]:
-        cfg = IngestConfig(
-            collection=self.collection,
-            parameters=tuple(self.parameters),
-            bbox=self.bbox,
-            api_key=self.api_key,
-        )
+        c = self.config
         return [
-            _ParamPartition(
-                self.collection, p, build_request_url(cfg, p), self.transport
-            )
-            for p in self.parameters
+            _ParamPartition(c.collection, p, build_request_url(c, p), self.transport)
+            for p in c.parameters
         ]
 
     def read(self, partition: _ParamPartition) -> Iterator[tuple]:
-        from dmi_ingestor_spark.sources.cube_format import (
-            decode_cube,
-            encode_cube,
-            synthetic_cube,
-        )
-
         if partition.transport == "synthetic":
             payload = encode_cube(
                 synthetic_cube(
@@ -102,23 +117,8 @@ class EdrReader(DataSourceReader):
                 )
             )
         else:  # pragma: no cover - network path
-            import requests
-
-            resp = requests.get(partition.url, timeout=120)
-            resp.raise_for_status()
-            payload = resp.content
-        cube = decode_cube(payload)
-        for t_i, t in enumerate(cube.times):
-            for y_i, y in enumerate(cube.ys):
-                for x_i, x in enumerate(cube.xs):
-                    yield (
-                        partition.collection,
-                        partition.parameter,
-                        int(t),
-                        float(y),
-                        float(x),
-                        float(cube.values[t_i, y_i, x_i]),
-                    )
+            payload = _default_transport(partition.url)
+        return _grid_rows(partition.collection, partition.parameter, decode_cube(payload))
 
 
 class EdrDataSource(DataSource):
@@ -126,8 +126,9 @@ class EdrDataSource(DataSource):
     def name(cls) -> str:
         return "dmi_edr"
 
-    def schema(self) -> str:
-        return GRID_DDL
+    def schema(self) -> StructType:
+        # the ingest grid's columns without lon/lat
+        return StructType(GRID_SCHEMA.fields[:6])
 
     def reader(self, schema: StructType) -> EdrReader:
         return EdrReader(self.options)
@@ -156,16 +157,15 @@ class EdrStreamReader(SimpleDataSourceStreamReader):
     CYCLE_STEP_S = 4 * 3600  # one synthetic cycle = 4 hourly steps
 
     def __init__(self, options: dict) -> None:
-        self.collection = options.get("collection", "dkss_if")
-        self.parameter = options.get("parameters", "sea-mean-deviation").split(",")[0]
+        config = _config(options)
+        self.collection = config.collection
+        self.parameter = config.parameters[0]
         self.max_cycles = int(options.get("max_cycles", "3"))
 
     def initialOffset(self) -> dict:
         return {"cycle": 0}
 
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        from dmi_ingestor_spark.sources.cube_format import synthetic_cube
-
         cycle = start["cycle"]
         if cycle >= self.max_cycles:
             return iter([]), start
@@ -174,20 +174,7 @@ class EdrStreamReader(SimpleDataSourceStreamReader):
             t0=1_767_225_600 + cycle * self.CYCLE_STEP_S,
             lambert=self.collection.startswith("harmonie"),
         )
-        rows = [
-            (
-                self.collection,
-                self.parameter,
-                int(t),
-                float(y),
-                float(x),
-                float(cube.values[t_i, y_i, x_i]),
-            )
-            for t_i, t in enumerate(cube.times)
-            for y_i, y in enumerate(cube.ys)
-            for x_i, x in enumerate(cube.xs)
-        ]
-        return iter(rows), {"cycle": cycle + 1}
+        return _grid_rows(self.collection, self.parameter, cube), {"cycle": cycle + 1}
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,7 @@ Re-expresses the reference's request construction and fetch loop
   time in plain Python (the `parameter-name`/`bbox` query params ARE the
   pushdown — SURVEY.md §4.2);
 * the fetches run distributed, one partition per request, via
-  ``mapInPandas`` — each worker GETs its cube and emits
+  ``operators.rowmap.map_rows`` — each worker GETs its cube and emits
   (request metadata, payload, error);
 * HTTP failure → error column, payload NULL — the keep-last-good edge
   (``ingestor.py:192-199``: a failed fetch must leave the previous
@@ -18,11 +18,10 @@ The transport is injectable so tests run fully offline.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from urllib.parse import urlencode, urlunsplit
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -30,6 +29,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from dmi_ingestor_spark.operators.rowmap import map_rows
 
 Transport = Callable[[str], bytes]
 
@@ -114,20 +115,12 @@ def fetch_cubes(
         requests_rows, schema="collection string, parameter string, url string"
     ).repartition(max(len(requests_rows), 1))
 
-    def _fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"collection": [], "parameter": [], "url": [], "payload": [], "error": []}
-            for col, par, url in zip(pdf["collection"], pdf["parameter"], pdf["url"]):
-                payload, error = None, None
-                try:
-                    payload = tp(url)
-                except Exception as err:  # noqa: BLE001 - log-and-skip edge
-                    error = f"{type(err).__name__}: {err}"
-                out["collection"].append(col)
-                out["parameter"].append(par)
-                out["url"].append(url)
-                out["payload"].append(payload)
-                out["error"].append(error)
-            yield pd.DataFrame(out)
+    def _fetch(row) -> list[tuple]:
+        payload, error = None, None
+        try:
+            payload = tp(row.url)
+        except Exception as err:  # noqa: BLE001 - log-and-skip edge
+            error = f"{type(err).__name__}: {err}"
+        return [(row.collection, row.parameter, row.url, payload, error)]
 
-    return req_df.mapInPandas(_fetch, FETCH_SCHEMA)
+    return map_rows(req_df, FETCH_SCHEMA, _fetch)

@@ -68,6 +68,32 @@ def test_composes_with_catalyst(spark):
     assert rows[1].s - rows[0].s == 64 * 10_000
 
 
+def test_datasource_rows_equal_ingest_decode(spark):
+    """The same synthetic harmonie cube through the ingest pipeline's
+    decode_to_grid and through spark.read.format('dmi_edr') gives the
+    same grid rows, and the pipeline's lon/lat equal the projection
+    applied cell by cell."""
+    import numpy as np
+
+    from dmi_ingestor_spark.functions.projection import lcc_to_wgs84_np
+    from dmi_ingestor_spark.ingest.pipeline import decode_to_grid
+    from dmi_ingestor_spark.sources.cube_format import encode_cube, synthetic_cube
+    from dmi_ingestor_spark.sources.http_edr import FETCH_SCHEMA
+
+    coll, par = "harmonie_dini_sf", "t2m"
+    payload = encode_cube(synthetic_cube(par, lambert=True))
+    fetched = spark.createDataFrame([(coll, par, "url", payload, None)], FETCH_SCHEMA)
+    grid = decode_to_grid(fetched, lambert=True).collect()
+    cols = ["collection", "parameter", "time_s", "y", "x", "value"]
+    via_pipeline = sorted(tuple(r[c] for c in cols) for r in grid)
+    via_source = sorted(tuple(r) for r in _read(spark, collection=coll, parameters=par).collect())
+    assert len(via_pipeline) == 4 * 64
+    assert via_pipeline == via_source
+    lon, lat = lcc_to_wgs84_np(np.array([r.x for r in grid]), np.array([r.y for r in grid]))
+    assert [r.lon for r in grid] == lon.tolist()
+    assert [r.lat for r in grid] == lat.tolist()
+
+
 def test_stream_reader_one_batch_per_cycle(spark, tmp_path):
     """readStream over dmi_edr: 3 forecast cycles arrive as micro-batches
     with exactly-once offsets; the drained sink holds every cycle once."""

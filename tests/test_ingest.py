@@ -37,6 +37,18 @@ def test_cube_codec_roundtrip():
     assert np.array_equal(back.values, cube.values)
 
 
+def test_synthetic_cube_values_equal_cellwise_formula():
+    # the vectorized values against the per-cell loop they replaced
+    cube = synthetic_cube("p", n_times=3, n_y=5, n_x=7)
+    want = np.zeros((3, 5, 7))
+    for t in range(3):
+        for iy in range(5):
+            for ix in range(7):
+                want[t, iy, ix] = t * 10_000 + iy * 100 + ix
+    assert cube.values.dtype == np.float64
+    assert np.array_equal(cube.values, want)
+
+
 def test_unknown_magic_rejected():
     with pytest.raises(ValueError):
         decode_cube(b"GARBAGE-PAYLOAD")
@@ -309,21 +321,27 @@ def test_mixed_fetch_and_decode_failures_keep_last_good(spark, out_dir):
         assert sorted(f"time_str={t}" for t in json.load(fh)) == ok_leaves
 
 
-_INGEST_STAGES = {"success": 6, "all_fetch_failed": 6, "corrupt_payload": 6}
+# (jobs, stages, shuffle write bytes) of one run_ingest over a previous
+# forecast; exact, because these counters repeat. Pins may only go down.
+_INGEST_BUDGET = {
+    "success": (2, 3, 490),
+    "all_fetch_failed": (2, 3, 490),
+    "corrupt_payload": (2, 3, 490),
+}
 
 
 @pytest.mark.parametrize(
-    "case, fail, jobs",
+    "case, fail",
     [
-        ("success", {}, 3),
-        ("all_fetch_failed", {"t2m": "down", "wind-speed": "down"}, 3),
-        ("corrupt_payload", {"t2m": "corrupt", "wind-speed": "corrupt"}, 3),
+        ("success", {}),
+        ("all_fetch_failed", {"t2m": "down", "wind-speed": "down"}),
+        ("corrupt_payload", {"t2m": "corrupt", "wind-speed": "corrupt"}),
     ],
 )
-def test_run_ingest_job_budget(spark, out_dir, case, fail, jobs):
-    """One forecast is one write: pin the Spark jobs and stages
-    (``_INGEST_STAGES``) ``run_ingest`` runs on top of a previous
-    forecast (deterministic counters, unlike wall time)."""
+def test_run_ingest_job_budget(spark, out_dir, case, fail):
+    """One forecast is one write: pin the Spark jobs, stages and shuffle
+    write bytes (``_INGEST_BUDGET``) ``run_ingest`` runs on top of a
+    previous forecast (deterministic counters, unlike wall time)."""
     cfg = IngestConfig(collection="harmonie_dini_sf", parameters=("t2m", "wind-speed"))
     run_ingest(spark, cfg, out_dir, _make_transport_ok())
     sc = spark.sparkContext
@@ -333,8 +351,10 @@ def test_run_ingest_job_budget(spark, out_dir, case, fail, jobs):
         run_ingest(spark, cfg, out_dir, _make_transport_next(fail))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
     tracker = sc.statusTracker()
     job_ids = tracker.getJobIdsForGroup(group)
-    assert len(job_ids) == jobs
-    stages = sum(len(tracker.getJobInfo(j).stageIds) for j in job_ids)
-    assert stages == _INGEST_STAGES[case]
+    stage_ids = [s for j in job_ids for s in tracker.getJobInfo(j).stageIds]
+    shuffle_bytes = sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stage_ids)
+    assert (len(job_ids), len(stage_ids), shuffle_bytes) == _INGEST_BUDGET[case]

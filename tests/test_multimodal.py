@@ -54,28 +54,6 @@ def test_decode_preserves_partitioning(spark, sf_dir):
     assert decoded.rdd.getNumPartitions() == 7
 
 
-def test_mapinarrow_decode_equals_mapinpandas(spark, sf_dir):
-    """decode_features (mapInPandas) and decode_features_arrow
-    (mapInArrow) are independent implementations of the same decode;
-    their outputs must agree row for row."""
-    from dmi_ingestor_spark.operators.multimodal import (
-        attach_payloads,
-        decode_features,
-        decode_features_arrow,
-    )
-
-    media = attach_payloads(table(spark, sf_dir, "documents")).limit(50)
-    a = {
-        r["doc_id"]: (r["n_bytes"], r["checksum"], tuple(r["features"]))
-        for r in decode_features(media).collect()
-    }
-    b = {
-        r["doc_id"]: (r["n_bytes"], r["checksum"], tuple(r["features"]))
-        for r in decode_features_arrow(media).collect()
-    }
-    assert a == b and len(a) == 50
-
-
 def test_resize_stride_halves_bytes(spark, sf_dir):
     """resize keeps ceil(n/factor) bytes, and resizing by 2 twice
     equals resizing by 4 once (stride composition — the invariant a

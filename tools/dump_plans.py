@@ -46,11 +46,19 @@ def formatted_plan(spark, df) -> str:
     return spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+def build(spark, registry, name: str, sf_dir: str):
+    """Build one query on an empty cache, so its plan does not depend on
+    what earlier builders in the session cached (a materialized cache
+    turns a subtree into a cached scan and can drop an exchange)."""
+    spark.catalog.clearCache()
+    return registry[name].builder(spark, sf_dir)
+
+
 def dump_tagged(spark, registry, names, sf_dir: str, tag: str) -> None:
     out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
-        df = registry[name].builder(spark, sf_dir)
+        df = build(spark, registry, name, sf_dir)
         with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
             fh.write(formatted_plan(spark, df))
         print(f"{name}\t{df.schema.simpleString()}")
@@ -82,7 +90,7 @@ def main() -> int:
     ]
     for name in names:
         try:
-            plan = formatted_plan(spark, registry[name].builder(spark, args.sf_dir))
+            plan = formatted_plan(spark, build(spark, registry, name, args.sf_dir))
         except Exception as e:  # noqa: BLE001
             lines += [f"## {name}", "", f"(plan unavailable: {type(e).__name__}: {e})", ""]
             continue
