@@ -86,3 +86,15 @@ def test_oracle_check_cli_contract():
     assert "PASS q1_pricing_summary" in r.stdout
     assert "ROWS-ONLY agg_approx_distinct" in r.stdout
     assert "1 pass, 0 fail, 1 rows-only of 2" in r.stdout
+
+
+def test_oracle_duck_memory_limit_within_physical_memory(duck):
+    """The oracle's DuckDB memory limit is derived from the host: a limit
+    above physical memory lets DuckDB grow until the kernel OOM-kills the
+    checker instead of spilling."""
+    value, unit = duck.execute(
+        "SELECT current_setting('memory_limit')"
+    ).fetchone()[0].split()
+    scale = {"bytes": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < float(value) * scale[unit] <= phys

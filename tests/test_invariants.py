@@ -270,18 +270,45 @@ def test_graph_summary_kernel_row_bound(spark):
     so it takes only the nation-level aggregate (<= 25² = 625 rows): 625
     rows run, 626 raise ValueError instead of pulling a corpus-scale
     relation into one worker."""
-    import pandas as pd
     import pytest
 
     from dmi_ingestor_spark.queries.graph import _summary_kernel
 
     def n_rows(n):
         edges = spark.range(n).toDF("src")
-        count = _summary_kernel(
-            edges, "n long", lambda pdf: pd.DataFrame({"n": [len(pdf)]})
-        )
+        count = _summary_kernel(edges, "n long", lambda rows: [(len(rows),)])
         return count.collect()[0].n
 
     assert n_rows(625) == 625
     with pytest.raises(Exception, match="ValueError: summary kernel input has 626"):
         n_rows(626)
+
+
+def test_graph_summary_kernel_output_types(spark):
+    """The summary kernel builds its result from the tuples ``fn``
+    returns, typed by the schema: a ``long`` keeps NULL and values past
+    2^53 exact, an empty result still has the schema's columns, and an
+    ``int`` out of range raises instead of wrapping."""
+    import pytest
+
+    from dmi_ingestor_spark.queries.graph import _summary_kernel
+
+    edges = spark.createDataFrame([(1, 2), (3, 4)], "src int, dst long")
+    seen = _summary_kernel(
+        edges,
+        "a int, b long, s string",
+        lambda rows: [(x, y + 2**62, str(rows)) for x, y in rows],
+    ).collect()
+    assert sorted(tuple(r) for r in seen) == [
+        (1, 2 + 2**62, "[(1, 2), (3, 4)]"),
+        (3, 4 + 2**62, "[(1, 2), (3, 4)]"),
+    ]
+    big = _summary_kernel(
+        edges, "n long", lambda rows: [(None,), (2**62 + 1,)]
+    ).collect()
+    assert [r.n for r in big] == [None, 2**62 + 1]
+    empty = _summary_kernel(edges, "a int, b long, s string", lambda rows: [])
+    assert empty.columns == ["a", "b", "s"]
+    assert empty.collect() == []
+    with pytest.raises(Exception, match="TypeError"):
+        _summary_kernel(edges, "a int", lambda rows: [(2**31,)]).collect()

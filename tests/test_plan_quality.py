@@ -104,10 +104,11 @@ def test_minhash_corpus_never_shuffles(spark, sf_dir):
 
 
 # Exchange nodes (shuffle, broadcast and reused) in the formatted plan of
-# each dedup query built on dedup.py's MinHash and shared-shingle helpers,
-# at the test sf_dir. Pins may only go down: when a change removes an
-# exchange, lower the pin to the new count; never raise one.
-_DEDUP_EXCHANGE_PINS = {
+# each query built on a shared helper — dedup.py's MinHash and
+# shared-shingle helpers, graph.py's _trade_edges and _trade_und — at the
+# test sf_dir. Pins may only go down: when a change removes an exchange,
+# lower the pin to the new count; never raise one.
+_EXCHANGE_PINS = {
     "dedup_minhash_lsh": 5,
     "dedup_incremental_minhash": 5,
     "dedup_lsh_recall_eval": 12,
@@ -117,21 +118,58 @@ _DEDUP_EXCHANGE_PINS = {
     "dedup_ngram_jaccard": 19,
     "dq_split_leakage_near_dup": 22,
     "dedup_shingle_size_sweep": 60,
+    "graph_pagerank_trade": 4,
+    "graph_triangle_count": 4,
+    "graph_clustering_coefficient": 4,
+    "graph_label_propagation": 4,
+    "graph_bfs_shortest_hops": 4,
+    "graph_degree_distribution": 4,
+    "graph_hits_scores": 4,
+    "graph_jaccard_link_prediction": 4,
+    "graph_community_modularity": 6,
+    "graph_assortativity": 4,
+    "graph_reciprocity": 4,
+    "graph_closeness_centrality": 4,
+    "graph_betweenness_centrality": 4,
+    "graph_scc_decomposition": 4,
+    "graph_random_walk_visits": 4,
+    "graph_mst_boruvka": 4,
+    "graph_apsp_minplus": 4,
+    "graph_ktruss_peeling": 4,
+    "graph_personalized_pagerank": 8,
+    "graph_louvain_one_sweep": 4,
+    "graph_anf_bottomk": 4,
+    "graph_spectral_bisection": 4,
+    "graph_weisfeiler_lehman": 4,
+    "graph_triad_motif_census": 4,
 }
 
 
-@pytest.mark.parametrize("name", sorted(_DEDUP_EXCHANGE_PINS))
-def test_dedup_exchange_pins(spark, sf_dir, name):
+def _check_exchange_pin(spark, sf_dir, name):
     # the builders cache; once an earlier test has executed one, its
     # materialized cache changes the plan (ngram_jaccard: 19 -> 25), so
     # count on a session with no cached data
     spark.catalog.clearCache()
     plan = plan_of(spark, sf_dir, name)
     n = len(re.findall(r"^\(\d+\) \w*Exchange\b", plan, re.M))
-    assert n == _DEDUP_EXCHANGE_PINS[name], (
-        f"{name}: {n} exchanges, pinned {_DEDUP_EXCHANGE_PINS[name]} "
+    assert n == _EXCHANGE_PINS[name], (
+        f"{name}: {n} exchanges, pinned {_EXCHANGE_PINS[name]} "
         "(lower the pin if the count went down; never raise it)"
     )
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n in _EXCHANGE_PINS if not n.startswith("graph_"))
+)
+def test_dedup_exchange_pins(spark, sf_dir, name):
+    _check_exchange_pin(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize(
+    "name", sorted(n for n in _EXCHANGE_PINS if n.startswith("graph_"))
+)
+def test_graph_exchange_pins(spark, sf_dir, name):
+    _check_exchange_pin(spark, sf_dir, name)
 
 
 def test_pivot_has_no_values_discovery_job(spark, sf_dir):

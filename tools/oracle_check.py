@@ -32,8 +32,11 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
     # bound the oracle's memory so a mis-planned join spills to temp
     # instead of OOM-killing the whole sweep subprocess (r7: the
-    # pre-fix DBSCAN closure allocated 35 GB before being killed)
-    con.execute("SET memory_limit='24GB'")
+    # pre-fix DBSCAN closure allocated 35 GB before being killed); half
+    # of physical memory leaves the other half to the Spark JVM and the
+    # checker's own result lists
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con.execute(f"SET memory_limit='{phys // 2 // 2**20}MiB'")
     # per-process spill dir: concurrent oracle_check processes sharing
     # the cwd-default .tmp/duckdb_temp_storage-*.tmp clobber each
     # other's spill files (observed as a spurious IOException FAIL
