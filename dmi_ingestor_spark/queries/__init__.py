@@ -8,16 +8,18 @@ after it, so nothing is ever dropped — only rotated.
 
 Round-8+ note (repeat each round until the backlog drains): the
 never-driver-checked set is the registry minus the keys of all
-``CORRECTNESS_r0N.json`` files; rows-only-by-design names (streaming
+``CORRECTNESS_r*.json`` files; rows-only-by-design names (streaming
 execution, text_compression_ratio) are excluded from the hash rotation.
-Start of the round-10 session: 536 registered, 523 oracle-bearing;
-driver has checked 439 distinct names, so the oracle-bearing
-never-checked backlog is 88. The r10 rotation below takes the first
-50 in registry order (oldest families first, per VERDICT r9 item 7),
-leaving 38 for round 11. Compute the next rotation directly::
+Start of the round-11 session: 536 registered, 523 oracle-bearing;
+the ten ``CORRECTNESS_r*.json`` files name 489 distinct queries, so the
+oracle-bearing never-checked backlog is 38. The round-11 rotation below
+takes all 38 in registry order, then the seven tree-learner and
+bootstrap builders rewritten onto the shared split sweep in
+``queries/mllib.py``, which need a fresh CORRECTNESS row. Compute the next
+rotation directly::
 
     set(REGISTRY) - set().union(*(json.load(open(f)) for f in
-                                  glob.glob("CORRECTNESS_r0*.json")))
+                                  glob.glob("CORRECTNESS_r*.json")))
 
 oracle-bearing first (``name in oracle_sql()``), oldest families first.
 """
@@ -49,67 +51,59 @@ from dmi_ingestor_spark.queries import (  # noqa: F401
 )
 from dmi_ingestor_spark.registry import REGISTRY
 
-# Round-10 rotation: 50 slots, ALL from the never-driver-checked
-# oracle-bearing backlog (88 entering this round = 523 oracle-bearing
-# - union(CORRECTNESS_r01..r09 keys); VERDICT r9 item 7). First 50 of
-# the backlog in registry insertion order (oldest families first): the
-# reshape/udtf/scalar stragglers, the similarity/vector evaluation
-# family, the spatial + streaming-twin stragglers, the textops tail,
-# and the first windows/analytics names. NO rows-only-by-design names.
-# 38 remain after this rotation; round 11 drains them. Recompute each
-# round:
-#   set(REGISTRY) - union(json.load(open(f)) for f in CORRECTNESS_r0*.json)
+# Round-11 rotation: the whole never-driver-checked oracle-bearing
+# backlog (38 = 523 oracle-bearing - the 489 names across
+# CORRECTNESS_r01..r10), in registry insertion order, then the seven
+# mllib split-sweep builders; at most 50 names, the entries checked.
+# NO rows-only-by-design names. Recompute each round with the recipe
+# in the module docstring.
 _DRIVER_PRIORITY = [
-    "topk_threshold_algorithm",
-    "udtf_rle_tokens",
-    "reshape_explode_outer_nulls",
-    "reshape_explode_map",
-    "udtf_analyze_polymorphic",
-    "pivot_dynamic_priority",
-    "scalar_levenshtein_pairs",
-    "scalar_try_arithmetic",
-    "scalar_xml_parse",
-    "scalar_array_index_semantics",
-    "scalar_business_days",
-    "scalar_collation_pack",
-    "scalar_ip_cidr_ops",
-    "scalar_binary_pack",
-    "scalar_luhn_checksum",
-    "sim_ann_recall_eval",
-    "vector_int8_quantize",
-    "ml_negative_sampling",
-    "vector_dim_stats",
-    "ml_knn_classifier_eval",
-    "sim_range_search_threshold",
-    "vector_quantize_error_audit",
-    "sim_matryoshka_prefix_recall",
-    "spatial_radius_join_grid",
-    "spatial_point_in_polygon",
-    "spatial_geohash_cells",
-    "spatial_idw_interpolation",
-    "st_static_join_batch",
-    "st_foreachbatch_upsert",
-    "st_transform_with_state",
-    "analytics_bounce_rate",
-    "st_trending_topk_windows",
-    "text_lm_score",
-    "text_bpe_merges",
-    "text_bpe_apply",
-    "ml_eval_confusion_lang_id",
-    "text_arrow_native_stats",
-    "text_boilerplate_strip",
-    "text_ngram_novelty",
-    "text_contact_extraction",
-    "text_cooccurrence_pmi",
-    "text_zipf_consistency",
-    "text_containment_search",
-    "ml_llm_eval_em_f1",
-    "text_sft_format_validate",
-    "pipeline_dpo_pair_construction",
-    "cogroup_reconcile_pandas",
-    "window_rank_variants",
-    "cohort_weekly_retention",
-    "funnel_conversion_3step",
+    "ts_gapfill_interpolate",
+    "window_null_ordering",
+    "analytics_top_paths",
+    "ts_time_weighted_avg",
+    "window_running_distinct",
+    "analytics_cep_pattern",
+    "analytics_mom_growth",
+    "analytics_rfm_segments",
+    "analytics_copurchase_pairs",
+    "analytics_revenue_concentration",
+    "sort_limit_offset_page",
+    "ts_seasonal_naive_mae",
+    "analytics_ab_test_z",
+    "analytics_markov_transitions",
+    "analytics_price_trend_ols",
+    "analytics_item_item_cosine",
+    "analytics_cohort_ltv_curve",
+    "window_alert_debounce",
+    "window_median_rolling",
+    "analytics_max_concurrency",
+    "analytics_heatmap_hour_type",
+    "analytics_ratio_of_sums_pin",
+    "window_forward_fill",
+    "analytics_new_vs_returning",
+    "analytics_basket_lift",
+    "analytics_welch_t_test",
+    "analytics_time_decay_engagement",
+    "analytics_attribution_linear",
+    "analytics_survival_kaplan_meier",
+    "analytics_logrank_test",
+    "window_regex_sequence_detect",
+    "analytics_uplift_eval",
+    "analytics_mix_shift_decomposition",
+    "analytics_diff_in_diff",
+    "analytics_shapley_attribution",
+    "analytics_price_index_fisher",
+    "analytics_identity_stitching",
+    "analytics_qini_auuc",
+    # rewritten onto the shared split sweep / Poisson weight
+    "ml_decision_stump_exact",
+    "ml_random_forest_stumps",
+    "ml_oob_error_estimate",
+    "ml_tree_depth2_exact",
+    "ml_adaboost_round_exact",
+    "ml_poisson_bootstrap_ci",
+    "ml_gbdt_second_order_gain",
 ]
 
 

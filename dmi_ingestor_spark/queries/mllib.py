@@ -13,11 +13,19 @@ allowed), threshold/contract violations are counted (must be 0), and
 the exact truth quantity (token-Jaccard pair count) is derived with
 plain array ops on both engines. Pair-level behavior stays covered in
 tests/test_dedup_similarity.py.
+
+The tree learners (decision stump, random forest, OOB error, depth-2
+tree, AdaBoost) share one exact split sweep: ``_gini_sweep`` groups a
+histogram, takes running sums and node totals from one ``_prefix_sums``
+window and scores each threshold with ``_GINI_SPARK``; ``_best_split``
+picks the min-(gini, ...) row per node. GBDT's gain sweep uses
+``_prefix_sums`` too. The bootstrap queries draw their bags with
+``_bags`` and ``_poisson_weight``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
@@ -1177,6 +1185,22 @@ def _boot_weight_sql(u: str) -> str:
     return f"CASE {whens} ELSE 5 END"
 
 
+def _bags(n: int):
+    """Bag ids 1..n as column ``b``: a narrow explode, no shuffle."""
+    return F.explode(F.array(*[F.lit(b) for b in range(1, n + 1)])).alias("b")
+
+
+def _poisson_weight(key: str):
+    """Spark twin of ``_boot_weight_sql``: the Poisson(1) weight of row
+    ``key`` in bag ``b``, drawn from u = md5(key-b) mod 1e6."""
+    tag = F.concat(F.col(key).cast("string"), F.lit("-"), F.col("b").cast("string"))
+    u = F.conv(F.substring(F.md5(tag), 1, 15), 16, 10).cast("long") % 1000000
+    return F.coalesce(
+        *[F.when(u < t, F.lit(k)) for k, t in enumerate(_POIS_CUM_MICRO)],
+        F.lit(5),
+    )
+
+
 @register(
     "ml_poisson_bootstrap_ci",
     oracle=f"""
@@ -1233,42 +1257,13 @@ def _boot_weight_sql(u: str) -> str:
     tags=("ml", "bootstrap", "statistics", "orders"),
 )
 def ml_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     o = table(spark, sf_dir, "orders")
     base = o.select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    bcol = F.explode(
-        F.array(*[F.lit(b) for b in range(1, _BOOT_B + 1)])
-    ).alias("b")
-    fanned = base.select("o_orderkey", "cents", bcol)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("o_orderkey").cast("string"),
-                        F.lit("-"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
-    wgt = F.coalesce(
-        *[
-            F.when(u < t, F.lit(k))
-            for k, t in enumerate(_POIS_CUM_MICRO)
-        ],
-        F.lit(5),
-    )
+    fanned = base.select("o_orderkey", "cents", _bags(_BOOT_B))
+    wgt = _poisson_weight("o_orderkey")
     reps = fanned.groupBy("b").agg(
         F.sum(wgt * F.col("cents")).cast("long").alias("ws"),
         F.sum(wgt).cast("long").alias("wn"),
@@ -1866,13 +1861,73 @@ def ml_naive_bayes_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Decision stump: exact best-split search via cumulative counts
 # --------------------------------------------------------------------------
 
-# Gini numerator 2*lpos*(ln-lpos)*SCALE is <= n^2/2 * 2e8, which leaves
-# int64 once n > sqrt(2 * 9.2e18 / 2e8) ~ 3.0e5 rows (part exceeds that
-# at SF >= ~1.5) — so both engines carry the intermediate in 128-bit
-# integer arithmetic (Spark DECIMAL(38,0), DuckDB HUGEINT; identical
-# truncating div, verified) and only the final scaled Gini, bounded by
-# ~n * SCALE / 2 (~1e14 at SF=10), is cast back to BIGINT.
 _GINI_SCALE = 10**8
+
+# label sums of the split sweep: column -> (running sum up to the
+# threshold, total of the node)
+_SPLIT_SUMS = {"n": ("ln", "n_all"), "pos": ("lpos", "pos_all")}
+
+# Weighted Gini of the split "value <= threshold", scaled by _GINI_SCALE,
+# from the prefix sums (ln, lpos) and the node totals (n_all, pos_all).
+# Every product runs in DECIMAL(38,0) (the oracles' HUGEINT; identical
+# truncating div): the numerator 2*lpos*(ln-lpos)*SCALE leaves int64 once
+# a side holds ~3e5 rows, and the window SUMs are LONG, so LONG ln*ln
+# denominators raised ARITHMETIC_OVERFLOW once a side held ~3.04e9
+# (weighted) rows — AdaBoost round-2 weights pushed n_all to ~1e10 at
+# sf0.5. Only the result, at most SCALE, is cast back to BIGINT. A
+# Poisson weight of 0 can leave the first threshold empty (ln = 0): its
+# left term is 0, not a division by zero.
+_GINI_SPARK = f"""CAST(
+      (CASE WHEN ln = 0 THEN 0
+            ELSE CAST(ln AS DECIMAL(38,0))
+                 * ((CAST(2 AS DECIMAL(38,0)) * lpos * (ln - lpos)
+                     * {_GINI_SCALE}) div (CAST(ln AS DECIMAL(38,0)) * ln)) END
+       + CAST(n_all - ln AS DECIMAL(38,0)) *
+         CASE WHEN n_all - ln = 0 THEN 0
+              ELSE (CAST(2 AS DECIMAL(38,0)) * (pos_all - lpos)
+                    * ((n_all - ln) - (pos_all - lpos)) * {_GINI_SCALE})
+                   div (CAST(n_all - ln AS DECIMAL(38,0)) * (n_all - ln)) END
+      ) div n_all AS BIGINT)"""
+
+
+def _prefix_sums(
+    df: DataFrame, keys: list[str], order: str, cols: dict[str, tuple[str, str]]
+) -> DataFrame:
+    """Add, for each ``cols`` entry ``c: (run, total)``, the running sum
+    of ``c`` over ``keys`` ordered by ``order`` and its total over
+    ``keys``. Both come from one window partition: the totals need no
+    aggregate and no join of their own. ``order`` is unique within
+    ``keys`` (the callers sum histograms)."""
+    w = Window.partitionBy(*keys).orderBy(order)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    return df.select(
+        "*",
+        *[F.sum(c).over(run).alias(r) for c, (r, _) in cols.items()],
+        *[F.sum(c).over(whole).alias(t) for c, (_, t) in cols.items()],
+    )
+
+
+def _gini_sweep(df: DataFrame, keys: list[str], order: str, w) -> DataFrame:
+    """The exact sort-and-scan split finder: per ``keys``, the histogram
+    of row weight ``w`` (n) and positive weight ``w * y`` (pos) over
+    ``order``, its prefix sums, and ``gini_scaled`` of every threshold
+    that leaves weight on the right."""
+    hist = df.groupBy(*keys, order).agg(
+        F.sum(w).alias("n"), F.sum(w * F.col("y")).alias("pos")
+    )
+    return (
+        _prefix_sums(hist, keys, order, _SPLIT_SUMS)
+        .filter(F.col("ln") < F.col("n_all"))
+        .withColumn("gini_scaled", F.expr(_GINI_SPARK))
+    )
+
+
+def _best_split(scored: DataFrame, keys: list[str], *cols: str) -> DataFrame:
+    """Per ``keys``, the row of ``scored`` least in (gini_scaled, *cols):
+    ``keys``, ``gini_scaled`` and ``cols``."""
+    best = F.min(F.struct("gini_scaled", *cols)).alias("best")
+    return scored.groupBy(*keys).agg(best).select(*keys, "best.*")
 
 
 @register(
@@ -1936,56 +1991,21 @@ _GINI_SCALE = 10**8
     tags=("mllib", "training-pipeline", "part"),
 )
 def ml_decision_stump_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    p = table(spark, sf_dir, "part")
-    labeled = p.select(
+    labeled = table(spark, sf_dir, "part").select(
         "p_size", (F.col("p_retailprice") > 950).cast("long").alias("y")
     )
-    per_size = labeled.groupBy("p_size").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
+    scored = _gini_sweep(labeled, [], "p_size", F.lit(1))
+    best = _best_split(scored, [], "p_size").select(
+        F.col("gini_scaled").alias("bg"), F.col("p_size").alias("bt")
     )
-    w = Window.orderBy("p_size").rowsBetween(Window.unboundedPreceding, 0)
-    cum = per_size.select(
-        "p_size",
-        F.sum("n").over(w).alias("ln"),
-        F.sum("pos").over(w).alias("lpos"),
-    )
-    tot = per_size.agg(
-        F.sum("n").alias("n_all"), F.sum("pos").alias("pos_all")
-    )
-    scored = (
-        cum.crossJoin(F.broadcast(tot))
-        .filter(F.col("ln") < F.col("n_all"))
+    return (
+        scored.crossJoin(F.broadcast(best))
         .select(
             F.col("p_size").alias("threshold"),
             F.col("ln").cast("long").alias("n_left"),
             F.col("lpos").cast("long").alias("pos_left"),
-            F.expr(
-                f"""CAST(
-                  (ln * ((CAST(2 AS DECIMAL(38,0)) * lpos * (ln - lpos)
-                          * {_GINI_SCALE}) div (ln * ln))
-                   + (n_all - ln) *
-                     CASE WHEN n_all - ln = 0 THEN 0
-                          ELSE (CAST(2 AS DECIMAL(38,0)) * (pos_all - lpos)
-                                * ((n_all - ln) - (pos_all - lpos))
-                                * {_GINI_SCALE})
-                               div ((n_all - ln) * (n_all - ln)) END
-                  ) div n_all AS BIGINT)"""
-            ).alias("gini_scaled"),
-        )
-    )
-    best = scored.agg(
-        F.min(F.struct("gini_scaled", "threshold")).alias("b")
-    ).select(F.col("b.gini_scaled").alias("bg"), F.col("b.threshold").alias("bt"))
-    return (
-        scored.crossJoin(F.broadcast(best))
-        .select(
-            "threshold",
-            "n_left",
-            "pos_left",
             "gini_scaled",
-            ((F.col("gini_scaled") == F.col("bg")) & (F.col("threshold") == F.col("bt")))
+            ((F.col("gini_scaled") == F.col("bg")) & (F.col("p_size") == F.col("bt")))
             .cast("long")
             .alias("is_best"),
         )
@@ -4045,8 +4065,6 @@ _GB2_BIN = 25000.0  # o_totalprice histogram bin width
     tags=("mllib", "training-pipeline", "orders"),
 )
 def ml_gbdt_second_order_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     o = table(spark, sf_dir, "orders")
     labeled = o.select(
         F.floor(F.col("o_totalprice") / F.lit(_GB2_BIN)).cast("long").alias("bin"),
@@ -4067,17 +4085,8 @@ def ml_gbdt_second_order_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n"),
         )
     )
-    tot = gh.agg(F.sum("g").alias("gt"), F.sum("h").alias("ht"))
-    w = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    cum = gh.select(
-        "bin",
-        "n",
-        "g",
-        "h",
-        F.sum("g").over(w).alias("gl"),
-        F.sum("h").over(w).alias("hl"),
-    )
-    scored = cum.crossJoin(F.broadcast(tot)).select(
+    gains = {"g": ("gl", "gt"), "h": ("hl", "ht")}
+    scored = _prefix_sums(gh, [], "bin", gains).select(
         F.col("bin").alias("threshold_bin"),
         F.col("n").cast("long").alias("n_bin"),
         F.col("g").cast("long").alias("g_bin"),
@@ -4215,101 +4224,29 @@ _RF_B = 5  # bags
     tags=("mllib", "training-pipeline", "ensemble", "part"),
 )
 def ml_random_forest_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    p = table(spark, sf_dir, "part")
-    labeled = p.select(
+    labeled = table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_size",
         (F.col("p_retailprice") > 950).cast("long").alias("y"),
     )
-    bcol = F.explode(
-        F.array(*[F.lit(b) for b in range(1, _RF_B + 1)])
-    ).alias("b")
-    fanned = labeled.select("p_partkey", "p_size", "y", bcol)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("p_partkey").cast("string"),
-                        F.lit("-"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000
-    )
-    wgt = F.coalesce(
-        *[F.when(u < t, F.lit(k)) for k, t in enumerate(_POIS_CUM_MICRO)],
-        F.lit(5),
-    )
-    per_size = fanned.groupBy("b", "p_size").agg(
-        F.sum(wgt).alias("n"), F.sum(wgt * F.col("y")).alias("pos")
-    )
-    tot = per_size.groupBy("b").agg(
-        F.sum("n").alias("n_all"), F.sum("pos").alias("pos_all")
-    )
-    w = (
-        Window.partitionBy("b")
-        .orderBy("p_size")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = per_size.select(
-        "b",
-        "p_size",
-        F.sum("n").over(w).alias("ln"),
-        F.sum("pos").over(w).alias("lpos"),
-    )
-    scored = (
-        cum.join(F.broadcast(tot), "b")
-        .filter(F.col("ln") < F.col("n_all"))
-        .select(
-            "b",
-            F.col("p_size").alias("threshold"),
-            F.col("ln").cast("long").alias("w_left"),
-            F.expr(
-                f"""CAST(
-                  (CASE WHEN ln = 0 THEN 0
-                        ELSE ln * ((CAST(2 AS DECIMAL(38,0)) * lpos
-                                    * (ln - lpos) * {_GINI_SCALE})
-                                   div (ln * ln)) END
-                   + (n_all - ln) *
-                     CASE WHEN n_all - ln = 0 THEN 0
-                          ELSE (CAST(2 AS DECIMAL(38,0)) * (pos_all - lpos)
-                                * ((n_all - ln) - (pos_all - lpos))
-                                * {_GINI_SCALE})
-                               div ((n_all - ln) * (n_all - ln)) END
-                  ) div n_all AS BIGINT)"""
-            ).alias("gini_scaled"),
-        )
-    )
-    wr = Window.partitionBy("b").orderBy("gini_scaled", "threshold")
-    winners = (
-        scored.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") == 1)
-        .drop("rk")
-    )
+    fanned = labeled.select("p_partkey", "p_size", "y", _bags(_RF_B))
+    scored = _gini_sweep(fanned, ["b"], "p_size", _poisson_weight("p_partkey"))
+    winners = _best_split(scored, ["b"], "p_size", "ln")
     modal = (
-        winners.groupBy("threshold")
+        winners.groupBy("p_size")
         .agg(F.count(F.lit(1)).alias("votes"))
-        .orderBy(F.col("votes").desc(), "threshold")
+        .orderBy(F.col("votes").desc(), "p_size")
         .limit(1)
-        .select(F.col("threshold").alias("modal_threshold"))
+        .select(F.col("p_size").alias("modal_threshold"))
     )
     return (
         winners.crossJoin(F.broadcast(modal))
         .select(
             F.col("b").alias("bag"),
-            F.col("threshold").alias("best_threshold"),
-            "w_left",
+            F.col("p_size").alias("best_threshold"),
+            F.col("ln").cast("long").alias("w_left"),
             "gini_scaled",
-            (F.col("threshold") == F.col("modal_threshold"))
+            (F.col("p_size") == F.col("modal_threshold"))
             .cast("long")
             .alias("is_modal"),
         )
@@ -4489,105 +4426,30 @@ def ml_quantile_pinball_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("mllib", "training-pipeline", "ensemble", "part"),
 )
 def ml_oob_error_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    p = table(spark, sf_dir, "part")
-    labeled = p.select(
+    labeled = table(spark, sf_dir, "part").select(
         "p_partkey",
         "p_size",
         (F.col("p_retailprice") > 950).cast("long").alias("y"),
     )
-    bcol = F.explode(
-        F.array(*[F.lit(b) for b in range(1, _RF_B + 1)])
-    ).alias("b")
-    fanned = labeled.select("p_partkey", "p_size", "y", bcol).withColumn(
-        "u",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("p_partkey").cast("string"),
-                        F.lit("-"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 1000000,
+    fanned = labeled.select("p_partkey", "p_size", "y", _bags(_RF_B)).withColumn(
+        "w", _poisson_weight("p_partkey")
     )
-    wgt = F.coalesce(
-        *[
-            F.when(F.col("u") < t, F.lit(k))
-            for k, t in enumerate(_POIS_CUM_MICRO)
-        ],
-        F.lit(5),
-    )
-    per_size = fanned.groupBy("b", "p_size").agg(
-        F.sum(wgt).alias("n"), F.sum(wgt * F.col("y")).alias("pos")
-    )
-    tot = per_size.groupBy("b").agg(
-        F.sum("n").alias("n_all"), F.sum("pos").alias("pos_all")
-    )
-    w = (
-        Window.partitionBy("b")
-        .orderBy("p_size")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = per_size.select(
+    scored = _gini_sweep(fanned, ["b"], "p_size", F.col("w"))
+    winners = _best_split(
+        scored, ["b"], "p_size", "ln", "lpos", "n_all", "pos_all"
+    ).select(
         "b",
-        "p_size",
-        F.sum("n").over(w).alias("ln"),
-        F.sum("pos").over(w).alias("lpos"),
+        F.col("p_size").alias("threshold"),
+        F.expr("CASE WHEN 2 * lpos >= ln THEN 1 ELSE 0 END").alias(
+            "label_left"
+        ),
+        F.expr(
+            "CASE WHEN 2 * (pos_all - lpos) >= (n_all - ln) "
+            "THEN 1 ELSE 0 END"
+        ).alias("label_right"),
     )
-    scored = (
-        cum.join(F.broadcast(tot), "b")
-        .filter(F.col("ln") < F.col("n_all"))
-        .select(
-            "b",
-            F.col("p_size").alias("threshold"),
-            "ln",
-            "lpos",
-            "n_all",
-            "pos_all",
-            F.expr(
-                f"""CAST(
-                  (CASE WHEN ln = 0 THEN 0
-                        ELSE ln * ((CAST(2 AS DECIMAL(38,0)) * lpos
-                                    * (ln - lpos) * {_GINI_SCALE})
-                                   div (ln * ln)) END
-                   + (n_all - ln) *
-                     CASE WHEN n_all - ln = 0 THEN 0
-                          ELSE (CAST(2 AS DECIMAL(38,0)) * (pos_all - lpos)
-                                * ((n_all - ln) - (pos_all - lpos))
-                                * {_GINI_SCALE})
-                               div ((n_all - ln) * (n_all - ln)) END
-                  ) div n_all AS BIGINT)"""
-            ).alias("gini_scaled"),
-        )
-    )
-    wr = Window.partitionBy("b").orderBy("gini_scaled", "threshold")
-    winners = (
-        scored.withColumn("rk", F.row_number().over(wr))
-        .filter(F.col("rk") == 1)
-        .select(
-            "b",
-            "threshold",
-            F.expr("CASE WHEN 2 * lpos >= ln THEN 1 ELSE 0 END").alias(
-                "label_left"
-            ),
-            F.expr(
-                "CASE WHEN 2 * (pos_all - lpos) >= (n_all - ln) "
-                "THEN 1 ELSE 0 END"
-            ).alias("label_right"),
-        )
-    )
-    oob = fanned.filter(F.col("u") < _POIS_CUM_MICRO[0]).select(
-        "b", "p_size", "y"
-    )
+    # out of bag = weight 0, i.e. u < _POIS_CUM_MICRO[0]
+    oob = fanned.filter(F.col("w") == 0).select("b", "p_size", "y")
     pred = F.when(
         F.col("p_size") <= F.col("threshold"), F.col("label_left")
     ).otherwise(F.col("label_right"))
@@ -4897,24 +4759,48 @@ def ml_error_slice_finder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Depth-2 greedy tree: two levels of exact split finding
 # --------------------------------------------------------------------------
 
-# every product runs in {big}: Spark's window SUMs are LONG, so the
-# raw ln*ln / (n_all-ln)^2 denominators overflowed once AdaBoost
-# round-2 weights pushed n_all to ~1e10 (r7 sf0.5 sweep catch); DuckDB
-# was already safe because its SUM yields HUGEINT
-_T2_GINI = f"""
-      (CAST(ln AS {{big}}) * ((CAST(2 AS {{big}}) * lpos * (ln - lpos)
-              * {_GINI_SCALE}) {{div}} (CAST(ln AS {{big}}) * ln))
-       + CAST(n_all - ln AS {{big}}) *
+# the tree and AdaBoost oracles' Gini: _GINI_SPARK's products in
+# HUGEINT, without the ln = 0 guard (unweighted and AdaBoost weights are
+# >= 1)
+_T2_GINI_SQL = f"""
+      (CAST(ln AS HUGEINT) * ((CAST(2 AS HUGEINT) * lpos * (ln - lpos)
+              * {_GINI_SCALE}) // (CAST(ln AS HUGEINT) * ln))
+       + CAST(n_all - ln AS HUGEINT) *
          CASE WHEN n_all - ln = 0 THEN 0
-              ELSE (CAST(2 AS {{big}}) * (pos_all - lpos)
+              ELSE (CAST(2 AS HUGEINT) * (pos_all - lpos)
                     * ((n_all - ln) - (pos_all - lpos))
                     * {_GINI_SCALE})
-                   {{div}} (CAST(n_all - ln AS {{big}})
+                   // (CAST(n_all - ln AS HUGEINT)
                             * (n_all - ln)) END
-      ) {{div}} n_all"""
+      ) // n_all"""
 
-_T2_GINI_SQL = _T2_GINI.format(big="HUGEINT", div="//")
-_T2_GINI_SPARK = _T2_GINI.format(big="DECIMAL(38,0)", div="div")
+
+def _tree_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Parts with the tree learners' label ``y`` and two features."""
+    return table(spark, sf_dir, "part").select(
+        (F.col("p_retailprice") > 950).cast("long").alias("y"),
+        F.col("p_size").cast("long").alias("f_size"),
+        F.length("p_name").cast("long").alias("f_namelen"),
+    )
+
+
+def _unpivot(df: DataFrame, extra: list[str]) -> DataFrame:
+    """One (``extra``, y, feature, val) row per row and feature: an
+    explode in one scan, not a self-union that reads the table twice."""
+    pairs = F.array(
+        F.struct(F.lit("p_size").alias("feature"), F.col("f_size").alias("val")),
+        F.struct(F.lit("name_len").alias("feature"), F.col("f_namelen").alias("val")),
+    )
+    return df.select(*extra, "y", F.explode(pairs).alias("fv")).select(
+        *extra, "y", "fv.feature", "fv.val"
+    )
+
+
+def _feature_val(feature: str):
+    """The row's value of the feature named by column ``feature``."""
+    return F.when(F.col(feature) == "p_size", F.col("f_size")).otherwise(
+        F.col("f_namelen")
+    )
 
 
 @register(
@@ -5019,108 +4905,35 @@ _T2_GINI_SPARK = _T2_GINI.format(big="DECIMAL(38,0)", div="div")
     tags=("mllib", "training-pipeline", "part"),
 )
 def ml_tree_depth2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    p = table(spark, sf_dir, "part")
-    labeled = p.select(
-        (F.col("p_retailprice") > 950).cast("long").alias("y"),
-        F.col("p_size").cast("long").alias("f_size"),
-        F.length("p_name").cast("long").alias("f_namelen"),
-    )
-
-    def unpivot(df, extra):
-        # one scan: explode the (feature, val) pairs instead of a
-        # self-union that would read the table twice
-        pairs = F.array(
-            F.struct(
-                F.lit("p_size").alias("feature"), F.col("f_size").alias("val")
-            ),
-            F.struct(
-                F.lit("name_len").alias("feature"),
-                F.col("f_namelen").alias("val"),
-            ),
-        )
-        return df.select(*extra, "y", F.explode(pairs).alias("fv")).select(
-            *extra, "y", "fv.feature", "fv.val"
-        )
-
-    def sweep(feats, keys):
-        g = feats.groupBy(*keys, "feature", "val").agg(
-            F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
-        )
-        w = (
-            Window.partitionBy(*keys, "feature")
-            .orderBy("val")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        return g.select(
-            *keys,
-            "feature",
-            "val",
-            F.sum("n").over(w).alias("ln"),
-            F.sum("pos").over(w).alias("lpos"),
-        )
-
-    gini = F.expr(f"CAST({_T2_GINI_SPARK} AS BIGINT)").alias("gini_scaled")
-
-    tot = labeled.agg(
-        F.count(F.lit(1)).alias("n_all"), F.sum("y").alias("pos_all")
-    )
-    scored = (
-        sweep(unpivot(labeled, []), [])
-        .crossJoin(F.broadcast(tot))
-        .filter(F.col("ln") < F.col("n_all"))
-        .select("feature", "val", gini)
-    )
-    root = (
-        scored.agg(F.min(F.struct("gini_scaled", "feature", "val")).alias("b"))
-        .select(
-            F.col("b.feature").alias("r_feature"),
-            F.col("b.val").alias("r_thr"),
-            F.col("b.gini_scaled").alias("r_gini"),
-        )
+    labeled = _tree_labeled(spark, sf_dir)
+    keep = ("feature", "val", "n_all", "pos_all")
+    root = _best_split(
+        _gini_sweep(_unpivot(labeled, []), ["feature"], "val", F.lit(1)), [], *keep
     )
     assigned = labeled.crossJoin(F.broadcast(root)).withColumn(
         "node",
-        F.when(
-            F.when(F.col("r_feature") == "p_size", F.col("f_size")).otherwise(
-                F.col("f_namelen")
-            )
-            <= F.col("r_thr"),
-            F.lit("L"),
-        ).otherwise(F.lit("R")),
+        F.when(_feature_val("feature") <= F.col("val"), F.lit("L")).otherwise(
+            F.lit("R")
+        ),
     )
-    tot2 = assigned.groupBy("node").agg(
-        F.count(F.lit(1)).alias("n_all"), F.sum("y").alias("pos_all")
+    children = _best_split(
+        _gini_sweep(_unpivot(assigned, ["node"]), ["node", "feature"], "val", F.lit(1)),
+        ["node"],
+        *keep,
     )
-    scored2 = (
-        sweep(unpivot(assigned, ["node"]), ["node"])
-        .join(F.broadcast(tot2), "node")
-        .filter(F.col("ln") < F.col("n_all"))
-        .select("node", "feature", "val", gini)
-    )
-    child_best = (
-        scored2.groupBy("node")
-        .agg(F.min(F.struct("gini_scaled", "feature", "val")).alias("b"))
-        .join(F.broadcast(tot2), "node")
+    return (
+        root.withColumn("node", F.lit("root"))
+        .unionByName(children)
         .select(
             "node",
-            F.col("b.feature").alias("feature"),
-            F.col("b.val").cast("long").alias("threshold"),
+            "feature",
+            F.col("val").cast("long").alias("threshold"),
             F.col("n_all").cast("long").alias("n_node"),
             F.col("pos_all").cast("long").alias("pos_node"),
-            F.col("b.gini_scaled").alias("gini_scaled"),
+            "gini_scaled",
         )
+        .orderBy("node")
     )
-    root_row = root.crossJoin(F.broadcast(tot)).select(
-        F.lit("root").alias("node"),
-        F.col("r_feature").alias("feature"),
-        F.col("r_thr").cast("long").alias("threshold"),
-        F.col("n_all").cast("long").alias("n_node"),
-        F.col("pos_all").cast("long").alias("pos_node"),
-        F.col("r_gini").alias("gini_scaled"),
-    )
-    return root_row.unionAll(child_best).orderBy("node")
 
 
 # --------------------------------------------------------------------------
@@ -5235,103 +5048,28 @@ _AB_ERR_SQL = (
     tags=("mllib", "training-pipeline", "part"),
 )
 def ml_adaboost_round_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    p = table(spark, sf_dir, "part")
-    labeled = p.select(
-        (F.col("p_retailprice") > 950).cast("long").alias("y"),
-        F.col("p_size").cast("long").alias("f_size"),
-        F.length("p_name").cast("long").alias("f_namelen"),
-    )
-
-    def unpivot(df, extra):
-        pairs = F.array(
-            F.struct(
-                F.lit("p_size").alias("feature"), F.col("f_size").alias("val")
-            ),
-            F.struct(
-                F.lit("name_len").alias("feature"),
-                F.col("f_namelen").alias("val"),
-            ),
-        )
-        return df.select(*extra, "y", F.explode(pairs).alias("fv")).select(
-            *extra, "y", "fv.feature", "fv.val"
-        )
-
-    err_col = F.expr(_AB_ERR_SQL).alias("err")
-    gini = F.expr(f"CAST({_T2_GINI_SPARK} AS BIGINT)").alias("gini_scaled")
-    w_cum = (
-        Window.partitionBy("feature")
-        .orderBy("val")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-
-    def sweep(grouped, tot):
-        cum = grouped.select(
-            "feature",
-            "val",
-            F.sum("n").over(w_cum).alias("ln"),
-            F.sum("pos").over(w_cum).alias("lpos"),
-        )
-        return (
-            cum.crossJoin(F.broadcast(tot))
-            .filter(F.col("ln") < F.col("n_all"))
-            .select(
-                "feature", "val", "ln", "lpos", "n_all", "pos_all",
-                gini, err_col,
-            )
-        )
-
-    def best_of(scored):
-        keep = ["gini_scaled", "feature", "val", "ln", "lpos", "n_all",
-                "pos_all", "err"]
-        return scored.agg(F.min(F.struct(*keep)).alias("b")).select("b.*")
-
-    g1 = unpivot(labeled, []).groupBy("feature", "val").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("y").alias("pos")
-    )
-    tot1 = labeled.agg(
-        F.count(F.lit(1)).alias("n_all"), F.sum("y").alias("pos_all")
-    )
-    best1 = best_of(sweep(g1, tot1))
-
-    b = F.broadcast(best1.select(
-        F.col("feature").alias("b_feature"),
-        F.col("val").alias("b_val"),
-        F.col("ln").alias("b_ln"),
-        F.col("lpos").alias("b_lpos"),
-        F.col("n_all").alias("b_n"),
-        F.col("pos_all").alias("b_pos"),
-        F.col("err").alias("b_err"),
-    ))
-    side_val = F.when(
-        F.col("b_feature") == "p_size", F.col("f_size")
-    ).otherwise(F.col("f_namelen"))
+    labeled = _tree_labeled(spark, sf_dir)
+    keep = ("feature", "val", "ln", "lpos", "n_all", "pos_all")
+    err = F.expr(_AB_ERR_SQL)
+    scored1 = _gini_sweep(_unpivot(labeled, []), ["feature"], "val", F.lit(1))
+    best1 = _best_split(scored1, [], *keep).withColumn("err", err)
     pred = F.when(
-        side_val <= F.col("b_val"),
-        (2 * F.col("b_lpos") > F.col("b_ln")).cast("long"),
+        _feature_val("feature") <= F.col("val"),
+        (2 * F.col("lpos") > F.col("ln")).cast("long"),
     ).otherwise(
-        (2 * (F.col("b_pos") - F.col("b_lpos"))
-         > (F.col("b_n") - F.col("b_ln"))).cast("long")
+        (2 * (F.col("pos_all") - F.col("lpos"))
+         > (F.col("n_all") - F.col("ln"))).cast("long")
     )
-    weighted = labeled.crossJoin(b).select(
+    weighted = labeled.crossJoin(F.broadcast(best1)).select(
         "y",
         "f_size",
         "f_namelen",
-        F.when(
-            pred != F.col("y"), F.col("b_n") - F.col("b_err")
-        ).otherwise(
-            F.when(F.col("b_err") == 0, F.lit(1)).otherwise(F.col("b_err"))
-        ).alias("w"),
+        F.when(pred != F.col("y"), F.col("n_all") - F.col("err"))
+        .otherwise(F.when(F.col("err") == 0, F.lit(1)).otherwise(F.col("err")))
+        .alias("w"),
     )
-    g2 = unpivot(weighted, ["w"]).groupBy("feature", "val").agg(
-        F.sum("w").alias("n"), F.sum(F.col("w") * F.col("y")).alias("pos")
-    )
-    tot2 = weighted.agg(
-        F.sum("w").alias("n_all"),
-        F.sum(F.col("w") * F.col("y")).alias("pos_all"),
-    )
-    best2 = best_of(sweep(g2, tot2))
+    scored2 = _gini_sweep(_unpivot(weighted, ["w"]), ["feature"], "val", F.col("w"))
+    best2 = _best_split(scored2, [], *keep).withColumn("err", err)
 
     def row(best, r):
         return best.select(

@@ -105,8 +105,8 @@ def test_minhash_corpus_never_shuffles(spark, sf_dir):
 
 # Exchange nodes (shuffle, broadcast and reused) in the formatted plan of
 # each query built on a shared helper — dedup.py's MinHash and
-# shared-shingle helpers, graph.py's _trade_edges and _trade_und — at the
-# test sf_dir. Pins may only go down: when a change removes an exchange,
+# shared-shingle helpers, graph.py's _trade_edges and _trade_und,
+# mllib.py's split sweep and Poisson weight — at the test sf_dir. Pins may only go down: when a change removes an exchange,
 # lower the pin to the new count; never raise one.
 _EXCHANGE_PINS = {
     "dedup_minhash_lsh": 5,
@@ -142,6 +142,24 @@ _EXCHANGE_PINS = {
     "graph_spectral_bisection": 4,
     "graph_weisfeiler_lehman": 4,
     "graph_triad_motif_census": 4,
+    "ml_decision_stump_exact": 5,
+    "ml_random_forest_stumps": 7,
+    "ml_oob_error_estimate": 5,
+    "ml_tree_depth2_exact": 11,
+    "ml_adaboost_round_exact": 10,
+    "ml_poisson_bootstrap_ci": 4,
+    "ml_gbdt_second_order_gain": 9,
+}
+
+# Parquet scan nodes of the mllib.py queries, pinned the same way.
+_SCAN_PINS = {
+    "ml_decision_stump_exact": 2,
+    "ml_random_forest_stumps": 2,
+    "ml_oob_error_estimate": 2,
+    "ml_tree_depth2_exact": 3,
+    "ml_adaboost_round_exact": 3,
+    "ml_poisson_bootstrap_ci": 2,
+    "ml_gbdt_second_order_gain": 4,
 }
 
 
@@ -156,10 +174,17 @@ def _check_exchange_pin(spark, sf_dir, name):
         f"{name}: {n} exchanges, pinned {_EXCHANGE_PINS[name]} "
         "(lower the pin if the count went down; never raise it)"
     )
+    if name in _SCAN_PINS:
+        n = len(re.findall(r"^\(\d+\) Scan\b", plan, re.M))
+        assert n == _SCAN_PINS[name], (
+            f"{name}: {n} scans, pinned {_SCAN_PINS[name]} "
+            "(lower the pin if the count went down; never raise it)"
+        )
 
 
 @pytest.mark.parametrize(
-    "name", sorted(n for n in _EXCHANGE_PINS if not n.startswith("graph_"))
+    "name",
+    sorted(n for n in _EXCHANGE_PINS if not n.startswith(("graph_", "ml_"))),
 )
 def test_dedup_exchange_pins(spark, sf_dir, name):
     _check_exchange_pin(spark, sf_dir, name)
@@ -169,6 +194,11 @@ def test_dedup_exchange_pins(spark, sf_dir, name):
     "name", sorted(n for n in _EXCHANGE_PINS if n.startswith("graph_"))
 )
 def test_graph_exchange_pins(spark, sf_dir, name):
+    _check_exchange_pin(spark, sf_dir, name)
+
+
+@pytest.mark.parametrize("name", sorted(n for n in _EXCHANGE_PINS if n.startswith("ml_")))
+def test_mllib_split_exchange_pins(spark, sf_dir, name):
     _check_exchange_pin(spark, sf_dir, name)
 
 

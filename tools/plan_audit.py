@@ -73,12 +73,13 @@ SINGLE_PARTITION_OK: dict[str, str] = {
     "ml_ks_drift_binned": "CDF window over the O(price-domain/100) bin summary",
     "ml_wasserstein_drift_binned": "CDF prefix window over the O(price-bins) summary (~60 rows)",
     "ml_decision_stump_exact": (
-        "cumulative window over the per-threshold aggregate "
-        "(O(distinct feature values) rows; real split-finders bin to <=256)"
+        "prefix-sum + total window and best-split min over the "
+        "per-threshold aggregate (O(distinct feature values) rows; real "
+        "split-finders bin to <=256)"
     ),
     "ml_gbdt_second_order_gain": (
-        "cumulative g/h window + top-1 sort over the O(bins) histogram "
-        "summary (~20 price bins; hist-mode GBDTs bin to <=256)"
+        "prefix-sum + total g/h window + top-1 sort over the O(bins) "
+        "histogram summary (~20 price bins; hist-mode GBDTs bin to <=256)"
     ),
     "analytics_survival_kaplan_meier": "cum windows + ordered fold over the O(months) summary series",
     "text_heaps_law_fit": "cum windows + OLS fold over the 50-row checkpoint summary",
