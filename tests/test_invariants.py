@@ -333,9 +333,8 @@ def _gini_spark(spark, rows):
 
 
 def test_gini_exact_past_int64_products(spark):
-    """ln * ln and 2 * lpos * (ln - lpos) * 1e8 both leave int64 once a
-    side holds ~3.04e9 (weighted) rows; the Gini stays exact there
-    instead of raising ARITHMETIC_OVERFLOW."""
+    """ln * ln leaves int64 once a side holds ~3.04e9 (weighted) rows;
+    the Gini stays exact there instead of raising ARITHMETIC_OVERFLOW."""
     rows = [
         (4 * 10**9, 10**9, 2 * 10**10, 6 * 10**9),
         (10**12, 3 * 10**11, 3 * 10**12, 10**12),

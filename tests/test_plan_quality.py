@@ -106,8 +106,9 @@ def test_minhash_corpus_never_shuffles(spark, sf_dir):
 # Exchange nodes (shuffle, broadcast and reused) in the formatted plan of
 # each query built on a shared helper — dedup.py's MinHash and
 # shared-shingle helpers, graph.py's _trade_edges and _trade_und,
-# mllib.py's split sweep and Poisson weight — at the test sf_dir. Pins may only go down: when a change removes an exchange,
-# lower the pin to the new count; never raise one.
+# mllib.py's split sweep and Poisson weight — at the test sf_dir. Pins
+# may only go down: when a change removes an exchange, lower the pin to
+# the new count; never raise one.
 _EXCHANGE_PINS = {
     "dedup_minhash_lsh": 5,
     "dedup_incremental_minhash": 5,
