@@ -5,11 +5,44 @@ The reference deletes stale forecasts directly on the object store
 Here the same operation goes through Hadoop's ``FileSystem`` API via the
 JVM gateway, so the retention path is identical code for ``file://``,
 ``hdfs://`` and ``s3a://`` URIs — not a local-FS-only ``shutil`` call.
+
+The engine's own scratch space lives here too: every directory or table
+a builder writes for itself comes from ``scratch_dir``, under one
+``spark-graft-*`` root per process that is made on first use (in
+``TMPDIR``) and removed when that process exits. It must outlive the
+builder, because a returned DataFrame is lazy and reads these paths
+when it runs. The root is on the driver's local disk, which executors
+on a cluster do not share.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import SparkSession
+
+
+def scratch_dir(tag: str) -> str:
+    """A fresh, empty directory named after ``tag`` under this process's
+    scratch root."""
+    return tempfile.mkdtemp(prefix=f"{tag}-", dir=_scratch_root())
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="spark-graft-")
+    atexit.register(_remove_scratch_root, root, os.getpid())
+    return root
+
+
+def _remove_scratch_root(root: str, owner_pid: int) -> None:
+    # a forked child inherits the hook but does not own the root
+    if os.getpid() == owner_pid:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def _fs_and_path(spark: SparkSession, path: str):

@@ -12,22 +12,31 @@ ingest time, pick N ≈ cluster cores × small multiple, and keep N stable
 so every downstream join co-locates for free.
 
 Spark bucketing requires the table catalog (``saveAsTable``), not bare
-parquet paths — bucket metadata lives in the metastore.
+parquet paths — bucket metadata lives in the metastore. The tables here
+are EXTERNAL: their files sit in the process's scratch root
+(``ingest/fs.py::scratch_dir``), never in ``spark.sql.warehouse.dir``,
+which defaults to the caller's working directory.
 """
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession
+
+from dmi_ingestor_spark.ingest.fs import scratch_dir
 
 
 def write_bucketed(
     df: DataFrame,
     table_name: str,
+    path: str,
     bucket_col: str,
     n_buckets: int,
     sort_col: str | None = None,
 ) -> None:
-    """(Over)write ``df`` as a bucketed, optionally sorted, managed table.
+    """(Over)write ``df`` as a bucketed, optionally sorted, external
+    table whose files live at ``path``.
 
     The input is repartitioned by the bucket column first so each
     bucket holds exactly one file (no small-files problem, and a
@@ -41,6 +50,7 @@ def write_bucketed(
         df.repartition(n_buckets, df[bucket_col])
         .write.mode("overwrite")
         .format("parquet")
+        .option("path", path)
         .bucketBy(n_buckets, bucket_col)
     )
     if sort_col is not None:
@@ -53,63 +63,42 @@ def ensure_bucketed_pair(
     sf_dir: str,
     n_buckets: int = 8,
 ) -> tuple[str, str]:
-    """Bucketed orders/lineitem twins for ``sf_dir``, created once.
+    """Bucketed orders/lineitem twins for ``sf_dir``, created once per
+    session.
 
     Table names are keyed by a stable hash of (sf_dir, n_buckets) so
-    different scale factors coexist; re-runs within a process reuse the
+    different scale factors coexist; re-runs within a session reuse the
     existing tables (the data under a given sf_dir is immutable test
-    data). The process id is part of the key because the managed-table
-    warehouse directory is shared by cwd: two harness processes (e.g.
-    pytest + plan_audit) building the same table name concurrently
-    would otherwise overwrite each other's files mid-read.
+    data). Each table's files go to a fresh scratch directory, so two
+    processes never share a location.
     """
-    import hashlib
-    import os
-
-    suffix = hashlib.md5(
-        f"{sf_dir}|{n_buckets}|{os.getpid()}".encode()
-    ).hexdigest()[:8]
+    suffix = hashlib.md5(f"{sf_dir}|{n_buckets}".encode()).hexdigest()[:8]
     t_orders = f"b_orders_{suffix}"
     t_lineitem = f"b_lineitem_{suffix}"
     catalog = spark.catalog
     if not catalog.tableExists(t_orders) or not catalog.tableExists(t_lineitem):
-        # A previous session's warehouse directory can outlive the
-        # in-memory catalog; clear any orphaned location before writing
-        # (managed-table writes refuse to reuse an existing path).
-        from dmi_ingestor_spark.ingest.fs import fs_delete, fs_exists
-
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        for name in (t_orders, t_lineitem):
-            loc = os.path.join(warehouse, name)
-            if not catalog.tableExists(name) and fs_exists(spark, loc):
-                fs_delete(spark, loc)
         orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
         lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-        write_bucketed(orders, t_orders, "o_orderkey", n_buckets, "o_orderkey")
-        write_bucketed(
-            lineitem, t_lineitem, "l_orderkey", n_buckets, "l_orderkey"
-        )
+        for df, name, key in (
+            (orders, t_orders, "o_orderkey"),
+            (lineitem, t_lineitem, "l_orderkey"),
+        ):
+            write_bucketed(df, name, scratch_dir(name), key, n_buckets, key)
     return t_orders, t_lineitem
 
 
 def ensure_partitioned_orders(spark, sf_dir: str) -> str:
     """A partitioned-by-priority copy of orders for ``sf_dir``, written
-    once to a stable temp location (hive-style ``o_orderpriority=...``
-    directories). This is the layout dynamic partition pruning needs:
-    the partition column must be a DIRECTORY key, not a parquet column,
-    for a dimension-side filter to skip whole partitions at runtime."""
-    import hashlib
-    import os
-    import tempfile
-
-    suffix = hashlib.md5(f"{sf_dir}|dpp|{os.getpid()}".encode()).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"dmi-dpp-orders-{suffix}")
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            spark.read.parquet(f"{sf_dir}/orders.parquet")
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
-        )
+    to a fresh scratch directory on each call (hive-style
+    ``o_orderpriority=...`` directories). This is the layout dynamic
+    partition pruning needs: the partition column must be a DIRECTORY
+    key, not a parquet column, for a dimension-side filter to skip whole
+    partitions at runtime."""
+    path = scratch_dir("dpp-orders")
+    (
+        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        .write.mode("overwrite")
+        .partitionBy("o_orderpriority")
+        .parquet(path)
+    )
     return path

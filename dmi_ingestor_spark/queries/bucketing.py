@@ -1,7 +1,7 @@
 """Bucketed co-located join queries (SURVEY.md §2.3 / §7.4 scale path).
 
 The registered query materializes bucketed orders/lineitem twins (once
-per sf_dir) and joins them bucket-to-bucket; the oracle recomputes the
+per session and sf_dir) and joins them bucket-to-bucket; the oracle recomputes the
 same aggregate from the raw parquet. Correctness says nothing about
 bucketing — that is the point: identical results, but the bucketed plan
 has zero Exchange on the join (asserted in tests/test_bucketing.py),
@@ -31,7 +31,7 @@ from dmi_ingestor_spark.registry import register
     GROUP BY o.o_orderpriority
     """,
     doc=(
-        "J-scale: orders⋈lineitem through bucketed managed tables "
+        "J-scale: orders⋈lineitem through bucketed external tables "
         "(bucketBy 8 on the join key, sorted within buckets). Same rows "
         "as the raw-parquet oracle, but the join itself needs no "
         "Exchange on either side — the 100 TB fact⋈fact strategy."
@@ -167,8 +167,9 @@ def layout_zorder_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc=(
         "Dynamic partition pruning: the fact side is a HIVE-PARTITIONED "
-        "copy of orders (directory key = o_orderpriority, written once "
-        "per sf_dir by operators/bucketing.ensure_partitioned_orders); "
+        "copy of orders (directory key = o_orderpriority, written to a "
+        "fresh scratch directory on each call by "
+        "operators/bucketing.ensure_partitioned_orders); "
         "joining it to a tiny dim filtered to tier='hot' lets Catalyst "
         "inject a runtime subquery into the fact scan's "
         "PartitionFilters (dynamicpruningexpression — asserted in "

@@ -13,12 +13,12 @@ in detail by ``tests/test_ingest.py``.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.functions.exact import sql_avg_exact, avg_exact
+from dmi_ingestor_spark.ingest.fs import scratch_dir
 from dmi_ingestor_spark.operators.rowmap import map_rows
 from dmi_ingestor_spark.registry import register
 from dmi_ingestor_spark.sources.cube_format import cube_stats
@@ -183,7 +183,7 @@ def ingest_e2e_local(spark: SparkSession, sf_dir: str) -> DataFrame:
         parameters=("temperature-2m", "wind-speed"),
         bbox="250,-50,400,100",
     )
-    out_dir = tempfile.mkdtemp(prefix="ingest-e2e-")
+    out_dir = scratch_dir("ingest-e2e")
     run_ingest(spark, config, out_dir, transport)
     return spark.read.parquet(os.path.join(out_dir, "grid"))
 
@@ -274,7 +274,7 @@ def sink_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the synthetic orders.o_orderdate is TIMESTAMP_NTZ; the read-back
     # schema must match or the ORC reader refuses the NTZ->LTZ coercion
     schema = "o_orderkey long, o_totalprice double, o_orderdate timestamp_ntz"
-    out = tempfile.mkdtemp(prefix="fmt-roundtrip-")
+    out = scratch_dir("fmt-roundtrip")
     aggs = []
     for fmt in ("csv", "json", "orc", "parquet"):
         path = os.path.join(out, fmt)
@@ -336,7 +336,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dmi_ingestor_spark.functions.exact import avg_exact
     from dmi_ingestor_spark.ingest.compact import compact_table
 
-    out = tempfile.mkdtemp(prefix="compact-") + "/events_parted"
+    out = scratch_dir("compact") + "/events_parted"
     (
         table(spark, sf_dir, "events")
         .repartition(16)
@@ -451,7 +451,7 @@ _CORRUPT_MOD = 50  # every 50th record is mangled
 def ingest_corrupt_tolerant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dmi_ingestor_spark.catalog import table
 
-    out = tempfile.mkdtemp(prefix="corrupt-json-") + "/events_jsonl"
+    out = scratch_dir("corrupt-json") + "/events_jsonl"
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     line = F.to_json(F.struct("event_id", "event_type", "value"))
     mangled = F.when(
@@ -650,7 +650,7 @@ def sink_datasource_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dmi_ingestor_spark.sources.edr_datasource import register as reg_ds
 
     reg_ds(spark)
-    out = tempfile.mkdtemp(prefix="dmi-edr-sink-")
+    out = scratch_dir("edr-sink")
     src = (
         table(spark, sf_dir, "orders")
         .select("o_orderkey")
@@ -769,7 +769,7 @@ def ingest_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ingest_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dmi_ingestor_spark.catalog import table
 
-    root = tempfile.mkdtemp(prefix="dmi-evolve-")
+    root = scratch_dir("evolve")
     o = table(spark, sf_dir, "orders")
     old_batch = o.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice"
@@ -1074,9 +1074,7 @@ _SPLIT_RECS = 2000  # maxRecordsPerFile target
     tags=("ingest", "sink", "file-sizing", "orders"),
 )
 def ingest_sized_file_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
-    root = _tf.mkdtemp(prefix="dmi-split-")
+    root = scratch_dir("split")
     o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
         "o_orderkey"
     )
@@ -1404,9 +1402,8 @@ def ingest_avro_container_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "csv"),
 )
 def ingest_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.catalog import table
+    from dmi_ingestor_spark.queries.pipeline_ops import _rows_and_checksum
 
     n = table(spark, sf_dir, "nation").select(
         "n_nationkey",
@@ -1419,7 +1416,7 @@ def ingest_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("note"),
         "n_regionkey",
     )
-    out = _tf.mkdtemp(prefix="dmi-csv-ml-")
+    out = scratch_dir("csv-ml")
     (
         n.repartition(2)
         .write.mode("overwrite")
@@ -1439,8 +1436,7 @@ def ingest_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return back.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("n_nationkey").cast("long").alias("key_checksum"),
+        *_rows_and_checksum("n_nationkey"),
         F.sum(F.length("note")).cast("long").alias("note_bytes"),
         F.sum(F.col("note").contains("\n").cast("long"))
         .cast("long")
@@ -1504,7 +1500,7 @@ def ingest_rowgroup_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from dmi_ingestor_spark.catalog import table
 
-    out = tempfile.mkdtemp(prefix="dmi-rowgroup-") + "/orders_sorted.parquet"
+    out = scratch_dir("rowgroup") + "/orders_sorted.parquet"
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     # deterministic fixture: one key-sorted file, fixed-size row groups.
     # Capped (VERDICT r5 #3): the single-file footer-audit fixture is

@@ -13,7 +13,18 @@ from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
 from dmi_ingestor_spark.functions.exact import sql_sum_exact
+from dmi_ingestor_spark.ingest.fs import scratch_dir
 from dmi_ingestor_spark.registry import register
+
+
+def _rows_and_checksum(key: str):
+    """The audit pair of every write/readback check: row count and key
+    sum, both LONG, for splicing into the caller's ``.agg(...)``."""
+    return (
+        F.count(F.lit(1)).cast("long").alias("n_rows"),
+        F.sum(key).cast("long").alias("key_checksum"),
+    )
+
 
 # ---------------------------------------------------------------------------
 # Stratified deterministic sampling
@@ -730,11 +741,9 @@ def shuffle_deterministic_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "partitioning", "events"),
 )
 def layout_partition_prune_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from dmi_ingestor_spark.functions.exact import sum_exact
 
-    out = tempfile.mkdtemp(prefix="prune-") + "/events_by_type"
+    out = scratch_dir("prune") + "/events_by_type"
     src = table(spark, sf_dir, "events").select("event_id", "value", "event_type")
     src.write.mode("overwrite").partitionBy("event_type").parquet(out)
     # explicit schema: an all-empty write leaves no footers to infer from
@@ -1136,11 +1145,9 @@ WAP_MIN_ROWS = 100
     tags=("pipeline", "sink", "orders"),
 )
 def pipeline_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.fs import fs_delete, fs_exists, fs_rename
 
-    root = _tf.mkdtemp(prefix="dmi-wap-")
+    root = scratch_dir("wap")
     staged, published = f"{root}/_staging/export", f"{root}/export"
     src = table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
     src.write.mode("overwrite").parquet(staged)
@@ -1148,8 +1155,7 @@ def pipeline_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit = (
         spark.read.parquet(staged)
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("key_checksum"),
+            *_rows_and_checksum("o_orderkey"),
         )
         .collect()[0]  # 1-row audit gate: driver decides publish/abort
     )
@@ -1160,8 +1166,7 @@ def pipeline_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_path = published if ok else staged
     assert fs_exists(spark, out_path)
     return spark.read.parquet(out_path).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("key_checksum"),
+        *_rows_and_checksum("o_orderkey"),
         (F.count(F.lit(1)) >= WAP_MIN_ROWS).cast("int").alias("audit_passed"),
         F.lit(1 if ok else 0).cast("int").alias("published"),
     )
@@ -1439,11 +1444,9 @@ def pipeline_incremental_watermark(spark: SparkSession, sf_dir: str) -> DataFram
     tags=("pipeline", "lakehouse", "time-travel", "orders"),
 )
 def lake_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import TxLog
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-lake-"))
+    tx = TxLog(spark, scratch_dir("lake"))
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     tx.append(o.where(F.col("o_orderstatus") == "F"), "f-batch")
     tx.append(o.where(F.col("o_orderstatus") == "O"), "o-batch")
@@ -1453,8 +1456,7 @@ def lake_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         parts.append(
             tx.read(version=v).agg(
                 F.lit(v).alias("version"),
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("o_orderkey").cast("long").alias("key_checksum"),
+                *_rows_and_checksum("o_orderkey"),
             ).select("version", "n_rows", "key_checksum")
         )
     out = parts[0]
@@ -1486,15 +1488,13 @@ def lake_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "lakehouse", "data-skipping", "orders"),
 )
 def lake_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import (
         TxLog,
         append_with_stats,
         read_pruned,
     )
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-skip-"))
+    tx = TxLog(spark, scratch_dir("skip"))
     o = table(spark, sf_dir, "orders").select("o_orderkey")
     append_with_stats(tx, o.where(F.col("o_orderkey") < 500), "low", "o_orderkey")
     append_with_stats(
@@ -1503,8 +1503,7 @@ def lake_stats_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = read_pruned(tx, 0, 499)
     assert all("/data/low/" in f for f in pruned.inputFiles())
     return pruned.where(F.col("o_orderkey") < 500).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("key_checksum"),
+        *_rows_and_checksum("o_orderkey"),
     )
 
 
@@ -1618,8 +1617,7 @@ def pipeline_run_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             table(spark, sf_dir, t)
             .agg(
                 F.lit(t).alias("input_table"),
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum(key).cast("long").alias("key_checksum"),
+                *_rows_and_checksum(key),
                 F.count_distinct(key).cast("long").alias("n_keys"),
             )
             .select("input_table", "n_rows", "key_checksum", "n_keys")
@@ -1852,11 +1850,9 @@ def _cdf_versions(
     """Shared CDF fixture: commit v1 = F+O orders, then MERGE (every
     10th F row's status -> X, P batch appended) to make v2; return the
     two version snapshots read back from the transaction log."""
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import TxLog, merge_upsert
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-cdf-"))
+    tx = TxLog(spark, scratch_dir("cdf"))
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     tx.append(o.where(F.col("o_orderstatus").isin("F", "O")), "base")
     v1 = tx.latest_version()
@@ -1927,8 +1923,7 @@ def lake_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _summ(df: DataFrame, tag: str) -> DataFrame:
         return df.groupBy("o_orderstatus").agg(
             F.lit(tag).alias("change_type"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("key_checksum"),
+            *_rows_and_checksum("o_orderkey"),
         ).select("change_type", "o_orderstatus", "n_rows", "key_checksum")
 
     return _summ(ins, "+").unionAll(_summ(dele, "-"))
@@ -2041,8 +2036,9 @@ def lake_incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     """,
     doc=(
         "Materialized-view rewrite: a (returnflag, linestatus, "
-        "ship-month) pre-aggregate is materialized ONCE per sf_dir "
-        "(parquet, reused across runs), and the user's coarser query — "
+        "ship-month) pre-aggregate is materialized to parquet on each "
+        "call (a fresh scratch directory, so a changed fact is never "
+        "answered from a stale view), and the user's coarser query — "
         "per-returnflag totals before a cutoff — is answered by "
         "ROLLING UP THE MV, never rescanning the fact: counts sum, "
         "sums sum, and the month grain lets the cutoff predicate prune "
@@ -2056,31 +2052,23 @@ def lake_incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     tags=("pipeline", "lakehouse", "mv", "lineitem", "scale"),
 )
 def lake_mv_rollup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
-    suffix = hashlib.md5(f"{sf_dir}|mv1".encode()).hexdigest()[:8]
-    mv_path = os.path.join(tempfile.gettempdir(), f"dmi-mv-pricing-{suffix}")
-    if not os.path.exists(os.path.join(mv_path, "_SUCCESS")):
-        li = table(spark, sf_dir, "lineitem")
-        (
-            li.groupBy(
-                "l_returnflag",
-                "l_linestatus",
-                F.date_trunc("month", "l_shipdate").alias("ship_month"),
-            )
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_lines"),
-                F.sum(
-                    F.round(F.col("l_extendedprice") * 100).cast("long")
-                )
-                .cast("long")
-                .alias("price_c"),
-            )
-            .write.mode("overwrite")
-            .parquet(mv_path)
+    mv_path = scratch_dir("mv-pricing")
+    (
+        table(spark, sf_dir, "lineitem")
+        .groupBy(
+            "l_returnflag",
+            "l_linestatus",
+            F.date_trunc("month", "l_shipdate").alias("ship_month"),
         )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_lines"),
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            .cast("long")
+            .alias("price_c"),
+        )
+        .write.mode("overwrite")
+        .parquet(mv_path)
+    )
     mv = spark.read.parquet(mv_path)
     return (
         mv.filter(F.col("ship_month") < F.lit("1997-01-01").cast("timestamp"))
@@ -2280,8 +2268,6 @@ def dq_cross_table_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("pipeline", "lakehouse", "deletion-vectors", "orders"),
 )
 def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from pyspark.sql import Window
 
     from dmi_ingestor_spark.ingest.txlog import (
@@ -2290,7 +2276,7 @@ def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_with_dv,
     )
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-dv-"))
+    tx = TxLog(spark, scratch_dir("dv"))
     o = table(spark, sf_dir, "orders").select("o_orderkey")
     # one deterministic-ordered file => row position == key rank
     base = o.repartition(1).sortWithinPartitions("o_orderkey")
@@ -2306,13 +2292,11 @@ def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     add_deletion_vector(tx, "data/base", pos, "base-dv0")
     pre = tx.read(version=v0).agg(
         F.lit(0).alias("phase"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("key_checksum"),
+        *_rows_and_checksum("o_orderkey"),
     ).select("phase", "n_rows", "key_checksum")
     post = read_with_dv(tx).agg(
         F.lit(1).alias("phase"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum("o_orderkey").cast("long").alias("key_checksum"),
+        *_rows_and_checksum("o_orderkey"),
     ).select("phase", "n_rows", "key_checksum")
     return pre.unionAll(post).orderBy("phase")
 
@@ -2456,9 +2440,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "backfill", "events"),
 )
 def pipeline_backfill_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
-    root = _tf.mkdtemp(prefix="dmi-backfill-")
+    root = scratch_dir("backfill")
     ev = table(spark, sf_dir, "events").select(
         F.col("ts").cast("date").alias("event_date"),
         "event_type",
@@ -2883,12 +2865,10 @@ def pipeline_quality_filter_cascade(spark: SparkSession, sf_dir: str) -> DataFra
     tags=("pipeline", "lakehouse", "optimize", "orders"),
 )
 def lake_optimize_recluster(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import TxLog, append_with_stats
     from dmi_ingestor_spark.operators.ranks import sharded_row_number
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-opt-"))
+    tx = TxLog(spark, scratch_dir("opt"))
     o = table(spark, sf_dir, "orders").select("o_orderkey")
     # land scattered: 4 units, each spanning the full key domain
     for i in range(4):
@@ -3160,12 +3140,10 @@ def pipeline_featurize_infer_eval_e2e(
     tags=("pipeline", "lakehouse", "vacuum", "orders"),
 )
 def lake_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.fs import _fs_and_path
     from dmi_ingestor_spark.ingest.txlog import TxLog
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-vac-"))
+    tx = TxLog(spark, scratch_dir("vac"))
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     for st in ("F", "O", "P"):
         tx.append(
@@ -3297,8 +3275,6 @@ def lake_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "lakehouse", "merge", "orders"),
 )
 def lake_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import TxLog
 
     o = table(spark, sf_dir, "orders").select(
@@ -3311,7 +3287,7 @@ def lake_merge_full_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     source = o.filter(F.col("k") % 4 >= 1).select(
         "k", F.col("cents").alias("s_cents"), "pri"
     )
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-merge-"))
+    tx = TxLog(spark, scratch_dir("merge"))
     tx.append(target, "target-v0")
 
     t = tx.read().alias("t")
@@ -3704,8 +3680,6 @@ def transform_delta_varint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "lakehouse", "partitioning", "events"),
 )
 def lake_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import (
         TxLog,
         append_partitioned_with_stats,
@@ -3713,7 +3687,7 @@ def lake_partition_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame
         read_pruned,
     )
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-evolve-"))
+    tx = TxLog(spark, scratch_dir("evolve"))
     # every unit write below filters this projection — cache it so the
     # parquet scan + cents arithmetic run once, not per unit
     e = table(spark, sf_dir, "events").select(
@@ -4032,11 +4006,9 @@ def privacy_contribution_bounding(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("pipeline", "lakehouse", "clone", "orders"),
 )
 def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import TxLog, clone_shallow
 
-    base = _tf.mkdtemp(prefix="dmi-clone-")
+    base = scratch_dir("clone")
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     src = TxLog(spark, f"{base}/src")
     src.append(o.where(F.col("o_orderstatus") == "O"), "o")
@@ -4054,8 +4026,7 @@ def lake_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df.agg(
             F.lit(stage).alias("stage"),
             F.lit(side).alias("side"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("key_checksum"),
+            *_rows_and_checksum("o_orderkey"),
         ).select("stage", "side", "n_rows", "key_checksum")
 
     parts = [
@@ -4154,8 +4125,7 @@ def lake_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             a.join(F.broadcast(b), a.o_custkey == b.c_custkey)
             .groupBy(F.col("c_nationkey").alias("nationkey"))
             .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.sum("o_orderkey").cast("long").alias("key_checksum"),
+                *_rows_and_checksum("o_orderkey"),
             )
         )
 
@@ -4238,12 +4208,10 @@ def lake_ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "lakehouse", "column-mapping", "orders"),
 )
 def lake_column_mapping_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.functions.exact import sum_exact
     from dmi_ingestor_spark.ingest.txlog import TxLog
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-colmap-"))
+    tx = TxLog(spark, scratch_dir("colmap"))
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -4426,11 +4394,9 @@ def sample_coreset_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "lakehouse", "constraints", "orders"),
 )
 def lake_check_constraint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from dmi_ingestor_spark.ingest.txlog import ConstraintViolation, TxLog
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-check-"))
+    tx = TxLog(spark, scratch_dir("check"))
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
@@ -4456,8 +4422,7 @@ def lake_check_constraint_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         tx.read()
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("key_checksum"),
+            *_rows_and_checksum("o_orderkey"),
         )
         .crossJoin(
             F.broadcast(
@@ -4725,8 +4690,6 @@ def privacy_tokenize_referential(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "lakehouse", "deletion-vectors", "compaction", "orders"),
 )
 def lake_mor_flush_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile as _tf
-
     from pyspark.sql import Window
 
     from dmi_ingestor_spark.ingest.txlog import (
@@ -4737,7 +4700,7 @@ def lake_mor_flush_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         read_with_dv,
     )
 
-    tx = TxLog(spark, _tf.mkdtemp(prefix="dmi-morflush-"))
+    tx = TxLog(spark, scratch_dir("morflush"))
     o = table(spark, sf_dir, "orders").select("o_orderkey")
     base = o.repartition(1).sortWithinPartitions("o_orderkey")
     tx.append(base, "base")
@@ -4756,8 +4719,7 @@ def lake_mor_flush_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stats(df, phase, n_dvs):
         return df.agg(
             F.lit(phase).cast("int").alias("phase"),
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("o_orderkey").cast("long").alias("key_checksum"),
+            *_rows_and_checksum("o_orderkey"),
             F.lit(n_dvs).cast("long").alias("n_dvs"),
         ).select("phase", "n_rows", "key_checksum", "n_dvs")
 

@@ -20,12 +20,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dmi_ingestor_spark.ingest.fs import scratch_dir
 from dmi_ingestor_spark.operators.raster import encode_geotiff, rasterize_timesteps
 from dmi_ingestor_spark.operators.rowmap import map_rows
 from dmi_ingestor_spark.queries.ingestion import _spark_grid, _SQL_GRID, NT, NY, NX
@@ -118,7 +118,7 @@ def raster_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format(F.timestamp_seconds("time_s"), "yyyyMMdd'T'HHmmss"),
         )
     )
-    out_dir = tempfile.mkdtemp(prefix="raster-export-")
+    out_dir = scratch_dir("raster-export")
     manifest = rasterize_timesteps(grid, out_dir)
     return manifest.select(
         "parameter", "time_str", "width", "height", "n_bytes", "checksum", "px_sum"
@@ -205,7 +205,7 @@ def raster_overview_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("value"),
     )
-    out_dir = tempfile.mkdtemp(prefix="raster-ov-")
+    out_dir = scratch_dir("raster-ov")
     manifest = rasterize_timesteps(grid, out_dir)
 
     def _stats(r):

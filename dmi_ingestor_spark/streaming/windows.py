@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.functions.exact import sum_exact
+from dmi_ingestor_spark.ingest.fs import scratch_dir
 
 
 
@@ -331,7 +332,7 @@ def stream_stream_purchase_outer(
 
     from dmi_ingestor_spark.catalog import table
 
-    staged = tempfile.mkdtemp(prefix="ss-outer-")
+    staged = scratch_dir("ss-outer")
     try:
         ev = table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value"
@@ -439,12 +440,10 @@ def foreachbatch_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     production totals table makes. Per-event keys would need
     dropDuplicatesWithinWatermark/TTL instead.
     """
-    import tempfile as _tf
-
     from dmi_ingestor_spark.functions.exact import DEC, dec_to_double
     from dmi_ingestor_spark.ingest.fs import _fs_and_path, fs_delete, fs_exists
 
-    workdir = _tf.mkdtemp(prefix="febupsert-")
+    workdir = scratch_dir("febupsert")
     src_dir = f"{workdir}/src"
     target = f"{workdir}/totals"
     staging = f"{workdir}/totals.staging"

@@ -268,17 +268,15 @@ def test_zorder_is_codegen_no_udf(spark, sf_dir):
     # plan; absence of Python eval nodes is the JVM-side guarantee)
 
 
-def test_dynamic_partition_pruning_fires(spark, sf_dir):
+def test_dynamic_partition_pruning_fires(spark, sf_dir, tmp_path):
     """A partitioned fact joined to a filtered dim must plan a
     dynamicpruning subquery on the partition column, so at 100 TB only
     the dim-selected partition directories are scanned."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from dmi_ingestor_spark.catalog import table
 
-    out = tempfile.mkdtemp(prefix="dpp-") + "/events_parted"
+    out = str(tmp_path / "events_parted")
     table(spark, sf_dir, "events").select(
         "event_id", "value", "event_type"
     ).write.partitionBy("event_type").parquet(out)

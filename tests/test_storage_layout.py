@@ -95,17 +95,15 @@ def test_dynamic_partition_overwrite_keeps_others(spark, sf_dir, tmp_path):
     assert after.count() == total_before - n_click + 1
 
 
-def test_compaction_collapses_files_preserving_content(spark, sf_dir):
+def test_compaction_collapses_files_preserving_content(spark, sf_dir, tmp_path):
     """ingest/compact.py: fragmented partitions collapse to 1 file each;
     row count and a value checksum survive the rewrite byte-for-byte."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.ingest.compact import compact_table, data_file_counts
 
-    out = tempfile.mkdtemp(prefix="compact-test-") + "/events_parted"
+    out = str(tmp_path / "events_parted")
     e = table(spark, sf_dir, "events").select("event_id", "value", "event_type")
     e.repartition(8).write.partitionBy("event_type").parquet(out)
 
