@@ -5,16 +5,19 @@ cube, an archive, a codec stream or a written file) is "for each input
 row, emit zero or more output tuples". :func:`map_rows` is that shape
 once: the per-batch iteration and the output frame live here, and the
 output column names come from the schema, so a call site states its
-columns once.
+columns once. :func:`fold_series` is the per-key recurrence on top of
+it: each key's rows packed into one sorted series, then a plain Python
+loop over that series.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -39,3 +42,39 @@ def map_rows(
             yield pd.DataFrame(rows, columns=names)
 
     return df.mapInPandas(_run, struct)
+
+
+def fold_series(
+    df: DataFrame,
+    keys: Sequence[str],
+    order: str | Sequence[str],
+    cols: Sequence[str],
+    schema: str | StructType,
+    fn: Callable[[tuple, list[tuple]], Iterable[tuple]],
+) -> DataFrame:
+    """Run ``fn(key, rows)`` once per key of ``df`` over its sorted series.
+
+    Each key's rows are packed into one ``array_sort(collect_list(
+    struct(*order, *cols)))`` (one hash aggregate on ``keys``; no keys
+    is one global series, present even when ``df`` is empty), and
+    :func:`map_rows` calls ``fn`` on it. ``key`` is the tuple of key
+    values; ``rows`` is the list of ``(*order, *cols)`` tuples sorted by
+    ``order``, every value a plain Python ``int``/``float``/``str``
+    (numpy ``int64`` would wrap silently; a Python ``int`` is exact, and
+    an output value out of its column's range raises). ``fn`` returns
+    the output tuples in ``schema`` order: none, one or many per key.
+    The loop is O(series length) per key; the per-key memory bound is
+    the packed series, as for any collect_list.
+    """
+    order = [order] if isinstance(order, str) else list(order)
+    fields = [*order, *cols]
+    series = F.array_sort(F.collect_list(F.struct(*fields)))
+    packed = df.groupBy(*keys).agg(series.alias("_series")).select(
+        *keys, *[F.col("_series")[f].alias(f"_f{i}") for i, f in enumerate(fields)]
+    )
+    nk = len(keys)
+
+    def run(row: tuple) -> Iterable[tuple]:
+        return fn(tuple(row[:nk]), list(zip(*(a.tolist() for a in row[nk:]))))
+
+    return map_rows(packed, schema, run)

@@ -15,8 +15,9 @@ the ten ``CORRECTNESS_r*.json`` files name 489 distinct queries, so the
 oracle-bearing never-checked backlog is 38. The round-11 rotation below
 takes all 38 in registry order, then the seven tree-learner and
 bootstrap builders rewritten onto the shared split sweep in
-``queries/mllib.py``, which need a fresh CORRECTNESS row. Compute the next
-rotation directly::
+``queries/mllib.py``, then five recurrence builders rewritten onto
+``operators/rowmap.fold_series``; the rewritten ones need a fresh
+CORRECTNESS row. Compute the next rotation directly::
 
     set(REGISTRY) - set().union(*(json.load(open(f)) for f in
                                   glob.glob("CORRECTNESS_r*.json")))
@@ -54,7 +55,10 @@ from dmi_ingestor_spark.registry import REGISTRY
 # Round-11 rotation: the whole never-driver-checked oracle-bearing
 # backlog (38 = 523 oracle-bearing - the 489 names across
 # CORRECTNESS_r01..r10), in registry insertion order, then the seven
-# mllib split-sweep builders; at most 50 names, the entries checked.
+# mllib split-sweep builders, then five of the recurrence builders
+# ported onto fold_series (analytics_survival_kaplan_meier, also
+# ported, is already in the backlog); at most 50 names, the entries
+# checked.
 # NO rows-only-by-design names. Recompute each round with the recipe
 # in the module docstring.
 _DRIVER_PRIORITY = [
@@ -104,6 +108,12 @@ _DRIVER_PRIORITY = [
     "ml_adaboost_round_exact",
     "ml_poisson_bootstrap_ci",
     "ml_gbdt_second_order_gain",
+    # rewritten onto the one series fold (operators/rowmap.fold_series)
+    "ts_holt_winters",
+    "ts_holt_linear_smoothing",
+    "ts_holt_winters_seasonal",
+    "ml_viterbi_decode",
+    "ts_dtw_distance",
 ]
 
 

@@ -21,6 +21,7 @@ from dmi_ingestor_spark.functions.exact import (
     sql_sum_exact,
     sum_exact,
 )
+from dmi_ingestor_spark.operators.rowmap import fold_series
 from dmi_ingestor_spark.registry import register
 
 
@@ -2522,6 +2523,14 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _tdiv(x: int, d: int) -> int:
+    """Integer division truncating toward zero, as Spark's
+    ``((x - x % d) / d).cast("long")`` and DuckDB's BIGINT ``//``
+    (Python's ``//`` floors instead)."""
+    q = abs(x) // abs(d)
+    return q if (x < 0) == (d < 0) else -q
+
+
 @register(
     "ts_holt_linear_smoothing",
     oracle="""
@@ -2552,15 +2561,14 @@ def ts_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Holt's linear-trend double-exponential smoothing over the "
         "monthly revenue series (alpha = beta = 1/4 in exact integer "
         "arithmetic: both engines' integer division truncates toward "
-        "zero, pinned by ml_logreg_gradient_step). The ITERATION is "
-        "expressed as ONE in-plan fold: the O(months) series collapses "
-        "to a sorted array (partial+final agg — bounded), F.aggregate "
-        "threads (level, trend) through the recurrence and emits the "
-        "per-month state, explode restores rows. The oracle is a "
-        "recursive CTE computing the identical recurrence — a "
-        "hash-checked iterative forecast, no driver loop, no window "
-        "over unbounded data. forecast_c is the one-step-ahead "
-        "prediction l+b from the previous month."
+        "zero, pinned by ml_logreg_gradient_step). The monthly sums "
+        "are the only corpus-sized work; the recurrence is one "
+        "fold_series loop over the sorted month series (one Python "
+        "step per month, O(months), exact Python ints), emitting the "
+        "per-month state. The oracle is a recursive CTE computing the "
+        "identical recurrence — a hash-checked iterative forecast. "
+        "Fewer than two months emit no rows. forecast_c is the "
+        "one-step-ahead prediction l+b from the previous month."
     ),
     tags=("timeseries", "iterative", "forecast", "orders"),
 )
@@ -2575,58 +2583,24 @@ def ts_holt_linear_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y")
     )
-    packed = m.agg(
-        F.array_sort(F.collect_list(F.struct("mnum", "y"))).alias("s")
-    )
-    tdiv4 = lambda x: ((x - x % 4) / 4).cast("long")  # trunc-toward-zero
 
-    def step(acc, e):
-        l_new = tdiv4(e["y"] + 3 * (acc["l"] + acc["b"]))
-        b_new = tdiv4(l_new - acc["l"] + 3 * acc["b"])
-        return F.struct(
-            l_new.alias("l"),
-            b_new.alias("b"),
-            F.concat(
-                acc["out"],
-                F.array(
-                    F.struct(
-                        e["mnum"].alias("mnum"),
-                        e["y"].alias("y"),
-                        l_new.alias("level_c"),
-                        b_new.alias("trend_c"),
-                        (acc["l"] + acc["b"]).alias("forecast_c"),
-                    )
-                ),
-            ).alias("out"),
-        )
+    def holt(_key, rows):
+        if len(rows) < 2:  # the recurrence starts from two months
+            return []
+        (m0, y0), (_, y1) = rows[:2]
+        level, trend = y0, y1 - y0
+        out = [(m0, y0, level, trend, level)]
+        for mnum, y in rows[1:]:
+            l_new = _tdiv(y + 3 * (level + trend), 4)
+            b_new = _tdiv(l_new - level + 3 * trend, 4)
+            out.append((mnum, y, l_new, b_new, level + trend))
+            level, trend = l_new, b_new
+        return out
 
-    zero = F.struct(
-        F.element_at("s", 1)["y"].alias("l"),
-        (F.element_at("s", 2)["y"] - F.element_at("s", 1)["y"]).alias("b"),
-        F.array(
-            F.struct(
-                F.element_at("s", 1)["mnum"].alias("mnum"),
-                F.element_at("s", 1)["y"].alias("y"),
-                F.element_at("s", 1)["y"].alias("level_c"),
-                (F.element_at("s", 2)["y"] - F.element_at("s", 1)["y"]).alias(
-                    "trend_c"
-                ),
-                F.element_at("s", 1)["y"].alias("forecast_c"),
-            )
-        ).alias("out"),
-    )
-    folded = packed.select(
-        F.aggregate(
-            F.slice(F.col("s"), 2, F.size("s") - 1), zero, step
-        )["out"].alias("out")
-    )
-    row = folded.select(F.explode("out").alias("r"))
-    return row.select(
-        F.col("r.mnum").alias("mnum"),
-        F.col("r.y").alias("y"),
-        F.col("r.level_c").alias("level_c"),
-        F.col("r.trend_c").alias("trend_c"),
-        F.col("r.forecast_c").alias("forecast_c"),
+    return fold_series(
+        m, [], "mnum", ["y"],
+        "mnum long, y long, level_c long, trend_c long, forecast_c long",
+        holt,
     )
 
 
@@ -3428,6 +3402,19 @@ def ts_longest_growth_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DTW_N = 12  # 2-hour buckets
 
 
+def _dtw_last_row(a: list[int], b: list[int]) -> list:
+    """Last row of the DTW table of series ``a`` against ``b``:
+    D[i][j] = |a_i - b_j| + min(D[i-1][j], D[i-1][j-1], D[i][j-1]) over
+    an infinite border with D[-1][-1] = 0, one O(len(b)) row per step."""
+    prev = [0] + [_math.inf] * len(b)
+    for x in a:
+        cur = [_math.inf]
+        for j, y in enumerate(b):
+            cur.append(abs(x - y) + min(prev[j + 1], prev[j], cur[j]))
+        prev = cur
+    return prev[1:]
+
+
 def _dtw_oracle() -> str:
     """Row-by-row DTW DP as unrolled CTEs.
 
@@ -3482,9 +3469,11 @@ def _dtw_oracle() -> str:
         "revenue profiles (12 two-hour buckets, integer cents) — the "
         "elastic-distance primitive behind time-series clustering and "
         "template matching, where Euclidean distance fails on phase "
-        "shifts. Spark runs the textbook O(n^2) DP in ONE "
-        "applyInPandas over the two REDUCED series (the corpus-sized "
-        "work is the two grouped sums; the Python hop sees 24 rows), "
+        "shifts. Spark runs the textbook O(n^2) DP row by row "
+        "(_dtw_last_row, shared with ts_dtw_distance) in one "
+        "fold_series call over the two REDUCED series (the "
+        "corpus-sized work is the two grouped sums; the Python loop "
+        "sees 24 rows; an empty series emits no rows), "
         "while the oracle unrolls each DP row to a running-min window "
         "via the min-plus prefix-scan identity D[j] = S_j + min_k"
         "(min(P[k],P[k-1]) - S_(k-1)) — two very different "
@@ -3495,8 +3484,6 @@ def _dtw_oracle() -> str:
     tags=("aggregate", "timeseries", "dtw", "events"),
 )
 def ts_dtw_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     e = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
     )
@@ -3504,39 +3491,16 @@ def ts_dtw_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type", (F.hour("ts") / 2).cast("long").alias("b")
     ).agg(F.sum(F.round(F.col("value") * 100)).cast("long").alias("cents"))
 
-    def dp(pdf: pd.DataFrame) -> pd.DataFrame:
-        a = (
-            pdf[pdf.event_type == "purchase"]
-            .sort_values("b")["cents"]
-            .to_numpy()
-        )
-        b = (
-            pdf[pdf.event_type == "click"].sort_values("b")["cents"].to_numpy()
-        )
-        n, m = len(a), len(b)
-        prev = None
-        for i in range(n):
-            cost = abs(a[i] - b)  # |a_i - b_j| for all j
-            cur = [0] * m
-            for j in range(m):
-                if i == 0:
-                    cur[j] = int(cost[j]) + (cur[j - 1] if j else 0)
-                else:
-                    best = prev[j]
-                    if j:
-                        best = min(best, prev[j - 1], cur[j - 1])
-                    cur[j] = int(cost[j]) + best
-            prev = cur
-        return pd.DataFrame(
-            {"j": list(range(m)), "dtw_cum": [int(x) for x in prev]}
-        )
+    def align(_key, rows):
+        a = [c for t, _, c in rows if t == "purchase"]
+        b = [c for t, _, c in rows if t == "click"]
+        if not a or not b:  # no DP table without both series
+            return []
+        return enumerate(_dtw_last_row(a, b))
 
-    return (
-        series.withColumn("g", F.lit(1))
-        .groupBy("g")
-        .applyInPandas(dp, "j long, dtw_cum long")
-        .orderBy("j")
-    )
+    return fold_series(
+        series, [], ["event_type", "b"], ["cents"], "j long, dtw_cum long", align
+    ).orderBy("j")
 
 
 # ---------------------------------------------------------------------------
@@ -3596,10 +3560,11 @@ _HW_M = 7  # season length (days)
         "seasonal completer of the smoothing family (EWMA -> Holt "
         "linear -> this): level, trend AND a 7-slot seasonal state "
         "updated each day with alpha=beta=gamma=1/4 in exact "
-        "truncating integer arithmetic. The whole recurrence is ONE "
-        "in-plan F.aggregate fold whose accumulator carries the "
-        "seasonal ARRAY (struct(l, b, s[7], out)) — no driver loop, "
-        "no Python; the corpus-sized work is one grouped daily sum. "
+        "truncating integer arithmetic. The recurrence is one "
+        "fold_series loop over the sorted daily series whose state is "
+        "(l, b, s[7]) — one Python step per day, O(days), exact "
+        "Python ints; the corpus-sized work is one grouped daily sum, "
+        "and a series of at most one season emits no rows. "
         "Oracle = recursive CTE threading the identical state with a "
         "LIST column. fitted_c = l + b + s_(t-m), the one-step-ahead "
         "seasonal forecast, pinned per day."
@@ -3613,70 +3578,29 @@ def ts_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("y")
     )
-    packed = daily.agg(
-        F.array_sort(F.collect_list(F.struct("d", "y"))).alias("arr")
-    )
-    tdiv4 = lambda x: ((x - x % 4) / 4).cast("long")
     m = _HW_M
 
-    def step(acc, e_):
-        # rn is the 1-based position carried in the accumulator
-        rn = acc["rn"] + 1
-        idx = (rn - 1) % m  # 0-based seasonal slot
-        sold = F.element_at(acc["s"], (idx + 1).cast("int"))
-        l_new = tdiv4(e_["y"] - sold + 3 * (acc["l"] + acc["b"]))
-        b_new = tdiv4(l_new - acc["l"] + 3 * acc["b"])
-        s_val = tdiv4(e_["y"] - l_new + 3 * sold)
-        s_new = F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda i: F.when(i == idx, s_val).otherwise(
-                F.element_at(acc["s"], (i + 1).cast("int"))
-            ),
-        )
-        rec = F.struct(
-            e_["d"].alias("d"),
-            e_["y"].alias("y"),
-            l_new.alias("level_c"),
-            b_new.alias("trend_c"),
-            sold.cast("long").alias("seasonal_c"),
-            (acc["l"] + acc["b"] + sold).alias("fitted_c"),
-        )
-        return F.struct(
-            rn.alias("rn"),
-            l_new.alias("l"),
-            b_new.alias("b"),
-            s_new.alias("s"),
-            F.concat(acc["out"], F.array(rec)).alias("out"),
-        )
+    def holt_winters(_key, rows):
+        if len(rows) <= m:  # the first season only initialises the state
+            return []
+        level = _tdiv(sum(y for _, y in rows[:m]), m)
+        trend, seas = 0, [y - level for _, y in rows[:m]]
+        out = []
+        for k, (d, y) in enumerate(rows[m:]):
+            sold = seas[k % m]
+            l_new = _tdiv(y - sold + 3 * (level + trend), 4)
+            b_new = _tdiv(l_new - level + 3 * trend, 4)
+            seas[k % m] = _tdiv(y - l_new + 3 * sold, 4)
+            out.append((d, y, l_new, b_new, sold, level + trend + sold))
+            level, trend = l_new, b_new
+        return out
 
-    first = F.slice("arr", 1, m)
-    l0 = (
-        F.aggregate(
-            first, F.lit(0).cast("long"), lambda a, x: a + x["y"]
-        )
-        / m
-    ).cast("long")
-    zero = F.struct(
-        F.lit(m).cast("long").alias("rn"),
-        l0.alias("l"),
-        F.lit(0).cast("long").alias("b"),
-        F.transform(first, lambda x: x["y"] - l0).alias("s"),
-        F.array().cast(
-            "array<struct<d:long,y:long,level_c:long,trend_c:long,"
-            "seasonal_c:long,fitted_c:long>>"
-        ).alias("out"),
-    )
-    folded = packed.select(
-        F.aggregate(
-            F.slice(F.col("arr"), m + 1, F.size("arr") - m), zero, step
-        )["out"].alias("out")
-    )
-    return (
-        folded.select(F.explode("out").alias("r"))
-        .select("r.d", "r.y", "r.level_c", "r.trend_c", "r.seasonal_c",
-                "r.fitted_c")
-        .orderBy("d")
-    )
+    return fold_series(
+        daily, [], "d", ["y"],
+        "d long, y long, level_c long, trend_c long, seasonal_c long, "
+        "fitted_c long",
+        holt_winters,
+    ).orderBy("d")
 
 
 # ---------------------------------------------------------------------------
@@ -4010,20 +3934,21 @@ _DTW_INF = 10**15
     doc=(
         "Dynamic time warping distance (Sakoe & Chiba 1978) between the "
         "daily click-revenue and error-revenue series: the full "
-        f"{_DTW_DAYS}x{_DTW_DAYS} DP runs as a NESTED ordered fold "
-        "(outer fold over series A carrying the previous DP row as the "
-        "accumulator, inner fold building the next row against series "
-        "B) — F.aggregate on Spark, list_reduce with captured outer "
-        "lambda variables on DuckDB. Costs are exact integer cents so "
-        "the whole DP is BIGINT arithmetic: hash-exact, no float drift "
+        f"{_DTW_DAYS}x{_DTW_DAYS} DP runs row by row in one "
+        "fold_series loop (_dtw_last_row, shared with "
+        "ts_dtw_alignment: each step builds the next DP row against "
+        "series B in O(days)) on Spark, and as a nested list_reduce "
+        "with captured outer lambda variables on DuckDB. Costs are "
+        "exact integer cents so the whole DP is integer arithmetic "
+        "(Python ints): hash-exact, no float drift "
         "possible. lockstep_cents (the warp-free L1 distance) is "
         "emitted alongside — DTW <= lockstep always, and the gap "
         "measures how much temporal misalignment the warp absorbs. "
         "Scale shape: the only corpus-sized work is one groupBy(day) "
-        "partial aggregate; the DP itself runs on a 1-row, "
-        "O(days^2)-work summary — per-key series DTW (matrix-profile "
-        "style motif search) distributes the same way with the fold "
-        "inside a groupBy."
+        "partial aggregate; the DP itself runs on one "
+        f"{_DTW_DAYS}-row series in O(days^2) Python steps — per-key "
+        "series DTW (matrix-profile style motif search) distributes "
+        "the same way with keys given to fold_series."
     ),
     tags=("timeseries", "events", "dtw", "scale"),
 )
@@ -4043,55 +3968,17 @@ def ts_dtw_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     spine = spark.range(1, _DTW_DAYS + 1).select(F.col("id").alias("day"))
-    series = (
-        spine.join(daily, "day", "left")
-        .fillna(0, ["a_cents", "b_cents"])
-        .agg(
-            F.array_sort(F.collect_list(F.struct("day", "a_cents"))).alias("pa"),
-            F.array_sort(F.collect_list(F.struct("day", "b_cents"))).alias("pb"),
-        )
-        .select(
-            F.transform(F.col("pa"), lambda x: x["a_cents"]).alias("sa"),
-            F.transform(F.col("pb"), lambda x: x["b_cents"]).alias("sb"),
-        )
-    )
-    inf = F.lit(_DTW_INF).cast("long")
-    init_row = F.transform(
-        F.sequence(F.lit(0), F.lit(_DTW_DAYS)),
-        lambda j: F.when(j == 0, F.lit(0).cast("long")).otherwise(inf),
-    )
-    dp = series.select(
-        "sa",
-        "sb",
-        F.aggregate(
-            F.col("sa"),
-            init_row,
-            lambda prev, a: F.aggregate(
-                F.col("sb"),
-                F.array(inf),
-                lambda acc, b: F.concat(
-                    acc,
-                    F.array(
-                        F.abs(a - b)
-                        + F.least(
-                            F.element_at(prev, F.size(acc) + 1),
-                            F.element_at(prev, F.size(acc)),
-                            F.element_at(acc, F.size(acc)),
-                        )
-                    ),
-                ),
-            ),
-        ).alias("final_row"),
-    )
-    lockstep = F.aggregate(
-        F.zip_with(F.col("sa"), F.col("sb"), lambda a, b: F.abs(a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    return dp.select(
-        F.lit(_DTW_DAYS).cast("long").alias("n_days"),
-        F.element_at(F.col("final_row"), _DTW_DAYS + 1).alias("dtw_cents"),
-        lockstep.alias("lockstep_cents"),
+    filled = spine.join(daily, "day", "left").fillna(0, ["a_cents", "b_cents"])
+
+    def distance(_key, rows):
+        sa = [x for _, x, _ in rows]
+        sb = [y for _, _, y in rows]
+        lockstep = sum(abs(x - y) for x, y in zip(sa, sb))
+        return [(_DTW_DAYS, _dtw_last_row(sa, sb)[-1], lockstep)]
+
+    return fold_series(
+        filled, [], "day", ["a_cents", "b_cents"],
+        "n_days long, dtw_cents long, lockstep_cents long", distance,
     )
 
 # ---------------------------------------------------------------------------
@@ -4279,15 +4166,16 @@ def _hw_oracle() -> str:
         "from the first week, then one sequential update per day with "
         "alpha=1/2, beta=gamma=1/4 (exact binary fractions), one-step-"
         "ahead SSE accumulated along the way, and the day-31 forecast "
-        "emitted. Spark runs the recursion as ONE ordered F.aggregate "
-        "fold whose accumulator is a (level, trend, seasonal-array, "
-        "sse) struct; the oracle unrolls the identical IEEE update "
-        "tree as 23 chained CTEs — both engines execute the same "
-        "float ops in the same order, so the state is bit-exact. "
-        "Scale: the corpus contributes one groupBy(day) aggregate; "
-        "the recursion runs on a 30-element array in one row "
-        "(per-key forecasting at 100 TB = the same fold inside "
-        "groupBy(key), state O(period) per key)."
+        "emitted. Spark runs the recursion as one fold_series loop "
+        "over the sorted 30-day series, one Python step per day with "
+        "state (level, trend, seasonal list, sse); the oracle unrolls "
+        "the identical IEEE update tree as 23 chained CTEs — both "
+        "engines execute the same float ops in the same order (sums "
+        "left to right), so the state is bit-exact. Scale: the corpus "
+        "contributes one groupBy(day) aggregate; the loop is O(days) "
+        "with O(period) state, and per-key forecasting passes the key "
+        "to fold_series — one packed series per key, so the per-key "
+        "memory bound is that series' length."
     ),
     tags=("timeseries", "events", "forecast", "iterative"),
 )
@@ -4297,72 +4185,35 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.round(F.col("value") * 100).cast("long")).cast("long").alias("cents")
     )
     spine = spark.range(1, _HW_DAYS + 1).select(F.col("id").alias("day"))
-    obs = (
-        spine.join(daily, "day", "left")
-        .fillna(0, ["cents"])
-        .agg(F.array_sort(F.collect_list(F.struct("day", "cents"))).alias("p"))
-        .select(
-            F.transform(
-                F.col("p"), lambda x: x["cents"].cast("double")
-            ).alias("o")
-        )
-    )
-    wk = F.aggregate(
-        F.slice(F.col("o"), 1, _HW_P), F.lit(0.0), lambda acc, x: acc + x
-    ) / float(_HW_P)
-    init = F.struct(
-        wk.alias("level"),
-        F.lit(0.0).alias("trend"),
-        F.transform(
-            F.slice(F.col("o"), 1, _HW_P), lambda x: x - wk
-        ).alias("seas"),
-        F.lit(0.0).alias("sse"),
-        F.lit(_HW_P).cast("int").alias("t"),
-    )
-    a, b, g = _HW_ALPHA, _HW_BETA, _HW_GAMMA
+    filled = spine.join(daily, "day", "left").fillna(0, ["cents"])
+    a, b, g, p = _HW_ALPHA, _HW_BETA, _HW_GAMMA, _HW_P
 
-    def step(acc, _x):
-        t = acc["t"]  # 0-based index of the day being consumed
-        si = (t % _HW_P) + 1
-        ob = F.element_at(F.col("o"), t + 1)
-        s_t = F.element_at(acc["seas"], si)
-        pred = acc["level"] + acc["trend"] + s_t
-        new_level = a * (ob - s_t) + (1 - a) * (acc["level"] + acc["trend"])
-        new_trend = b * (new_level - acc["level"]) + (1 - b) * acc["trend"]
-        new_seas = F.transform(
-            F.sequence(F.lit(1), F.lit(_HW_P)),
-            lambda i: F.when(
-                i == si, g * (ob - new_level) + (1 - g) * s_t
-            ).otherwise(F.element_at(acc["seas"], i.cast("int"))),
-        )
-        return F.struct(
-            new_level.alias("level"),
-            new_trend.alias("trend"),
-            new_seas.alias("seas"),
-            (acc["sse"] + (ob - pred) * (ob - pred)).alias("sse"),
-            (t + 1).alias("t"),
-        )
+    def holt_winters(_key, rows):
+        # the IEEE operations and their order are the oracle's, so the
+        # doubles are bit-exact: left-to-right sums, no fsum
+        o = [float(c) for _, c in rows]
+        level = 0.0
+        for x in o[:p]:
+            level += x
+        level /= float(p)
+        trend, sse, seas = 0.0, 0.0, [x - level for x in o[:p]]
+        for t in range(p, _HW_DAYS):
+            ob, s_t = o[t], seas[t % p]
+            pred = level + trend + s_t
+            new_level = a * (ob - s_t) + (1 - a) * (level + trend)
+            trend = b * (new_level - level) + (1 - b) * trend
+            level = new_level
+            seas[t % p] = g * (ob - level) + (1 - g) * s_t
+            sse = sse + (ob - pred) * (ob - pred)
+        forecast = level + trend + seas[_HW_DAYS % p]
+        return [(level, trend, sse, forecast, *seas)]
 
-    fitted = obs.select(
-        "o",
-        F.aggregate(
-            F.slice(F.col("o"), _HW_P + 1, _HW_DAYS - _HW_P), init, step
-        ).alias("h"),
-    )
-    h = F.col("h")
-    return fitted.select(
-        h["level"].alias("level_cents"),
-        h["trend"].alias("trend_cents"),
-        h["sse"].alias("sse_cents2"),
-        (
-            h["level"]
-            + h["trend"]
-            + F.element_at(h["seas"], _HW_DAYS % _HW_P + 1)
-        ).alias("forecast_day31"),
-        *[
-            F.element_at(h["seas"], i + 1).alias(f"seas_{i + 1}")
-            for i in range(_HW_P)
-        ],
+    return fold_series(
+        filled, [], "day", ["cents"],
+        "level_cents double, trend_cents double, sse_cents2 double, "
+        "forecast_day31 double, "
+        + ", ".join(f"seas_{i + 1} double" for i in range(_HW_P)),
+        holt_winters,
     )
 
 
@@ -4838,10 +4689,10 @@ def _croston_oracle() -> str:
         "engines agree bit-exactly; initialization is first-demand "
         "size / first-arrival interval, per the original paper. One "
         "series per order priority, demand sparsified to ~1% of "
-        "orders. Spark threads the recursion through ONE in-plan "
-        "F.aggregate fold per group; the oracle unrolls 30 chained "
-        "CTEs. Scale: corpus contributes one groupBy(priority, day); "
-        "the fold is O(days) per key inside the aggregate — the "
+        "orders. Spark threads the recursion through one fold_series "
+        "loop per priority (exact Python ints); the oracle unrolls 30 "
+        "chained CTEs. Scale: corpus contributes one "
+        "groupBy(priority, day); the loop is O(days) per key — the "
         "per-SKU shape of retail demand pipelines."
     ),
     tags=("timeseries", "forecast", "iterative", "orders"),
@@ -4863,66 +4714,25 @@ def ts_croston_intermittent(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = pri.crossJoin(
         spark.range(1, _CR_DAYS + 1).select(F.col("id").alias("day"))
     )
-    obs = (
-        spine.join(daily, ["priority", "day"], "left")
-        .fillna(0, ["cnt"])
-        .groupBy("priority")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("day", "cnt"))),
-                lambda x: x["cnt"],
-            ).alias("o")
-        )
-    )
-    init = F.struct(
-        F.lit(0).cast("long").alias("z"),
-        F.lit(0).cast("long").alias("p"),
-        F.lit(1).cast("long").alias("q"),
-        F.lit(0).cast("int").alias("ini"),
-    )
+    filled = spine.join(daily, ["priority", "day"], "left").fillna(0, ["cnt"])
 
-    def step(acc, d):
-        first = acc["ini"] == 0
-        new_z = F.when(
-            d > 0,
-            F.when(first, d * _CR_S).otherwise(
-                F.floor((4 * acc["z"] + d * _CR_S) / 5).cast("long")
-            ),
-        ).otherwise(acc["z"])
-        new_p = F.when(
-            d > 0,
-            F.when(first, acc["q"] * _CR_S).otherwise(
-                F.floor((4 * acc["p"] + acc["q"] * _CR_S) / 5).cast("long")
-            ),
-        ).otherwise(acc["p"])
-        return F.struct(
-            new_z.alias("z"),
-            new_p.alias("p"),
-            F.when(d > 0, F.lit(1).cast("long"))
-            .otherwise(acc["q"] + 1)
-            .alias("q"),
-            F.when(d > 0, F.lit(1)).otherwise(acc["ini"]).alias("ini"),
-        )
+    def croston(key, rows):
+        z, p, q, ini = 0, 0, 1, False
+        for _, d in rows:
+            if d > 0:
+                z = (4 * z + d * _CR_S) // 5 if ini else d * _CR_S
+                p = (4 * p + q * _CR_S) // 5 if ini else q * _CR_S
+                q, ini = 1, True
+            else:
+                q += 1
+        n_demand = sum(1 for _, d in rows if d > 0)
+        return [(*key, n_demand, z, p, (z * _CR_S) // p if ini else 0)]
 
-    fitted = obs.select(
-        "priority",
-        F.size(F.filter(F.col("o"), lambda x: x > 0))
-        .cast("long")
-        .alias("n_demand"),
-        F.aggregate(F.col("o"), init, step).alias("h"),
-    )
-    h = F.col("h")
-    return fitted.select(
-        "priority",
-        "n_demand",
-        h["z"].alias("z_scaled"),
-        h["p"].alias("p_scaled"),
-        F.when(
-            h["ini"] == 1,
-            F.floor((h["z"] * _CR_S) / h["p"]).cast("long"),
-        )
-        .otherwise(F.lit(0).cast("long"))
-        .alias("forecast_scaled"),
+    return fold_series(
+        filled, ["priority"], "day", ["cnt"],
+        "priority string, n_demand long, z_scaled long, p_scaled long, "
+        "forecast_scaled long",
+        croston,
     ).orderBy("priority")
 
 
@@ -5206,10 +5016,10 @@ def _adstock_oracle() -> str:
         "integer-recursion discipline as ts_croston_intermittent. "
         "Emits per channel the final carried stock, the total "
         "carried exposure, and the peak (value, day). Spark threads "
-        "the recursion through ONE in-plan F.aggregate fold per "
-        "channel; the oracle unrolls 30 CTEs. Scale: the corpus "
-        "contributes one groupBy(channel, day); the fold runs on the "
-        "O(days) summary inside the aggregate."
+        "the recursion through one fold_series loop per channel "
+        "(exact Python ints); the oracle unrolls 30 CTEs. Scale: the "
+        "corpus contributes one groupBy(channel, day); the loop is "
+        "O(days) per channel."
     ),
     tags=("analytics", "timeseries", "iterative", "orders"),
 )
@@ -5231,44 +5041,22 @@ def analytics_adstock_carryover(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = ch.crossJoin(
         spark.range(1, _AD_DAYS + 1).select(F.col("id").alias("day"))
     )
-    obs = (
-        spine.join(daily, ["channel", "day"], "left")
-        .fillna(0, ["spend"])
-        .groupBy("channel")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("day", "spend"))),
-                lambda x: x["spend"],
-            ).alias("o")
-        )
-    )
-    init = F.struct(
-        F.lit(0).cast("long").alias("a"),
-        F.lit(0).cast("long").alias("tot"),
-        F.lit(0).cast("long").alias("pk"),
-        F.lit(0).cast("long").alias("pkday"),
-        F.lit(0).cast("long").alias("t"),
-    )
+    filled = spine.join(daily, ["channel", "day"], "left").fillna(0, ["spend"])
 
-    def step(acc, x):
-        t = acc["t"] + 1
-        a = x + F.floor(acc["a"] / 2).cast("long")
-        return F.struct(
-            a.alias("a"),
-            (acc["tot"] + a).alias("tot"),
-            F.when(a > acc["pk"], a).otherwise(acc["pk"]).alias("pk"),
-            F.when(a > acc["pk"], t).otherwise(acc["pkday"]).alias("pkday"),
-            t.alias("t"),
-        )
+    def adstock(key, rows):
+        a = tot = pk = pk_day = 0
+        for t, (_, x) in enumerate(rows, 1):
+            a = x + a // 2
+            tot += a
+            if a > pk:
+                pk, pk_day = a, t
+        return [(*key, a, tot, pk, pk_day)]
 
-    fitted = obs.select("channel", F.aggregate(F.col("o"), init, step).alias("h"))
-    h = F.col("h")
-    return fitted.select(
-        "channel",
-        h["a"].alias("adstock_final"),
-        h["tot"].alias("adstock_total"),
-        h["pk"].alias("adstock_peak"),
-        h["pkday"].alias("peak_day"),
+    return fold_series(
+        filled, ["channel"], "day", ["spend"],
+        "channel string, adstock_final long, adstock_total long, "
+        "adstock_peak long, peak_day long",
+        adstock,
     ).orderBy("channel")
 
 

@@ -658,8 +658,10 @@ def sink_datasource_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(1)
     )
     src.write.format("dmi_edr").option("path", out).mode("append").save()
-    manifest = json.load(open(os.path.join(out, "_MANIFEST.json")))
-    back = spark.read.json(os.path.join(out, "part-*.jsonl"))
+    with open(os.path.join(out, "_MANIFEST.json")) as f:
+        manifest = json.load(f)
+    # the manifest is the commit record: read exactly the files it lists
+    back = spark.read.json([os.path.join(out, n) for n in manifest["files"]])
     (fname, n_rows) = next(iter(manifest["files"].items()))
     return back.agg(
         F.lit(fname).alias("filename"),

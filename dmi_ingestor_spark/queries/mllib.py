@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
+from dmi_ingestor_spark.operators.rowmap import fold_series
 from dmi_ingestor_spark.registry import register
 
 
@@ -3883,14 +3884,14 @@ def _vit_oracle() -> str:
         "(ties: staying beats switching, then lowest state index), so "
         "the optimal path is read off by following came_from from the "
         "day-30 argmax without a separate backtrace pass. All-integer "
-        "scores, hash-exact. Spark runs the recursion as ONE ordered "
-        "F.aggregate fold whose accumulator is the growing "
-        "array<array<struct<sc,bp>>> DP table; the oracle unrolls the "
-        "identical update as 3 CTEs per step. Scale: the corpus "
-        "contributes one groupBy(day, state) aggregate; the DP runs "
-        "on a K x T table in one row (per-entity decoding at 100 TB "
-        "= the same fold under groupBy(entity), state O(K*T) per "
-        "entity — the standard sessionized-HMM shape)."
+        "scores, hash-exact. Spark runs the recursion as one "
+        "fold_series loop over the sorted (day, state) counts, one "
+        "Python step per day that keeps only the previous layer and "
+        "emits the new one (O(K*T)); the oracle unrolls the identical "
+        "update as 3 CTEs per step. Scale: the corpus contributes one "
+        "groupBy(day, state) aggregate; per-entity decoding passes "
+        "the entity key to fold_series — the standard "
+        "sessionized-HMM shape, O(K) state per entity."
     ),
     tags=("ml", "sequence", "events", "iterative"),
 )
@@ -3911,77 +3912,31 @@ def ml_viterbi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(daily, ["day", "name"], "left")
         .fillna(0, ["c"])
     )
-    per_day = filled.groupBy("day").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))),
-            lambda x: x["c"],
-        ).alias("ems")
-    )
-    obs = per_day.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("day", "ems"))),
-            lambda x: x["ems"],
-        ).alias("em")
-    )
-    em = F.col("em")
-    layer1 = F.transform(
-        F.element_at(em, 1),
-        lambda c: F.struct(
-            c.alias("sc"), F.lit(0).cast("long").alias("bp")
-        ),
-    )
 
-    def step(acc, t):
-        prev = F.element_at(acc, F.size(acc))
-        scores = F.transform(prev, lambda p: p["sc"])
-        best = F.array_max(scores)
-        arg = F.array_position(scores, best)
-        emt = F.element_at(em, t.cast("int"))
-        layer = F.transform(
-            F.sequence(F.lit(1), F.lit(_VIT_K)),
-            lambda i: F.struct(
-                (
-                    F.element_at(emt, i.cast("int"))
-                    + F.greatest(
-                        F.element_at(scores, i.cast("int")),
-                        best - _VIT_SWITCH,
-                    )
-                ).alias("sc"),
-                F.when(
-                    F.element_at(scores, i.cast("int"))
-                    >= best - _VIT_SWITCH,
-                    i.cast("long"),
-                )
-                .otherwise(arg)
-                .alias("bp"),
-            ),
-        )
-        return F.concat(acc, F.array(layer))
+    def viterbi(_key, rows):
+        # rows are (day, state, count), sorted: one K-row layer per day
+        out, scores = [], []
+        for t in range(0, len(rows), _VIT_K):
+            ems = [c for _, _, c in rows[t:t + _VIT_K]]
+            if not scores:  # day 1: the emissions, no backpointer
+                layer = [(e, 0) for e in ems]
+            else:
+                best = max(scores)
+                arg = scores.index(best) + 1  # first argmax, 1-based
+                layer = [
+                    (e + max(sc, best - _VIT_SWITCH),
+                     i if sc >= best - _VIT_SWITCH else arg)
+                    for i, (e, sc) in enumerate(zip(ems, scores), 1)
+                ]
+            day = rows[t][0]
+            out += [(day, st, sc, bp) for st, (sc, bp) in zip(_VIT_STATES, layer)]
+            scores = [sc for sc, _ in layer]
+        return out
 
-    dp = obs.select(
-        F.aggregate(
-            F.sequence(F.lit(2), F.lit(_VIT_DAYS)),
-            F.array(layer1),
-            step,
-        ).alias("dp")
-    )
-    name_arr = F.array(*[F.lit(s) for s in _VIT_STATES])
-    return (
-        dp.select(F.posexplode("dp").alias("d0", "layer"))
-        .select(
-            (F.col("d0") + 1).cast("long").alias("day"),
-            F.posexplode("layer").alias("i0", "cell"),
-        )
-        .select(
-            "day",
-            F.element_at(name_arr, F.col("i0").cast("int") + 1).alias(
-                "state"
-            ),
-            F.col("cell.sc").alias("score"),
-            F.col("cell.bp").alias("came_from"),
-        )
-        .orderBy("day", "state")
-    )
+    return fold_series(
+        filled, [], ["day", "i"], ["c"],
+        "day long, state string, score long, came_from long", viterbi,
+    ).orderBy("day", "state")
 
 
 # --------------------------------------------------------------------------

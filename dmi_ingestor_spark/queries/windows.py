@@ -8,6 +8,8 @@ and reproducible against the oracle.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -18,6 +20,7 @@ from dmi_ingestor_spark.functions.exact import (
     sql_sum_exact,
     sum_exact,
 )
+from dmi_ingestor_spark.operators.rowmap import fold_series
 from dmi_ingestor_spark.registry import register
 
 
@@ -2634,8 +2637,8 @@ def analytics_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "per month the at-risk count and event count reduce from the "
         "customer grain, and S(t) is the running product of "
         "(1 - d/n) factors. The product is an ORDERED left fold over "
-        "the bounded month series (F.aggregate over a sorted array / "
-        "DuckDB list_reduce) — identical multiply order on both "
+        "the bounded month series (one fold_series loop / DuckDB "
+        "list_reduce) — identical multiply order on both "
         "engines makes even the floating survival curve bit-exact at "
         "micro precision. The churn/retention curve every subscription "
         "dashboard ships; all heavy stages are customer-grain "
@@ -2673,56 +2676,20 @@ def analytics_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFra
             "d_events",
         )
     )
-    packed = per_t.agg(
-        F.array_sort(
-            F.collect_list(F.struct("t", "n_risk", "d_events"))
-        ).alias("s")
+
+    def survival(_key, rows):
+        # the running product in month order, multiplied as the oracle does
+        p, out = 1.0, []
+        for t, n_risk, d_events in rows:
+            f = 1.0 - float(d_events) / float(n_risk)
+            out.append((t, n_risk, d_events, math.floor(1000000 * p * f)))
+            p = p * f
+        return out
+
+    return fold_series(
+        per_t, [], "t", ["n_risk", "d_events"],
+        "t long, n_risk long, d_events long, surv_micro long", survival,
     )
-    folded = packed.select(
-        F.aggregate(
-            F.col("s"),
-            F.struct(
-                F.lit(1.0).alias("p"),
-                F.array().cast(
-                    "array<struct<t:bigint,n_risk:bigint,d_events:bigint,"
-                    "surv_micro:bigint>>"
-                ).alias("out"),
-            ),
-            lambda acc, e: F.struct(
-                (
-                    acc["p"]
-                    * (
-                        F.lit(1.0)
-                        - e["d_events"].cast("double")
-                        / e["n_risk"].cast("double")
-                    )
-                ).alias("p"),
-                F.concat(
-                    acc["out"],
-                    F.array(
-                        F.struct(
-                            e["t"].alias("t"),
-                            e["n_risk"].cast("long").alias("n_risk"),
-                            e["d_events"].cast("long").alias("d_events"),
-                            F.floor(
-                                1000000
-                                * acc["p"]
-                                * (
-                                    F.lit(1.0)
-                                    - e["d_events"].cast("double")
-                                    / e["n_risk"].cast("double")
-                                )
-                            )
-                            .cast("long")
-                            .alias("surv_micro"),
-                        )
-                    ),
-                ).alias("out"),
-            ),
-        )["out"].alias("out")
-    )
-    r = folded.select(F.explode("out").alias("r"))
-    return r.select("r.t", "r.n_risk", "r.d_events", "r.surv_micro")
 
 
 # ---------------------------------------------------------------------------

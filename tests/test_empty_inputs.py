@@ -214,6 +214,13 @@ EMPTY_SAFE = [
     "ts_obv_indicator",
     "agg_hhi_concentration",
     "scalar_luhn_checksum",
+    # the fold_series recurrences: a series shorter than the warm-up
+    # (two months, one season, one DTW series) emits no rows
+    "ts_holt_linear_smoothing",
+    "ts_holt_winters_seasonal",
+    "ts_croston_intermittent",
+    "analytics_adstock_carryover",
+    "ts_dtw_alignment",
 ]
 # dq_expectations_summary is deliberately NOT here: on empty tables it
 # still emits its 6 check rows (n_checked=0, passed) — that IS the
@@ -233,6 +240,7 @@ EMPTY_ONE_ROW = [
     "ingest_schema_evolution_merge",
     "dedup_lsh_recall_eval",
     "analytics_bounce_rate",
+    "ts_holt_winters",
 ]
 
 
