@@ -19,10 +19,10 @@ Spark mapping (SURVEY.md §3):
 * manifest                 → the (parameter, time_str) leaves the write
   itself observed, one JSON per (collection, parameter).
 
-A forecast is one lazy plan and one write: every cube is fetched,
-decoded and reprojected exactly once, by the task that writes its
-leaves (no shuffle after the fetch), and the counts, failed parameters,
-stale-leaf deletes and manifests all come from that write's
+A forecast is one lazy plan and one write with no shuffle: one task
+per cube fetches, decodes and reprojects it in a single Python pass
+(``fetch_grid``) and writes its leaves, and the counts, failed
+parameters, stale-leaf deletes and manifests all come from that write's
 ``Observation`` — nothing is cached, validated ahead or read back.
 """
 
@@ -33,9 +33,10 @@ import os
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -49,7 +50,9 @@ from dmi_ingestor_spark.sources.cube_format import cube_grid, decode_cube
 from dmi_ingestor_spark.sources.http_edr import (
     IngestConfig,
     Transport,
-    fetch_cubes,
+    fetch_one,
+    request_list,
+    request_rows,
 )
 
 GRID_SCHEMA = StructType(
@@ -66,44 +69,57 @@ GRID_SCHEMA = StructType(
 )
 
 
-def decode_to_grid(fetched: DataFrame, lambert: bool) -> DataFrame:
-    """S2/U2 + P3/U1: payload blobs → long-form WGS84 grid rows via
-    mapInPandas.
+def fetch_grid(
+    spark: SparkSession, config: IngestConfig, transport: Transport | None = None
+) -> DataFrame:
+    """S1 + S2/U2 + P3/U1: each request → long-form WGS84 grid rows, in
+    one ``mapInArrow`` pass over ``request_rows`` (one task per cube).
 
-    One input row (a whole cube) explodes into time×y×x rows through
-    ``cube_format.cube_grid`` — the iterator-of-batches shape lets a
-    single task stream multiple cubes without materializing more than
-    one at a time. ``lambert`` grids (harmonie_*) are reprojected
-    LCC→WGS84 once per grid point and tiled over the timesteps; crs84
-    grids pass their coordinates through (ingestor.py:170-173,
-    201-202). Failed fetches (payload NULL) are dropped here, and so are
-    payloads that FAIL TO DECODE (corrupt/truncated bytes) — a bad cube
-    must quarantine its parameter, never crash the job (the reference's
-    per-parameter try/except, ingestor.py:221-227). Such a parameter
-    has no rows, so the write replaces none of its leaves and
+    The task fetches its cube, decodes it and explodes it into
+    time×y×x rows through ``cube_format.cube_grid``, yielding one Arrow
+    batch per cube typed from ``GRID_SCHEMA``. ``harmonie_*`` (native
+    CRS) grids are reprojected LCC→WGS84 once per grid point and tiled
+    over the timesteps; crs84 grids pass their coordinates through
+    (ingestor.py:170-173, 201-202). A failed fetch, and a payload that
+    FAILS TO DECODE (corrupt/truncated bytes), emits no rows — a bad
+    cube must quarantine its parameter, never crash the job (the
+    reference's per-parameter try/except, ingestor.py:221-227). Such a
+    parameter has no rows, so the write replaces none of its leaves and
     ``run_ingest``'s stale-leaf delete, which only touches parameters
     the write observed, leaves its previous forecast intact
     (keep-last-good).
     """
+    lambert = config.crs == "native"
+    schema = to_arrow_schema(GRID_SCHEMA)
+    requests = request_list(config)
 
-    def _explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                if row.payload is None:
+    def _cubes(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                collection, parameter, url = requests[i]
+                payload, _ = fetch_one(transport, url)
+                if payload is None:
                     continue
                 try:
-                    cube = decode_cube(bytes(row.payload))
+                    cube = decode_cube(bytes(payload))
                 except Exception:  # noqa: BLE001 — quarantine, don't crash
                     continue
-                yield pd.DataFrame(
-                    {
-                        "collection": row.collection,
-                        "parameter": row.parameter,
-                        **cube_grid(cube, lambert),
-                    }
+                grid = cube_grid(cube, lambert)
+                n = len(grid["value"])
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.repeat(pa.scalar(collection, pa.string()), n),
+                        pa.repeat(pa.scalar(parameter, pa.string()), n),
+                        # from_pandas: a NaN (masked) cell is stored as NULL
+                        *(
+                            pa.array(grid[f.name], f.type, from_pandas=True)
+                            for f in list(schema)[2:]
+                        ),
+                    ],
+                    schema=schema,
                 )
 
-    return fetched.mapInPandas(_explode, GRID_SCHEMA)
+    return request_rows(spark, len(requests)).mapInArrow(_cubes, GRID_SCHEMA)
 
 
 def with_time_str(grid: DataFrame) -> DataFrame:
@@ -143,9 +159,7 @@ def run_ingest(
     previous forecast.
     """
     grid_path = os.path.join(out_dir, "grid")
-    grid = with_time_str(
-        decode_to_grid(fetch_cubes(spark, config, transport), config.crs == "native")
-    )
+    grid = with_time_str(fetch_grid(spark, config, transport))
     written = Observation("ingest")
     (
         # no shuffle: every (parameter, time_str) leaf comes from one cube,

@@ -80,7 +80,7 @@ class _ParamPartition(InputPartition):
 class EdrReader(DataSourceReader):
     """Batch reader: one partition per parameter; each task fetches its
     cube (synthetic or over HTTP) and decodes it into grid rows through
-    ``cube_format.cube_grid``, the same columns ``decode_to_grid`` emits
+    ``cube_format.cube_grid``, the same columns ``pipeline.fetch_grid`` emits
     minus lon/lat."""
 
     def __init__(self, options: dict) -> None:

@@ -6,12 +6,14 @@ Re-expresses the reference's request construction and fetch loop
 * URL assembly per (collection, parameter) happens at plan-construction
   time in plain Python (the `parameter-name`/`bbox` query params ARE the
   pushdown — SURVEY.md §4.2);
-* the fetches run distributed, one partition per request, via
-  ``operators.rowmap.map_rows`` — each worker GETs its cube and emits
-  (request metadata, payload, error);
-* HTTP failure → error column, payload NULL — the keep-last-good edge
+* :func:`request_rows` lays the requests out one per partition with no
+  Python pass and no exchange, so N cubes download in parallel;
+* :func:`fetch_one` GETs one cube and turns an HTTP failure into an error
+  string, payload ``None`` — the keep-last-good edge
   (``ingestor.py:192-199``: a failed fetch must leave the previous
-  forecast intact) is decided downstream by the writer.
+  forecast intact) is decided downstream by the writer. The ingest
+  pass (``ingest.pipeline.fetch_grid``) and :func:`fetch_cubes` both
+  call it.
 
 The transport is injectable so tests run fully offline.
 """
@@ -94,33 +96,47 @@ def _default_transport(url: str) -> bytes:  # pragma: no cover - network
     return resp.content
 
 
+def fetch_one(transport: Transport | None, url: str) -> tuple[bytes | None, str | None]:
+    """GET one cube: ``(payload, None)``, or ``(None, error)`` when the
+    transport raises (log-and-skip, ``ingestor.py:192-197``)."""
+    try:
+        return (transport or _default_transport)(url), None
+    except Exception as err:  # noqa: BLE001 - log-and-skip edge
+        return None, f"{type(err).__name__}: {err}"
+
+
+def request_list(config: IngestConfig) -> list[tuple[str, str, str]]:
+    """One ``(collection, parameter, url)`` per configured parameter."""
+    return [(config.collection, p, build_request_url(config, p)) for p in config.parameters]
+
+
+def request_rows(spark: SparkSession, n: int) -> DataFrame:
+    """Ids ``0..n-1``, each in its own partition (one fetch per task);
+    a kernel looks up its request as ``request_list(config)[id]``.
+
+    No Python pass (``createDataFrame`` of Python rows is one) and no
+    exchange (``repartition`` is a round-robin shuffle).
+    """
+    return spark.range(0, n, 1, max(n, 1))
+
+
 def fetch_cubes(
     spark: SparkSession,
     config: IngestConfig,
     transport: Transport | None = None,
 ) -> DataFrame:
-    """Distributed fan-out fetch: one row per (collection, parameter).
+    """Distributed fan-out fetch: one row per (collection, parameter)
+    with its payload or fetch error.
 
-    Requests are repartitioned one-per-task so N parameters download in
-    parallel across the cluster — the Spark answer to the reference's
-    sequential loop (``ingestor.py:157``). Payloads stay on executors;
-    nothing is collected to the driver.
+    The Spark answer to the reference's sequential loop
+    (``ingestor.py:157``): :func:`request_rows` puts each request in its
+    own task. Payloads stay on executors; nothing is collected to the
+    driver.
     """
-    tp = transport or _default_transport
-    requests_rows = [
-        (config.collection, p, build_request_url(config, p))
-        for p in config.parameters
-    ]
-    req_df = spark.createDataFrame(
-        requests_rows, schema="collection string, parameter string, url string"
-    ).repartition(max(len(requests_rows), 1))
+    requests = request_list(config)
 
-    def _fetch(row) -> list[tuple]:
-        payload, error = None, None
-        try:
-            payload = tp(row.url)
-        except Exception as err:  # noqa: BLE001 - log-and-skip edge
-            error = f"{type(err).__name__}: {err}"
-        return [(row.collection, row.parameter, row.url, payload, error)]
+    def _get(row) -> list[tuple]:
+        collection, parameter, url = requests[row.id]
+        return [(collection, parameter, url, *fetch_one(transport, url))]
 
-    return map_rows(req_df, FETCH_SCHEMA, _fetch)
+    return map_rows(request_rows(spark, len(requests)), FETCH_SCHEMA, _get)

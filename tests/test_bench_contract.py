@@ -98,3 +98,29 @@ def test_oracle_duck_memory_limit_within_physical_memory(duck):
     scale = {"bytes": 1, "KiB": 2**10, "MiB": 2**20, "GiB": 2**30, "TiB": 2**40}
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert 0 < float(value) * scale[unit] <= phys
+
+
+def test_entry_kernels_run_from_another_directory(tmp_path, sf_dir):
+    """A driver started outside the repo, with no ``PYTHONPATH``, loads
+    ``__spark_entry__`` by path and runs a builder whose Python kernel
+    calls a module-level helper (``aggregates._tdiv``): its workers must
+    import ``dmi_ingestor_spark`` too."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = (
+        "import importlib.util\n"
+        "from pyspark.sql import SparkSession\n"
+        f"spec = importlib.util.spec_from_file_location('__spark_entry__', {repo!r} + '/__spark_entry__.py')\n"
+        "E = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(E)\n"
+        "spark = SparkSession.builder.master('local[2]').config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        f"rows = E.queries()['ts_holt_linear_smoothing'](spark, {sf_dir!r}).collect()\n"
+        "print(len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, "-c", child],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert int(r.stdout.strip().splitlines()[-1]) > 0

@@ -107,6 +107,35 @@ def test_pipeline_ingests_coveragejson_payloads(spark, tmp_path):
     assert abs(got["s"] - float(values.sum())) < 1e-9
 
 
+def test_pipeline_stores_null_cells_as_null(spark, tmp_path):
+    """A null cell of the payload (a masked DKSS land cell) is stored as
+    a NULL ``value``, not NaN, so ``sum``/``avg`` skip it."""
+    from dmi_ingestor_spark.ingest.pipeline import run_ingest
+    from dmi_ingestor_spark.sources.http_edr import IngestConfig
+
+    times, ys, xs, values = _cube_arrays(2, 3, 3)
+    values[1, 2, 0] = np.nan
+    payload = encode_coveragejson("sea-mean-deviation", times, ys, xs, values)
+
+    cfg = IngestConfig(collection="dkss_if", parameters=("sea-mean-deviation",))
+    res = run_ingest(spark, cfg, str(tmp_path), lambda url: payload)
+    assert res.failed_parameters == [] and res.n_rows == values.size
+
+    import pyspark.sql.functions as F
+
+    got = (
+        spark.read.parquet(f"{tmp_path}/grid")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("value").isNull().cast("int")).alias("nulls"),
+            F.sum("value").alias("s"),
+        )
+        .collect()[0]
+    )
+    assert (got["n"], got["nulls"]) == (values.size, 1)
+    assert got["s"] == pytest.approx(float(np.nansum(values)))
+
+
 def test_corrupt_payload_is_quarantined_not_fatal(spark, tmp_path):
     """A parameter whose payload is garbage lands in failed_parameters;
     the healthy parameter's rows still publish (keep-last-good, the

@@ -69,21 +69,21 @@ def test_composes_with_catalyst(spark):
 
 
 def test_datasource_rows_equal_ingest_decode(spark):
-    """The same synthetic harmonie cube through the ingest pipeline's
-    decode_to_grid and through spark.read.format('dmi_edr') gives the
-    same grid rows, and the pipeline's lon/lat equal the projection
-    applied cell by cell."""
+    """The same synthetic harmonie cube through the ingest pass
+    (``fetch_grid``, a transport serving the cube) and through
+    spark.read.format('dmi_edr') gives the same grid rows, and the
+    pipeline's lon/lat equal the projection applied cell by cell."""
     import numpy as np
 
     from dmi_ingestor_spark.functions.projection import lcc_to_wgs84_np
-    from dmi_ingestor_spark.ingest.pipeline import decode_to_grid
+    from dmi_ingestor_spark.ingest.pipeline import fetch_grid
     from dmi_ingestor_spark.sources.cube_format import encode_cube, synthetic_cube
-    from dmi_ingestor_spark.sources.http_edr import FETCH_SCHEMA
+    from dmi_ingestor_spark.sources.http_edr import IngestConfig
 
     coll, par = "harmonie_dini_sf", "t2m"
     payload = encode_cube(synthetic_cube(par, lambert=True))
-    fetched = spark.createDataFrame([(coll, par, "url", payload, None)], FETCH_SCHEMA)
-    grid = decode_to_grid(fetched, lambert=True).collect()
+    cfg = IngestConfig(collection=coll, parameters=(par,))
+    grid = fetch_grid(spark, cfg, lambda url: payload).collect()
     cols = ["collection", "parameter", "time_s", "y", "x", "value"]
     via_pipeline = sorted(tuple(r[c] for c in cols) for r in grid)
     via_source = sorted(tuple(r) for r in _read(spark, collection=coll, parameters=par).collect())

@@ -321,12 +321,61 @@ def test_mixed_fetch_and_decode_failures_keep_last_good(spark, out_dir):
         assert sorted(f"time_str={t}" for t in json.load(fh)) == ok_leaves
 
 
+def _executed_node_names(spark, action) -> list[str]:
+    """Node names of the executed plans of every SQL execution ``action()``
+    starts, read from the SQL status store after the run (AQE's final
+    plans)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def items(seq) -> list:  # a Scala Seq through py4j
+        return [seq.apply(i) for i in range(seq.size())]
+
+    def execution_ids() -> set[int]:
+        return {e.executionId() for e in items(store.executionsList())}
+
+    before = execution_ids()
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [
+        node.name()
+        for eid in sorted(execution_ids() - before)
+        for node in items(store.planGraph(eid).allNodes())
+    ]
+
+
+def test_run_ingest_is_one_python_pass_and_no_exchange(spark, out_dir):
+    """A forecast crosses into Python once per cube: the executed plan of
+    ``run_ingest`` has exactly one Python map node (fetch, decode and
+    project together) and no Exchange (the requests are laid out one per
+    partition, not shuffled)."""
+    cfg = IngestConfig(collection="harmonie_dini_sf", parameters=("t2m", "wind-speed"))
+    names = _executed_node_names(
+        spark, lambda: run_ingest(spark, cfg, out_dir, _make_transport_ok())
+    )
+    assert [n for n in names if n.startswith("MapIn")] == ["MapInArrow"], names
+    assert not [n for n in names if "Exchange" in n], names
+
+
+def test_run_ingest_without_parameters_writes_nothing(spark, out_dir):
+    """An empty parameter list is a run with no requests: 0 rows, no
+    failed parameters, no manifests, and the previous grid untouched."""
+    cfg = IngestConfig(collection="dkss_if", parameters=("p-a",))
+    run_ingest(spark, cfg, out_dir, _make_transport_ok())
+    before = _tree(out_dir)
+    res = run_ingest(
+        spark, IngestConfig(collection="dkss_if", parameters=()), out_dir, _make_transport_ok()
+    )
+    assert (res.n_rows, res.n_partitions_written) == (0, 0)
+    assert res.failed_parameters == [] and res.manifest_paths == []
+    assert _tree(out_dir) == before
+
+
 # (jobs, stages, shuffle write bytes) of one run_ingest over a previous
 # forecast; exact, because these counters repeat. Pins may only go down.
 _INGEST_BUDGET = {
-    "success": (2, 3, 490),
-    "all_fetch_failed": (2, 3, 490),
-    "corrupt_payload": (2, 3, 490),
+    "success": (1, 1, 0),
+    "all_fetch_failed": (1, 1, 0),
+    "corrupt_payload": (1, 1, 0),
 }
 
 
