@@ -23,6 +23,7 @@ if _REPO_DIR not in sys.path:
     sys.path.insert(0, _REPO_DIR)
 
 from dmi_ingestor_spark.registry import load_all  # noqa: E402
+from dmi_ingestor_spark.session import add_package_to_worker_path  # noqa: E402
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -30,23 +31,12 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 def _with_worker_path(
     builder: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
-    """``builder``, first appending the repo to the Python workers'
-    ``PYTHONPATH`` (an existing value is kept).
-
-    Kernels that call module-level helpers of ``dmi_ingestor_spark`` are
-    unpickled by import path, and a worker finds the package only through
-    its working directory or ``PYTHONPATH``, so a driver started outside
-    the repo would fail them with ``ModuleNotFoundError``. The session's
-    worker environment is read when a Python function is created, so it
-    is set before the builder runs.
-    """
+    """``builder``, first putting the repo on the Python workers'
+    ``PYTHONPATH`` (``session.add_package_to_worker_path``)."""
 
     @functools.wraps(builder)
     def build(spark: SparkSession, sf_dir: str) -> DataFrame:
-        env = spark.sparkContext.environment
-        paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
-        if _REPO_DIR not in paths:
-            env["PYTHONPATH"] = os.pathsep.join([*paths, _REPO_DIR])
+        add_package_to_worker_path(spark)
         return builder(spark, sf_dir)
 
     return build

@@ -46,6 +46,7 @@ from pyspark.sql.types import (
 )
 
 from dmi_ingestor_spark.ingest.fs import fs_delete, fs_list_subdirs
+from dmi_ingestor_spark.session import add_package_to_worker_path
 from dmi_ingestor_spark.sources.cube_format import cube_grid, decode_cube
 from dmi_ingestor_spark.sources.http_edr import (
     IngestConfig,
@@ -119,6 +120,8 @@ def fetch_grid(
                     schema=schema,
                 )
 
+    # the kernel ships decode_cube/cube_grid/fetch_one by import path
+    add_package_to_worker_path(spark)
     return request_rows(spark, len(requests)).mapInArrow(_cubes, GRID_SCHEMA)
 
 

@@ -24,6 +24,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dmi_ingestor_spark.catalog import table
 from dmi_ingestor_spark.ingest.fs import scratch_dir
 
 
@@ -77,11 +78,9 @@ def ensure_bucketed_pair(
     t_lineitem = f"b_lineitem_{suffix}"
     catalog = spark.catalog
     if not catalog.tableExists(t_orders) or not catalog.tableExists(t_lineitem):
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-        lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         for df, name, key in (
-            (orders, t_orders, "o_orderkey"),
-            (lineitem, t_lineitem, "l_orderkey"),
+            (table(spark, sf_dir, "orders"), t_orders, "o_orderkey"),
+            (table(spark, sf_dir, "lineitem"), t_lineitem, "l_orderkey"),
         ):
             write_bucketed(df, name, scratch_dir(name), key, n_buckets, key)
     return t_orders, t_lineitem
@@ -96,7 +95,7 @@ def ensure_partitioned_orders(spark, sf_dir: str) -> str:
     partitions at runtime."""
     path = scratch_dir("dpp-orders")
     (
-        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        table(spark, sf_dir, "orders")
         .write.mode("overwrite")
         .partitionBy("o_orderpriority")
         .parquet(path)

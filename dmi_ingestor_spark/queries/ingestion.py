@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dmi_ingestor_spark.catalog import table
 from dmi_ingestor_spark.functions.exact import sql_avg_exact, avg_exact
 from dmi_ingestor_spark.ingest.fs import scratch_dir
 from dmi_ingestor_spark.operators.rowmap import map_rows
@@ -267,8 +268,6 @@ def ingest_datasource_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "sink", "source", "formats"),
 )
 def sink_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
-
     cols = ["o_orderkey", "o_totalprice", "o_orderdate"]
     src = table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 1000).select(*cols)
     # the synthetic orders.o_orderdate is TIMESTAMP_NTZ; the read-back
@@ -332,7 +331,6 @@ def sink_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "maintenance", "compaction", "events"),
 )
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.functions.exact import avg_exact
     from dmi_ingestor_spark.ingest.compact import compact_table
 
@@ -393,8 +391,6 @@ _FP_MOD = 1_000_000_007  # keeps the int64 sum far from overflow
     tags=("integrity", "fingerprint", "orders", "maintenance"),
 )
 def integrity_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
-
     o = table(spark, sf_dir, "orders")
     row_str = F.concat_ws(
         "|",
@@ -449,8 +445,6 @@ _CORRUPT_MOD = 50  # every 50th record is mangled
     tags=("ingest", "json", "robustness", "events"),
 )
 def ingest_corrupt_tolerant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
-
     out = scratch_dir("corrupt-json") + "/events_jsonl"
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     line = F.to_json(F.struct("event_id", "event_type", "value"))
@@ -646,7 +640,6 @@ def ingest_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sink_datasource_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
 
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.edr_datasource import register as reg_ds
 
     reg_ds(spark)
@@ -712,8 +705,6 @@ def sink_datasource_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "dlq", "events", "pipeline"),
 )
 def ingest_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
-
     ev = table(spark, sf_dir, "events").select("event_id", "props")
     raw = F.when(
         F.col("event_id") % 7 == 0,
@@ -769,8 +760,6 @@ def ingest_dead_letter_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "schema-evolution", "orders", "storage"),
 )
 def ingest_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
-
     root = scratch_dir("evolve")
     o = table(spark, sf_dir, "orders")
     old_batch = o.where(F.col("o_orderkey") % 2 == 0).select(
@@ -829,8 +818,6 @@ def ingest_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     tags=("ingest", "fixed-width", "orders"),
 )
 def ingest_fixed_width_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
-
     o = table(spark, sf_dir, "orders")
     line = F.concat(
         F.lpad(F.col("o_orderkey").cast("string"), 10, "0"),
@@ -1077,9 +1064,7 @@ _SPLIT_RECS = 2000  # maxRecordsPerFile target
 )
 def ingest_sized_file_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = scratch_dir("split")
-    o = spark.read.parquet(os.path.join(sf_dir, "orders.parquet")).select(
-        "o_orderkey"
-    )
+    o = table(spark, sf_dir, "orders").select("o_orderkey")
     (
         o.repartition(1)
         .write.mode("overwrite")
@@ -1224,8 +1209,6 @@ def ingest_zip_members_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import zipfile
 
-    from dmi_ingestor_spark.catalog import table
-
     n = (
         table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -1304,7 +1287,6 @@ def ingest_zip_members_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "avro"),
 )
 def ingest_avro_container_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.avro import encode_avro_container
 
     rows = (
@@ -1404,7 +1386,6 @@ def ingest_avro_container_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "csv"),
 )
 def ingest_csv_quoted_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.queries.pipeline_ops import _rows_and_checksum
 
     n = table(spark, sf_dir, "nation").select(
@@ -1500,8 +1481,6 @@ def ingest_rowgroup_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dmi_ingestor_spark.catalog import table
-
     out = scratch_dir("rowgroup") + "/orders_sorted.parquet"
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     # deterministic fixture: one key-sorted file, fixed-size row groups.
@@ -1578,7 +1557,6 @@ def ingest_rowgroup_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "msgpack"),
 )
 def ingest_msgpack_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.msgpack import encode_record_stream
 
     rows = (
@@ -1679,7 +1657,6 @@ def ingest_msgpack_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "reproject", "reference"),
 )
 def ingest_reproject_grid_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.functions.projection import lcc_to_wgs84
 
     nation = table(spark, sf_dir, "nation")
@@ -1758,7 +1735,6 @@ def ingest_reproject_grid_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "timeseries"),
 )
 def ingest_gorilla_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.gorilla import encode_block
 
     rows = (
@@ -1853,7 +1829,6 @@ def ingest_gorilla_timeseries(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ingest", "source", "formats", "protobuf"),
 )
 def ingest_protobuf_delimited_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
     from dmi_ingestor_spark.sources.protowire import encode_delimited_stream
 
     rows = (
@@ -1972,8 +1947,6 @@ def ingest_protobuf_delimited_stream(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("ingest", "source", "formats", "mime"),
 )
 def ingest_mime_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.catalog import table
-
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     hdr = docs.select(
         "doc_id",

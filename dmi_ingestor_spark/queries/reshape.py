@@ -382,14 +382,12 @@ _RLE_ORACLE = """
 def udtf_rle_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    # Arrow-batched UDTF execution (ArrowEvalPythonUDTF, not the
-    # row-at-a-time BatchEvalPythonUDTF) — set here, not only in
-    # session.py, so the driver's vanilla session gets it too
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
+    # Arrow-batched (ArrowEvalPythonUDTF, not the row-at-a-time
+    # BatchEvalPythonUDTF), set per function: no session conf changes
     rle = udtf(
         _RunLengthUDTF,
         returnType="token string, run_len bigint, run_idx bigint",
+        useArrow=True,
     )
     spark.udtf.register("rle_tokens", rle)
     table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
@@ -588,12 +586,9 @@ class _UnpackTokensUDTF:
 def udtf_analyze_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    # Arrow-batched UDTF execution (ArrowEvalPythonUDTF, not the
-    # row-at-a-time BatchEvalPythonUDTF) — set here, not only in
-    # session.py, so the driver's vanilla session gets it too
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    unpack = udtf(_UnpackTokensUDTF)
+    # Arrow-batched (ArrowEvalPythonUDTF, not the row-at-a-time
+    # BatchEvalPythonUDTF), set per function: no session conf changes
+    unpack = udtf(_UnpackTokensUDTF, useArrow=True)
     spark.udtf.register("unpack_tokens", unpack)
     table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
@@ -696,14 +691,12 @@ class _PriorityStatsUDTF:
 def udtf_table_partition_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    # Arrow-batched UDTF execution (ArrowEvalPythonUDTF, not the
-    # row-at-a-time BatchEvalPythonUDTF) — set here, not only in
-    # session.py, so the driver's vanilla session gets it too
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
+    # Arrow-batched (ArrowEvalPythonUDTF, not the row-at-a-time
+    # BatchEvalPythonUDTF), set per function: no session conf changes
     stats = udtf(
         _PriorityStatsUDTF,
         returnType="o_orderpriority string, n_orders bigint, max_price double",
+        useArrow=True,
     )
     spark.udtf.register("priority_stats", stats)
     table(spark, sf_dir, "orders").createOrReplaceTempView("orders")

@@ -23,7 +23,6 @@ def get_spark(app_name: str = "dmi-ingestor-spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # the oracle-parity harness collects full results to compare;
         # output-bound queries (radius join: 62M pairs at sf0.75, ~110M
@@ -37,3 +36,25 @@ def get_spark(app_name: str = "dmi-ingestor-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
+
+
+# the directory that holds the dmi_ingestor_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def add_package_to_worker_path(spark: SparkSession) -> None:
+    """Append the package's root to the Python workers' ``PYTHONPATH``
+    (an existing value is kept).
+
+    Kernels that call module-level helpers of ``dmi_ingestor_spark`` are
+    unpickled by import path, and a worker finds the package only through
+    its working directory or ``PYTHONPATH``, so a driver started outside
+    the repo would fail them with ``ModuleNotFoundError``. The session's
+    worker environment is read when a Python function is created, so
+    call this before creating one. It changes the environment once per
+    session, so the first kernel after it may start a new worker daemon.
+    """
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, _PACKAGE_ROOT])

@@ -20,6 +20,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dmi_ingestor_spark.catalog import table
 from dmi_ingestor_spark.functions.exact import sum_exact
 from dmi_ingestor_spark.ingest.fs import scratch_dir
 
@@ -254,10 +255,7 @@ def stream_static_enriched_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     engine's broadcast-dimension rule for batch joins.
     """
     events = read_events_stream(spark, sf_dir)
-    customers = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
-        .select("c_custkey", "c_mktsegment")
-    )
+    customers = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     enriched = events.join(
         F.broadcast(customers), events.user_id == customers.c_custkey, "left"
     )
@@ -329,8 +327,6 @@ def stream_stream_purchase_outer(
     import glob
     import os
     import shutil
-
-    from dmi_ingestor_spark.catalog import table
 
     staged = scratch_dir("ss-outer")
     try:

@@ -101,19 +101,35 @@ def test_oracle_duck_memory_limit_within_physical_memory(duck):
 
 
 def test_entry_kernels_run_from_another_directory(tmp_path, sf_dir):
-    """A driver started outside the repo, with no ``PYTHONPATH``, loads
-    ``__spark_entry__`` by path and runs a builder whose Python kernel
-    calls a module-level helper (``aggregates._tdiv``): its workers must
-    import ``dmi_ingestor_spark`` too."""
+    """A driver started outside the repo, with no ``PYTHONPATH``, runs
+    Python kernels that call module-level helpers of
+    ``dmi_ingestor_spark``, so its workers must import the package too:
+
+    - ``run_ingest``, with the package imported through ``sys.path``, on
+      a one-cube transport defined in the script (its ``fetch_grid``
+      kernel ships ``decode_cube``/``cube_grid`` by import path);
+    - a builder of ``__spark_entry__`` loaded by path, whose kernel calls
+      ``aggregates._tdiv``.
+    """
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     child = (
-        "import importlib.util\n"
+        "import importlib.util, sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
         "from pyspark.sql import SparkSession\n"
+        "from dmi_ingestor_spark.ingest.pipeline import run_ingest\n"
+        "from dmi_ingestor_spark.sources.cube_format import encode_cube, synthetic_cube\n"
+        "from dmi_ingestor_spark.sources.http_edr import IngestConfig\n"
+        "spark = SparkSession.builder.master('local[2]').config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "spark.sparkContext.setLogLevel('ERROR')\n"
+        "res = run_ingest(spark, IngestConfig(parameters=('p',)), 'bucket', "
+        "lambda url: encode_cube(synthetic_cube('p')))\n"
+        "print(res.n_rows, len(res.failed_parameters))\n"
+        # back to the session's starting environment, so the entry
+        # builder below has to put the repo on the worker path itself
+        "spark.sparkContext.environment.pop('PYTHONPATH')\n"
         f"spec = importlib.util.spec_from_file_location('__spark_entry__', {repo!r} + '/__spark_entry__.py')\n"
         "E = importlib.util.module_from_spec(spec)\n"
         "spec.loader.exec_module(E)\n"
-        "spark = SparkSession.builder.master('local[2]').config('spark.ui.enabled', 'false').getOrCreate()\n"
-        "spark.sparkContext.setLogLevel('ERROR')\n"
         f"rows = E.queries()['ts_holt_linear_smoothing'](spark, {sf_dir!r}).collect()\n"
         "print(len(rows))\n"
     )
@@ -123,4 +139,6 @@ def test_entry_kernels_run_from_another_directory(tmp_path, sf_dir):
         env=env, cwd=tmp_path, capture_output=True, text=True, timeout=600,
     )
     assert r.returncode == 0, r.stderr[-2000:]
-    assert int(r.stdout.strip().splitlines()[-1]) > 0
+    ingested, holt = r.stdout.strip().splitlines()[-2:]
+    assert ingested == "256 0"  # 4 timesteps x 8 x 8 cells, no failed parameter
+    assert int(holt) > 0

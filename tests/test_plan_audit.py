@@ -165,6 +165,21 @@ def test_python_paths_are_arrow(audited_plans):
         assert "ArrowEvalPythonUDTF" in audited_plans[name], name
 
 
+@pytest.mark.parametrize(
+    "name", ["udtf_rle_tokens", "udtf_analyze_polymorphic", "udtf_table_partition_by"]
+)
+def test_udtfs_are_arrow_per_function(spark, sf_dir, name):
+    """Each UDTF asks for Arrow itself (``useArrow=True``), so it plans
+    as ``ArrowEvalPythonUDTF`` with the session conf at its default
+    (off), and the builder leaves the session's conf as it found it."""
+    assert spark.conf.get("spark.sql.execution.pythonUDTF.arrow.enabled") == "false"
+    before = spark.conf.getAll
+    df = REGISTRY[name].builder(spark, sf_dir)
+    assert spark.conf.getAll == before
+    plan = spark._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    assert "ArrowEvalPythonUDTF" in plan, name
+
+
 def test_risky_dtype_gate_flags_decimal_and_date():
     import pyarrow as pa
 
