@@ -26,6 +26,23 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+# Writer options that leave no ``.crc`` sidecar beside a ``file://``
+# file: without native libhadoop, Hadoop's local FS forks ``chmod`` for
+# every file it creates (``RawLocalFileSystem.setPermission``), and the
+# checksummed ``LocalFileSystem`` creates a sidecar beside each file,
+# so it forks twice per file and doubles the file count. Spark merges a
+# writer's options into that write job's Hadoop conf only, so the
+# session, ``FileSystem.get`` and every other writer keep the
+# checksummed FS, and ``hdfs://`` or ``s3a://`` paths ignore them.
+# ``disable.cache`` is needed because the FileSystem cache is keyed by
+# scheme and user, not by conf: it would return the cached checksummed
+# instance.
+RAW_LOCAL_WRITE = {
+    "fs.file.impl": "org.apache.hadoop.fs.RawLocalFileSystem",
+    "fs.file.impl.disable.cache": "true",
+}
+
+
 def scratch_dir(tag: str) -> str:
     """A fresh, empty directory named after ``tag`` under this process's
     scratch root."""

@@ -20,10 +20,12 @@ Spark mapping (SURVEY.md §3):
   itself observed, one JSON per (collection, parameter).
 
 A forecast is one lazy plan and one write with no shuffle: one task
-per cube fetches, decodes and reprojects it in a single Python pass
-(``fetch_grid``) and writes its leaves, and the counts, failed
-parameters, stale-leaf deletes and manifests all come from that write's
-``Observation`` — nothing is cached, validated ahead or read back.
+per core fetches, decodes and reprojects its share of the cubes in a
+single Python pass (``fetch_grid``) and writes their leaves, with no
+``.crc`` sidecar per file (``fs.RAW_LOCAL_WRITE``), and the counts,
+failed parameters, stale-leaf deletes and manifests all come from that
+write's ``Observation`` — nothing is cached, validated ahead or read
+back.
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from dmi_ingestor_spark.ingest.fs import fs_delete, fs_list_subdirs
+from dmi_ingestor_spark.ingest.fs import RAW_LOCAL_WRITE, fs_delete, fs_list_subdirs
 from dmi_ingestor_spark.session import add_package_to_worker_path
 from dmi_ingestor_spark.sources.cube_format import cube_grid, decode_cube
 from dmi_ingestor_spark.sources.http_edr import (
@@ -74,21 +76,21 @@ def fetch_grid(
     spark: SparkSession, config: IngestConfig, transport: Transport | None = None
 ) -> DataFrame:
     """S1 + S2/U2 + P3/U1: each request → long-form WGS84 grid rows, in
-    one ``mapInArrow`` pass over ``request_rows`` (one task per cube).
+    one ``mapInArrow`` pass over ``request_rows`` (one task per core).
 
-    The task fetches its cube, decodes it and explodes it into
-    time×y×x rows through ``cube_format.cube_grid``, yielding one Arrow
-    batch per cube typed from ``GRID_SCHEMA``. ``harmonie_*`` (native
-    CRS) grids are reprojected LCC→WGS84 once per grid point and tiled
-    over the timesteps; crs84 grids pass their coordinates through
-    (ingestor.py:170-173, 201-202). A failed fetch, and a payload that
-    FAILS TO DECODE (corrupt/truncated bytes), emits no rows — a bad
-    cube must quarantine its parameter, never crash the job (the
-    reference's per-parameter try/except, ingestor.py:221-227). Such a
-    parameter has no rows, so the write replaces none of its leaves and
-    ``run_ingest``'s stale-leaf delete, which only touches parameters
-    the write observed, leaves its previous forecast intact
-    (keep-last-good).
+    Each task takes its cubes in turn: it fetches one, decodes it and
+    explodes it into time×y×x rows through ``cube_format.cube_grid``,
+    yielding one Arrow batch per cube typed from ``GRID_SCHEMA``.
+    ``harmonie_*`` (native CRS) grids are reprojected LCC→WGS84 once per
+    grid point and tiled over the timesteps; crs84 grids pass their
+    coordinates through (ingestor.py:170-173, 201-202). A failed fetch,
+    and a payload that FAILS TO DECODE (corrupt/truncated bytes), emits
+    no rows — a bad cube must quarantine its parameter, never crash the
+    job, nor the other cubes of its task (the reference's per-parameter
+    try/except, ingestor.py:221-227). Such a parameter has no rows, so
+    the write replaces none of its leaves and ``run_ingest``'s stale-leaf
+    delete, which only touches parameters the write observed, leaves its
+    previous forecast intact (keep-last-good).
     """
     lambert = config.crs == "native"
     schema = to_arrow_schema(GRID_SCHEMA)
@@ -175,6 +177,7 @@ def run_ingest(
         )
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
+        .options(**RAW_LOCAL_WRITE)
         .partitionBy("collection", "parameter", "time_str")
         .parquet(grid_path)
     )

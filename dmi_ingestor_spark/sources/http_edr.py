@@ -6,8 +6,9 @@ Re-expresses the reference's request construction and fetch loop
 * URL assembly per (collection, parameter) happens at plan-construction
   time in plain Python (the `parameter-name`/`bbox` query params ARE the
   pushdown — SURVEY.md §4.2);
-* :func:`request_rows` lays the requests out one per partition with no
-  Python pass and no exchange, so N cubes download in parallel;
+* :func:`request_rows` deals the requests over one partition per core
+  with no Python pass and no exchange, so the cubes download in
+  parallel and each Python task fetches several;
 * :func:`fetch_one` GETs one cube and turns an HTTP failure into an error
   string, payload ``None`` — the keep-last-good edge
   (``ingestor.py:192-199``: a failed fetch must leave the previous
@@ -111,13 +112,23 @@ def request_list(config: IngestConfig) -> list[tuple[str, str, str]]:
 
 
 def request_rows(spark: SparkSession, n: int) -> DataFrame:
-    """Ids ``0..n-1``, each in its own partition (one fetch per task);
-    a kernel looks up its request as ``request_list(config)[id]``.
+    """Ids ``0..n-1`` dealt in contiguous runs over ``p = min(n,
+    defaultParallelism)`` partitions; a kernel looks up its request as
+    ``request_list(config)[id]``.
+
+    One partition per core, not per request: every Python task pays a
+    fixed start cost far above a cube's fetch, decode and projection,
+    so a task loops over ``ceil(n/p)`` cubes instead (Spark's file
+    scans pack small files into one task for the same reason). A
+    partitioned write then holds a task's ``ceil(n/p)`` cubes in its
+    sort buffer, which spills under the execution-memory limit, so
+    memory per task stays bounded by configuration.
 
     No Python pass (``createDataFrame`` of Python rows is one) and no
     exchange (``repartition`` is a round-robin shuffle).
     """
-    return spark.range(0, n, 1, max(n, 1))
+    parts = min(n, spark.sparkContext.defaultParallelism)
+    return spark.range(0, n, 1, max(1, parts))
 
 
 def fetch_cubes(
@@ -129,9 +140,9 @@ def fetch_cubes(
     with its payload or fetch error.
 
     The Spark answer to the reference's sequential loop
-    (``ingestor.py:157``): :func:`request_rows` puts each request in its
-    own task. Payloads stay on executors; nothing is collected to the
-    driver.
+    (``ingestor.py:157``): :func:`request_rows` deals the requests over
+    one task per core, and each task fetches its share in turn.
+    Payloads stay on executors; nothing is collected to the driver.
     """
     requests = request_list(config)
 

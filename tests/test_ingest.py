@@ -344,10 +344,10 @@ def _executed_node_names(spark, action) -> list[str]:
 
 
 def test_run_ingest_is_one_python_pass_and_no_exchange(spark, out_dir):
-    """A forecast crosses into Python once per cube: the executed plan of
+    """A forecast crosses into Python in one pass: the executed plan of
     ``run_ingest`` has exactly one Python map node (fetch, decode and
-    project together) and no Exchange (the requests are laid out one per
-    partition, not shuffled)."""
+    project together) and no Exchange (``spark.range`` deals the
+    requests over the partitions, nothing shuffles them)."""
     cfg = IngestConfig(collection="harmonie_dini_sf", parameters=("t2m", "wind-speed"))
     names = _executed_node_names(
         spark, lambda: run_ingest(spark, cfg, out_dir, _make_transport_ok())
@@ -370,13 +370,42 @@ def test_run_ingest_without_parameters_writes_nothing(spark, out_dir):
     assert _tree(out_dir) == before
 
 
+def _counted(spark, group: str, action):
+    """``action()``'s result and the (jobs, stages, tasks, shuffle write
+    bytes) of the Spark work it runs, read from the status store after
+    the run."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "run_ingest budget")
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    stage_ids = [s for j in job_ids for s in tracker.getJobInfo(j).stageIds]
+    return result, (
+        len(job_ids),
+        len(stage_ids),
+        sum(tracker.getStageInfo(s).numTasks for s in stage_ids),
+        sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stage_ids),
+    )
+
+
 # (jobs, stages, shuffle write bytes) of one run_ingest over a previous
 # forecast; exact, because these counters repeat. Pins may only go down.
+# The one stage also runs exactly min(parameters, defaultParallelism)
+# tasks: one Python task per core, never one per cube.
 _INGEST_BUDGET = {
     "success": (1, 1, 0),
     "all_fetch_failed": (1, 1, 0),
     "corrupt_payload": (1, 1, 0),
 }
+
+
+def _ingest_tasks(spark, cfg: IngestConfig) -> int:
+    return min(len(cfg.parameters), spark.sparkContext.defaultParallelism)
 
 
 @pytest.mark.parametrize(
@@ -388,22 +417,85 @@ _INGEST_BUDGET = {
     ],
 )
 def test_run_ingest_job_budget(spark, out_dir, case, fail):
-    """One forecast is one write: pin the Spark jobs, stages and shuffle
-    write bytes (``_INGEST_BUDGET``) ``run_ingest`` runs on top of a
-    previous forecast (deterministic counters, unlike wall time)."""
+    """One forecast is one write: pin the Spark jobs, stages, tasks and
+    shuffle write bytes (``_INGEST_BUDGET``) ``run_ingest`` runs on top
+    of a previous forecast (deterministic counters, unlike wall time)."""
     cfg = IngestConfig(collection="harmonie_dini_sf", parameters=("t2m", "wind-speed"))
     run_ingest(spark, cfg, out_dir, _make_transport_ok())
-    sc = spark.sparkContext
-    group = f"ingest-job-budget-{case}"
-    sc.setJobGroup(group, "run_ingest job budget")
-    try:
-        run_ingest(spark, cfg, out_dir, _make_transport_next(fail))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    store = sc._jsc.sc().statusStore()
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
-    stage_ids = [s for j in job_ids for s in tracker.getJobInfo(j).stageIds]
-    shuffle_bytes = sum(store.lastStageAttempt(s).shuffleWriteBytes() for s in stage_ids)
-    assert (len(job_ids), len(stage_ids), shuffle_bytes) == _INGEST_BUDGET[case]
+    _, counted = _counted(
+        spark,
+        f"ingest-job-budget-{case}",
+        lambda: run_ingest(spark, cfg, out_dir, _make_transport_next(fail)),
+    )
+    jobs, stages, shuffle_bytes = _INGEST_BUDGET[case]
+    assert counted == (jobs, stages, _ingest_tasks(spark, cfg), shuffle_bytes)
+
+
+def test_quarantine_in_tasks_shared_with_good_cubes(spark, out_dir):
+    """With more parameters than cores a Python task fetches several
+    cubes: a corrupt cube and a failed fetch quarantine only their own
+    parameters, never the good cubes of the same task, and the write
+    still runs one task per core."""
+    from dmi_ingestor_spark.sources.http_edr import request_rows
+
+    n = spark.sparkContext.defaultParallelism + 2
+    params = tuple(f"p{i:02d}" for i in range(n))
+    tasks = request_rows(spark, n).rdd.glom().map(lambda rows: [r.id for r in rows])
+    shared = [ids for ids in tasks.collect() if len(ids) > 1]
+    assert shared, "no task fetches two cubes"
+    corrupt, down = params[shared[0][0]], params[shared[-1][-1]]
+    cfg = IngestConfig(collection="dkss_if", parameters=params)
+    run_ingest(spark, cfg, out_dir, _make_transport_ok())
+    grid = os.path.join(out_dir, "grid", "collection=dkss_if")
+    manifests = os.path.join(out_dir, "manifests", "dkss_if")
+    before = {
+        p: (_tree(f"{grid}/parameter={p}"), _tree(f"{manifests}/{p}"))
+        for p in (corrupt, down)
+    }
+
+    res, counted = _counted(
+        spark,
+        "ingest-shared-tasks",
+        lambda: run_ingest(
+            spark, cfg, out_dir, _make_transport_next({corrupt: "corrupt", down: "down"})
+        ),
+    )
+    assert counted == (1, 1, _ingest_tasks(spark, cfg), 0)
+    assert res.failed_parameters == [p for p in params if p in (corrupt, down)]
+    for p, (leaves, manifest) in before.items():
+        assert _tree(f"{grid}/parameter={p}") == leaves
+        assert _tree(f"{manifests}/{p}") == manifest
+    good = [p for p in params if p not in (corrupt, down)]
+    for p in good:
+        leaves = sorted(os.listdir(f"{grid}/parameter={p}"))
+        assert len(leaves) == 4
+        assert all(t.startswith("time_str=20260102") for t in leaves)
+    assert res.n_rows == len(good) * 4 * 8 * 8
+    assert res.manifest_paths == [f"{manifests}/{p}/forecasts.json" for p in good]
+
+
+def _crc_files(root: str) -> list[str]:
+    return [f for _, _, files in os.walk(root) for f in files if f.endswith(".crc")]
+
+
+def test_run_ingest_writes_no_crc_and_leaks_no_filesystem_setting(spark, out_dir, tmp_path):
+    """The ingest write skips Hadoop's ``.crc`` sidecars through its own
+    writer options only: the session conf, the cached ``file://``
+    FileSystem and a later plain write in the same session keep the
+    checksummed local FS."""
+    before = spark.conf.getAll
+    cfg = IngestConfig(collection="dkss_if", parameters=("p-a", "p-b"))
+    run_ingest(spark, cfg, out_dir, _make_transport_ok())
+    run_ingest(spark, cfg, out_dir, _make_transport_next())
+    assert _crc_files(os.path.join(out_dir, "grid")) == []
+    assert spark.conf.getAll == before
+
+    jvm = spark.sparkContext._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        jvm.java.net.URI("file:///"), spark.sparkContext._jsc.hadoopConfiguration()
+    )
+    # an instance, not the class: hive-exec registers its own subclass
+    assert jvm.org.apache.hadoop.fs.LocalFileSystem._java_lang_class.isInstance(fs)
+    plain = str(tmp_path / "plain")
+    spark.range(3).write.parquet(plain)
+    assert _crc_files(plain)
