@@ -2,7 +2,7 @@
 manifest (SURVEY.md §7 M2 — the reference's full capability, Spark-native).
 
 Reference pipeline being re-expressed (``dmi_ingestor/ingestor.py``):
-fetch per parameter (:157-197) → xarray decode (:200) → conditional
+fetch per parameter (:157-197) → NetCDF decode (:200) → conditional
 LCC→WGS84 reprojection (:201-202) → temp NetCDF → COG (:203-206) → one
 GeoTIFF per timestep uploaded under {collection}/{parameter}/{time}.tif
 (:207-218) → forecasts.json manifest (:219-227) → cleanup (:228-233).

@@ -7,12 +7,11 @@ reference's NetCDF/GeoTIFF bytes would sit in a table
 
 Decode / feature-extract / frame-sample run as Arrow-batched
 ``mapInPandas`` transforms (iterator→iterator: one input row may emit
-many output rows, the U2 "cube explode" shape). The real image/audio
-codecs (PIL/librosa/ffmpeg) are NOT in this container, so the codec
-call is isolated in :func:`_decode_bytes`, gated behind an import-try
-with a deterministic fallback decoder — the Spark-side plumbing
-(schemas, Arrow batches, partition behavior) is real and tested either
-way.
+many output rows, the U2 "cube explode" shape). The codec call is
+isolated in :func:`_decode_bytes`, a deterministic byte-statistics
+decoder that is the one decoder whatever is installed (no image/audio
+codec library is imported); the Spark-side plumbing (schemas, Arrow
+batches, partition behavior) is real and tested.
 """
 
 from __future__ import annotations
@@ -59,16 +58,10 @@ FRAME_SCHEMA = StructType(
 def _decode_bytes(payload: bytes) -> list[float]:
     """Decode a media payload into a feature vector.
 
-    Real codec path is stubbed: PIL/librosa are not available in this
-    container. The fallback is a *deterministic* byte-statistics
-    decoder so tests and the driver exercise the full distributed
-    plumbing with stable outputs.
+    A *deterministic* byte-statistics decoder, not an image/audio codec:
+    tests and oracles pin its output, so it is the contract on every
+    host and no installed library changes it.
     """
-    # If PIL ever appears in the container, a real decoder is a possible
-    # alternate — but the deterministic fallback is the CONTRACT here
-    # (tests and oracles pin its bytes), so lib presence must never
-    # change behavior, let alone crash (VERDICT r5 "what's wrong" #2 —
-    # the old raise-on-import-success was a landmine).
     digest = hashlib.sha256(payload).digest()
     n = max(len(payload), 1)
     feats = [float(len(payload))]

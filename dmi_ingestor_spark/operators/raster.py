@@ -5,23 +5,16 @@ Reference parity: ``dmi_ingestor/ingestor.py:76-80`` shells out to GDAL
 Cloud-Optimized GeoTIFF, and ``:101-107,207-218`` uploads one
 ``{collection}/{parameter}/{time}.tif`` per timestep.
 
-GDAL/rasterio are not installed in this container, so the writer here is
-a self-contained **pure-Python tiled GeoTIFF encoder** — not a fake
+The writer here is a self-contained **pure-Python tiled GeoTIFF
+encoder**, the one writer whatever is installed — not a fake
 format: output is a spec-conformant little-endian TIFF 6.0 file
 (tiled layout, float32 samples, IEEE sample format, LZW-compressed
 tiles matching the reference's ``COMPRESS=LZW``) carrying the three
 GeoTIFF tags (ModelPixelScale, ModelTiepoint, GeoKeyDirectory → EPSG
 4326 geographic), with COG-style structure: all IFDs at the head of the
-file, tile data after, and a 2× reduced-resolution overview IFD
-(NewSubfileType=1) when the grid is large enough. Any TIFF reader can
+file, tile data after, and a ladder of 2× reduced-resolution overview
+IFDs (NewSubfileType=1) while a level is large enough. Any TIFF reader can
 open it; :func:`decode_geotiff` round-trips it byte-exactly in tests.
-
-A real lib-backed alternate exists too: :func:`encode_geotiff_rasterio`
-drives rasterio/GDAL (the reference's actual stack) to the same
-pixel/geo/pyramid semantics, selected via ``encode_geotiff(...,
-backend="rasterio"|"auto")`` — the pure encoder stays the default byte
-contract. The import-try mirrors the codec gating in
-``operators/multimodal.py``.
 
 The distributed shape is U3 "grouped re-rasterize": long-form grid rows
 → ``groupBy(parameter, time_str).applyInPandas`` → one artifact + one
@@ -50,7 +43,6 @@ from pyspark.sql.types import (
 
 TILE = 16  # COG tile dims must be multiples of 16; 16 keeps small grids 1-tile
 _OVERVIEW_MIN = 32  # add a 2x overview IFD when min(ny, nx) >= this
-_RASTERIO_NOTED = False  # log the lib-present note at most once
 
 # TIFF tag ids
 _T_NEW_SUBFILE_TYPE = 254
@@ -295,86 +287,6 @@ def _serialize(ifds: list[_Ifd], tile_blocks: list[list[bytes]]) -> bytes:
     return bytes(out)
 
 
-def _overview_factors(shape: tuple[int, int]) -> list[int]:
-    """The 2**n overview ladder both writers share: keep halving while
-    the newest level is still >= _OVERVIEW_MIN on both axes (GDAL
-    COG-driver behavior — bottoms out at one tile)."""
-    factors = []
-    ny, nx = shape
-    f = 2
-    while min(ny // (f // 2), nx // (f // 2)) >= _OVERVIEW_MIN:
-        factors.append(f)
-        f *= 2
-    return factors
-
-
-def encode_geotiff_rasterio(
-    values: np.ndarray,
-    x0: float,
-    y0: float,
-    dx: float,
-    dy: float,
-    compress: bool = True,
-) -> bytes:
-    """Lib-backed COG writer (VERDICT r6 item 4): the same artifact as
-    :func:`encode_geotiff`, produced through rasterio/GDAL — the stack
-    the reference shells out to (``ingestor.py:76-80``,
-    ``gdal_translate -of COG -co COMPRESS=LZW``).
-
-    Semantics mirror the pure encoder exactly: float32 band, north-up
-    affine from the same top-left-edge tiepoint, TILE×TILE blocks, LZW
-    (predictor off, so the tiles stay in the subset
-    :func:`decode_geotiff` reads), and the identical 2× mean-overview
-    ladder via ``build_overviews(..., Resampling.average)`` +
-    ``COPY_SRC_OVERVIEWS`` so the pyramid rides inside the one file.
-    Raises ImportError when rasterio is absent — callers go through
-    :func:`encode_geotiff`, which only dispatches here on request.
-    """
-    import rasterio
-    from rasterio.enums import Resampling
-    from rasterio.io import MemoryFile
-    from rasterio.shutil import copy as rio_copy
-    from rasterio.transform import Affine
-
-    arr = np.ascontiguousarray(values, dtype="float32")
-    ny, nx = arr.shape
-    profile = {
-        "driver": "GTiff",
-        "width": nx,
-        "height": ny,
-        "count": 1,
-        "dtype": "float32",
-        "crs": "EPSG:4326",
-        # row 0 is the northernmost: negative y step from the top edge
-        "transform": Affine(dx, 0.0, x0, 0.0, -dy, y0),
-        "tiled": True,
-        "blockxsize": TILE,
-        "blockysize": TILE,
-    }
-    if compress:
-        profile["compress"] = "lzw"
-        profile["predictor"] = 1
-    with MemoryFile() as src_mem:
-        with src_mem.open(**profile) as dst:
-            dst.write(arr, 1)
-            factors = _overview_factors(arr.shape)
-            if factors:
-                dst.build_overviews(factors, Resampling.average)
-        with src_mem.open() as src, MemoryFile() as cog_mem:
-            # the COG rearrangement step (IFDs first, overviews kept)
-            rio_copy(
-                src,
-                cog_mem.name,
-                driver="GTiff",
-                copy_src_overviews=True,
-                tiled=True,
-                blockxsize=TILE,
-                blockysize=TILE,
-                **({"compress": "lzw", "predictor": 1} if compress else {}),
-            )
-            return bytes(cog_mem.read())
-
-
 def encode_geotiff(
     values: np.ndarray,
     x0: float,
@@ -382,52 +294,16 @@ def encode_geotiff(
     dx: float,
     dy: float,
     compress: bool = True,
-    backend: str = "pure",
 ) -> bytes:
     """2-D array (row 0 = northernmost) → COG-structured GeoTIFF bytes.
 
     ``(x0, y0)`` is the model-space top-left corner, ``(dx, dy)`` the
-    pixel size. Adds a 2× mean-downsampled overview IFD when the grid is
-    at least ``_OVERVIEW_MIN`` on both axes (the COG ladder, depth 1).
+    pixel size. Adds 2× mean-downsampled overview IFDs while the newest
+    level is at least ``_OVERVIEW_MIN`` on both axes (the COG ladder).
     Tiles are LZW-compressed by default — the reference's GDAL invocation
     uses ``COMPRESS=LZW`` (ingestor.py:78); pass ``compress=False`` for
     raw tiles.
-
-    ``backend`` selects the writer: ``"pure"`` (default — the
-    byte-deterministic contract the manifest oracles pin), ``"rasterio"``
-    (the lib-backed :func:`encode_geotiff_rasterio`, ImportError when the
-    lib is absent), or ``"auto"`` (rasterio when importable, else pure —
-    what a production cluster with a GDAL stack would run; its bytes are
-    GDAL's, so only pixel/geo parity is guaranteed, not byte equality).
     """
-    if backend not in ("pure", "rasterio", "auto"):
-        raise ValueError(f"unknown geotiff backend {backend!r}")
-    if backend == "rasterio":
-        return encode_geotiff_rasterio(values, x0, y0, dx, dy, compress)
-    if backend == "auto":
-        try:
-            return encode_geotiff_rasterio(values, x0, y0, dx, dy, compress)
-        except ImportError:
-            pass
-    # default path: note an available lib alternate once, then use the
-    # pure encoder (VERDICT r5 "what's wrong" #2 — the old
-    # raise-on-import-success here was a landmine; the alternate is now
-    # a real writer, selected explicitly via backend=).
-    global _RASTERIO_NOTED
-    if not _RASTERIO_NOTED:  # pragma: no cover - rasterio absent here
-        try:
-            import rasterio  # noqa: F401
-
-            import logging
-
-            logging.getLogger(__name__).info(
-                "rasterio is installed; the built-in COG encoder remains "
-                "the byte contract — pass backend='rasterio'/'auto' to "
-                "encode through the lib instead"
-            )
-        except ImportError:
-            pass
-        _RASTERIO_NOTED = True
     full = np.ascontiguousarray(values, dtype="<f4")
     # Full COG overview pyramid (GDAL COG-driver behavior, VERDICT r5
     # #7): keep adding 2× mean-downsampled levels while the newest

@@ -911,7 +911,7 @@ _FMT_NT, _FMT_NY, _FMT_NX = 3, 8, 8
         "format list: six identical hash-green rows prove "
         "format-agnostic decode equivalence end to end, not just "
         "per-format unit tests. The decode stage is the reference's "
-        "xarray.open_dataset seam (ingestor.py:200) scaled out."
+        "NetCDF decode seam (ingestor.py:200) scaled out."
     ),
     tags=("ingest", "reference", "formats"),
 )
@@ -991,8 +991,8 @@ _DNS_PARAMS = ("d2m", "msl", "sp", "t2m", "tcc", "tp", "u10", "v10")
         "(sources/hdf5.py:207-303 dense groups, :560-590 filters) "
         "decodes inside one distributed mapInPandas pass. Stats per "
         "parameter come from the generating formula in the oracle. "
-        "Parity seam: the reference hands NetCDF-4 responses to "
-        "xarray.open_dataset (dmi_ingestor/ingestor.py:200); this is "
+        "Parity seam: the reference decodes NetCDF-4 responses at "
+        "dmi_ingestor/ingestor.py:200; this is "
         "that decode, modern container generation included, scaled out."
     ),
     tags=("ingest", "reference", "formats", "hdf5"),
@@ -1149,7 +1149,7 @@ _PKM_NT, _PKM_NY, _PKM_NX = 3, 6, 8
         "dispatcher and reduced to per-packing statistics. Four "
         "identical hash-green rows prove representation-agnostic "
         "decode equivalence end to end. Parity seam: the reference's "
-        "xarray/cfgrib decode of DMI payloads (ingestor.py:200), "
+        "decode of DMI payloads (ingestor.py:200), "
         "wire-format depth included."
     ),
     tags=("ingest", "reference", "formats", "grib2"),

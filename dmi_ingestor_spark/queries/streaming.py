@@ -462,23 +462,23 @@ def st_stream_stream_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFr
     GROUP BY user_id
     """,
     doc=(
-        "Spark 4 transformWithStateInPandas (typed ValueState, RocksDB "
-        "provider) running per-user (count, max) under availableNow "
-        "(import-gated: the TWS worker needs google.protobuf, absent in "
-        "this container, so an applyInPandasWithState fallback computes "
-        "IDENTICAL state semantics until it exists); "
-        "the wrapped emissions reduce to the final state, and because "
+        "Per-user running (count, max) through applyInPandasWithState "
+        "under availableNow, the one implementation on every host; the "
+        "wrapped emissions reduce to the final state, and because "
         "count/max are order-independent the result is HASH-checkable "
         "against the plain batch aggregate — a real-streaming-execution "
-        "query with a full SQL oracle, not rows-only. See "
-        "streaming/windows.py transform_with_state_user_stats."
+        "query with a full SQL oracle, not rows-only. The registry name "
+        "predates this and stays, because results are keyed by query "
+        "name; Spark 4's transformWithState API is not used (its Python "
+        "worker needs google.protobuf). See streaming/windows.py "
+        "user_stats_with_state."
     ),
     tags=("streaming", "stateful", "pandas"),
 )
 def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dmi_ingestor_spark.streaming.windows import transform_with_state_user_stats
+    from dmi_ingestor_spark.streaming.windows import user_stats_with_state
 
-    return transform_with_state_user_stats(spark, sf_dir)
+    return user_stats_with_state(spark, sf_dir)
 
 
 @register(

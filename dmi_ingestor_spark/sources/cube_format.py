@@ -1,19 +1,19 @@
 """Forecast-cube payload codec (SURVEY.md S2).
 
-The reference decodes DMI NetCDF bytes with xarray
-(``dmi_ingestor/ingestor.py:200``). xarray/netCDF4 are not installed in
-this container, so the decoder dispatches:
+The reference decodes DMI NetCDF bytes at ``dmi_ingestor/ingestor.py:200``.
+``decode_cube`` dispatches on the payload's magic bytes, one decoder
+each:
 
-* real NetCDF magic (``CDF\\x01``/``\\x89HDF``) → xarray when importable,
-  else the pure-Python parsers (``netcdf3.py`` for classic, ``hdf5.py``
-  for the NetCDF-4/HDF5 container);
-* the self-contained ``FCUBE1`` test format → pure-python decode.
+* classic NetCDF (``CDF\\x01``/``CDF\\x02``) → ``netcdf3.py``;
+* NetCDF-4 (``\\x89HDF``) → ``hdf5.py``;
+* GRIB2 → ``grib2.py``; CoverageJSON → ``coveragejson.py``;
+* the self-contained ``FCUBE1`` test format → decoded here.
 
 ``FCUBE1`` is a deterministic stand-in with the exact logical shape of
 the DMI payload (dims ``time, y, x``; one named float variable; a time
 axis of epoch-second timestamps): 6-byte magic, big-endian u32 JSON
 header length, JSON header, raw little-endian float64 values in
-C-order. The pipeline's distributed plumbing is identical for both.
+C-order. The pipeline's distributed plumbing is identical for all.
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ MAGIC = b"FCUBE1"
 @dataclass
 class Cube:
     """In-memory forecast cube: the engine's analogue of the reference's
-    xarray.Dataset (dims (time, y, x), one variable)."""
+    decoded dataset (dims (time, y, x), one variable)."""
 
     parameter: str
     times: list[int]  # epoch seconds
@@ -88,9 +88,9 @@ def cube_grid(cube: Cube, lambert: bool = False) -> dict[str, np.ndarray]:
     ys = np.repeat(np.asarray(cube.ys, dtype="f8"), nx)
     xs = np.tile(np.asarray(cube.xs, dtype="f8"), ny)
     if lambert:
-        from dmi_ingestor_spark.functions.projection import lcc_to_wgs84_np
+        from dmi_ingestor_spark.functions.projection import lcc_inverse_np
 
-        lon, lat = lcc_to_wgs84_np(xs, ys)
+        lon, lat = lcc_inverse_np(xs, ys)
     else:
         lon, lat = xs, ys
     return {
@@ -120,38 +120,17 @@ def cube_stats(payload: bytes) -> tuple[int, int, int, int, int, int]:
 
 
 def _decode_netcdf(payload: bytes) -> Cube:
-    """Real-NetCDF path (the reference's ingestor.py:200).
+    """Real-NetCDF path (the reference's ingestor.py:200): classic
+    CDF-1/2 through ``sources/netcdf3.py`` and NetCDF-4 (the HDF5
+    container) through ``sources/hdf5.py``, the two on-disk formats the
+    DMI API can return. Both apply the CF rules of ``sources/cf.py``."""
+    if payload[:3] == b"CDF":
+        from dmi_ingestor_spark.sources.netcdf3 import parse_netcdf3
 
-    xarray when installed; otherwise pure-Python parsers cover BOTH
-    on-disk formats the DMI API can return — classic CDF-1/2 via
-    ``sources/netcdf3.py`` and NetCDF-4 (HDF5 container) via
-    ``sources/hdf5.py`` — so the real-NetCDF branch runs (and is tested
-    end to end) even in environments without the netCDF C stack.
-    """
-    try:
-        import io
+        return Cube(**parse_netcdf3(payload))
+    from dmi_ingestor_spark.sources.hdf5 import parse_hdf5_cube
 
-        import xarray as xr
-    except ImportError:
-        if payload[:3] == b"CDF":
-            from dmi_ingestor_spark.sources.netcdf3 import parse_netcdf3
-
-            return Cube(**parse_netcdf3(payload))
-        from dmi_ingestor_spark.sources.hdf5 import parse_hdf5_cube
-
-        return Cube(**parse_hdf5_cube(payload))
-    ds = xr.open_dataset(io.BytesIO(payload))  # pragma: no cover
-    var = next(iter(ds.data_vars))  # pragma: no cover
-    da = ds[var]  # pragma: no cover
-    y_dim = "y" if "y" in da.dims else "lat"  # pragma: no cover
-    x_dim = "x" if "x" in da.dims else "lon"  # pragma: no cover
-    return Cube(  # pragma: no cover
-        parameter=var,
-        times=[int(t) // 10**9 for t in ds.time.values.astype("datetime64[ns]").astype("int64")],
-        ys=[float(v) for v in da[y_dim].values],
-        xs=[float(v) for v in da[x_dim].values],
-        values=np.asarray(da.transpose("time", y_dim, x_dim).values, dtype=np.float64),
-    )
+    return Cube(**parse_hdf5_cube(payload))
 
 
 def synthetic_cube(

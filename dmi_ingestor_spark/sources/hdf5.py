@@ -1,11 +1,11 @@
 """Pure-Python HDF5 (NetCDF-4 container) codec (SURVEY.md §2.1 S2).
 
 The reference ingests whatever the DMI EDR API returns and decodes it
-with xarray (``dmi_ingestor/ingestor.py:200``); for current collections
-that is NetCDF-4, i.e. an HDF5 container. xarray/netCDF4/h5py are not
-installed in this container, so this module implements the subset of
-the public HDF5 File Format Specification (version 3, hdfgroup.org)
-that libnetcdf-written forecast cubes actually use:
+at ``dmi_ingestor/ingestor.py:200``; for current collections that is
+NetCDF-4, i.e. an HDF5 container. This module is the decoder for it: it
+implements the subset of the public HDF5 File Format Specification
+(version 3, hdfgroup.org) that libnetcdf-written forecast cubes
+actually use:
 
 reader (``parse_hdf5_cube``)
     * superblock v0/v1 (symbol-table root) and v2/v3 (root object
@@ -20,9 +20,8 @@ reader (``parse_hdf5_cube``)
       best-effort on anything exotic)
     * data layout v3: contiguous and chunked (B-tree v1 chunk index)
     * filter pipeline v1/v2: deflate (zlib) and shuffle
-    * netCDF conventions: ``scale_factor``/``add_offset`` applied,
-      ``_FillValue`` → NaN, time ``units`` of the form
-      ``seconds/hours/days since <epoch>``
+    * netCDF conventions through ``sources/cf.py``, the same rules
+      the classic reader applies
 
 writer (``encode_hdf5_cube``)
     * ``layout="classic"`` (default): exactly what libhdf5 writes by
@@ -52,6 +51,8 @@ import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
+
+from dmi_ingestor_spark.sources.cf import cf_decode
 
 MAGIC = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -594,29 +595,6 @@ class _Reader:
 # Cube extraction (netCDF-4 conventions)
 # ===========================================================================
 
-_TIME_BASES = {"seconds": 1, "minutes": 60, "hours": 3600, "days": 86400}
-
-
-def _time_to_epoch(values: np.ndarray, units: object) -> list[int]:
-    if isinstance(units, str) and " since " in units:
-        unit, base = units.split(" since ", 1)
-        mult = _TIME_BASES.get(unit.strip().lower())
-        base = base.strip()
-        if mult is not None:
-            import datetime as _dt
-
-            for fmt in ("%Y-%m-%d %H:%M:%S", "%Y-%m-%dT%H:%M:%S", "%Y-%m-%d"):
-                try:
-                    epoch = _dt.datetime.strptime(
-                        base.removesuffix("Z").replace("+00:00", ""), fmt
-                    ).replace(tzinfo=_dt.timezone.utc)
-                    return [
-                        int(epoch.timestamp()) + int(v) * mult for v in values
-                    ]
-                except ValueError:
-                    continue
-    return [int(v) for v in values]
-
 
 def parse_hdf5_cube(payload: bytes) -> dict:
     """Decode an HDF5/NetCDF-4 forecast cube into the same dict shape
@@ -647,20 +625,11 @@ def parse_hdf5_cube(payload: bytes) -> dict:
     var = data_vars[0]
 
     time_ds = dsets["time"]
-    times = _time_to_epoch(r.read(time_ds), time_ds.attrs.get("units"))
+    times, values = cf_decode(
+        r.read(time_ds), time_ds.attrs, r.read(var), var.attrs
+    )
     ys = [float(v) for v in r.read(dsets[y_name])]
     xs = [float(v) for v in r.read(dsets[x_name])]
-
-    values = r.read(var).astype(np.float64)
-    fill = var.attrs.get("_FillValue")
-    if fill is not None:
-        values = np.where(values == float(fill), np.nan, values)
-    scale = var.attrs.get("scale_factor")
-    offset = var.attrs.get("add_offset")
-    if scale is not None:
-        values = values * float(scale)
-    if offset is not None:
-        values = values + float(offset)
 
     if values.shape != (len(times), len(ys), len(xs)):
         raise Hdf5Error(

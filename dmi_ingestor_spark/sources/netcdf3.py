@@ -2,19 +2,20 @@
 
 The reference ingests real NetCDF from the EDR API
 (``dmi_ingestor/ingestor.py:148-151`` requests ``f=NetCDF``, ``:200``
-decodes with xarray). xarray/netCDF4 are not installed in this
-container, so this module implements the classic (CDF-1) on-disk format
+decodes it). This module implements the classic (CDF-1) on-disk format
 directly from the public spec (NetCDF User Guide, "File Format
 Specification") — header (dim/attr/var lists, big-endian), fixed-size
-and record-variable data layouts. It is the fallback decoder behind
-``sources/cube_format._decode_netcdf`` and makes the real-NetCDF branch
-testable end to end: encode a genuine ``CDF\\x01`` payload, feed it
-through fetch→decode→write, get grid rows out.
+and record-variable data layouts. It is the decoder behind
+``sources/cube_format._decode_netcdf`` for ``CDF`` payloads and makes
+the real-NetCDF branch testable end to end: encode a genuine
+``CDF\\x01`` payload, feed it through fetch→decode→write, get grid rows
+out.
 
 Scope: enough of CDF-1 for forecast cubes — coordinate vars (time +
 y/x or lat/lon), one (time, y, x) data variable, float/double/int
 types, optional unlimited (record) time dimension. NetCDF-4 (HDF5
-magic) decodes through the sibling ``sources/hdf5.py`` parser.
+magic) decodes through the sibling ``sources/hdf5.py`` parser; both
+apply the CF attribute rules of ``sources/cf.py``.
 """
 
 from __future__ import annotations
@@ -23,6 +24,8 @@ import struct
 from dataclasses import dataclass
 
 import numpy as np
+
+from dmi_ingestor_spark.sources.cf import cf_decode
 
 _NC_DIMENSION = 0x0A
 _NC_VARIABLE = 0x0B
@@ -193,8 +196,10 @@ def parse_netcdf3(payload: bytes) -> dict:
     """Classic NetCDF-3 bytes → {"parameter", "times", "ys", "xs", "values"}.
 
     General CDF-1/CDF-2 header walk (dims, global atts, vars with their
-    attribute lists all parsed and skipped correctly); extracts the
-    coordinate variables and the first 3-D data variable.
+    attribute lists); extracts the coordinate variables and the first
+    3-D data variable, decoded under the CF rules of ``sources/cf.py``
+    (time ``units``, ``_FillValue``, ``scale_factor``, ``add_offset``)
+    that the HDF5 reader applies too.
     """
     if payload[:3] != b"CDF" or payload[3] not in (1, 2):
         raise ValueError("not a classic NetCDF payload")
@@ -220,14 +225,22 @@ def parse_netcdf3(payload: bytes) -> dict:
             raise ValueError(f"bad list tag {tag:#x}")
         return n if tag == expected else 0
 
-    def skip_attrs() -> None:
+    def read_attrs() -> dict[str, object]:
         nonlocal pos
-        n = read_list_tag(_NC_ATTRIBUTE)
-        for _ in range(n):
-            read_name()
+        attrs: dict[str, object] = {}
+        for _ in range(read_list_tag(_NC_ATTRIBUTE)):
+            aname = read_name()
             (atype, acount) = struct.unpack_from(">II", payload, pos)
             pos += 8
-            pos += _pad4(acount * _TYPES[atype][2])
+            size = acount * _TYPES[atype][2]
+            raw = payload[pos : pos + size]
+            pos += _pad4(size)
+            if atype == 2:  # NC_CHAR
+                attrs[aname] = raw.split(b"\0")[0].decode()
+            else:
+                arr = np.frombuffer(raw, dtype=_TYPES[atype][1])
+                attrs[aname] = arr[0] if acount == 1 else arr
+        return attrs
 
     ndims = read_list_tag(_NC_DIMENSION)
     dims: list[tuple[str, int]] = []
@@ -236,17 +249,18 @@ def parse_netcdf3(payload: bytes) -> dict:
         (dsize,) = struct.unpack_from(">I", payload, pos)
         pos += 4
         dims.append((dname, dsize))
-    skip_attrs()  # global
+    read_attrs()  # global
 
     nvars = read_list_tag(_NC_VARIABLE)
     variables = []
+    attrs: dict[str, dict[str, object]] = {}
     for _ in range(nvars):
         vname = read_name()
         (vndims,) = struct.unpack_from(">I", payload, pos)
         pos += 4
         dimids = struct.unpack_from(f">{vndims}I", payload, pos)
         pos += 4 * vndims
-        skip_attrs()
+        attrs[vname] = read_attrs()
         (nc_type, vsize) = struct.unpack_from(">II", payload, pos)
         pos += 8
         (begin,) = struct.unpack_from(offset_fmt, payload, pos)
@@ -278,10 +292,13 @@ def parse_netcdf3(payload: bytes) -> dict:
     by_name = {v[0]: v for v in variables}
     data_var = next(v for v in variables if len(v[1]) == 3)
     t_dim, y_dim, x_dim = (dims[d][0] for d in data_var[1])
+    times, values = cf_decode(
+        read_var(by_name[t_dim]), attrs[t_dim], read_var(data_var), attrs[data_var[0]]
+    )
     return {
         "parameter": data_var[0],
-        "times": [int(t) for t in read_var(by_name[t_dim])],
+        "times": times,
         "ys": [float(v) for v in read_var(by_name[y_dim])],
         "xs": [float(v) for v in read_var(by_name[x_dim])],
-        "values": np.asarray(read_var(data_var), dtype=np.float64),
+        "values": values,
     }

@@ -75,7 +75,7 @@ def test_datasource_rows_equal_ingest_decode(spark):
     pipeline's lon/lat equal the projection applied cell by cell."""
     import numpy as np
 
-    from dmi_ingestor_spark.functions.projection import lcc_to_wgs84_np
+    from dmi_ingestor_spark.functions.projection import lcc_inverse_np
     from dmi_ingestor_spark.ingest.pipeline import fetch_grid
     from dmi_ingestor_spark.sources.cube_format import encode_cube, synthetic_cube
     from dmi_ingestor_spark.sources.http_edr import IngestConfig
@@ -89,7 +89,7 @@ def test_datasource_rows_equal_ingest_decode(spark):
     via_source = sorted(tuple(r) for r in _read(spark, collection=coll, parameters=par).collect())
     assert len(via_pipeline) == 4 * 64
     assert via_pipeline == via_source
-    lon, lat = lcc_to_wgs84_np(np.array([r.x for r in grid]), np.array([r.y for r in grid]))
+    lon, lat = lcc_inverse_np(np.array([r.x for r in grid]), np.array([r.y for r in grid]))
     assert [r.lon for r in grid] == lon.tolist()
     assert [r.lat for r in grid] == lat.tolist()
 

@@ -1,7 +1,7 @@
 """NetCDF-4/HDF5 decode path (SURVEY.md §2.1 S2, ref ingestor.py:200).
 
-The container has no xarray/netCDF4/h5py, so these tests exercise the
-pure-Python HDF5 codec (``sources/hdf5.py``) and prove that genuine
+These tests exercise the pure-Python HDF5 codec (``sources/hdf5.py``),
+the one NetCDF-4 decoder, and prove that genuine
 ``\\x89HDF`` payloads — the format current DMI collections return —
 flow through decode_cube and the full ingest pipeline, including the
 chunked-layout B-tree walk and the deflate/shuffle filter undo."""

@@ -1,16 +1,21 @@
 """Real-NetCDF decode path (SURVEY.md §2.1 S2, ref ingestor.py:200).
 
-The container has no xarray/netCDF4, so these tests exercise the
-pure-Python classic-NetCDF3 codec (``sources/netcdf3.py``) and prove
+These tests exercise the pure-Python classic-NetCDF3 codec
+(``sources/netcdf3.py``), the one classic-NetCDF decoder, and prove
 that genuine ``CDF\\x01`` payloads — not just the FCUBE1 synthetic
-codec — flow through decode_cube and the full ingest pipeline."""
+codec — flow through decode_cube and the full ingest pipeline, under
+the same CF attribute rules (``sources/cf.py``) as the HDF5 reader."""
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 import pytest
 
+from dmi_ingestor_spark.sources import netcdf3 as N
 from dmi_ingestor_spark.sources.cube_format import decode_cube
+from dmi_ingestor_spark.sources.hdf5 import encode_hdf5_cube
 from dmi_ingestor_spark.sources.netcdf3 import encode_netcdf3, parse_netcdf3
 
 
@@ -56,6 +61,88 @@ def test_decode_cube_dispatches_on_cdf_magic():
     assert cube.times == times
     assert cube.ys == ys and cube.xs == xs
     assert np.array_equal(cube.values, values)
+
+
+_EPOCH_UNITS = b"seconds since 1970-01-01 00:00:00"
+_CONTAINERS = pytest.mark.parametrize(
+    "encode", [encode_netcdf3, encode_hdf5_cube], ids=["cdf1", "hdf5"]
+)
+
+
+@_CONTAINERS
+def test_cf_time_units_decode_alike_in_both_containers(encode):
+    """The same byte patch of the time ``units`` decodes to the same
+    epoch seconds whichever container carries the cube."""
+    payload = encode("t2m", [0, 60, 120], [0.0, 1.0], [0.0, 1.0], np.zeros((3, 2, 2)))
+    patched = payload.replace(b"seconds since", b"minutes since")
+    assert patched != payload
+    assert decode_cube(patched).times == [0, 3600, 7200]
+
+
+@_CONTAINERS
+@pytest.mark.parametrize(
+    "units",
+    [
+        b"jiffies since 1970-01-01 00:00:00",
+        b"seconds after 1970-01-01 00:00:00",
+        b"seconds since 1970-13-01 00:00:00",
+    ],
+    ids=["unit", "keyword", "epoch"],
+)
+def test_unparseable_time_units_raise(encode, units):
+    payload = encode("t2m", [0, 60], [0.0], [0.0], np.zeros((2, 1, 1)))
+    patched = payload.replace(_EPOCH_UNITS, units)
+    assert patched != payload
+    with pytest.raises(ValueError, match="time units"):
+        decode_cube(patched)
+
+
+def _packed_cdf1(units: str, packed: np.ndarray, attrs) -> bytes:
+    """A fixed-size CDF-1 file built from the spec: int ``time`` with
+    CF ``units``, double ``y``/``x`` and a (time, y, x) NC_SHORT data
+    variable carrying ``attrs`` as (name, nc_type, values) triples."""
+    nt, ny, nx = packed.shape
+
+    def attr_list(items) -> bytes:
+        out = struct.pack(">II", 0x0C if items else 0, len(items))
+        for name, nc_type, vals in items:
+            _, dtype, size = N._TYPES[nc_type]
+            raw = vals.encode() if nc_type == 2 else np.asarray(vals, dtype).tobytes()
+            out += N._name(name) + struct.pack(">II", nc_type, len(raw) // size)
+            out += raw.ljust(N._pad4(len(raw)), b"\0")
+        return out
+
+    dims = [("time", nt), ("y", ny), ("x", nx)]
+    variables = [
+        ("time", (0,), 4, [("units", 2, units)], np.arange(nt, dtype=">i4")),
+        ("y", (1,), 6, [], np.arange(ny, dtype=">f8")),
+        ("x", (2,), 6, [], np.arange(nx, dtype=">f8")),
+        ("v", (0, 1, 2), 3, attrs, packed.astype(">i2")),
+    ]
+
+    def header(begins) -> bytes:
+        out = b"CDF\x01" + struct.pack(">III", 0, 0x0A, len(dims))
+        out += b"".join(N._name(d) + struct.pack(">I", n) for d, n in dims)
+        out += attr_list([]) + struct.pack(">II", 0x0B, len(variables))
+        for (name, dimids, nc_type, vattrs, data), begin in zip(variables, begins):
+            out += N._name(name) + struct.pack(f">I{len(dimids)}I", len(dimids), *dimids)
+            out += attr_list(vattrs)
+            out += struct.pack(">III", nc_type, N._pad4(data.nbytes), begin)
+        return out
+
+    body = [d.tobytes().ljust(N._pad4(d.nbytes), b"\0") for *_, d in variables]
+    begins = np.cumsum([len(header([0] * 4))] + [len(b) for b in body[:-1]])
+    return header([int(b) for b in begins]) + b"".join(body)
+
+
+def test_netcdf3_applies_cf_fill_scale_and_offset():
+    """A packed short variable: ``_FillValue`` cells become NaN, then
+    ``scale_factor`` and ``add_offset`` apply — the HDF5 reader's rules."""
+    packed = np.array([[[1, -999], [3, 4]]])
+    attrs = [("_FillValue", 3, [-999]), ("scale_factor", 5, [0.5]), ("add_offset", 6, [10.0])]
+    d = parse_netcdf3(_packed_cdf1("hours since 2026-01-01T00:00:00Z", packed, attrs))
+    assert d["times"] == [1_767_225_600]
+    np.testing.assert_array_equal(d["values"], [[[10.5, np.nan], [11.5, 12.0]]])
 
 
 def test_malformed_netcdf4_raises():

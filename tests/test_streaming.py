@@ -253,15 +253,14 @@ def test_stream_stream_full_outer_join_matches_batch(spark, sf_dir):
 
 
 def test_transform_with_state_matches_batch(spark, sf_dir):
-    """The TWS/fallback per-user (count, max) equals the batch aggregate
-    regardless of which state API the protobuf import-gate selected."""
+    """The stateful per-user (count, max) equals the batch aggregate."""
     from pyspark.sql import functions as F
 
-    from dmi_ingestor_spark.streaming.windows import transform_with_state_user_stats
+    from dmi_ingestor_spark.streaming.windows import user_stats_with_state
 
     got = {
         r["user_id"]: (r["n_events"], r["max_value"])
-        for r in transform_with_state_user_stats(spark, sf_dir).collect()
+        for r in user_stats_with_state(spark, sf_dir).collect()
     }
     want = {
         r["user_id"]: (r["n"], r["mx"])
