@@ -8,8 +8,7 @@ Oracle-parity note: float dot products are order-sensitive, so the
 checked variants run over *quantized* integer vectors
 (``round(x*1000)`` per element). All products and partial sums stay
 < 2^53, so every summation order yields the exact same double — Spark
-and DuckDB agree bit-for-bit. The unquantized float path exists as the
-production variant (rows-only checked).
+and DuckDB agree bit-for-bit.
 """
 
 from __future__ import annotations

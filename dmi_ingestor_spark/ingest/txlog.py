@@ -865,13 +865,6 @@ def _unit_dvs(tx: TxLog, version: int | None = None) -> dict[str, str]:
     return dvs
 
 
-def read_with_dv(tx: TxLog, version: int | None = None) -> DataFrame:
-    """Deletion vectors are applied by the default read path now
-    (``TxLog.read`` folds the scan-side anti-join in); kept as an
-    explicit alias for callers/tests written against the MOR name."""
-    return tx.read(version)
-
-
 def clone_shallow(src: TxLog, dst_root: str) -> TxLog:
     """Zero-copy shallow clone (Delta's ``CLONE``): the clone's first
     commit references the source's CURRENT live units as EXTERNAL

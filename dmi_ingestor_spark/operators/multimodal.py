@@ -5,9 +5,10 @@ metadata (mime, n_bytes, …) and derived features — exactly how the
 reference's NetCDF/GeoTIFF bytes would sit in a table
 (``dmi_ingestor/ingestor.py:200``: bytes → decode → arrays).
 
-Decode / feature-extract / frame-sample run as Arrow-batched
-``mapInPandas`` transforms (iterator→iterator: one input row may emit
-many output rows, the U2 "cube explode" shape). The codec call is
+Decode / feature-extract / frame-sample run through
+:func:`~dmi_ingestor_spark.operators.rowmap.map_rows`, one
+``mapInPandas`` each (one input row may emit many output rows, the U2
+"cube explode" shape). The codec call is
 isolated in :func:`_decode_bytes`, a deterministic byte-statistics
 decoder that is the one decoder whatever is installed (no image/audio
 codec library is imported); the Spark-side plumbing (schemas, Arrow
@@ -17,9 +18,8 @@ batches, partition behavior) is real and tested.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from dmi_ingestor_spark.operators.rowmap import map_rows
 
 N_FEATURES = 8
 N_FRAMES = 4
@@ -85,29 +87,25 @@ def attach_payloads(documents: DataFrame) -> DataFrame:
 
 
 def decode_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched decode: payload → checksum + feature vector.
+    """Decode: payload → checksum + feature vector, one row per row.
 
-    mapInPandas (not a scalar UDF) so one task handles a whole Arrow
-    batch, the decoder can be vectorized, and output need not be 1:1
-    with input. Partitioning is preserved — no shuffle.
+    A :func:`map_rows` pass (not a scalar UDF), so output need not be
+    1:1 with input. Partitioning is preserved — no shuffle.
     """
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "mime": pdf["mime"],
-                    "n_bytes": payloads.map(len),
-                    "checksum": payloads.map(
-                        lambda b: hashlib.sha256(bytes(b)).hexdigest()
-                    ),
-                    "features": payloads.map(lambda b: _decode_bytes(bytes(b))),
-                }
+    def _decode(row):
+        raw = bytes(row.payload)
+        return [
+            (
+                row.doc_id,
+                row.mime,
+                len(raw),
+                hashlib.sha256(raw).hexdigest(),
+                _decode_bytes(raw),
             )
+        ]
 
-    return media.mapInPandas(_decode, DECODED_SCHEMA)
+    return map_rows(media, DECODED_SCHEMA, _decode)
 
 
 def sample_frames(media: DataFrame, n_frames: int = N_FRAMES) -> DataFrame:
@@ -118,28 +116,16 @@ def sample_frames(media: DataFrame, n_frames: int = N_FRAMES) -> DataFrame:
     n_frames even chunks.
     """
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "frame_idx": [],
-                "frame_payload": [],
-                "frame_checksum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                step = max(len(raw) // n_frames, 1)
-                for i in range(n_frames):
-                    chunk = raw[i * step : (i + 1) * step]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_payload"].append(chunk)
-                    out["frame_checksum"].append(
-                        hashlib.sha256(chunk).hexdigest()
-                    )
-            yield pd.DataFrame(out)
+    def _sample(row):
+        raw = bytes(row.payload)
+        step = max(len(raw) // n_frames, 1)
+        chunks = (raw[i * step : (i + 1) * step] for i in range(n_frames))
+        return [
+            (row.doc_id, i, chunk, hashlib.sha256(chunk).hexdigest())
+            for i, chunk in enumerate(chunks)
+        ]
 
-    return media.mapInPandas(_sample, FRAME_SCHEMA)
+    return map_rows(media, FRAME_SCHEMA, _sample)
 
 
 RESIZED_SCHEMA = StructType(
@@ -157,27 +143,16 @@ def resize_payloads(media: DataFrame, factor: int = 2) -> DataFrame:
     The real op is an image resample (PIL/cv2, absent from this
     container); the stub keeps every ``factor``-th byte — a genuine
     1-D downsample with the same data-flow shape (binary in, smaller
-    binary out, size metadata alongside). Runs as ``mapInPandas`` so
-    the per-batch work is vectorized and the exchange stays Arrow; at
+    binary out, size metadata alongside). A :func:`map_rows` pass; at
     100 TB this is a map-only stage, no shuffle, output partition
     count = input partition count.
     """
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes_in": pdf["payload"].map(len),
-                    "payload_out": pdf["payload"].map(
-                        lambda b: bytes(b[::factor])
-                    ),
-                }
-            )
+    def _resize(row):
+        raw = bytes(row.payload)
+        return [(row.doc_id, len(raw), raw[::factor])]
 
-    return media.select("doc_id", "payload").mapInPandas(
-        _resize, schema=RESIZED_SCHEMA
-    )
+    return map_rows(media.select("doc_id", "payload"), RESIZED_SCHEMA, _resize)
 
 
 AUDIO_FRAME = 128  # samples per analysis window
@@ -199,30 +174,20 @@ def audio_energy(media: DataFrame, frame: int = AUDIO_FRAME) -> DataFrame:
     :func:`_decode_bytes`) and emits one row per COMPLETE ``frame``-
     sample window with its integer energy Σ s² — the map-only windowed
     feature-extraction shape (VAD, loudness normalization, silence
-    trimming) over an opaque audio column. numpy-vectorized per Arrow
-    batch; partitioning preserved, no shuffle, output rows ≠ input rows.
+    trimming) over an opaque audio column. numpy-vectorized per payload
+    in a :func:`map_rows` pass; partitioning preserved, no shuffle,
+    output rows ≠ input rows.
     """
-    import numpy as np
 
-    def _energy(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            es: list[int] = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                arr = np.frombuffer(raw[: 2 * (len(raw) // 2)], dtype="<i2")
-                nf = len(arr) // frame
-                if nf == 0:
-                    continue
-                windows = arr[: nf * frame].astype(np.int64).reshape(nf, frame)
-                energy = (windows * windows).sum(axis=1)
-                ids.extend([doc_id] * nf)
-                idxs.extend(range(nf))
-                es.extend(int(e) for e in energy)
-            yield pd.DataFrame({"doc_id": ids, "frame_idx": idxs, "energy": es})
+    def _energy(row):
+        raw = bytes(row.payload)
+        arr = np.frombuffer(raw[: 2 * (len(raw) // 2)], dtype="<i2")
+        nf = len(arr) // frame
+        windows = arr[: nf * frame].astype(np.int64).reshape(nf, frame)
+        energy = (windows * windows).sum(axis=1)
+        return [(row.doc_id, i, int(e)) for i, e in enumerate(energy)]
 
-    return media.mapInPandas(_energy, AUDIO_SCHEMA)
+    return map_rows(media, AUDIO_SCHEMA, _energy)
 
 
 IMG_SIDE = 16  # synthetic grayscale image side (bytes)
@@ -248,42 +213,25 @@ def image_patches(
     policy as :func:`_decode_bytes`) and emits one row per ``patch×
     patch`` block with its integer intensity sum — the patch-embedding
     front half of every vision transformer pipeline, as a map-only
-    Spark op: numpy reshape-sum per Arrow batch, no shuffle, documents
-    shorter than one image are skipped (complete-frames-only, like
-    :func:`audio_energy`)."""
-    import numpy as np
-
+    Spark op: numpy reshape-sum per payload in a :func:`map_rows` pass,
+    no shuffle, documents shorter than one image are skipped
+    (complete-frames-only, like :func:`audio_energy`)."""
     n_px = side * side
     grid = side // patch
 
-    def _patches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            prs: list[int] = []
-            pcs: list[int] = []
-            sums: list[int] = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                if len(raw) < n_px:
-                    continue
-                img = np.frombuffer(raw[:n_px], dtype=np.uint8).astype(np.int64)
-                blocks = img.reshape(grid, patch, grid, patch).sum(axis=(1, 3))
-                for pr in range(grid):
-                    for pc in range(grid):
-                        ids.append(doc_id)
-                        prs.append(pr)
-                        pcs.append(pc)
-                        sums.append(int(blocks[pr, pc]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "patch_row": prs,
-                    "patch_col": pcs,
-                    "sum_intensity": sums,
-                }
-            )
+    def _patches(row):
+        raw = bytes(row.payload)
+        if len(raw) < n_px:
+            return []
+        img = np.frombuffer(raw[:n_px], dtype=np.uint8).astype(np.int64)
+        blocks = img.reshape(grid, patch, grid, patch).sum(axis=(1, 3))
+        return [
+            (row.doc_id, pr, pc, int(blocks[pr, pc]))
+            for pr in range(grid)
+            for pc in range(grid)
+        ]
 
-    return media.mapInPandas(_patches, IMG_PATCH_SCHEMA)
+    return map_rows(media, IMG_PATCH_SCHEMA, _patches)
 
 
 def ahash64(media: DataFrame, side: int = IMG_SIDE) -> DataFrame:
@@ -298,35 +246,19 @@ def ahash64(media: DataFrame, side: int = IMG_SIDE) -> DataFrame:
     collide; near-identical images differ in few bits, which is what
     Hamming-bucketed near-dup join runs on (dedup_simhash's pigeonhole
     applies unchanged)."""
-    import numpy as np
-
     n_px = side * side
     grid = 8
     blk = side // grid
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            his: list[int] = []
-            los: list[int] = []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                if len(raw) < n_px:
-                    continue
-                img = np.frombuffer(raw[:n_px], dtype=np.uint8).astype(np.int64)
-                blocks = img.reshape(grid, blk, grid, blk).sum(axis=(1, 3))
-                flat = blocks.reshape(-1)
-                total = int(flat.sum())
-                bits = (flat * 64 > total).astype(np.int64)
-                lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
-                hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
-                ids.append(doc_id)
-                his.append(hi)
-                los.append(lo)
-            yield pd.DataFrame(
-                {"doc_id": ids, "hash_hi": his, "hash_lo": los}
-            )
+    def _hash(row):
+        raw = bytes(row.payload)
+        if len(raw) < n_px:
+            return []
+        img = np.frombuffer(raw[:n_px], dtype=np.uint8).astype(np.int64)
+        flat = img.reshape(grid, blk, grid, blk).sum(axis=(1, 3)).reshape(-1)
+        bits = (flat * 64 > int(flat.sum())).astype(np.int64)
+        lo = int((bits[:32] << np.arange(32, dtype=np.int64)).sum())
+        hi = int((bits[32:] << np.arange(32, dtype=np.int64)).sum())
+        return [(row.doc_id, hi, lo)]
 
-    return media.mapInPandas(
-        _hash, schema="doc_id long, hash_hi long, hash_lo long"
-    )
+    return map_rows(media, "doc_id long, hash_hi long, hash_lo long", _hash)

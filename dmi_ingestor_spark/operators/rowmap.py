@@ -1,4 +1,5 @@
-"""Row decoder over ``mapInPandas``: one input row in, any number of rows out.
+"""The shared Python entry points over ``mapInPandas``: ``map_rows``,
+``fold_series`` and ``scan_topk``.
 
 The recurring shape of every payload decoder (a binary column holding a
 cube, an archive, a codec stream or a written file) is "for each input
@@ -7,7 +8,8 @@ once: the per-batch iteration and the output frame live here, and the
 output column names come from the schema, so a call site states its
 columns once. :func:`fold_series` is the per-key recurrence on top of
 it: each key's rows packed into one sorted series, then a plain Python
-loop over that series.
+loop over that series. :func:`scan_topk` is the partitioned top-k of the
+similarity queries: a per-batch top-k in one scan, merged by one window.
 """
 
 from __future__ import annotations
@@ -16,7 +18,7 @@ from collections.abc import Callable, Iterable, Iterator, Sequence
 from typing import Any
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -78,3 +80,37 @@ def fold_series(
         return fn(tuple(row[:nk]), list(zip(*(a.tolist() for a in row[nk:]))))
 
     return map_rows(packed, schema, run)
+
+
+def scan_topk(
+    corpus: DataFrame,
+    schema: str,
+    score: Callable[[pd.DataFrame], pd.DataFrame | None],
+    k: int,
+    by: str | list[str],
+    order: Sequence[str | Column],
+) -> DataFrame:
+    """The top ``k`` rows per ``by`` key, by ``order``, in one scan of ``corpus``.
+
+    ``score(pdf)`` runs on each non-empty Arrow batch of ``corpus`` and
+    returns that batch's candidates as a frame with ``schema``'s columns,
+    at most ``k`` per ``by`` key (usually through ``gram.topk``), or
+    ``None`` for none. A row of the global top-k is in the top-k of its
+    own batch, so one ``row_number`` window over ``by``, ordered by
+    ``order``, ranks a superset of the answer; the rows with
+    ``rk <= k`` come out with ``rk`` appended to ``schema``'s columns.
+    ``order`` must be a total order within a key (end it with an id),
+    or ties make the kept rows depend on the batching.
+    """
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) and (out := score(pdf)) is not None:
+                yield out
+
+    w = Window.partitionBy(by).orderBy(*order)
+    return (
+        corpus.mapInPandas(_run, schema)
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+    )

@@ -2270,11 +2270,7 @@ def dq_cross_table_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame
 def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from dmi_ingestor_spark.ingest.txlog import (
-        TxLog,
-        add_deletion_vector,
-        read_with_dv,
-    )
+    from dmi_ingestor_spark.ingest.txlog import TxLog, add_deletion_vector
 
     tx = TxLog(spark, scratch_dir("dv"))
     o = table(spark, sf_dir, "orders").select("o_orderkey")
@@ -2294,7 +2290,7 @@ def lake_deletion_vector_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("phase"),
         *_rows_and_checksum("o_orderkey"),
     ).select("phase", "n_rows", "key_checksum")
-    post = read_with_dv(tx).agg(
+    post = tx.read().agg(
         F.lit(1).alias("phase"),
         *_rows_and_checksum("o_orderkey"),
     ).select("phase", "n_rows", "key_checksum")
@@ -4697,7 +4693,6 @@ def lake_mor_flush_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         _unit_dvs,
         add_deletion_vector,
         flush_deletion_vectors,
-        read_with_dv,
     )
 
     tx = TxLog(spark, scratch_dir("morflush"))
@@ -4723,7 +4718,7 @@ def lake_mor_flush_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_dvs).cast("long").alias("n_dvs"),
         ).select("phase", "n_rows", "key_checksum", "n_dvs")
 
-    mor = stats(read_with_dv(tx), 0, len(_unit_dvs(tx)))
+    mor = stats(tx.read(), 0, len(_unit_dvs(tx)))
     v_flush = flush_deletion_vectors(tx)
     assert v_flush == v_dv + 1
     # post-flush: a PLAIN read (no DV machinery) must see the same rows
@@ -4733,7 +4728,7 @@ def lake_mor_flush_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     flushed = stats(tx.read(), 1, len(live_dvs))
     # time travel: the pre-flush snapshot still resolves unit + DV
-    tt = stats(read_with_dv(tx, version=v_dv), 2, 1)
+    tt = stats(tx.read(version=v_dv), 2, 1)
     return mor.unionAll(flushed).unionAll(tt).orderBy("phase")
 
 

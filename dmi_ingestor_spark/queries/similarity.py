@@ -11,8 +11,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dmi_ingestor_spark.catalog import table
-from dmi_ingestor_spark.functions.vector import cosine, quantize, sql_cosine
+from dmi_ingestor_spark.functions.vector import quantize, sql_cosine
 from dmi_ingestor_spark.operators import gram
+from dmi_ingestor_spark.operators.rowmap import scan_topk
 from dmi_ingestor_spark.registry import register
 
 N_QUERY = 8  # vec_id < 8 are the query vectors
@@ -66,50 +67,23 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", quantize(F.col("embedding")).alias("qv")
     )
 
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            cos = gram.cosine(Q, np.stack(pdf["qv"].to_numpy()))
-            r, c = gram.topk(ids, cos, TOP_K, qids=qids)
-            yield pd.DataFrame(
-                {"query_id": qids[r], "neighbor_id": ids[c], "sim": cos[r, c]}
-            )
+    def _score(pdf):
+        if len(qids) == 0:
+            return None
+        ids = pdf["vec_id"].to_numpy()
+        cos = gram.cosine(Q, np.stack(pdf["qv"].to_numpy()))
+        r, c = gram.topk(ids, cos, TOP_K, qids=qids)
+        return pd.DataFrame(
+            {"query_id": qids[r], "neighbor_id": ids[c], "sim": cos[r, c]}
+        )
 
-    part = emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        part.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rk")
-    )
-
-
-def sim_topk_float(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unregistered float twin of ``sim_topk_bruteforce``.
-
-    Float cosine accumulation order is engine-specific, so a DuckDB
-    oracle for this shape is flaky by construction; rather than carry a
-    rows-only registry slot that duplicates the hash-green quantized
-    twin, this lives as a plain helper exercised by
-    ``tests/test_dedup_similarity.py::test_float_and_quantized_topk_agree``
-    (≥90% rank agreement with the quantized plan)."""
-    emb = table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    queries = emb.filter(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("query_vec")
-    )
-    pairs = emb.select(F.col("vec_id").alias("neighbor_id"), "v").join(
-        F.broadcast(queries), F.col("neighbor_id") != F.col("query_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("sim", cosine(F.col("query_vec"), F.col("v")))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rk")
+    return scan_topk(
+        emb,
+        "query_id long, neighbor_id long, sim double",
+        _score,
+        TOP_K,
+        "query_id",
+        [F.col("sim").desc(), "neighbor_id"],
     )
 
 
@@ -134,17 +108,18 @@ def _embedding_dim(sf_dir: str) -> int:
     return len(rows.column("embedding")[0])
 
 
-def _query_side(sf_dir: str, max_id: int, with_label: bool = False):
+def _query_side(sf_dir: str, max_id: int):
     """The bounded query-side rows (vec_id < max_id), read at plan time.
 
-    Same pyarrow plan-time read as :func:`_embedding_dim`; ``max_id`` is
+    It quantizes the rows of :func:`_raw_query_side`'s pyarrow read
+    (the one plan-time read of the query side); ``max_id`` is
     a compile-time constant (8/16/50), so the read is bounded by
     construction and corpus-independent — it moves exactly the rows a
     ``F.broadcast(queries)`` build would ship, but makes them available
     to the Arrow scoring kernels below (guide §4.2/§8: decide with the
     small side in native code, stream the corpus once).
 
-    Returns ``(ids int64[nq], Q float64[nq, dim], labels | None)`` with
+    Returns ``(ids int64[nq], Q float64[nq, dim], labels list)`` with
     Q quantized EXACTLY like :func:`functions.vector.quantize` /
     the oracle's ``round(CAST(x AS DOUBLE) * 1000)``: the float32 widens
     exactly to double, the ×1000 product is one IEEE rounding (identical
@@ -156,38 +131,29 @@ def _query_side(sf_dir: str, max_id: int, with_label: bool = False):
     and for any other double both representations lie strictly on the
     same side of every half-integer boundary.
     """
-    import os
     from decimal import ROUND_HALF_UP, Decimal
 
     import numpy as np
-    import pyarrow.dataset as ds
 
-    cols = ["vec_id", "embedding"] + (["label"] if with_label else [])
-    d = ds.dataset(os.path.join(sf_dir, "embeddings.parquet"), format="parquet")
-    t = d.to_table(columns=cols, filter=ds.field("vec_id") < max_id)
-    ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
+    ids, r, labels = _raw_query_side(sf_dir, max_id)
     one = Decimal(1)
-    rows = t.column("embedding").to_pylist()
     q = np.array(
         [
             [
                 float(Decimal(x * 1000.0).quantize(one, ROUND_HALF_UP))
                 for x in row
             ]
-            for row in rows
+            for row in r.tolist()
         ],
         dtype=np.float64,
-    )
-    if q.size == 0:
-        q = q.reshape(0, max(_embedding_dim(sf_dir), 0))
-    labels = t.column("label").to_pylist() if with_label else None
+    ).reshape(r.shape)
     return ids, q, labels
 
 
 def _raw_query_side(sf_dir: str, max_id: int):
-    """Like :func:`_query_side` but returns the RAW float components
-    (exactly widened float32→double, no quantization) — for the
-    sign-sketch kernels whose bit test is ``x > 0`` on the raw value."""
+    """The plan-time read behind :func:`_query_side`, with the RAW float
+    components (exactly widened float32→double, no quantization) — for
+    the sign-sketch kernels whose bit test is ``x > 0`` on the raw value."""
     import os
 
     import numpy as np
@@ -195,12 +161,13 @@ def _raw_query_side(sf_dir: str, max_id: int):
 
     d = ds.dataset(os.path.join(sf_dir, "embeddings.parquet"), format="parquet")
     t = d.to_table(
-        columns=["vec_id", "embedding"], filter=ds.field("vec_id") < max_id
+        columns=["vec_id", "embedding", "label"], filter=ds.field("vec_id") < max_id
     )
     ids = np.asarray(t.column("vec_id").to_pylist(), dtype=np.int64)
-    rows = t.column("embedding").to_pylist()
-    r = np.array(rows, dtype=np.float64) if rows else np.zeros((0, 0))
-    return ids, r
+    r = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+    if r.size == 0:
+        r = r.reshape(0, max(_embedding_dim(sf_dir), 0))
+    return ids, r, t.column("label").to_pylist()
 
 
 def _sign_words(v):
@@ -574,36 +541,34 @@ def sim_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _int_vec(F.col("embedding")).alias("iv")
     )
 
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["iv"].to_numpy()).astype(np.float64)
-            vs = v.reshape(len(ids), PQ_M, PQ_SUB)
-            adc = np.zeros((len(qids), len(ids)), dtype=np.float64)
-            for m in range(PQ_M):
-                d = vs[:, m, None, :] - cb[m][None, :, :]  # (nb, K, SUB)
-                dist = np.einsum("nks,nks->nk", d, d)
-                code = np.argmin(dist, axis=1)  # first min = lowest k
-                adc += lut[:, m, :][:, code]  # (nq, nb) gather
-            r, c = gram.topk(ids, -adc, TOP_K, qids=qids)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[r],
-                    "neighbor_id": ids[c],
-                    "adc_dist": adc[r, c].astype(np.int64),
-                }
-            )
+    def _score(pdf):
+        if len(qids) == 0:
+            return None
+        ids = pdf["vec_id"].to_numpy()
+        v = np.stack(pdf["iv"].to_numpy()).astype(np.float64)
+        vs = v.reshape(len(ids), PQ_M, PQ_SUB)
+        adc = np.zeros((len(qids), len(ids)), dtype=np.float64)
+        for m in range(PQ_M):
+            d = vs[:, m, None, :] - cb[m][None, :, :]  # (nb, K, SUB)
+            dist = np.einsum("nks,nks->nk", d, d)
+            code = np.argmin(dist, axis=1)  # first min = lowest k
+            adc += lut[:, m, :][:, code]  # (nq, nb) gather
+        r, c = gram.topk(ids, -adc, TOP_K, qids=qids)
+        return pd.DataFrame(
+            {
+                "query_id": qids[r],
+                "neighbor_id": ids[c],
+                "adc_dist": adc[r, c].astype(np.int64),
+            }
+        )
 
-    part = emb.mapInPandas(
-        _score, "query_id long, neighbor_id long, adc_dist long"
-    )
-    w = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        part.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_dist", "rk")
+    return scan_topk(
+        emb,
+        "query_id long, neighbor_id long, adc_dist long",
+        _score,
+        TOP_K,
+        "query_id",
+        ["adc_dist", "neighbor_id"],
     )
 
 
@@ -698,27 +663,27 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", quantize(F.col("embedding")).alias("v")
     )
 
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or probes is None:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["v"].to_numpy())
-            cell = sids[np.argmax(gram.cosine(v, S), axis=1)]  # first max = min id
-            qcos = gram.cosine(Q, v)
-            # no qids: the self-match is included, as in the oracle
-            listed = (cell[None, :, None] == probes[:, None, :]).any(axis=2)
-            r, c = gram.topk(ids, qcos, TOP_K, keep=listed)
-            yield pd.DataFrame(
-                {"query_id": qids[r], "neighbor_id": ids[c], "sim": qcos[r, c]}
-            )
+    def _score(pdf):
+        if probes is None:
+            return None
+        ids = pdf["vec_id"].to_numpy()
+        v = np.stack(pdf["v"].to_numpy())
+        cell = sids[np.argmax(gram.cosine(v, S), axis=1)]  # first max = min id
+        qcos = gram.cosine(Q, v)
+        # no qids: the self-match is included, as in the oracle
+        listed = (cell[None, :, None] == probes[:, None, :]).any(axis=2)
+        r, c = gram.topk(ids, qcos, TOP_K, keep=listed)
+        return pd.DataFrame(
+            {"query_id": qids[r], "neighbor_id": ids[c], "sim": qcos[r, c]}
+        )
 
-    part = emb.mapInPandas(_score, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        part.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", "rk")
+    return scan_topk(
+        emb,
+        "query_id long, neighbor_id long, sim double",
+        _score,
+        TOP_K,
+        "query_id",
+        [F.col("sim").desc(), "neighbor_id"],
     )
 
 
@@ -872,7 +837,7 @@ def ml_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    qids, Q, qlabels = _query_side(sf_dir, N_QUERY, with_label=True)
+    qids, Q, qlabels = _query_side(sf_dir, N_QUERY)
     qlab = np.array(qlabels, dtype=np.float64)  # NULL -> NaN
     has_label = ~np.isnan(qlab)
     aids, A, alabs = qids[has_label], Q[has_label], qlab[has_label]
@@ -1092,39 +1057,35 @@ def ml_knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    qids, Q, qlabels = _query_side(sf_dir, _KNN_EVAL, with_label=True)
+    qids, Q, qlabels = _query_side(sf_dir, _KNN_EVAL)
     qlab = pd.array(qlabels, dtype="Int32")  # nullable: NULL stays NULL
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", quantize(F.col("embedding")).alias("qv")
     )
 
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            cos = gram.cosine(Q, np.stack(pdf["qv"].to_numpy()))
-            r, c = gram.topk(ids, cos, _KNN_K, qids=qids)
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[r],
-                    "true_label": qlab[r],
-                    "nb_id": ids[c],
-                    "nb_label": pdf["label"].astype("Int32").array[c],
-                    "sim": cos[r, c],
-                }
-            )
+    def _score(pdf):
+        if len(qids) == 0:
+            return None
+        ids = pdf["vec_id"].to_numpy()
+        cos = gram.cosine(Q, np.stack(pdf["qv"].to_numpy()))
+        r, c = gram.topk(ids, cos, _KNN_K, qids=qids)
+        return pd.DataFrame(
+            {
+                "query_id": qids[r],
+                "true_label": qlab[r],
+                "nb_id": ids[c],
+                "nb_label": pdf["label"].astype("Int32").array[c],
+                "sim": cos[r, c],
+            }
+        )
 
-    part = emb.mapInPandas(
-        _score,
+    topk = scan_topk(
+        emb,
         "query_id long, true_label int, nb_id long, nb_label int, sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("nb_id")
-    )
-    topk = (
-        part.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _KNN_K)
+        _score,
+        _KNN_K,
+        "query_id",
+        [F.col("sim").desc(), "nb_id"],
     )
     votes = topk.groupBy("query_id", "true_label", "nb_label").agg(
         F.count(F.lit(1)).alias("c")
@@ -1422,37 +1383,36 @@ def sim_matryoshka_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", quantize(F.col("embedding")).alias("qv")
     )
 
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["qv"].to_numpy())
-            out = []
-            for d in _MRL_DIMS:
-                cos = gram.cosine(Q[:, :d], v[:, :d])
-                r, c = gram.topk(ids, cos, _MRL_K, qids=qids)
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": qids[r],
-                            "pd": d,
-                            "neighbor_id": ids[c],
-                            "sim": cos[r, c],
-                        }
-                    )
+    def _score(pdf):
+        if len(qids) == 0:
+            return None
+        ids = pdf["vec_id"].to_numpy()
+        v = np.stack(pdf["qv"].to_numpy())
+        out = []
+        for d in _MRL_DIMS:
+            cos = gram.cosine(Q[:, :d], v[:, :d])
+            r, c = gram.topk(ids, cos, _MRL_K, qids=qids)
+            out.append(
+                pd.DataFrame(
+                    {
+                        "query_id": qids[r],
+                        "pd": d,
+                        "neighbor_id": ids[c],
+                        "sim": cos[r, c],
+                    }
                 )
-            yield pd.concat(out, ignore_index=True)
+            )
+        return pd.concat(out, ignore_index=True)
 
-    part = emb.mapInPandas(
-        _score, "query_id long, pd int, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id", "pd").orderBy(
-        F.col("sim").desc(), "neighbor_id"
-    )
     top = (
-        part.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _MRL_K)
+        scan_topk(
+            emb,
+            "query_id long, pd int, neighbor_id long, sim double",
+            _score,
+            _MRL_K,
+            ["query_id", "pd"],
+            [F.col("sim").desc(), "neighbor_id"],
+        )
         .select("query_id", "pd", "neighbor_id")
         .cache()
     )
@@ -1797,34 +1757,31 @@ def vector_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    qids, R = _raw_query_side(sf_dir, _HAM_NQ)
+    qids, R, _ = _raw_query_side(sf_dir, _HAM_NQ)
     if len(qids):
         q0, q1 = _sign_words(R)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            w0, w1 = _sign_words(v)
-            ham = _popcount64(w0 ^ q0[:, None]) + _popcount64(w1 ^ q1[:, None])
-            r, c = gram.topk(ids, -ham, _HAM_K, qids=qids)
-            yield pd.DataFrame(
-                {"query_id": qids[r], "cand_id": ids[c], "hamming": ham[r, c]}
-            )
+    def _score(pdf):
+        if len(qids) == 0:
+            return None
+        ids = pdf["vec_id"].to_numpy()
+        v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        w0, w1 = _sign_words(v)
+        ham = _popcount64(w0 ^ q0[:, None]) + _popcount64(w1 ^ q1[:, None])
+        r, c = gram.topk(ids, -ham, _HAM_K, qids=qids)
+        return pd.DataFrame(
+            {"query_id": qids[r], "cand_id": ids[c], "hamming": ham[r, c]}
+        )
 
-    part = emb.mapInPandas(
-        _score, "query_id long, cand_id long, hamming long"
-    )
-    wnd = Window.partitionBy("query_id").orderBy("hamming", "cand_id")
-    return (
-        part.withColumn("rk", F.row_number().over(wnd))
-        .filter(F.col("rk") <= _HAM_K)
-        .select("query_id", "cand_id", "hamming", "rk")
-        .orderBy("query_id", "rk")
-    )
+    return scan_topk(
+        emb,
+        "query_id long, cand_id long, hamming long",
+        _score,
+        _HAM_K,
+        "query_id",
+        ["hamming", "cand_id"],
+    ).orderBy("query_id", "rk")
 
 
 # ---------------------------------------------------------------------------
@@ -1903,46 +1860,46 @@ def pipeline_retrieval_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact half-up identity round(t) = sign(t)·floor(|t|+0.5) (|t|+0.5
     # is exactly representable for |t| < 2^52, and ties x.5 are exact
     # doubles), so it equals F.round/`quantize` bit for bit; cosine is
-    # the usual exact-integer gram; prk/rk windows keep their original
-    # orderings over a provable superset of the true shortlist.
+    # the usual exact-integer gram; the shortlist and rerank windows keep
+    # their original orderings over a provable superset of the true
+    # shortlist.
     import numpy as np
     import pandas as pd
 
-    qids, R = _raw_query_side(sf_dir, _RET_NQ)
+    qids, R, _ = _raw_query_side(sf_dir, _RET_NQ)
     if len(qids):
         q0, q1 = _sign_words(R)
         t = R * 1000.0
         Q = np.sign(t) * np.floor(np.abs(t) + 0.5)
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    def _score(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or len(qids) == 0:
-                continue
-            ids = pdf["vec_id"].to_numpy()
-            v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            w0, w1 = _sign_words(v)
-            ham = _popcount64(w0 ^ q0[:, None]) + _popcount64(w1 ^ q1[:, None])
-            r, c = gram.topk(ids, -ham, _RET_SHORTLIST, qids=qids)
-            short, at = np.unique(c, return_inverse=True)
-            tt = v[short] * 1000.0
-            cos = gram.cosine(Q, np.sign(tt) * np.floor(np.abs(tt) + 0.5))
-            yield pd.DataFrame(
-                {
-                    "query_id": qids[r],
-                    "cand_id": ids[c],
-                    "hamming": ham[r, c],
-                    "sim_raw": cos[r, at],
-                }
-            )
+    def _score(pdf):
+        if len(qids) == 0:
+            return None
+        ids = pdf["vec_id"].to_numpy()
+        v = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+        w0, w1 = _sign_words(v)
+        ham = _popcount64(w0 ^ q0[:, None]) + _popcount64(w1 ^ q1[:, None])
+        r, c = gram.topk(ids, -ham, _RET_SHORTLIST, qids=qids)
+        short, at = np.unique(c, return_inverse=True)
+        tt = v[short] * 1000.0
+        cos = gram.cosine(Q, np.sign(tt) * np.floor(np.abs(tt) + 0.5))
+        return pd.DataFrame(
+            {
+                "query_id": qids[r],
+                "cand_id": ids[c],
+                "hamming": ham[r, c],
+                "sim_raw": cos[r, at],
+            }
+        )
 
-    part = emb.mapInPandas(
-        _score, "query_id long, cand_id long, hamming long, sim_raw double"
-    )
-    wpre = Window.partitionBy("query_id").orderBy("hamming", "cand_id")
-    shortlist = (
-        part.withColumn("prk", F.row_number().over(wpre))
-        .filter(F.col("prk") <= _RET_SHORTLIST)
+    shortlist = scan_topk(
+        emb,
+        "query_id long, cand_id long, hamming long, sim_raw double",
+        _score,
+        _RET_SHORTLIST,
+        "query_id",
+        ["hamming", "cand_id"],
     )
     wrk = Window.partitionBy("query_id").orderBy(
         F.col("sim_raw").desc(), F.col("cand_id")

@@ -17,6 +17,9 @@ import datetime as _dt
 
 import numpy as np
 
+# the attributes cf_decode reads: a container reader must fail a cube
+# whose copy of one of these it cannot parse, never drop it
+CF_ATTRS = frozenset({"units", "_FillValue", "scale_factor", "add_offset"})
 _TIME_BASES = {"seconds": 1, "minutes": 60, "hours": 3600, "days": 86400}
 _EPOCH_FORMATS = ("%Y-%m-%d %H:%M:%S", "%Y-%m-%dT%H:%M:%S", "%Y-%m-%d")
 

@@ -52,7 +52,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from dmi_ingestor_spark.sources.cf import cf_decode
+from dmi_ingestor_spark.sources.cf import CF_ATTRS, cf_decode
 
 MAGIC = b"\x89HDF\r\n\x1a\n"
 _UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -401,11 +401,9 @@ class _Reader:
             elif mtype == 0x0B:
                 ds.filters = self._parse_filters(body)
             elif mtype == 0x0C:
-                try:
-                    k, v = self._parse_attribute(body)
-                    ds.attrs[k] = v
-                except Exception:  # exotic attr types: best-effort
-                    pass
+                name, value = self._parse_attribute(body)
+                if value is not None:
+                    ds.attrs[name] = value
         return ds
 
     def _parse_dataspace(self, body: bytes) -> tuple[int, ...]:
@@ -482,39 +480,41 @@ class _Reader:
         return out
 
     def _parse_attribute(self, body: bytes) -> tuple[str, object]:
+        """``(name, value)`` of an attribute message.
+
+        A value the reader cannot parse (say a variable-length string,
+        or a shared datatype) comes back as ``None`` and the attribute
+        is dropped, unless ``cf_decode`` reads it (``CF_ATTRS``): a cube
+        decoded without its time units or its scaling would be wrong,
+        so that raises."""
         version = body[0]
-        if version == 1:
-            name_size = int.from_bytes(body[2:4], "little")
-            dt_size = int.from_bytes(body[4:6], "little")
-            sp_size = int.from_bytes(body[6:8], "little")
-            off = 8
-            name = body[off : off + name_size].split(b"\0")[0].decode()
-            off += (name_size + 7) // 8 * 8
-            dt_body = body[off : off + dt_size]
-            off += (dt_size + 7) // 8 * 8
-            sp_body = body[off : off + sp_size]
-            off += (sp_size + 7) // 8 * 8
-        elif version == 3:
-            name_size = int.from_bytes(body[2:4], "little")
-            dt_size = int.from_bytes(body[4:6], "little")
-            sp_size = int.from_bytes(body[6:8], "little")
-            off = 9  # + name charset byte
-            name = body[off : off + name_size].split(b"\0")[0].decode()
-            off += name_size
-            dt_body = body[off : off + dt_size]
-            off += dt_size
-            sp_body = body[off : off + sp_size]
-            off += sp_size
-        else:
+        if version not in (1, 2, 3):
             raise Hdf5Error(f"unsupported attribute version {version}")
-        dtype = self._parse_datatype(dt_body)
-        shape = self._parse_dataspace(sp_body) if sp_body[1] else ()
-        n = int(np.prod(shape)) if shape else 1
-        raw = body[off : off + n * dtype.itemsize]
-        if dtype.kind == "S":
-            return name, raw.split(b"\0")[0].decode()
-        arr = np.frombuffer(raw, dtype=dtype, count=n)
-        return name, arr[0] if not shape else arr
+        name_size, dt_size, sp_size = struct.unpack_from("<HHH", body, 2)
+        off = 9 if version == 3 else 8  # v3: + name charset byte
+        name = body[off : off + name_size].split(b"\0")[0].decode()
+        # v1 pads the name, datatype and dataspace to 8 bytes; v2/v3 do not
+        pad = (lambda n: (n + 7) // 8 * 8) if version == 1 else (lambda n: n)
+        off += pad(name_size)
+        dt_body = body[off : off + dt_size]
+        off += pad(dt_size)
+        sp_body = body[off : off + sp_size]
+        off += pad(sp_size)
+        try:
+            if body[1] & 0x03:  # v2/v3 flags: shared datatype/dataspace
+                raise Hdf5Error("shared attribute datatype or dataspace")
+            dtype = self._parse_datatype(dt_body)
+            shape = self._parse_dataspace(sp_body) if sp_body[1] else ()
+            n = int(np.prod(shape)) if shape else 1
+            raw = body[off : off + n * dtype.itemsize]
+            if dtype.kind == "S":
+                return name, raw.split(b"\0")[0].decode()
+            arr = np.frombuffer(raw, dtype=dtype, count=n)
+            return name, arr[0] if not shape else arr
+        except Exception as exc:
+            if name in CF_ATTRS:
+                raise Hdf5Error(f"cannot parse attribute {name!r}: {exc}") from exc
+            return name, None
 
     # -- data ---------------------------------------------------------------
 

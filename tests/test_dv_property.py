@@ -1,6 +1,6 @@
 """Property tests: deletion-vector reads equal direct filters for ANY
 position set, and k-core peeling is monotone (ingest/txlog.py
-read_with_dv; queries/graph.py k-core trace)."""
+TxLog.read; queries/graph.py k-core trace)."""
 
 from __future__ import annotations
 
@@ -9,11 +9,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from dmi_ingestor_spark.ingest.txlog import (
-    TxLog,
-    add_deletion_vector,
-    read_with_dv,
-)
+from dmi_ingestor_spark.ingest.txlog import TxLog, add_deletion_vector
 
 _N = 40
 
@@ -43,7 +39,7 @@ def test_dv_read_equals_direct_filter(spark, tmp_path_factory, positions):
         [(int(p),) for p in sorted(positions)] or [(None,)], "pos long"
     ).filter(F.col("pos").isNotNull())
     add_deletion_vector(tx, "data/u", pos, "dv")
-    got = sorted(r["k"] for r in read_with_dv(tx).collect())
+    got = sorted(r["k"] for r in tx.read().collect())
     keys = sorted(r["k"] for r in base.collect())
     want = [k for i, k in enumerate(keys) if i not in positions]
     assert got == want

@@ -68,6 +68,30 @@ def test_hdf5_time_units_scaling():
     assert d["times"] == times  # seconds-since-epoch base
 
 
+def _patch_string_class(payload: bytes, attr: str) -> bytes:
+    """Retype attribute ``attr``'s datatype from class 3 (fixed string)
+    to class 9 (variable-length), which is how netCDF-4 stores an
+    NC_STRING attribute and which the reader does not parse."""
+    at = payload.index(b"\x13\0\0\0", payload.index(attr.encode() + b"\0"))
+    return payload[:at] + b"\x19" + payload[at + 1 :]
+
+
+def test_hdf5_unparseable_cf_attribute_fails_the_decode():
+    """A time ``units`` the reader cannot parse fails the cube instead of
+    being dropped (the raw minutes would decode as epoch seconds); an
+    unparseable attribute that CF decoding does not read is ignored."""
+    _, ys, xs, values = _cube_arrays()
+    payload = encode_hdf5_cube("t2m", [0, 60, 120], ys, xs, values).replace(
+        b"seconds since 1970", b"minutes since 1970"
+    )
+    assert parse_hdf5_cube(payload)["times"] == [0, 3600, 7200]
+    with pytest.raises(Hdf5Error, match="'units'"):
+        parse_hdf5_cube(_patch_string_class(payload, "units"))
+    d = parse_hdf5_cube(_patch_string_class(payload, "long_name"))
+    assert d["times"] == [0, 3600, 7200]
+    assert np.array_equal(d["values"], values)
+
+
 def test_decode_cube_dispatches_on_hdf5_magic():
     times, ys, xs, values = _cube_arrays()
     cube = decode_cube(encode_hdf5_cube("t2m", times, ys, xs, values))

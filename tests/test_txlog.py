@@ -332,10 +332,7 @@ def test_unit_name_reuse_rejected(spark, sf_dir, tx):
 def test_deletion_vector_applies_and_time_travels(spark, sf_dir, tx):
     from pyspark.sql import Window
 
-    from dmi_ingestor_spark.ingest.txlog import (
-        add_deletion_vector,
-        read_with_dv,
-    )
+    from dmi_ingestor_spark.ingest.txlog import add_deletion_vector
 
     o = _orders(spark, sf_dir, "F").select("o_orderkey")
     base = o.repartition(1).sortWithinPartitions("o_orderkey")
@@ -347,24 +344,21 @@ def test_deletion_vector_applies_and_time_travels(spark, sf_dir, tx):
     )
     add_deletion_vector(tx, "data/base", pos, "dv0")
     # post-DV read excludes exactly the marked positions
-    got = sorted(r[0] for r in read_with_dv(tx).collect())
+    got = sorted(r[0] for r in tx.read().collect())
     assert got == [k for k in keys if k not in drop]
     # pre-DV version still reads everything (DV is version-scoped)
-    assert sorted(r[0] for r in read_with_dv(tx, version=v0).collect()) == keys
+    assert sorted(r[0] for r in tx.read(version=v0).collect()) == keys
 
 
 def test_deletion_vector_retired_with_unit(spark, sf_dir, tx):
-    from dmi_ingestor_spark.ingest.txlog import (
-        add_deletion_vector,
-        read_with_dv,
-    )
+    from dmi_ingestor_spark.ingest.txlog import add_deletion_vector
 
     o = _orders(spark, sf_dir, "F").select("o_orderkey").limit(10)
     tx.append(o.repartition(1).sortWithinPartitions("o_orderkey"), "u1")
     add_deletion_vector(
         tx, "data/u1", spark.createDataFrame([(0,)], "pos long"), "dv1"
     )
-    n_with_dv = read_with_dv(tx).count()
+    n_with_dv = tx.read().count()
     assert n_with_dv == o.count() - 1
     # compacting rewrites the snapshot DV-subtracted: the delete is
     # MATERIALIZED (the hidden row never reaches the new unit), and the
@@ -372,7 +366,7 @@ def test_deletion_vector_retired_with_unit(spark, sf_dir, tx):
     # never bounce back to 10 (that would resurrect the deleted row,
     # the exact wrong-results failure the feature gate exists to stop)
     tx.compact("u2")
-    assert read_with_dv(tx).count() == n_with_dv
+    assert tx.read().count() == n_with_dv
     # and the new unit carries no DV of its own
     from dmi_ingestor_spark.ingest.txlog import _unit_dvs
 
@@ -592,7 +586,6 @@ def test_flush_deletion_vectors_mor_to_cow(spark, sf_dir, tx):
         _unit_dvs,
         add_deletion_vector,
         flush_deletion_vectors,
-        read_with_dv,
     )
 
     f = _orders(spark, sf_dir, "F").select("o_orderkey")
@@ -625,7 +618,7 @@ def test_flush_deletion_vectors_mor_to_cow(spark, sf_dir, tx):
     assert "data/untouched" in live and "data/base" not in live
     assert "data/base-flush" in live
     # time travel to the MOR version still applies the DV
-    tt = sorted(r[0] for r in read_with_dv(tx, version=v_dv).collect())
+    tt = sorted(r[0] for r in tx.read(version=v_dv).collect())
     assert tt == want
     # idempotent: nothing to flush -> no new version
     assert flush_deletion_vectors(tx) == v_flush
